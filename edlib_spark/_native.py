@@ -9,7 +9,9 @@ while a boundary block's bottom cell >= k+64), in-flight k tightening,
 bottom-row popcount correction and band-death early exit — and runs it
 per pair directly over raw codepoint buffers (per-pair alphabet mapping
 happens in C via a generation-stamped table, like the reference's
-transformSequences but without the 256-symbol cap for BMP text).
+transformSequences but without its 256-symbol cap: the table is sized
+to the batch's largest codepoint + 1, so any Unicode text, astral
+plane included, is scored here).
 
 Results are bit-identical to the numpy path (the differential tests run
 both).  This is an implementation of the published Myers 1999 bit-vector
@@ -17,9 +19,11 @@ algorithm with Ukkonen banding written from scratch for this engine —
 NOT a copy of the reference C++ (semantics cross-checked against the
 reference suite via the Python kernels).
 
-Degrades gracefully: if cffi or a C compiler is unavailable the import
-leaves ``lib = None`` and callers keep the pure-numpy path; pairs with
-non-BMP codepoints return a sentinel and are re-scored by numpy.
+Degrades loudly: if cffi or a C compiler is unavailable the import
+leaves ``lib = None``, records the cause in ``build_error`` and emits
+one ``RuntimeWarning``; callers then keep the pure-numpy path.  A pair
+whose scratch buffers could not be grown returns the ``UNSUPPORTED``
+sentinel and is re-scored by numpy.
 """
 
 from __future__ import annotations
@@ -27,8 +31,9 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+import warnings
 
-UNSUPPORTED = -2147483648  # INT32_MIN sentinel: pair needs the numpy path
+UNSUPPORTED = -2147483648  # INT32_MIN sentinel: allocation failed, use numpy
 
 _SOURCE = r"""
 #include <stdint.h>
@@ -37,7 +42,6 @@ _SOURCE = r"""
 
 typedef uint64_t word;
 #define WBITS 64
-#define BMP 65536
 #define UNSUPPORTED INT32_MIN
 
 /* One Myers bit-parallel block step; returns carry in {-1,0,1}. */
@@ -58,9 +62,10 @@ static inline int step_block(word *pv, word *mv, word eq, int hin) {
 }
 
 typedef struct {
-    int32_t *map;       /* BMP codepoint -> dense symbol id */
+    int32_t *map;       /* codepoint -> dense symbol id, n_cp entries */
     int64_t *stamp;     /* generation stamps (avoids per-pair memset) */
     int64_t gen;
+    int64_t n_cp;       /* batch's largest codepoint + 1 */
     int32_t *qs, *ts;   /* recoded scratch */
     word *peq, *peq2, *pv, *mv;
     int64_t *score;
@@ -71,7 +76,7 @@ typedef struct {
 
 /* Distance for one pair of raw codepoint sequences.
    mode: 0=NW, 1=SHW, 2=HW.  Returns distance, -1 if > k, or
-   UNSUPPORTED when a codepoint is outside the BMP. */
+   UNSUPPORTED when the scratch buffers are too small for the pair. */
 static int32_t pair_distance(const uint32_t *q, int64_t qlen,
                              const uint32_t *t, int64_t tlen,
                              int64_t k, int mode, scratch *s) {
@@ -92,14 +97,12 @@ static int32_t pair_distance(const uint32_t *q, int64_t qlen,
     int32_t sigma = 0;
     for (int64_t i = 0; i < qlen; i++) {
         uint32_t c = q[i];
-        if (c >= BMP) return UNSUPPORTED;
         if (s->stamp[c] != s->gen) { s->stamp[c] = s->gen;
                                      s->map[c] = sigma++; }
         s->qs[i] = s->map[c];
     }
     for (int64_t i = 0; i < tlen; i++) {
         uint32_t c = t[i];
-        if (c >= BMP) return UNSUPPORTED;
         if (s->stamp[c] != s->gen) { s->stamp[c] = s->gen;
                                      s->map[c] = sigma++; }
         s->ts[i] = s->map[c];
@@ -121,7 +124,7 @@ static int32_t pair_distance(const uint32_t *q, int64_t qlen,
         memcpy(s->peq2, peq, (size_t)(sigma * nb) * sizeof(word));
         for (int64_t e = 0; e < s->n_eq; e++) {
             uint32_t a = s->eqa[e], c = s->eqb[e];
-            if (a >= BMP || c >= BMP) continue;
+            if (a >= s->n_cp || c >= s->n_cp) continue;
             if (s->stamp[a] != s->gen || s->stamp[c] != s->gen) continue;
             int64_t ca = s->map[a], cb = s->map[c];
             if (ca == cb) continue;
@@ -671,6 +674,7 @@ int batch_distance(const uint32_t *qbuf, const int64_t *qstart,
                    const uint32_t *eqa, const uint32_t *eqb, int64_t n_eq,
                    int32_t *out) {
     int64_t max_nb = 1, max_q = 1, max_t = 1;
+    uint32_t max_cp = 0;
     for (int64_t i = 0; i < n; i++) {
         int64_t ql = qlens[i];
         int64_t tl = tlens[i];
@@ -678,15 +682,21 @@ int batch_distance(const uint32_t *qbuf, const int64_t *qstart,
         if (nb > max_nb) max_nb = nb;
         if (ql > max_q) max_q = ql;
         if (tl > max_t) max_t = tl;
+        const uint32_t *qp = qbuf + qstart[i], *tp = tbuf + tstart[i];
+        for (int64_t j = 0; j < ql; j++) if (qp[j] > max_cp) max_cp = qp[j];
+        for (int64_t j = 0; j < tl; j++) if (tp[j] > max_cp) max_cp = tp[j];
     }
+    /* the codepoint table covers only what this batch uses: a few
+       hundred entries for Latin text, 0x110000 at most */
+    int64_t n_cp = (int64_t)max_cp + 1;
     scratch s;
     s.cap_nb = max_nb;
-    s.cap_sigma = BMP;
     s.cap_q = max_q; s.cap_t = max_t;
     s.gen = 0;
+    s.n_cp = n_cp;
     s.eqa = eqa; s.eqb = eqb; s.n_eq = n_eq;
-    s.map = (int32_t *)malloc(BMP * sizeof(int32_t));
-    s.stamp = (int64_t *)calloc(BMP, sizeof(int64_t));
+    s.map = (int32_t *)malloc((size_t)n_cp * sizeof(int32_t));
+    s.stamp = (int64_t *)calloc((size_t)n_cp, sizeof(int64_t));
     s.qs = (int32_t *)malloc((size_t)max_q * sizeof(int32_t));
     s.ts = (int32_t *)malloc((size_t)max_t * sizeof(int32_t));
     /* peq sized for 512 symbols; larger alphabets grow on demand */
@@ -708,7 +718,7 @@ int batch_distance(const uint32_t *qbuf, const int64_t *qstart,
         int64_t ql = qlens[i];
         int64_t tl = tlens[i];
         /* alphabet can't exceed ql + tl; grow peq when needed */
-        int64_t need = ql + tl < BMP ? ql + tl : BMP;
+        int64_t need = ql + tl < n_cp ? ql + tl : n_cp;
         if (need > peq_sigma) {
             /* commit the new capacity only after EVERY realloc
                succeeds: on failure the old (smaller) buffers stay
@@ -760,15 +770,13 @@ int64_t nw_align_path(const int32_t *q, int64_t qlen,
 
 lib = None
 ffi = None
+build_error = None  # why the native build failed ("Type: message"), if it did
 
 
 def _build():
-    global lib, ffi
+    global lib, ffi, build_error
     try:
         from cffi import FFI
-    except ImportError:
-        return
-    try:
         tag = hashlib.sha256(_SOURCE.encode()).hexdigest()[:12]
         cache = os.path.join(os.path.expanduser("~"), ".cache",
                              "edlib_spark_native", tag)
@@ -805,9 +813,15 @@ def _build():
         spec.loader.exec_module(mod)
         lib = mod.lib
         ffi = mod.ffi
-    except Exception:  # noqa: BLE001 — any failure => numpy fallback
+        build_error = None
+    except Exception as exc:  # noqa: BLE001 — any failure => numpy fallback
         lib = None
         ffi = None
+        build_error = f"{type(exc).__name__}: {exc}"
+        warnings.warn(
+            "edlib_spark native kernel unavailable, scoring falls back to "
+            f"the ~100x slower numpy scan: {build_error}",
+            RuntimeWarning, stacklevel=2)
 
 
 _build()

@@ -32,8 +32,10 @@ finish or die.  Pairs are additionally chunk-grouped by geometric
 k-magnitude so a large-k outlier lands in its own chunk instead of
 widening the union for unrelated pairs.  The k < |tlen-qlen| shortcut
 is lifted to a Catalyst predicate before the UDF (edlib.cpp:744-747).
-(The cffi scan has scalar per-pair banding and takes all-BMP batches;
-this path is the fallback.)
+(The cffi scan has scalar per-pair banding and scores every pair,
+astral-plane text included; this scan runs only when the native library
+is missing, when ``use_native=False``, or after a native allocation
+failure.)
 """
 
 from __future__ import annotations
@@ -59,13 +61,16 @@ def _popcnt(x: np.ndarray) -> np.ndarray:
 
 
 def encode_strings(strings) -> tuple[list, np.ndarray]:
-    """Encode an iterable of str into codepoint arrays + lengths."""
+    """Encode an iterable of str into codepoint arrays + lengths.
+    Lone surrogates encode as their own codepoint, like ``len``/``ord``
+    see them (and like kernel.align scores them)."""
     codes = []
     lens = np.empty(len(strings), dtype=np.int64)
     for i, s in enumerate(strings):
         if s is None:
             s = ""
-        a = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
+        a = np.frombuffer(s.encode("utf-32-le", "surrogatepass"),
+                          dtype=np.uint32)
         codes.append(a)
         lens[i] = len(a)
     return codes, lens
@@ -74,11 +79,13 @@ def encode_strings(strings) -> tuple[list, np.ndarray]:
 def encode_flat(strings) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """One-shot flat encoding: (codepoint buffer, per-string start,
     per-string length).  A single join+encode is ~10x cheaper than
-    per-string numpy conversion."""
+    per-string numpy conversion.  Lone surrogates pass through as one
+    codepoint each, so the buffer stays aligned with ``len``."""
     lens = np.fromiter((len(s) if s is not None else 0 for s in strings),
                        dtype=np.int64, count=len(strings))
     joined = "".join(s for s in strings if s) if len(strings) else ""
-    buf = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32)
+    buf = np.frombuffer(joined.encode("utf-32-le", "surrogatepass"),
+                        dtype=np.uint32)
     start = np.zeros(len(strings), dtype=np.int64)
     if len(strings) > 1:
         np.cumsum(lens[:-1], out=start[1:])
@@ -210,7 +217,7 @@ def batch_edit_distance(queries, targets, mode: str = "NW", k=-1,
             if got is not None:
                 ok = got != _native.UNSUPPORTED
                 out[todo[ok]] = got[ok]
-                todo = todo[~ok]  # non-BMP pairs drop to the numpy path
+                todo = todo[~ok]  # allocation failures drop to numpy
                 if len(todo) == 0:
                     return out
 

@@ -166,7 +166,7 @@ def test_batch_mixed_k_nonbmp_chunk_grouping(mode):
     k-magnitude chunk grouping must not change results — every pair
     matches the exact kernel regardless of which chunk/band served it."""
     rng = np.random.default_rng(321)
-    alpha = "acg\U0001F600"  # non-BMP symbol forces the numpy lane
+    alpha = "acg\U0001F600"  # astral symbol; use_native=False pins numpy
     qs, ts, ks = [], [], []
     for i in range(120):
         qlen = int(rng.integers(0, 300))
@@ -361,3 +361,171 @@ def test_native_path_matches_python_walk():
         got = _native.native_align_path(q_codes, t_codes, eq, sigma,
                                         d_true)
         assert got == want, (q, t, d_true)
+
+
+# ---- astral-plane text on the native lane, lone surrogates, and the
+# native build's degraded mode ----
+
+ASTRAL = "acg\U0001F600\U0001F680\U0010FFFF"
+
+
+@pytest.fixture()
+def native_only(monkeypatch):
+    """Native library loaded, numpy scan forbidden: any pair that
+    reaches batch._chunk_distance fails the test."""
+    from edlib_spark import _native, batch
+
+    if _native.lib is None:
+        pytest.skip(f"native library unavailable: {_native.build_error}")
+
+    def _forbidden(*args, **kwargs):
+        raise AssertionError("numpy scan reached with native loaded")
+
+    monkeypatch.setattr(batch, "_chunk_distance", _forbidden)
+
+
+def _astral_pairs(rng, n, alpha=ASTRAL):
+    qs, ts = [], []
+    for i in range(n):
+        q = "".join(alpha[j] for j in rng.integers(
+            0, len(alpha), rng.integers(1, 200)))
+        if i % 2:  # near-identical pair
+            t = list(q)
+            for p in rng.integers(0, len(q), 4):
+                t[p] = alpha[int(rng.integers(0, len(alpha)))]
+            t = "".join(t)
+        else:
+            t = "".join(alpha[j] for j in rng.integers(
+                0, len(alpha), rng.integers(1, 260)))
+        qs.append(q)
+        ts.append(t)
+    return qs, ts
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_native_scores_astral_pairs(native_only, mode):
+    """Astral-plane pairs (up to U+10FFFF) are scored by the C scan, not
+    handed to the numpy scan, and equal kernel.align for unbounded,
+    tight and mixed per-pair k."""
+    rng = np.random.default_rng(2024)
+    qs, ts = _astral_pairs(rng, 60)
+    mixed = rng.choice([0, 3, 10, 40, 200, -1], len(qs))
+    for k in (-1, 4, mixed):
+        got = batch_edit_distance(qs, ts, mode, k)
+        ks = np.broadcast_to(k, len(qs))
+        want = [align(q, t, mode=mode, k=int(kk))["editDistance"]
+                for q, t, kk in zip(qs, ts, ks)]
+        assert got.tolist() == want, (mode, k)
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_native_astral_equalities_str_and_int(native_only, mode):
+    """Equality pairs naming astral symbols, given as str or as int
+    codepoints, widen the C scan's match profile exactly like the
+    kernel's equality matrix; a pair naming a codepoint above the
+    batch's largest one is a no-op."""
+    rng = np.random.default_rng(77)
+    qs, ts = _astral_pairs(rng, 40)
+    as_str = [("a", "\U0001F600"), ("\U0010FFFF", "g")]
+    as_int = [(ord(a), ord(b)) for a, b in as_str]
+    want = [align(q, t, mode=mode, additionalEqualities=as_str)[
+        "editDistance"] for q, t in zip(qs, ts)]
+    for eqs in (as_str, as_int):
+        got = batch_edit_distance(qs, ts, mode, -1, equalities=eqs)
+        assert got.tolist() == want, (mode, eqs)
+    qs = [q.replace("\U0010FFFF", "c") for q in qs]
+    ts = [t.replace("\U0010FFFF", "c") for t in ts]
+    got = batch_edit_distance(qs, ts, mode, -1,
+                              equalities=[("a", "\U0001F600"),
+                                          (0x10FFFF, "g")])
+    want = [align(q, t, mode=mode,
+                  additionalEqualities=[("a", "\U0001F600")])[
+        "editDistance"] for q, t in zip(qs, ts)]
+    assert got.tolist() == want, mode
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_native_mixed_ascii_and_astral_batch(native_only, mode):
+    """One batch holding ASCII-only pairs next to astral pairs: the
+    codepoint table sized for the astral symbols must not change the
+    ASCII pairs' answers."""
+    rng = np.random.default_rng(5)
+    aq, at = _astral_pairs(rng, 30, alpha="acgt")
+    xq, xt = _astral_pairs(rng, 30)
+    qs = [v for pair in zip(aq, xq) for v in pair]
+    ts = [v for pair in zip(at, xt) for v in pair]
+    for k in (-1, 8):
+        got = batch_edit_distance(qs, ts, mode, k)
+        want = [align(q, t, mode=mode, k=k)["editDistance"]
+                for q, t in zip(qs, ts)]
+        assert got.tolist() == want, (mode, k)
+    assert batch_edit_distance(["\U0010FFFF"], ["\U0010FFFF"],
+                               mode).tolist() == [0]
+
+
+def test_native_empty_batch(native_only):
+    """Zero pairs: the dispatcher returns an empty result, and the C
+    entry point itself handles n = 0 (table of one entry)."""
+    from edlib_spark import _native
+    from edlib_spark.batch import encode_flat
+
+    for mode in MODES:
+        assert batch_edit_distance([], [], mode).tolist() == []
+    buf, start, lens = encode_flat([])
+    got = _native.native_batch_distance(buf, start, lens, buf, start,
+                                        lens, np.empty(0, np.int64), "NW")
+    assert got is not None and got.tolist() == []
+
+
+@pytest.mark.parametrize("use_native", (True, False))
+@pytest.mark.parametrize("mode", MODES)
+def test_batch_lone_surrogates_match_kernel(mode, use_native):
+    """Lone surrogates (legal in a Python str, e.g. from a lossy decode)
+    are one codepoint each, on both lanes, like kernel.align sees them;
+    they used to raise UnicodeEncodeError in the batch encoder."""
+    qs = ["a\ud800b", "\udfff", "x\ud83d\ude00y", "ab", "\ud800" * 70]
+    ts = ["ab", "\udfff\udfff", "xy", "a\udc00b", "\ud801" * 3]
+    for k in (-1, 1):
+        got = batch_edit_distance(qs, ts, mode, k, use_native=use_native)
+        want = [align(q, t, mode=mode, k=k)["editDistance"]
+                for q, t in zip(qs, ts)]
+        assert got.tolist() == want, (mode, k)
+
+
+def test_native_kernel_built():
+    """The C kernel must build wherever cffi and a C compiler exist, so
+    a broken build fails the suite instead of silently running the
+    ~100x slower numpy scan."""
+    import shutil
+
+    from edlib_spark import _native
+
+    pytest.importorskip("cffi", reason="cffi not installed")
+    if not any(shutil.which(cc) for cc in ("cc", "gcc", "clang")):
+        pytest.skip("no C compiler on PATH")
+    assert _native.lib is not None, _native.build_error
+    assert _native.build_error is None
+
+
+def test_native_build_failure_warns(monkeypatch):
+    """A failed native build keeps the numpy fallback but says so: one
+    RuntimeWarning naming the cause, which also stays on
+    _native.build_error.  lib/ffi are restored afterwards, so later
+    tests keep the native lane."""
+    from edlib_spark import _native
+
+    monkeypatch.setattr(_native, "lib", _native.lib)
+    monkeypatch.setattr(_native, "ffi", _native.ffi)
+    monkeypatch.setattr(_native, "build_error", _native.build_error)
+    monkeypatch.setattr(_native, "_CDEF", "int broken(")
+    with pytest.warns(RuntimeWarning, match="native kernel unavailable") \
+            as caught:
+        _native._build()
+    runtime = [w for w in caught if w.category is RuntimeWarning]
+    assert len(runtime) == 1
+    assert _native.lib is None and _native.ffi is None
+    assert _native.build_error
+    assert _native.build_error in str(runtime[0].message)
+    got = batch_edit_distance(["kitten", "a\U0001F600b"],
+                              ["sitting", "ab"], "NW")
+    assert got.tolist() == [3, 1]

@@ -214,12 +214,12 @@ def test_top_n_best_caps_n(spark):
 
 def test_edit_distance_nonbmp_spark_lane_handoff(spark):
     """Astral-plane text through the REAL Spark scorer surface: the C
-    lane returns its UNSUPPORTED sentinel for non-BMP codepoints and
-    the batch dispatcher re-scores exactly those pairs on the numpy
-    lane.  test_batch.py pins that handoff at the batch API; this pins
-    it at the DataFrame level (edit_distance UDF, mixed BMP/astral
-    rows sharing one Arrow batch), NW and HW, unbounded and tight k,
-    against the exact kernel per pair."""
+    lane sizes its codepoint table to each batch and scores BMP and
+    astral pairs alike, with no handoff to the numpy lane.
+    test_batch.py pins that at the batch API (numpy scan forbidden);
+    this pins it at the DataFrame level (edit_distance UDF, mixed
+    BMP/astral rows sharing one Arrow batch), NW and HW, unbounded and
+    tight k, against the exact kernel per pair."""
     import numpy as np
 
     from edlib_spark import kernel
@@ -228,8 +228,8 @@ def test_edit_distance_nonbmp_spark_lane_handoff(spark):
     alpha = "acg\U0001F600\U0001F680"  # BMP letters + 2 astral symbols
     rows = []
     for i in range(60):
-        if i % 4 == 0:  # pure-BMP rows keep the native lane live in
-            src = "acg"  # the same Arrow batches as the astral rows
+        if i % 4 == 0:  # pure-BMP rows share the Arrow batches
+            src = "acg"  # with the astral rows
         else:
             src = alpha
         q = "".join(src[j] for j in rng.integers(
