@@ -628,6 +628,23 @@ def _native_align_data(q_codes, t_codes, eq, sigma, k, target_stop=-1):
     return best, data
 
 
+def _direct_traceback(qlen, tlen):
+    """Whether a pair's path comes from the direct traceback (saved
+    band under _TRACEBACK_MEM_LIMIT) rather than Hirschberg — the
+    reference's boundary, edlib.cpp:1186-1190.  Works elementwise on
+    numpy length arrays too.
+
+    tlen == 1 must never reach _hirschberg: its left half would be
+    empty and target_stop = left_width - 1 = -1 means "no stop / full
+    save" to both scans (native saves every column, Python saves
+    none), not the virtual initial column the crossing search expects
+    — the native lane would search the wrong column and the Python
+    lane would raise.  The direct traceback's saved band is a single
+    column here (O(nblocks) memory), so it is always safe."""
+    mem = (2 * 8 + 4) * _ceil_div(qlen, WORD) * tlen + 2 * 4 * tlen
+    return (mem < _TRACEBACK_MEM_LIMIT) | (tlen == 1)
+
+
 def _obtain_alignment(q_codes, t_codes, eq, sigma, best):
     """Find one optimal path; traceback for small problems, Hirschberg
     divide-and-conquer otherwise (reference obtainAlignment,
@@ -639,15 +656,7 @@ def _obtain_alignment(q_codes, t_codes, eq, sigma, best):
 
     nblocks = _ceil_div(qlen, WORD)
     w = nblocks * WORD - qlen
-    mem = (2 * 8 + 4) * nblocks * tlen + 2 * 4 * tlen
-    # tlen == 1 must never reach _hirschberg: its left half would be
-    # empty and target_stop = left_width - 1 = -1 means "no stop /
-    # full save" to both scans (native saves every column, Python
-    # saves none), not the virtual initial column the crossing search
-    # expects — the native lane would search the wrong column and the
-    # Python lane would raise.  The direct traceback's saved band is a
-    # single column here (O(nblocks) memory), so it is always safe.
-    if mem < _TRACEBACK_MEM_LIMIT or tlen == 1:
+    if _direct_traceback(qlen, tlen):
         from . import _native
         path = _native.native_align_path(q_codes, t_codes, eq, sigma,
                                          best)

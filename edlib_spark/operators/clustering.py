@@ -80,6 +80,7 @@ def _finish_on_driver(edges: DataFrame) -> DataFrame:
     id of the component.  Python's str ordering is codepoint order ==
     UTF-8 byte order == Spark's string ordering, so the min matches
     exactly for string ids as well as numeric ones."""
+    import pandas as pd
     from pyspark.sql.types import StructField, StructType
 
     spark = edges.sparkSession
@@ -110,7 +111,10 @@ def _finish_on_driver(edges: DataFrame) -> DataFrame:
         comp_min[r] = n if m is None or n < m else m
     out_schema = StructType([StructField("conv_id", id_type),
                              StructField("cluster_id", id_type)])
-    assign = [(n, comp_min[find(n)]) for n in nodes]
+    assign = pd.DataFrame({"conv_id": list(nodes)})
+    assign["cluster_id"] = [comp_min[find(n)] for n in assign["conv_id"]]
+    # a pandas frame goes through Arrow into a JVM-side relation; a list
+    # of tuples would become a PythonRDD job on Python workers
     return spark.createDataFrame(assign, out_schema)
 
 

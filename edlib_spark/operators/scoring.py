@@ -2,13 +2,17 @@
 
 Plan shape (deliberate):
   pairs (id_a, id_b)
+    repartition(defaultParallelism, id_a, id_b)  -- the skinny pair
+        shuffle is a few bytes a row, so AQE would otherwise coalesce
+        it (and the scorer behind it) into a single task; an explicit
+        partition count is never coalesced
     join canon (broadcast when small)            -- texts attached twice
     filter on the mode's length lower bound      -- the reference's
         k < |tlen-qlen| shortcut (edlib.cpp:744-747) lifted to a Catalyst
         predicate (NW: |len_a-len_b| <= k; HW/SHW: len_a-len_b <= k,
         one-sided because the target end/start is free): pairs are
         pruned JVM-side before any Python runs
-    repartition + sortWithinPartitions(max_len)  -- Arrow batches get
+    sortWithinPartitions(max_len)                -- Arrow batches get
         similar-length pairs (numpy padding waste ~ max-min in batch)
     edit_distance pandas UDF (batched Myers)     -- per-pair k bound
     norm_distance + match filter
@@ -46,7 +50,9 @@ def score_pairs(pairs: DataFrame, canon: DataFrame, tau: float = 0.2,
     b = canon.select(F.col("conv_id").alias("id_b"),
                      F.col("full_text").alias("text_b"),
                      F.col("text_len").alias("len_b"))
-    df = pairs.join(a, "id_a").join(b, "id_b")
+    par = pairs.sparkSession.sparkContext.defaultParallelism
+    df = pairs.repartition(par, "id_a", "id_b") \
+        .join(a, "id_a").join(b, "id_b")
 
     max_len = F.greatest("len_a", "len_b")
     k = F.ceil(F.lit(float(tau)) * max_len).cast("int")

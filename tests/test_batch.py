@@ -1,5 +1,7 @@
 """Differential tests: batch-vectorized kernel vs single-pair kernel/oracle."""
 
+import re
+
 import numpy as np
 import pytest
 
@@ -505,6 +507,12 @@ def test_native_kernel_built():
         pytest.skip("no C compiler on PATH")
     assert _native.lib is not None, _native.build_error
     assert _native.build_error is None
+    # the on-disk cache key covers the cdef: every declared function
+    # must exist in the loaded module, not a stale build's subset
+    declared = re.findall(r"(\w+)\(", _native._CDEF)
+    assert declared
+    for name in declared:
+        assert hasattr(_native.lib, name), name
 
 
 def test_native_build_failure_warns(monkeypatch):

@@ -71,6 +71,31 @@ def test_cc_driver_finish_equals_distributed(spark):
         assert len(fast) == len({r[0] for r in fast})  # one row per node
 
 
+def test_cc_empty_edges_keep_id_type(spark):
+    """An empty edge set yields an empty result typed like the ids."""
+    for id_type in ("string", "bigint", "int"):
+        edges = spark.createDataFrame(
+            [], f"id_a {id_type}, id_b {id_type}")
+        got = connected_components(edges)
+        assert got.schema.simpleString() == (
+            f"struct<conv_id:{id_type},cluster_id:{id_type}>")
+        assert got.count() == 0
+
+
+def test_cc_driver_finish_numeric_ids(spark):
+    """The driver union-find keeps numeric ids numeric, int and bigint
+    alike, with the component minimum as the cluster id."""
+    for id_type in ("bigint", "int"):
+        edges = spark.createDataFrame(
+            [(3, 2), (2, 1), (10, 11), (7, 5)],
+            f"id_a {id_type}, id_b {id_type}")
+        got = connected_components(edges)
+        assert got.schema.simpleString() == (
+            f"struct<conv_id:{id_type},cluster_id:{id_type}>")
+        assert sorted(tuple(r) for r in got.collect()) == [
+            (1, 1), (2, 1), (3, 1), (5, 5), (7, 5), (10, 10), (11, 10)]
+
+
 def test_cluster_assignments_includes_singletons(spark):
     nodes = spark.createDataFrame([("a",), ("b",), ("z",)], ["conv_id"])
     edges = spark.createDataFrame([("a", "b")], ["id_a", "id_b"])

@@ -312,6 +312,35 @@ def test_align_expr_standard_cigar_spark_surface(spark):
     assert got["caba"] == "2D1M1I2M1D"
 
 
+def test_align_expr_int_equalities_match_str(spark):
+    """Int equality entries are codepoints on every lane: (97, 98) gives
+    the same rows as ('a', 'b') in NW, SHW and HW, and both match
+    kernel.align.  The int form once reached kernel.encode_pair as a
+    bare int and was dropped there (SHW/HW: -1; NW: a CIGAR with more
+    edits than its distance)."""
+    from edlib_spark import kernel
+    rows = [("aaaa", "xbbbbx"), ("abab", "baba"), ("cab", "cbb"),
+            ("", "ab")]
+    df = spark.createDataFrame(rows, ["q", "t"]).coalesce(1)
+    for mode in ("NW", "SHW", "HW"):
+        got = {}
+        for name, eqs in (("int", [(97, 98)]), ("str", [("a", "b")])):
+            res = df.select("q", "t", align_expr(
+                F.col("q"), F.col("t"), mode=mode, task="path",
+                additional_equalities=eqs).alias("r")).collect()
+            got[name] = {(r["q"], r["t"]): r["r"].asDict(recursive=True)
+                         for r in res}
+        assert got["int"] == got["str"], mode
+        for (q, t), r in got["str"].items():
+            want = kernel.align(q, t, mode=mode, task="path",
+                                additionalEqualities=[("a", "b")],
+                                max_alphabet=None)
+            assert r["editDistance"] == want["editDistance"], (mode, q, t)
+            assert r["cigar"] == want["cigar"], (mode, q, t)
+        if mode == "NW":
+            assert got["int"][("aaaa", "xbbbbx")]["cigar"] == "1D4=1D"
+
+
 def test_align_expr_rejects_invalid_task_and_format():
     """align_expr validates task and cigar_format eagerly, driver-side:
     the vectorized NW lane would otherwise treat a typo'd task as
