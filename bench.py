@@ -98,9 +98,8 @@ def scoring_job(spark) -> tuple[float, int]:
     """The scaling-evidence job: batched Myers scoring of the prebuilt
     pair table.  Returns (seconds, n_pairs).
 
-    No sortWithinPartitions here: the native per-pair scan doesn't
-    benefit from length-sorted batches (that helps the numpy fallback's
-    padding), and the sort costs JVM CPU that competes with the kernel.
+    No sortWithinPartitions here, like score_pairs: the native scan
+    bands each pair on its own, so length-sorted batches buy nothing.
     """
     from pyspark.sql import functions as F
 

@@ -3,7 +3,7 @@ alignment semantics (see README.md / SURVEY.md).
 
 Public surface:
   * kernel.align            — exact single-pair aligner (reference-parity)
-  * batch.batch_edit_distance — vectorized distance hot path
+  * batch.batch_edit_distance — batch distance hot path (native scan)
   * functions.alignment     — Column API (edit_distance, align_expr, ...)
   * plans.linkage.run_linkage — the end-to-end pipeline
 """

@@ -1,17 +1,18 @@
-"""Optional cffi-compiled inner loop for the batch distance kernel.
+"""cffi-compiled banded Myers scan: the batch distance kernel.
 
-The numpy batch kernel (edlib_spark.batch) amortizes Python overhead
-across pairs but still pays ~0.3-1.5ms/pair on transcript-sized strings.
-This module JIT-compiles (once, cached on disk) a small C implementation
-of the *same algorithm* — banded Myers bit-vector scan with per-pair k,
+``batch_distance`` JIT-compiles (once, cached on disk) a small C
+implementation of the banded Myers bit-vector scan with per-pair k,
 score-maintained Ukkonen band (extend while the bottom cell <= k, shrink
 while a boundary block's bottom cell >= k+64), in-flight k tightening,
-bottom-row popcount correction and band-death early exit — and runs it
+bottom-row popcount correction and band-death early exit, and runs it
 per pair directly over raw codepoint buffers (per-pair alphabet mapping
 happens in C via a generation-stamped table, like the reference's
 transformSequences but without its 256-symbol cap: the table is sized
 to the batch's largest codepoint + 1, so any Unicode text, astral
-plane included, is scored here).
+plane included, is scored here).  An unbounded pair (k < 0) runs
+edlib's dynamic-k doubling (edlib.cpp:196-217): banded scans at
+k = 64, 128, ... up to the largest possible distance, stopping at the
+first one that finds the distance.
 
 The same module carries the NW traceback (saved-band scan + walk, a
 transcription of kernel._scan_nw / kernel._traceback) and
@@ -20,17 +21,19 @@ pair it recodes through the same stamped map, reports the alphabet
 size and, where asked, runs the traceback at k = d and run-length
 encodes the CIGAR into one shared byte buffer.
 
-Results are bit-identical to the numpy path (the differential tests run
-both).  This is an implementation of the published Myers 1999 bit-vector
-algorithm with Ukkonen banding written from scratch for this engine —
-NOT a copy of the reference C++ (semantics cross-checked against the
-reference suite via the Python kernels).
+Results equal the exact single-pair kernel (``kernel.align``); the
+differential tests run every batch case with and without this
+library.  This is an implementation of the published Myers 1999
+bit-vector algorithm with Ukkonen banding written from scratch for this
+engine — NOT a copy of the reference C++ (semantics cross-checked
+against the reference suite via the Python kernels).
 
 Degrades loudly: if cffi or a C compiler is unavailable the import
 leaves ``lib = None``, records the cause in ``build_error`` and emits
-one ``RuntimeWarning``; callers then keep the pure-numpy path.  A pair
-whose scratch buffers could not be grown returns the ``UNSUPPORTED``
-sentinel and is re-scored by numpy.
+one ``RuntimeWarning``; ``batch`` then scores every pair with the exact
+per-pair kernel (~100x slower).  A pair whose scratch buffers could not
+be grown returns the ``UNSUPPORTED`` sentinel and is re-scored the same
+way.
 """
 
 from __future__ import annotations
@@ -42,7 +45,9 @@ import warnings
 
 import numpy as np
 
-UNSUPPORTED = -2147483648  # INT32_MIN sentinel: allocation failed, use numpy
+# INT32_MIN sentinel: allocation failed, batch.py re-scores the pair
+# with the exact per-pair kernel
+UNSUPPORTED = -2147483648
 
 _SOURCE = r"""
 #include <stdint.h>
@@ -219,7 +224,7 @@ static int scratch_reserve(scratch *s, int64_t need) {
     return 1;
 }
 
-/* Distance for one pair of raw codepoint sequences.
+/* Distance for one pair of raw codepoint sequences at bound k >= 0.
    mode: 0=NW, 1=SHW, 2=HW.  Returns distance, -1 if > k, or
    UNSUPPORTED when the scratch buffers are too small for the pair. */
 static int32_t pair_distance(const uint32_t *q, int64_t qlen,
@@ -230,7 +235,6 @@ static int32_t pair_distance(const uint32_t *q, int64_t qlen,
         int64_t d = (mode == 0) ? (qlen > tlen ? qlen : tlen) : qlen;
         return (int32_t)d;
     }
-    if (k < 0) k = (mode == 0) ? (qlen > tlen ? qlen : tlen) : qlen;
     if (mode == 2 && k > qlen) k = qlen;
     if (mode == 0) {
         int64_t diff = qlen > tlen ? qlen - tlen : tlen - qlen;
@@ -894,8 +898,16 @@ int batch_distance(const uint32_t *qbuf, const int64_t *qstart,
         /* alphabet can't exceed ql + tl; grow peq when needed */
         int64_t need = ql + tl < s.n_cp ? ql + tl : s.n_cp;
         if (!scratch_reserve(&s, need)) { out[i] = UNSUPPORTED; continue; }
-        out[i] = pair_distance(qbuf + qstart[i], ql, tbuf + tstart[i],
-                               tl, ks[i], mode, &s);
+        const uint32_t *q = qbuf + qstart[i], *t = tbuf + tstart[i];
+        /* unbounded (k < 0): banded scans at k = 64, 128, ... up to the
+           largest possible distance (edlib.cpp:196-217) */
+        int64_t cap = (mode == 0 && tl > ql) ? tl : ql;
+        int64_t k = ks[i] >= 0 ? ks[i] : (WBITS < cap ? WBITS : cap);
+        int32_t d;
+        while ((d = pair_distance(q, ql, t, tl, k, mode, &s)) == -1
+               && ks[i] < 0 && k < cap)
+            k = 2 * k < cap ? 2 * k : cap;
+        out[i] = d;
     }
     scratch_free(&s);
     return 0;
@@ -959,9 +971,10 @@ def _build():
             # near-simultaneously on a cold cache, and concurrent cffi
             # compiles into one dir race on the output file (a reader
             # can dlopen a half-written .so and silently fall back to
-            # numpy).  Concurrent builds waste CPU but every publish is
-            # atomic; session.get_spark pre-imports this module in the
-            # driver so the normal path is ONE compile, before workers.
+            # the per-pair kernel).  Concurrent builds waste CPU but
+            # every publish is atomic; session.get_spark pre-imports
+            # this module in the driver so the normal path is ONE
+            # compile, before workers.
             builddir = os.path.join(cache, f"build-{os.getpid()}")
             os.makedirs(builddir, exist_ok=True)
             builder.set_source(modname, _SOURCE,
@@ -981,13 +994,13 @@ def _build():
         lib = mod.lib
         ffi = mod.ffi
         build_error = None
-    except Exception as exc:  # noqa: BLE001 — any failure => numpy fallback
+    except Exception as exc:  # noqa: BLE001 — any failure => fallback
         lib = None
         ffi = None
         build_error = f"{type(exc).__name__}: {exc}"
         warnings.warn(
             "edlib_spark native kernel unavailable, scoring falls back to "
-            f"the ~100x slower numpy scan: {build_error}",
+            f"the ~100x slower exact per-pair kernel: {build_error}",
             RuntimeWarning, stacklevel=2)
 
 
@@ -1000,8 +1013,10 @@ def native_batch_distance(q_flat, q_start, q_lens, t_flat, t_start,
     per-pair (start, len) views — no copying or recoding in Python.
     ``equalities``: optional (eqa, eqb) pair of uint32 codepoint arrays
     (additional-equality pairs applied to every pair in the batch).
+    ``ks``: per-pair bounds; k < 0 runs the dynamic-k doubling.
     Returns int32 results (UNSUPPORTED sentinel per unhandled pair), or
-    None when the native library is unavailable."""
+    None when the native library is unavailable or the batch scratch
+    could not be allocated."""
     if lib is None:
         return None
     n = len(q_lens)

@@ -4,13 +4,13 @@ Public surface mirrors the reference Python binding
 (/root/reference/bindings/python/edlib.pyx:56-155) lifted to columns:
 
   * ``edit_distance(q, t, mode=..., k=...)`` — the HOT path.  A
-    Series->Series pandas UDF over Arrow batches running the
-    batch-vectorized Myers kernel (edlib_spark.batch): no per-row Python,
-    per-pair k bounds (pass a Column for k).
+    Series->Series pandas UDF over Arrow batches running the batch
+    Myers kernel (edlib_spark.batch, one native call per batch): no
+    per-row Python, per-pair k bounds (pass a Column for k).
   * ``align_expr(q, t, mode, task, k, ...)`` — full result struct
-    (editDistance, alphabetLength, locations, cigar).  Distances are
-    batch-vectorized; the NW lane gets every row's alphabet size and
-    traceback CIGAR from one native call per Arrow batch, and the
+    (editDistance, alphabetLength, locations, cigar).  Distances come
+    from the same batch kernel; the NW lane gets every row's alphabet
+    size and traceback CIGAR from one native call per Arrow batch, and the
     exact single-pair kernel runs only for HW/SHW location scans and
     tracebacks (banded at the known distance) and for edge cases (empty
     sides, tracebacks past the Hirschberg boundary, no native library).
@@ -20,8 +20,6 @@ Public surface mirrors the reference Python binding
 """
 
 from __future__ import annotations
-
-import numbers
 
 import numpy as np
 import pandas as pd
@@ -33,7 +31,10 @@ from pyspark.sql.types import (
 )
 
 from .. import kernel
-from ..batch import _encode_equalities, batch_edit_distance, encode_flat
+from ..batch import (
+    _encode_equalities, _flat_distance, _symbol_pairs, batch_edit_distance,
+    encode_flat,
+)
 
 ALIGN_RESULT_TYPE = StructType([
     StructField("editDistance", IntegerType()),
@@ -52,18 +53,14 @@ def edit_distance(query: Column, target: Column, mode: str = "NW",
 
     ``k`` may be an int (same bound for all rows) or a Column (per-pair
     bound, e.g. ``F.ceil(tau * F.greatest(len_a, len_b))``).
-    ``additional_equalities``: optional (a, b) char pairs the aligner
-    treats as equal (EdlibEqualityPair, reference edlib.h:92-95) —
-    handled inside the batch kernel's Peq profile, so bulk scoring with
-    wildcards / case-folding equivalences stays fully vectorized.
+    ``additional_equalities``: optional (a, b) pairs of single
+    characters or int codepoints the aligner treats as equal
+    (EdlibEqualityPair, reference edlib.h:92-95) — handled inside the
+    native scan's Peq profile, so bulk scoring with wildcards /
+    case-folding equivalences stays vectorized.
     """
-    # normalize to hashable pairs for UDF capture; ints (codepoints)
-    # pass through unchanged — str() would turn 97 into "97" and crash
-    # the kernel's single-char validation downstream
-    eqs = ([(a if isinstance(a, int) else str(a),
-             b if isinstance(b, int) else str(b))
-            for a, b in additional_equalities]
-           if additional_equalities else None)
+    # validated and turned into characters driver-side, before any job
+    eqs = _symbol_pairs(additional_equalities)
 
     if isinstance(k, Column):
         @pandas_udf(IntegerType())
@@ -84,17 +81,6 @@ def edit_distance(query: Column, target: Column, mode: str = "NW",
     return _dist_fixed(query, target)
 
 
-def _symbol_pairs(pairs):
-    """Equality pairs with every int entry turned into its character.
-    The batch kernel reads an int as a codepoint, while
-    kernel.encode_pair looks entries up as symbols and would silently
-    drop a bare int; as characters, every lane sees the same relation."""
-    def sym(v):
-        return chr(v) if isinstance(v, numbers.Integral) else v
-
-    return [(sym(a), sym(b)) for a, b in pairs] if pairs else None
-
-
 def align_expr(query: Column, target: Column, mode: str = "NW",
                task: str = "distance", k=-1,
                additional_equalities=None, max_alphabet=None,
@@ -103,15 +89,16 @@ def align_expr(query: Column, target: Column, mode: str = "NW",
     locations, cigar).
 
     Each Arrow batch runs ``_align_batch``: distances come from the
-    vectorized batch kernel (``batch_edit_distance``), and for NW one
-    more native call per batch returns every row's alphabet size and,
-    under ``task='path'``, every row's CIGAR (traceback banded at the
-    known distance, k = d, the tightest admissible band; the
-    reference's traceback is per-pair, edlib/src/edlib.cpp:931-1141,
-    but the batch loop around it need not be).  NW locations follow
-    from the distance alone.  Rows whose distance exceeds ``k`` never
-    reach a per-pair scan; HW/SHW rows with a distance run the exact
-    single-pair kernel (``kernel.align``) for their locations / path.
+    batch kernel (``batch_edit_distance``'s native scan), and for NW
+    one more native call over the same encoding returns every row's
+    alphabet size and, under ``task='path'``, every row's CIGAR
+    (traceback banded at the known distance, k = d, the tightest
+    admissible band; the reference's traceback is per-pair,
+    edlib/src/edlib.cpp:931-1141, but the batch loop around it need not
+    be).  NW locations follow from the distance alone.  Rows whose
+    distance exceeds ``k`` never reach a per-pair scan; HW/SHW rows
+    with a distance run the exact single-pair kernel (``kernel.align``)
+    for their locations / path.
 
     ``k`` may be an int (same bound for all rows) or a Column (per-pair
     bound, same as ``edit_distance``).
@@ -159,7 +146,8 @@ def _align_batch(qs: list, ts: list, ks, mode: str, task: str, eqs,
     """``align_expr``'s result rows for one batch of str pairs.
 
     ``ks``: scalar or per-row k; ``eqs``: equality pairs of single
-    characters (``_symbol_pairs`` output).  The per-pair Python
+    characters (``_symbol_pairs`` output).  Both sides are encoded once
+    for the distance call and the NW align call.  The per-pair Python
     kernel runs only for rows with an empty side, HW/SHW rows with a
     distance, and NW paths the batch call did not build: pairs past
     the direct-traceback memory limit (kernel._direct_traceback, the
@@ -169,10 +157,10 @@ def _align_batch(qs: list, ts: list, ks, mode: str, task: str, eqs,
     from .. import _native
 
     n = len(qs)
-    dists = batch_edit_distance(qs, ts, mode, ks, equalities=eqs)
+    q_enc, t_enc = encode_flat(qs), encode_flat(ts)
+    dists = _flat_distance(qs, ts, q_enc, t_enc, mode, ks, eqs)
     per_row_k = np.broadcast_to(np.asarray(ks, dtype=np.int64), (n,))
-    q_buf, q_start, q_lens = encode_flat(qs)
-    t_buf, t_start, t_lens = encode_flat(ts)
+    q_lens, t_lens = q_enc[2], t_enc[2]
     extended = cigar_format == "extended"
 
     path_d = None
@@ -180,9 +168,8 @@ def _align_batch(qs: list, ts: list, ks, mode: str, task: str, eqs,
         path_d = np.where((q_lens > 0) & (t_lens > 0) & (dists >= 0)
                           & kernel._direct_traceback(q_lens, t_lens),
                           dists, -1)
-    got = _native.native_batch_align(
-        q_buf, q_start, q_lens, t_buf, t_start, t_lens, path_d,
-        _encode_equalities(eqs), extended)
+    got = _native.native_batch_align(*q_enc, *t_enc, path_d,
+                                     _encode_equalities(eqs), extended)
     if got is None:
         # alphabet size as kernel.encode_pair counts it: unique symbols
         # across both sequences (equality pairs relate symbols, they

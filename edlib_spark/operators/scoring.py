@@ -12,9 +12,9 @@ Plan shape (deliberate):
         predicate (NW: |len_a-len_b| <= k; HW/SHW: len_a-len_b <= k,
         one-sided because the target end/start is free): pairs are
         pruned JVM-side before any Python runs
-    sortWithinPartitions(max_len)                -- Arrow batches get
-        similar-length pairs (numpy padding waste ~ max-min in batch)
-    edit_distance pandas UDF (batched Myers)     -- per-pair k bound
+    edit_distance pandas UDF (batched Myers)     -- per-pair k bound;
+        the native scan bands each pair on its own, so batches need no
+        length sort
     norm_distance + match filter
 """
 
@@ -42,7 +42,7 @@ def _length_prune(mode: str, k):
 
 
 def score_pairs(pairs: DataFrame, canon: DataFrame, tau: float = 0.2,
-                mode: str = "NW", length_sort: bool = True) -> DataFrame:
+                mode: str = "NW") -> DataFrame:
     """(id_a, id_b, len_a, len_b, edit_distance, norm_distance)."""
     a = canon.select(F.col("conv_id").alias("id_a"),
                      F.col("full_text").alias("text_a"),
@@ -57,8 +57,6 @@ def score_pairs(pairs: DataFrame, canon: DataFrame, tau: float = 0.2,
     max_len = F.greatest("len_a", "len_b")
     k = F.ceil(F.lit(float(tau)) * max_len).cast("int")
     df = df.where(_length_prune(mode, k))
-    if length_sort:
-        df = df.sortWithinPartitions(max_len)
 
     df = df.withColumn("edit_distance",
                        edit_distance(F.col("text_a"), F.col("text_b"),

@@ -1,3 +1,4 @@
+import contextlib
 import importlib.util
 import os
 import shutil
@@ -19,6 +20,24 @@ def load_tools_package():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
+
+
+@contextlib.contextmanager
+def native_lane(native: bool):
+    """Run the body on one batch-scoring lane: ``native=True`` keeps the
+    C scan (when it built), ``native=False`` hides the library the way a
+    host without a compiler sees it, so every pair takes the exact
+    per-pair fallback.  A plain context manager, not a fixture, so
+    hypothesis tests and in-body lane loops can use it too."""
+    from edlib_spark import _native
+
+    saved = _native.lib
+    if not native:
+        _native.lib = None
+    try:
+        yield
+    finally:
+        _native.lib = saved
 
 
 @pytest.fixture(scope="session")

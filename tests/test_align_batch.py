@@ -6,7 +6,8 @@ import numpy as np
 import pytest
 
 from edlib_spark import _native, kernel
-from edlib_spark.functions.alignment import _align_batch, _symbol_pairs
+from edlib_spark.batch import _symbol_pairs
+from edlib_spark.functions.alignment import _align_batch
 
 FORMATS = ("extended", "standard")
 

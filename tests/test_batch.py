@@ -1,10 +1,12 @@
-"""Differential tests: batch-vectorized kernel vs single-pair kernel/oracle."""
+"""Differential tests: the batch kernel (native scan and the exact
+per-pair fallback) vs the single-pair kernel/oracle."""
 
 import re
 
 import numpy as np
 import pytest
 
+from conftest import native_lane
 from edlib_spark.batch import batch_edit_distance
 from edlib_spark.kernel import align
 from edlib_spark.oracle import simple_edit_distance
@@ -108,7 +110,7 @@ def test_batch_unicode():
 
 
 def test_batch_mixed_block_counts_one_call():
-    """Pairs with different num_blocks in one call exercise the chunker."""
+    """Pairs with different block counts share one native call."""
     rng = np.random.default_rng(17)
     qs = _random_strings(rng, 30, 6, 1, 300)
     ts = _random_strings(rng, 30, 6, 1, 300)
@@ -127,18 +129,18 @@ def test_batch_empty_ignores_k():
     for mode, exp in (("NW", [6, 6, 0, 6]),
                       ("SHW", [0, 6, 0, 0]),
                       ("HW", [0, 6, 0, 0])):
-        for use_native in (True, False):
-            got = batch_edit_distance(qs, ts, mode=mode, k=2,
-                                      use_native=use_native)
-            assert got.tolist() == exp, (mode, use_native)
+        for native in (True, False):
+            with native_lane(native):
+                got = batch_edit_distance(qs, ts, mode=mode, k=2)
+            assert got.tolist() == exp, (mode, native)
             for q, t, e in zip(qs, ts, exp):
                 assert align(q or "", t or "", mode=mode,
                              k=2)["editDistance"] == e
 
 
 def test_batch_equalities_match_kernel():
-    """Batched additional-equality scoring (native + numpy) vs the
-    exact kernel, covering case-folding and non-transitive wildcards."""
+    """Batched additional-equality scoring (both lanes) vs the exact
+    kernel, covering case-folding and non-transitive wildcards."""
     rng = np.random.default_rng(7)
     eqs_case = [(chr(c), chr(c).upper())
                 for c in range(ord("a"), ord("z") + 1)]
@@ -155,20 +157,19 @@ def test_batch_equalities_match_kernel():
             want = [align(q, t, mode=mode,
                           additionalEqualities=eqs)["editDistance"]
                     for q, t in zip(qs, ts)]
-            for use_native in (True, False):
-                got = batch_edit_distance(qs, ts, mode=mode, k=-1,
-                                          use_native=use_native,
-                                          equalities=eqs)
-                assert got.tolist() == want, (mode, use_native)
+            for native in (True, False):
+                with native_lane(native):
+                    got = batch_edit_distance(qs, ts, mode=mode, k=-1,
+                                              equalities=eqs)
+                assert got.tolist() == want, (mode, native)
 
 
 @pytest.mark.parametrize("mode", MODES)
 def test_batch_mixed_k_nonbmp_chunk_grouping(mode):
-    """Mixed per-pair k on non-BMP text (numpy path): the geometric
-    k-magnitude chunk grouping must not change results — every pair
-    matches the exact kernel regardless of which chunk/band served it."""
+    """Mixed per-pair k (3 to 5000) on non-BMP text, one call per lane:
+    every pair matches the exact kernel whatever its neighbours' k."""
     rng = np.random.default_rng(321)
-    alpha = "acg\U0001F600"  # astral symbol; use_native=False pins numpy
+    alpha = "acg\U0001F600"  # astral symbol
     qs, ts, ks = [], [], []
     for i in range(120):
         qlen = int(rng.integers(0, 300))
@@ -188,15 +189,17 @@ def test_batch_mixed_k_nonbmp_chunk_grouping(mode):
         ks.append(k)
     want = [align(q, t, mode=mode, k=k)["editDistance"]
             for q, t, k in zip(qs, ts, ks)]
-    got = batch_edit_distance(qs, ts, mode, np.array(ks),
-                              use_native=False)
-    assert got.tolist() == want
+    for native in (True, False):
+        with native_lane(native):
+            got = batch_edit_distance(qs, ts, mode, np.array(ks))
+        assert got.tolist() == want, native
 
 
 def test_equalities_int_codepoints_and_validation():
-    """Integer-codepoint equality pairs work end-to-end, and multi-char
-    string entries fail with a clear ValueError (not an opaque ord()
-    TypeError)."""
+    """Integer-codepoint equality pairs work end-to-end; multi-char
+    string entries and ints outside 0..0x10FFFF fail with a ValueError
+    naming the pair, on every lane alike (2**32 + 97 must not wrap to
+    'a', -1 must not be dropped)."""
     want = batch_edit_distance(["abc"], ["ABC"], mode="NW", k=-1,
                                equalities=[("a", "A"), ("b", "B"),
                                            ("c", "C")])
@@ -205,6 +208,12 @@ def test_equalities_int_codepoints_and_validation():
     assert got.tolist() == want.tolist() == [0]
     with pytest.raises(ValueError, match="single characters"):
         batch_edit_distance(["a"], ["b"], equalities=[("ab", "c")])
+    for bad in ((2**32 + 97, 98), (-1, 97), (0x110000, 97),
+                (97, 0x110000)):
+        with pytest.raises(ValueError, match=re.escape(repr(bad))):
+            batch_edit_distance(["ab"], ["bb"], equalities=[bad])
+    assert batch_edit_distance(["a\U0010FFFF"], ["ab"],
+                               equalities=[(0x10FFFF, 98)]).tolist() == [0]
 
 
 def test_edit_distance_column_int_equalities(spark):
@@ -244,10 +253,10 @@ def test_batch_tight_k_long_near_identical(mode):
         for t in variants:
             for k in (0, 1, 2, 3, 5, 16, 63, 64):
                 want = align(base, t, mode=mode, k=k)["editDistance"]
-                for use_native in (True, False):
-                    got = batch_edit_distance([base], [t], mode, k,
-                                              use_native=use_native)
-                    assert got[0] == want, (L, len(t), k, use_native,
+                for native in (True, False):
+                    with native_lane(native):
+                        got = batch_edit_distance([base], [t], mode, k)
+                    assert got[0] == want, (L, len(t), k, native,
                                             got[0], want)
 
 
@@ -365,25 +374,26 @@ def test_native_path_matches_python_walk():
         assert got == want, (q, t, d_true)
 
 
-# ---- astral-plane text on the native lane, lone surrogates, and the
-# native build's degraded mode ----
+# ---- astral-plane text on the native lane, lone surrogates, the C
+# dynamic-k doubling, the per-pair fallback and the native build's
+# degraded mode ----
 
 ASTRAL = "acg\U0001F600\U0001F680\U0010FFFF"
 
 
 @pytest.fixture()
 def native_only(monkeypatch):
-    """Native library loaded, numpy scan forbidden: any pair that
-    reaches batch._chunk_distance fails the test."""
+    """Native library loaded, per-pair fallback forbidden: any pair that
+    reaches batch._exact_distances fails the test."""
     from edlib_spark import _native, batch
 
     if _native.lib is None:
         pytest.skip(f"native library unavailable: {_native.build_error}")
 
     def _forbidden(*args, **kwargs):
-        raise AssertionError("numpy scan reached with native loaded")
+        raise AssertionError("per-pair fallback reached with native loaded")
 
-    monkeypatch.setattr(batch, "_chunk_distance", _forbidden)
+    monkeypatch.setattr(batch, "_exact_distances", _forbidden)
 
 
 def _astral_pairs(rng, n, alpha=ASTRAL):
@@ -407,7 +417,7 @@ def _astral_pairs(rng, n, alpha=ASTRAL):
 @pytest.mark.parametrize("mode", MODES)
 def test_native_scores_astral_pairs(native_only, mode):
     """Astral-plane pairs (up to U+10FFFF) are scored by the C scan, not
-    handed to the numpy scan, and equal kernel.align for unbounded,
+    handed to the per-pair fallback, and equal kernel.align for unbounded,
     tight and mixed per-pair k."""
     rng = np.random.default_rng(2024)
     qs, ts = _astral_pairs(rng, 60)
@@ -479,16 +489,93 @@ def test_native_empty_batch(native_only):
     assert got is not None and got.tolist() == []
 
 
-@pytest.mark.parametrize("use_native", (True, False))
 @pytest.mark.parametrize("mode", MODES)
-def test_batch_lone_surrogates_match_kernel(mode, use_native):
+def test_native_unbounded_doubling_past_64_and_128(native_only, mode):
+    """Unbounded k runs edlib's k = 64, 128, ... doubling inside the C
+    call (edlib.cpp:196-217), capped at the largest possible distance.
+    True distances above 64, 128 and 256 need two, three and four
+    rounds, and the all-mismatch pairs only finish at the cap; a loop
+    that stops early returns -1 and fails here."""
+    rng = np.random.default_rng(64128)
+    letters = "acgt"
+    qs, ts = [], []
+    for n_mut in (10, 90, 180, 300):
+        q = "".join(letters[i] for i in rng.integers(0, 4, 700))
+        subst = list(q)
+        for p in rng.choice(len(q), n_mut, replace=False):
+            subst[p] = "x"
+        cut = int(rng.integers(0, 700 - n_mut))
+        qs += [q, q, q]
+        ts += ["".join(subst), q[:cut] + q[cut + n_mut:],
+               "zz" + "".join(subst) + "zz"]
+    qs += ["a" * 100, "a" * 300, "a\U0001F600" * 90]
+    ts += ["b" * 300, "b" * 100, "b" * 200]
+    want = [align(q, t, mode=mode)["editDistance"]
+            for q, t in zip(qs, ts)]
+    assert any(64 < d <= 128 for d in want), want
+    assert any(128 < d <= 256 for d in want), want
+    assert max(want) > 256, want
+    assert batch_edit_distance(qs, ts, mode).tolist() == want
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_unscored_native_rows_rescored_exactly(monkeypatch, mode):
+    """Rows the native call leaves unscored take the exact per-pair
+    kernel, equalities included: per-pair UNSUPPORTED entries (scratch
+    growth failed) and a whole-batch None (the batch scratch could not
+    be allocated).  Only those rows reach the fallback."""
+    from edlib_spark import _native, batch
+
+    if _native.lib is None:
+        pytest.skip(f"native library unavailable: {_native.build_error}")
+    rng = np.random.default_rng(31)
+    qs, ts = _astral_pairs(rng, 40)
+    ks = rng.choice([-1, 0, 5, 40, 300], len(qs))
+    eqs = [("a", "\U0001F600")]
+    want = [align(q, t, mode=mode, k=int(k),
+                  additionalEqualities=eqs)["editDistance"]
+            for q, t, k in zip(qs, ts, ks)]
+
+    real = _native.native_batch_distance
+    exact = batch._exact_distances
+    native_rows, fallback_rows = [], []
+
+    def unsupported_every_third(*args, **kwargs):
+        out = real(*args, **kwargs)
+        native_rows.append(len(out))
+        out[::3] = _native.UNSUPPORTED
+        return out
+
+    def spy(queries, *args):
+        fallback_rows.append(len(queries))
+        return exact(queries, *args)
+
+    monkeypatch.setattr(batch, "_exact_distances", spy)
+    monkeypatch.setattr(_native, "native_batch_distance",
+                        unsupported_every_third)
+    got = batch_edit_distance(qs, ts, mode, ks, equalities=eqs)
+    assert got.tolist() == want
+    assert fallback_rows == [len(range(0, native_rows[0], 3))]
+
+    fallback_rows.clear()
+    monkeypatch.setattr(_native, "native_batch_distance",
+                        lambda *args, **kwargs: None)
+    got = batch_edit_distance(qs, ts, mode, ks, equalities=eqs)
+    assert got.tolist() == want
+    assert fallback_rows == native_rows
+
+
+@pytest.mark.parametrize("native", (True, False))
+@pytest.mark.parametrize("mode", MODES)
+def test_batch_lone_surrogates_match_kernel(mode, native):
     """Lone surrogates (legal in a Python str, e.g. from a lossy decode)
     are one codepoint each, on both lanes, like kernel.align sees them;
     they used to raise UnicodeEncodeError in the batch encoder."""
     qs = ["a\ud800b", "\udfff", "x\ud83d\ude00y", "ab", "\ud800" * 70]
     ts = ["ab", "\udfff\udfff", "xy", "a\udc00b", "\ud801" * 3]
     for k in (-1, 1):
-        got = batch_edit_distance(qs, ts, mode, k, use_native=use_native)
+        with native_lane(native):
+            got = batch_edit_distance(qs, ts, mode, k)
         want = [align(q, t, mode=mode, k=k)["editDistance"]
                 for q, t in zip(qs, ts)]
         assert got.tolist() == want, (mode, k)
@@ -497,7 +584,7 @@ def test_batch_lone_surrogates_match_kernel(mode, use_native):
 def test_native_kernel_built():
     """The C kernel must build wherever cffi and a C compiler exist, so
     a broken build fails the suite instead of silently running the
-    ~100x slower numpy scan."""
+    ~100x slower per-pair fallback."""
     import shutil
 
     from edlib_spark import _native
@@ -516,7 +603,7 @@ def test_native_kernel_built():
 
 
 def test_native_build_failure_warns(monkeypatch):
-    """A failed native build keeps the numpy fallback but says so: one
+    """A failed native build keeps the per-pair fallback but says so: one
     RuntimeWarning naming the cause, which also stays on
     _native.build_error.  lib/ffi are restored afterwards, so later
     tests keep the native lane."""

@@ -6,6 +6,7 @@ random-differential strategy of the reference suite
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from conftest import native_lane
 from edlib_spark import kernel
 from edlib_spark.batch import batch_edit_distance
 from edlib_spark.oracle import simple_edit_distance
@@ -77,14 +78,15 @@ def test_empty_inputs_k_quirk():
 
 @settings(max_examples=25, **COMMON)
 @given(pairs=st.lists(st.tuples(TEXT, TEXT), min_size=1, max_size=12),
-       mode=MODES, use_native=st.booleans())
-def test_batch_matches_oracle_property(pairs, mode, use_native):
+       mode=MODES, native=st.booleans())
+def test_batch_matches_oracle_property(pairs, mode, native):
     qs = [p[0] for p in pairs]
     ts = [p[1] for p in pairs]
-    got = batch_edit_distance(qs, ts, mode, -1, use_native=use_native)
+    with native_lane(native):
+        got = batch_edit_distance(qs, ts, mode, -1)
     for i, (q, t) in enumerate(pairs):
         want, _ = simple_edit_distance(q, t, mode)
-        assert got[i] == want, (q, t, mode, use_native)
+        assert got[i] == want, (q, t, mode, native)
 
 
 @settings(max_examples=40, **COMMON)
@@ -111,9 +113,8 @@ def test_path_replays_to_distance(q, t):
                                 st.sampled_from("xyz")),
                       min_size=0, max_size=6),
        k=st.integers(0, 70), mode=MODES,
-       use_native=st.booleans())
-def test_tight_k_near_identical_property(base, edits, k, mode,
-                                         use_native):
+       native=st.booleans())
+def test_tight_k_near_identical_property(base, edits, k, mode, native):
     """Property form of the tight-k band regression: multi-block
     near-identical pairs with k near (or below) the true distance must
     agree with the exact kernel on both batch lanes."""
@@ -122,6 +123,6 @@ def test_tight_k_near_identical_property(base, edits, k, mode,
         t[pos % len(t)] = ch
     t = "".join(t)
     want = kernel.align(base, t, mode=mode, k=k)["editDistance"]
-    got = batch_edit_distance([base], [t], mode, k,
-                              use_native=use_native)
+    with native_lane(native):
+        got = batch_edit_distance([base], [t], mode, k)
     assert int(got[0]) == want

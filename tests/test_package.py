@@ -10,7 +10,7 @@ subprocess whose cwd and sys.path contain ONLY the artifact (no
 /root/repo), imports the kernel and the batch path, and checks known
 alignments — including the batch kernel, whose optional cffi build
 writes to ~/.cache (never into the package dir, so it is zip-safe) and
-falls back to numpy when no compiler exists.
+falls back to the exact per-pair kernel when no compiler exists.
 """
 
 import os

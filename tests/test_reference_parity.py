@@ -19,6 +19,7 @@ from pathlib import Path
 import numpy as np
 import pytest
 
+from conftest import native_lane
 from edlib_spark import kernel
 
 REF = Path("/root/reference/edlib")
@@ -204,10 +205,10 @@ def test_multiblock_parity_vs_reference_binary(probe):
 def test_batched_equality_parity_vs_reference_binary(probe):
     """The BATCH kernel with additional equalities vs the reference
     binary: one batch call per (mode, equality set) so the
-    equality-aware Peq planes run through the chunked hot path — both
-    the native (cffi) and numpy lanes.  Includes a non-transitive set
-    ('a'~'c','a'~'g','a'~'t' without c~g) that a recode-based
-    implementation could not express."""
+    equality-aware Peq planes run through the batch hot path — both
+    the native (cffi) lane and the exact per-pair fallback.  Includes a
+    non-transitive set ('a'~'c','a'~'g','a'~'t' without c~g) that a
+    recode-based implementation could not express."""
     from edlib_spark.batch import batch_edit_distance
     eq_sets = {"ac": [("a", "c")],
                "agct": [("a", "g"), ("c", "t")],
@@ -229,11 +230,11 @@ def test_batched_equality_parity_vs_reference_binary(probe):
                 ks.append(k)
                 cases.append((mode, "distance", k, eqs, q, t))
             want = [w[0] for w in _run_reference(probe, cases)]
-            for use_native in (True, False):
-                got = batch_edit_distance(
-                    qs, ts, mode, np.array(ks), use_native=use_native,
-                    equalities=pairs)
-                assert got.tolist() == want, (mode, eqs, use_native)
+            for native in (True, False):
+                with native_lane(native):
+                    got = batch_edit_distance(
+                        qs, ts, mode, np.array(ks), equalities=pairs)
+                assert got.tolist() == want, (mode, eqs, native)
 
 
 def test_native_tight_k_multiblock_parity_vs_reference_binary(probe):
@@ -241,7 +242,7 @@ def test_native_tight_k_multiblock_parity_vs_reference_binary(probe):
     tight k (< 64, including k smaller than the true distance) on
     multi-block queries (3-7 blocks of 64), with and without equality
     pairs, routed explicitly through batch_edit_distance's native scan
-    AND the numpy lane.  Targets are near-identical mutations of the
+    AND its per-pair fallback.  Targets are near-identical mutations of the
     query so true distances cluster around the k boundary — the regime
     where the original native band-extension logic returned -1 for true
     distances <= k.  This suite fails if the C scan ever drifts from
@@ -278,8 +279,8 @@ def test_native_tight_k_multiblock_parity_vs_reference_binary(probe):
                 ks.append(k)
                 cases.append((mode, "distance", k, eqs, q, t))
             want = [w[0] for w in _run_reference(probe, cases)]
-            for use_native in (True, False):
-                got = batch_edit_distance(
-                    qs, ts, mode, np.array(ks), use_native=use_native,
-                    equalities=pairs)
-                assert got.tolist() == want, (mode, eqs, use_native)
+            for native in (True, False):
+                with native_lane(native):
+                    got = batch_edit_distance(
+                        qs, ts, mode, np.array(ks), equalities=pairs)
+                assert got.tolist() == want, (mode, eqs, native)

@@ -215,8 +215,8 @@ def test_top_n_best_caps_n(spark):
 def test_edit_distance_nonbmp_spark_lane_handoff(spark):
     """Astral-plane text through the REAL Spark scorer surface: the C
     lane sizes its codepoint table to each batch and scores BMP and
-    astral pairs alike, with no handoff to the numpy lane.
-    test_batch.py pins that at the batch API (numpy scan forbidden);
+    astral pairs alike, with no handoff to the per-pair fallback.
+    test_batch.py pins that at the batch API (fallback forbidden);
     this pins it at the DataFrame level (edit_distance UDF, mixed
     BMP/astral rows sharing one Arrow batch), NW and HW, unbounded and
     tight k, against the exact kernel per pair."""
