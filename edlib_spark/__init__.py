@@ -8,10 +8,19 @@ Public surface:
   * plans.linkage.run_linkage — the end-to-end pipeline
 """
 
+import sys
+
 from .batch import batch_edit_distance
 from .kernel import align
 
 __version__ = "0.4.0"
+
+# Inside a PySpark worker (which unpickles the engine's UDFs and so
+# imports this package), stop every later task from re-reading
+# pyspark.zip: ~240 ms of CPU per task before Python 3.13.
+if "pyspark.worker_util" in sys.modules:
+    from . import _worker_import
+    _worker_import.install()
 
 # The Column API needs pyspark + pandas, which the wheel declares only
 # under the [spark] extra (cluster images usually provide them); the

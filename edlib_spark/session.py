@@ -46,8 +46,7 @@ def get_spark(app_name: str = "edlib-spark", master: str | None = None,
         # 2048, not the 10k default: with multi-KB text columns, 10k-row
         # Arrow batches (~30 MB) collapse JVM->worker feed throughput at
         # 32-way concurrency (measured 5-20x degradation, worsening per
-        # run); ~6 MB batches pipeline smoothly and cost the kernels
-        # nothing (the native scan is per-pair; numpy amortizes by 2k).
+        # run); ~6 MB batches pipeline smoothly.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("SPARK_ARROW_BATCH", "2048"))
         # AQE sizes stages by SHUFFLE bytes, but our pair-scoring stages
