@@ -5,7 +5,8 @@ entry(spark)    — flagship: full record-linkage pipeline (canonicalize →
                   synthetic transcripts; returns the cluster assignments.
 queries()       — one entry per implemented operator (SURVEY.md §2);
                   each callable takes (spark, sf_dir) -> DataFrame.
-oracle_sql()    — equivalent DuckDB SQL per query where expressible.
+oracle_sql()    — the equivalent DuckDB SQL of every query.
+Both are views of driver_contract.registry(), in the same order.
 """
 
 from __future__ import annotations

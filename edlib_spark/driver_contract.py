@@ -1,11 +1,13 @@
 """Driver-contract implementations: queries() + oracle_sql() bodies.
 
 Each query here has BOTH a Spark implementation (DataFrame, reading
-parquet from the given sf_dir) and, where expressible, an ANSI-SQL
-oracle DuckDB runs on the same tables.  Column names and types are
-aligned exactly (the driver hashes values after sorting columns by
-name), so every computed column is aliased identically on both sides
-and integer outputs are cast to BIGINT.
+parquet from the given sf_dir) and an ANSI-SQL oracle DuckDB runs on
+the same tables; ``registry()`` at the bottom is the one ordered table
+of (name, family, Spark function, oracle SQL) that both
+``build_queries()`` and ``build_oracle_sql()`` read.  Column names and
+types are aligned exactly (the driver hashes values after sorting
+columns by name), so every computed column is aliased identically on
+both sides and integer outputs are cast to BIGINT.
 
 The conversation-pipeline queries operate on a transcripts-shaped table
 derived deterministically FROM the events table (conv per user, turns
@@ -19,6 +21,8 @@ their oracles read the same files via read_parquet.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -213,9 +217,6 @@ def _sql_scored(tau: float, stratum: str = "TRUE") -> str:
 """
 
 
-_SQL_SCORED = _sql_scored(TAU)
-
-
 def _edges_of(scored: DataFrame, tau: float) -> DataFrame:
     max_len = F.greatest("len_a", "len_b")
     return (scored
@@ -236,9 +237,6 @@ def _sql_edges(stratum: str = "TRUE") -> str:
     WHERE edit_distance >= 0
       AND edit_distance <= {TAU_EDGE} * greatest(len_a, len_b)
 """
-
-
-_SQL_EDGES = _sql_edges()
 
 
 def clusters_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,6 +269,26 @@ def clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("conv_id", "cluster_id"))
 
 
+def _sql_closure(edges: str) -> str:
+    """The recursive connected-components CTEs shared by every
+    cluster-chain oracle: ``e`` (the given id_a/id_b edge select),
+    ``sym`` (its symmetric closure), ``reach`` (node -> every label
+    reachable from it) and ``comp`` (node -> min reachable label).
+    The caller opens ``WITH RECURSIVE`` and LEFT JOINs its node table
+    to comp with coalesce(comp.root, node), which makes a node in no
+    edge its own cluster.  Internal aliases (sy, rc) stay clear of the
+    callers' CTE names."""
+    return f"""e AS ({edges}),
+    sym AS (SELECT id_a AS u, id_b AS v FROM e
+            UNION SELECT id_b, id_a FROM e),
+    reach AS (
+        SELECT u AS node, u AS lab FROM (SELECT DISTINCT u FROM sym)
+        UNION
+        SELECT sy.u AS node, rc.lab AS lab
+        FROM sym sy JOIN reach rc ON sy.v = rc.node),
+    comp AS (SELECT node, min(lab) AS root FROM reach GROUP BY node)"""
+
+
 def _sql_clusters(edges_sql: str | None = None) -> str:
     """``edges_sql``: alternative edge source for the recursive
     closure.  The contract default re-derives edges exhaustively
@@ -279,41 +297,45 @@ def _sql_clusters(edges_sql: str | None = None) -> str:
     stratum-verified) so the CLOSURE computation is still independently
     re-derived at sf0.1 where the exhaustive oracle is infeasible."""
     return f"""
-    WITH RECURSIVE e AS ({edges_sql or _SQL_EDGES}),
-    sym AS (SELECT id_a AS u, id_b AS v FROM e
-            UNION SELECT id_b, id_a FROM e),
-    reach AS (
-        SELECT u AS node, u AS lab FROM (SELECT DISTINCT u FROM sym)
-        UNION
-        SELECT s.u AS node, r.lab AS lab
-        FROM sym s JOIN reach r ON s.v = r.node
-    ),
-    comp AS (SELECT node, min(lab) AS root FROM reach GROUP BY node),
+    WITH RECURSIVE {_sql_closure(edges_sql or _sql_edges())},
     c AS ({_SQL_CANONICAL})
     SELECT c.conv_id, coalesce(comp.root, c.conv_id) AS cluster_id
     FROM c LEFT JOIN comp ON c.conv_id = comp.node
 """
 
 
-_SQL_CLUSTERS = _sql_clusters()
-
-
 # ---------------------------------------------------------------------------
 # customer / documents single-operator queries
 # ---------------------------------------------------------------------------
 
+def _adjacent_pairs(rows: DataFrame, a: Column, b: Column,
+                    id_col: str = "doc_id") -> DataFrame:
+    """Each row paired with the row whose id is one higher: (id_a,
+    id_b, text_a, text_b) with BIGINT ids, text_a = ``a`` of the lower
+    row and text_b = ``b`` of the higher one — the Spark twin of the
+    oracles' ``JOIN ... ON b.doc_id = a.doc_id + 1``."""
+    left = rows.select(F.col(id_col).alias("id_a"), a.alias("text_a"))
+    right = rows.select((F.col(id_col) - 1).alias("id_a"),
+                        F.col(id_col).alias("id_b"), b.alias("text_b"))
+    return left.join(right, "id_a").select(
+        F.col("id_a").cast("bigint").alias("id_a"),
+        F.col("id_b").cast("bigint").alias("id_b"), "text_a", "text_b")
+
+
+def _distance_of(pairs: DataFrame, mode: str, k: int = -1,
+                 extra: tuple = (), **kw) -> DataFrame:
+    """(id_a, id_b, *extra, edit_distance BIGINT) of text_a vs text_b."""
+    return pairs.select(
+        "id_a", "id_b", *extra,
+        edit_distance(F.col("text_a"), F.col("text_b"), mode, k, **kw)
+        .cast("bigint").alias("edit_distance"))
+
+
 def nw_distance_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _read(spark, sf_dir, "customer")
-    a = cust.select(F.col("c_custkey").alias("id_a"),
-                    F.col("c_name").alias("name_a"))
-    b = cust.select((F.col("c_custkey") - 1).alias("id_a"),
-                    F.col("c_name").alias("name_b"),
-                    F.col("c_custkey").alias("id_b"))
-    return (a.join(b, "id_a")
-            .select(F.col("id_a").cast("bigint").alias("id_a"),
-                    F.col("id_b").cast("bigint").alias("id_b"),
-                    edit_distance(F.col("name_a"), F.col("name_b"), "NW", -1)
-                    .cast("bigint").alias("edit_distance")))
+    name = F.col("c_name")
+    return _distance_of(_adjacent_pairs(cust, name, name, "c_custkey"),
+                        "NW")
 
 
 _SQL_NW_CUSTOMER = """
@@ -324,18 +346,17 @@ _SQL_NW_CUSTOMER = """
 """
 
 
+def _doc_pairs(spark: SparkSession, sf_dir: str, a: Column | None = None,
+               b: Column | None = None) -> DataFrame:
+    """Adjacent document pairs; ``a``/``b`` default to the full text."""
+    text = F.col("text")
+    return _adjacent_pairs(_read(spark, sf_dir, "documents"),
+                           text if a is None else a,
+                           text if b is None else b)
+
+
 def nw_distance_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"),
-                    F.col("text").alias("text_a"))
-    b = docs.select((F.col("doc_id") - 1).alias("id_a"),
-                    F.col("doc_id").alias("id_b"),
-                    F.col("text").alias("text_b"))
-    return (a.join(b, "id_a")
-            .select(F.col("id_a").cast("bigint").alias("id_a"),
-                    F.col("id_b").cast("bigint").alias("id_b"),
-                    edit_distance(F.col("text_a"), F.col("text_b"), "NW", -1)
-                    .cast("bigint").alias("edit_distance")))
+    return _distance_of(_doc_pairs(spark, sf_dir), "NW")
 
 
 _SQL_NW_DOCUMENTS = """
@@ -349,18 +370,7 @@ _SQL_NW_DOCUMENTS = """
 def nw_distance_documents_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-bounded variant: the reference's -k discard contract
     (apps/aligner/aligner.cpp:41,71-72,170): -1 where distance > k."""
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"),
-                    F.col("text").alias("text_a"))
-    b = docs.select((F.col("doc_id") - 1).alias("id_a"),
-                    F.col("doc_id").alias("id_b"),
-                    F.col("text").alias("text_b"))
-    return (a.join(b, "id_a")
-            .select(F.col("id_a").cast("bigint").alias("id_a"),
-                    F.col("id_b").cast("bigint").alias("id_b"),
-                    edit_distance(F.col("text_a"), F.col("text_b"), "NW",
-                                  100)
-                    .cast("bigint").alias("edit_distance")))
+    return _distance_of(_doc_pairs(spark, sf_dir), "NW", 100)
 
 
 _SQL_NW_DOCUMENTS_K = """
@@ -433,6 +443,16 @@ def _snm_ctes(attrs: bool = False) -> str:
     )"""
 
 
+def _snm_pairs(docs: DataFrame) -> DataFrame:
+    """(id_a, id_b, rank_gap) co-window pairs under the shared SNM key
+    and window — the Spark twin of _snm_ctes' pairs CTE, used by every
+    SNM-derived query."""
+    keyed = docs.select(F.col("doc_id").alias("rec_id"),
+                        _snm_prefix_key().alias("snm_key"))
+    return sorted_neighborhood_pairs(keyed, key_col="snm_key",
+                                     id_col="rec_id", window=_SNM_WINDOW)
+
+
 def snm_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood blocking (the third classic ER blocking
     family next to key-equality blocks and LSH): sort documents by a
@@ -442,13 +462,7 @@ def snm_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction; the rank is computed scale-safely (range partition +
     offset ranks, no single-partition window — operators/blocking.py
     snm_ranks)."""
-    docs = _read(spark, sf_dir, "documents")
-    keyed = docs.select(
-        F.col("doc_id").alias("rec_id"),
-        _snm_prefix_key().alias("snm_key"))
-    return (sorted_neighborhood_pairs(keyed, key_col="snm_key",
-                                      id_col="rec_id",
-                                      window=_SNM_WINDOW)
+    return (_snm_pairs(_read(spark, sf_dir, "documents"))
             .select(F.col("id_a").cast("bigint").alias("id_a"),
                     F.col("id_b").cast("bigint").alias("id_b"),
                     F.col("rank_gap").cast("bigint").alias("rank_gap")))
@@ -472,6 +486,11 @@ _FS_PARAMS_PATH = os.path.join(_REPO_ROOT, "data",
                                "fs_params_current.parquet")
 _FS_N_FIELDS = 4
 _FS_BAND = 64  # n_chars length-band width (field 2)
+# The head every FS oracle opens with: the shared params side table
+# as fsp, then the SNM keyed/ranked/pairs CTEs with the FS attributes.
+_SQL_FS_HEAD = f"""fsp AS (SELECT field_id, m, u, lam
+                 FROM read_parquet('{_FS_PARAMS_PATH}/*.parquet')),
+    {_snm_ctes(attrs=True)}"""
 
 
 def _fs_pairs_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -482,16 +501,11 @@ def _fs_pairs_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     0 lang, 1 source, 2 length band (n_chars div 64), 3 key prefix."""
     from .operators.linkage import agreement_bits
     docs = _read(spark, sf_dir, "documents")
-    pfx = _snm_prefix_key()
-    keyed = docs.select(F.col("doc_id").alias("rec_id"),
-                        pfx.alias("snm_key"))
-    pairs = sorted_neighborhood_pairs(keyed, key_col="snm_key",
-                                      id_col="rec_id",
-                                      window=_SNM_WINDOW)
+    pairs = _snm_pairs(docs)
     attrs = docs.select(
         "doc_id", "lang", "source",
         F.expr(f"n_chars div {_FS_BAND}").alias("band"),
-        pfx.alias("pfx"))
+        _snm_prefix_key().alias("pfx"))
     a = attrs.select(*[F.col(c).alias(c + "_a") for c in attrs.columns])
     b = attrs.select(*[F.col(c).alias(c + "_b") for c in attrs.columns])
     j = (pairs.join(a, pairs["id_a"] == a["doc_id_a"])
@@ -510,6 +524,26 @@ def _fs_pairs_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang_a", "source_a")
 
 
+def _fs_fit(spark: SparkSession,
+            sf_dir: str) -> tuple[DataFrame, float, list, list]:
+    """(pf, lam, m, u): the SNM pair flags plus the EM params every FS
+    query shares — trained once per sf_dir into the side table the
+    oracles read, then collected in field order."""
+    from .operators.linkage import fs_train
+    pf = _fs_pairs_flags(spark, sf_dir)
+    _ensure_side_table(sf_dir, _FS_PARAMS_PATH,
+                       lambda: fs_train(pf, _FS_N_FIELDS))
+    prm = sorted(spark.read.parquet(_FS_PARAMS_PATH).collect(),
+                 key=lambda r: r["field_id"])
+    return pf, prm[0]["lam"], [r["m"] for r in prm], [r["u"] for r in prm]
+
+
+def _fs_posterior(lam: float, m: list, u: list, tf=None) -> Column:
+    from .operators.linkage import fs_posterior_expr
+    return fs_posterior_expr(
+        [F.col(f"f{i}") for i in range(_FS_N_FIELDS)], lam, m, u, tf=tf)
+
+
 def fs_match_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi-Sunter probabilistic linkage over the SNM candidates:
     agreement patterns -> unsupervised EM (driver-side, over the
@@ -520,17 +554,8 @@ def fs_match_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle re-derives pairs, flags, pattern packing, and the
     left-to-right posterior product from those shared doubles.
     is_match thresholds the UNROUNDED posterior at 0.5."""
-    from .operators.linkage import fs_posterior_expr, fs_train
-    pf = _fs_pairs_flags(spark, sf_dir)
-    _ensure_side_table(sf_dir, _FS_PARAMS_PATH,
-                       lambda: fs_train(pf, _FS_N_FIELDS))
-    prm = sorted(spark.read.parquet(_FS_PARAMS_PATH).collect(),
-                 key=lambda r: r["field_id"])
-    lam = prm[0]["lam"]
-    m = [r["m"] for r in prm]
-    u = [r["u"] for r in prm]
-    post = fs_posterior_expr(
-        [F.col(f"f{i}") for i in range(_FS_N_FIELDS)], lam, m, u)
+    pf, lam, m, u = _fs_fit(spark, sf_dir)
+    post = _fs_posterior(lam, m, u)
     return pf.select(
         "id_a", "id_b", "pattern",
         F.round(post, 6).alias("posterior_r"),
@@ -550,16 +575,7 @@ def fs_tf_match_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     attach.  Band/prefix keep global u.  The oracle recomputes the
     frequencies from the corpus (bigint/bigint -> double on both
     engines) and the same ordered product."""
-    from .operators.linkage import fs_posterior_expr, fs_train
-    pf = _fs_pairs_flags(spark, sf_dir)
-    _ensure_side_table(sf_dir, _FS_PARAMS_PATH,
-                       lambda: fs_train(pf, _FS_N_FIELDS))
-    prm = sorted(spark.read.parquet(_FS_PARAMS_PATH).collect(),
-                 key=lambda r: r["field_id"])
-    lam = prm[0]["lam"]
-    m = [r["m"] for r in prm]
-    u = [r["u"] for r in prm]
-
+    pf, lam, m, u = _fs_fit(spark, sf_dir)
     docs = _read(spark, sf_dir, "documents")
     n = docs.count()
     lf = (docs.groupBy("lang").agg(F.count(F.lit(1)).alias("c"))
@@ -572,9 +588,8 @@ def fs_tf_match_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("lang_a").eqNullSafe(F.col("_lf_lang")))
               .join(F.broadcast(sfq),
                     F.col("source_a").eqNullSafe(F.col("_sf_source"))))
-    post = fs_posterior_expr(
-        [F.col(f"f{i}") for i in range(_FS_N_FIELDS)], lam, m, u,
-        tf=[F.col("tf_lang"), F.col("tf_source"), None, None])
+    post = _fs_posterior(lam, m, u,
+                         tf=[F.col("tf_lang"), F.col("tf_source"), None, None])
     return joined.select(
         "id_a", "id_b", "pattern",
         F.round(post, 6).alias("posterior_tf_r"),
@@ -695,9 +710,7 @@ def _sql_fs(tf: bool) -> str:
         if tf else "flagged fl"
     post_col = "posterior_tf_r" if tf else "posterior_r"
     return f"""
-    WITH fsp AS (SELECT field_id, m, u, lam
-                 FROM read_parquet('{_FS_PARAMS_PATH}/*.parquet')),
-    {_snm_ctes(attrs=True)}{freq_ctes}, {_fs_flags_cte(False, carry)}
+    WITH {_SQL_FS_HEAD}{freq_ctes}, {_fs_flags_cte(False, carry)}
     SELECT CAST(fl.id_a AS BIGINT) AS id_a,
            CAST(fl.id_b AS BIGINT) AS id_b,
            {_FS_PACK_SQL} AS pattern,
@@ -728,14 +741,8 @@ def fs_classify_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle re-derives the whole rule in SQL — pattern probabilities as
     the same left-to-right products, the ratio ordering, and the two
     windowed running error masses."""
-    from .operators.linkage import fs_decision_table, fs_train
-    pf = _fs_pairs_flags(spark, sf_dir)
-    _ensure_side_table(sf_dir, _FS_PARAMS_PATH,
-                       lambda: fs_train(pf, _FS_N_FIELDS))
-    prm = sorted(spark.read.parquet(_FS_PARAMS_PATH).collect(),
-                 key=lambda r: r["field_id"])
-    m = [r["m"] for r in prm]
-    u = [r["u"] for r in prm]
+    from .operators.linkage import fs_decision_table
+    pf, _lam, m, u = _fs_fit(spark, sf_dir)
     table = fs_decision_table(m, u, _FS_N_FIELDS, _FS_MU, _FS_LAMERR)
     ratio, dec = None, None
     for pat, rt, d in table:
@@ -759,9 +766,7 @@ def _sql_fs_classify() -> str:
     accumulates in, so the raw-double threshold comparisons agree."""
     mp_expr, up_expr = _fs_pattern_products()
     return f"""
-    WITH fsp AS (SELECT field_id, m, u, lam
-                 FROM read_parquet('{_FS_PARAMS_PATH}/*.parquet')),
-    {_snm_ctes(attrs=True)}, {_fs_flags_cte(True)}, probs AS (
+    WITH {_SQL_FS_HEAD}, {_fs_flags_cte(True)}, probs AS (
         SELECT CAST(range AS BIGINT) AS pat,
                {mp_expr} AS mp,
                {up_expr} AS up
@@ -803,33 +808,12 @@ def fs_calibration_documents(spark: SparkSession,
     is the shared-side-table product (same rounded double the
     fs_match_documents gate already proves bit-equal), so the binning
     floor(pr*10) agrees exactly across engines."""
-    from .operators.dedup import char_ngram_set
-    from .operators.linkage import fs_posterior_expr, fs_train
-    pf = _fs_pairs_flags(spark, sf_dir)
-    _ensure_side_table(sf_dir, _FS_PARAMS_PATH,
-                       lambda: fs_train(pf, _FS_N_FIELDS))
-    prm = sorted(spark.read.parquet(_FS_PARAMS_PATH).collect(),
-                 key=lambda r: r["field_id"])
-    lam = prm[0]["lam"]
-    m = [r["m"] for r in prm]
-    u = [r["u"] for r in prm]
-    post = fs_posterior_expr(
-        [F.col(f"f{i}") for i in range(_FS_N_FIELDS)], lam, m, u)
-    docs = _read(spark, sf_dir, "documents")
-    grams = docs.select(F.col("doc_id").cast("bigint").alias("gid"),
-                        char_ngram_set(F.col("text"), 5).alias("g"))
-    ga = grams.select(F.col("gid").alias("id_a"), F.col("g").alias("ga"))
-    gb = grams.select(F.col("gid").alias("id_b"), F.col("g").alias("gb"))
-    inter = F.size(F.array_intersect("ga", "gb"))
-    union = F.size(F.array_union("ga", "gb"))
-    is_true = ((F.size("ga") * 100 >= 80 * F.size("gb"))
-               & (F.size("gb") * 100 >= 80 * F.size("ga"))
-               & (inter * 100 >= 80 * union))
-    binned = (pf.select("id_a", "id_b", F.round(post, 6).alias("pr"))
-              .join(ga, "id_a").join(gb, "id_b")
+    pf, lam, m, u = _fs_fit(spark, sf_dir)
+    pr = pf.select("id_a", "id_b",
+                   F.round(_fs_posterior(lam, m, u), 6).alias("pr"))
+    binned = (_with_jaccard_truth(spark, sf_dir, pr)
               .select(F.floor(F.col("pr") * 10).cast("bigint")
-                      .alias("bin"),
-                      is_true.alias("is_true")))
+                      .alias("bin"), "is_true"))
     agg = binned.groupBy("bin").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         F.coalesce(F.sum(F.when(F.col("is_true"), 1).otherwise(0)),
@@ -840,28 +824,17 @@ def fs_calibration_documents(spark: SparkSession,
 
 
 # Calibration oracle: the same SNM/flag CTEs and the SHARED pm/pu
-# product (via _fs_flag_products) as the fs_match oracle, the truth
-# predicate textually the meta-blocking audit's, then the grouped
-# exact counts and one division per bin.
+# product (via _fs_flag_products) as the fs_match oracle, the shared
+# gram-set CTE and Jaccard truth predicate, then the grouped exact
+# counts and one division per bin.
 def _sql_fs_calibration() -> str:
     pm, pu = _fs_flag_products(tf=False)
     return f"""
-    WITH fsp AS (SELECT field_id, m, u, lam
-                 FROM read_parquet('{_FS_PARAMS_PATH}/*.parquet')),
-    {_snm_ctes(attrs=True)}, {_fs_flags_cte(False)}, sh AS (
-        SELECT doc_id,
-               list_sort(list_distinct(
-                   [text[i:i+4] FOR i IN
-                    range(1, greatest(length(text) - 4, 1) + 1)])) AS g
-        FROM documents
-    ), scored AS (
+    WITH {_SQL_FS_HEAD}, {_fs_flags_cte(False)}, {_sql_gram_sets()},
+    scored AS (
         SELECT CAST(floor(round({pm} / ({pm} + {pu}), 6) * 10)
                     AS BIGINT) AS bin,
-               (len(ga.g) * 100 >= 80 * len(gb.g)
-                AND len(gb.g) * 100 >= 80 * len(ga.g)
-                AND len(list_intersect(ga.g, gb.g)) * 100
-                    >= 80 * len(list_distinct(list_concat(ga.g, gb.g))))
-                   AS is_true
+               {_sql_jaccard_true()} AS is_true
         FROM flagged fl
         JOIN sh ga ON ga.doc_id = fl.id_a
         JOIN sh gb ON gb.doc_id = fl.id_b
@@ -915,11 +888,7 @@ def pprl_bloom_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                     _positions))))
     enc = docs.select(F.col("doc_id").cast("bigint").alias("gid"),
                       bf.alias("bf"))
-    keyed = docs.select(F.col("doc_id").alias("rec_id"),
-                        _snm_prefix_key().alias("snm_key"))
-    pairs = sorted_neighborhood_pairs(keyed, key_col="snm_key",
-                                      id_col="rec_id",
-                                      window=_SNM_WINDOW)
+    pairs = _snm_pairs(docs)
     ea = enc.select(F.col("gid").alias("id_a"), F.col("bf").alias("ba"))
     eb = enc.select(F.col("gid").alias("id_b"), F.col("bf").alias("bb"))
     inter = F.size(F.array_intersect("ba", "bb"))
@@ -982,15 +951,7 @@ def fs_waterfall_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal CASE chains — zero joins or shuffles on the pair stream.
     The oracle recomputes every division and the ordered product from
     the shared side-table doubles."""
-    from .operators.linkage import fs_train
-    pf = _fs_pairs_flags(spark, sf_dir)
-    _ensure_side_table(sf_dir, _FS_PARAMS_PATH,
-                       lambda: fs_train(pf, _FS_N_FIELDS))
-    prm = sorted(spark.read.parquet(_FS_PARAMS_PATH).collect(),
-                 key=lambda r: r["field_id"])
-    lam = prm[0]["lam"]
-    m = [r["m"] for r in prm]
-    u = [r["u"] for r in prm]
+    pf, lam, m, u = _fs_fit(spark, sf_dir)
     odds = F.lit(lam / (1.0 - lam))
     bf_cols = []
     for i in range(_FS_N_FIELDS):
@@ -1017,9 +978,7 @@ def _sql_fs_waterfall() -> str:
         bf_sel.append(f"round({bf}, 6) AS bf{i}_r")
         odds = f"({odds} * {bf})"
     return f"""
-    WITH fsp AS (SELECT field_id, m, u, lam
-                 FROM read_parquet('{_FS_PARAMS_PATH}/*.parquet')),
-    {_snm_ctes(attrs=True)}, {_fs_flags_cte(False)}
+    WITH {_SQL_FS_HEAD}, {_fs_flags_cte(False)}
     SELECT CAST(id_a AS BIGINT) AS id_a,
            CAST(id_b AS BIGINT) AS id_b,
            {_FS_PACK_SQL} AS pattern,
@@ -1050,21 +1009,12 @@ def fs_review_queue_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same left-to-right literal product fs_match_documents uses,
     so both engines land bit-identical doubles and the ambiguity
     order cannot diverge."""
-    from .operators.linkage import (fs_decision_table,
-                                    fs_posterior_expr, fs_train)
-    pf = _fs_pairs_flags(spark, sf_dir)
-    _ensure_side_table(sf_dir, _FS_PARAMS_PATH,
-                       lambda: fs_train(pf, _FS_N_FIELDS))
-    prm = sorted(spark.read.parquet(_FS_PARAMS_PATH).collect(),
-                 key=lambda r: r["field_id"])
-    lam = prm[0]["lam"]
-    m = [r["m"] for r in prm]
-    u = [r["u"] for r in prm]
+    from .operators.linkage import fs_decision_table
+    pf, lam, m, u = _fs_fit(spark, sf_dir)
     review = [int(pat) for pat, _rt, d in
               fs_decision_table(m, u, _FS_N_FIELDS, _FS_MU, _FS_LAMERR)
               if d == 1]
-    post = fs_posterior_expr(
-        [F.col(f"f{i}") for i in range(_FS_N_FIELDS)], lam, m, u)
+    post = _fs_posterior(lam, m, u)
     top = (pf.where(F.col("pattern").isin(review))
            .select("id_a", "id_b", "pattern", post.alias("_post"),
                    F.abs(post - F.lit(0.5)).alias("_amb"))
@@ -1094,9 +1044,7 @@ def _sql_fs_review_queue() -> str:
         pu = f"({pu} * {fu})"
     mp_expr, up_expr = _fs_pattern_products()
     return f"""
-    WITH fsp AS (SELECT field_id, m, u, lam
-                 FROM read_parquet('{_FS_PARAMS_PATH}/*.parquet')),
-    {_snm_ctes(attrs=True)}, {_fs_flags_cte(True)}, probs AS (
+    WITH {_SQL_FS_HEAD}, {_fs_flags_cte(True)}, probs AS (
         SELECT CAST(range AS BIGINT) AS pat,
                {mp_expr} AS mp,
                {up_expr} AS up,
@@ -1174,16 +1122,9 @@ def multi_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # zero-padded ids: candidate_pairs normalizes with least/greatest
     # on STRINGS; padding makes that lexicographic order numeric
     pad_id = F.lpad(F.col("doc_id").cast("string"), 12, "0")
-    pfx = _snm_prefix_key()
-
-    keyed = docs.select(F.col("doc_id").alias("rec_id"),
-                        pfx.alias("snm_key"))
     # SNM orders pairs by RANK (sort-key position), not id — normalize
     # to (min, max) so the same pair merges with the other rules' rows
-    snm_raw = sorted_neighborhood_pairs(keyed, key_col="snm_key",
-                                        id_col="rec_id",
-                                        window=_SNM_WINDOW)
-    snm = snm_raw.select(
+    snm = _snm_pairs(docs).select(
         F.least(F.col("id_a"), F.col("id_b")).cast("bigint").alias("id_a"),
         F.greatest(F.col("id_a"), F.col("id_b")).cast("bigint")
         .alias("id_b"),
@@ -1378,10 +1319,9 @@ def _sql_meta_blocking_wep_quality() -> str:
     return f"""
     WITH mb AS ({_sql_multi_blocking()}),
     tot AS (SELECT count(*) AS n_e, sum(n_rules) AS sw FROM mb),
-    {_SQL_QUALITY_SH}, t AS (
+    {_sql_gram_sets()}, t AS (
         SELECT (mb.n_rules * tot.n_e >= tot.sw) AS kept,
-               {_SQL_EDGE_TRUTH}
-                   AS is_true
+               {_sql_jaccard_true()} AS is_true
         FROM mb, tot
         JOIN sh ga ON ga.doc_id = mb.id_a
         JOIN sh gb ON gb.doc_id = mb.id_b
@@ -1416,14 +1356,13 @@ def meta_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pruning_quality_of(spark, sf_dir, flagged)
 
 
-def _pruning_quality_of(spark: SparkSession, sf_dir: str,
-                        flagged: DataFrame) -> DataFrame:
-    """Shared tail of the two pruning-quality audits (WNP + WEP):
-    attach the per-doc gram arrays to the kept-flagged edge stream,
-    evaluate the exact-Jaccard truth predicate, aggregate to the one
-    counts row.  ONE definition so the two audits cannot grade
-    different truth semantics (SQL twin: _SQL_QUALITY_SH /
-    _SQL_EDGE_TRUTH / _SQL_QUALITY_TAIL)."""
+def _with_jaccard_truth(spark: SparkSession, sf_dir: str,
+                        pairs: DataFrame) -> DataFrame:
+    """``pairs`` (id_a, id_b, ...) plus ``is_true``: exact char-5-gram
+    Jaccard >= 0.8, the dedup family's match definition, evaluated on
+    the given pairs only.  The one Spark definition the pruning audits
+    and the FS calibration share (SQL twin: _sql_gram_sets +
+    _sql_jaccard_true)."""
     from .operators.dedup import char_ngram_set
     docs = _read(spark, sf_dir, "documents")
     grams = docs.select(F.col("doc_id").cast("bigint").alias("gid"),
@@ -1433,13 +1372,23 @@ def _pruning_quality_of(spark: SparkSession, sf_dir: str,
     inter = F.size(F.array_intersect("ga", "gb"))
     union = F.size(F.array_union("ga", "gb"))
     # the size-ratio clauses are implied by J >= 0.8 (inter <= min
-    # size, union >= max size) — kept so the predicate is textually
-    # the prune-bearing oracle's, clause for clause
+    # size, union >= max size) — kept so the predicate is the SQL
+    # twin's, clause for clause
     is_true = ((F.size("ga") * 100 >= 80 * F.size("gb"))
                & (F.size("gb") * 100 >= 80 * F.size("ga"))
                & (inter * 100 >= 80 * union))
-    t = (flagged.join(ga, "id_a").join(gb, "id_b")
-         .select("kept", is_true.alias("is_true")))
+    return (pairs.join(ga, "id_a").join(gb, "id_b")
+            .select(*pairs.columns, is_true.alias("is_true")))
+
+
+def _pruning_quality_of(spark: SparkSession, sf_dir: str,
+                        flagged: DataFrame) -> DataFrame:
+    """Shared tail of the two pruning-quality audits (WNP + WEP):
+    attach the Jaccard truth flag to the kept-flagged edge stream and
+    aggregate to the one counts row.  ONE definition so the two audits
+    cannot grade different truth semantics (SQL twin:
+    _SQL_QUALITY_TAIL)."""
+    t = _with_jaccard_truth(spark, sf_dir, flagged)
     agg = t.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
         F.coalesce(F.sum(F.when(F.col("kept"), 1).otherwise(0)), F.lit(0))
@@ -1460,21 +1409,50 @@ def _pruning_quality_of(spark: SparkSession, sf_dir: str,
          .otherwise(F.lit(1.0)).alias("truth_retention"))
 
 
-# Shared pieces of the two pruning-quality oracles (WNP + WEP): the
-# per-doc 5-gram CTE, the truth predicate over a candidate edge, and
-# the counts/ratios tail — ONE definition each so the two audits
-# cannot grade different truth semantics.
-_SQL_QUALITY_SH = """sh AS (
+# The SQL twin of the Jaccard truth above, ONE builder per piece: the
+# per-doc char-5-gram set CTE, the predicate over two gram-set
+# aliases, and the all-pairs edge select.  The near-dup, training and
+# cluster-audit oracles, both pruning audits, the FS calibration and
+# the cross-scale sampled checks all build on these.
+def _sql_gram_sets(name: str = "sh", source: str = "documents") -> str:
+    """CTE ``name``(doc_id, g): each row's sorted distinct char-5-gram
+    list (the twin of operators.dedup.char_ngram_set)."""
+    return f"""{name} AS (
         SELECT doc_id,
                list_sort(list_distinct(
                    [text[i:i+4] FOR i IN
                     range(1, greatest(length(text) - 4, 1) + 1)])) AS g
-        FROM documents
-    )"""
-_SQL_EDGE_TRUTH = """(len(ga.g) * 100 >= 80 * len(gb.g)
-                AND len(gb.g) * 100 >= 80 * len(ga.g)
-                AND len(list_intersect(ga.g, gb.g)) * 100
-                    >= 80 * len(list_distinct(list_concat(ga.g, gb.g))))"""
+        FROM {source})"""
+
+
+def _sql_jaccard_true(a: str = "ga", b: str = "gb") -> str:
+    """Jaccard(a.g, b.g) >= 0.8 in integer arithmetic.  The two
+    size-ratio clauses are implied by it (inter <= min size, union >=
+    max size) and let DuckDB skip the intersect for pairs of unmatched
+    size."""
+    return f"""(len({a}.g) * 100 >= 80 * len({b}.g)
+                AND len({b}.g) * 100 >= 80 * len({a}.g)
+                AND len(list_intersect({a}.g, {b}.g)) * 100
+                    >= 80 * len(list_distinct(list_concat({a}.g, {b}.g))))"""
+
+
+def _sql_jaccard_edges(grams: str, stratum: str = "TRUE") -> str:
+    """All-pairs near-dup edges over the gram-set CTE ``grams``: (id_a
+    < id_b, inter_count, union_count) for each pair that passes the
+    Jaccard predicate.  ``stratum`` is an extra pair predicate over
+    (a.doc_id, b.doc_id); tools/cross_scale_check.py samples the
+    quadratic oracle down to a deterministic md5 stratum with it."""
+    return f"""
+    SELECT CAST(a.doc_id AS BIGINT) AS id_a,
+           CAST(b.doc_id AS BIGINT) AS id_b,
+           CAST(len(list_intersect(a.g, b.g)) AS BIGINT) AS inter_count,
+           CAST(len(list_distinct(list_concat(a.g, b.g))) AS BIGINT)
+               AS union_count
+    FROM {grams} a JOIN {grams} b ON a.doc_id < b.doc_id
+    WHERE ({stratum}) AND {_sql_jaccard_true("a", "b")}"""
+
+
+# The counts/ratios tail shared by the two pruning-quality oracles.
 _SQL_QUALITY_TAIL = """agg AS (
         SELECT CAST(count(*) AS BIGINT) AS n_candidates,
                CAST(coalesce(sum(CASE WHEN kept THEN 1 ELSE 0 END), 0)
@@ -1502,11 +1480,10 @@ _SQL_QUALITY_TAIL = """agg AS (
 def _sql_meta_blocking_quality() -> str:
     return f"""
     WITH mb AS ({_sql_multi_blocking()}),
-    {_SQL_WNP_STATS}, {_SQL_QUALITY_SH}, t AS (
+    {_SQL_WNP_STATS}, {_sql_gram_sets()}, t AS (
         SELECT ({_WNP_KEEP_A}
                 OR {_WNP_KEEP_B}) AS kept,
-               {_SQL_EDGE_TRUTH}
-                   AS is_true
+               {_sql_jaccard_true()} AS is_true
         FROM mb
         JOIN stats sa ON sa.node = mb.id_a
         JOIN stats sb ON sb.node = mb.id_b
@@ -1748,54 +1725,76 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (F.zip_with + F.aggregate); ranking tie-broken by vec_id.  The
     similarity column is rounded to 4 dp for stable cross-engine hashes.
     """
-    emb = _read(spark, sf_dir, "embeddings")
-    vec_d = F.transform("embedding", lambda x: x.cast("double"))
-    base = emb.select(F.col("vec_id").cast("bigint").alias("vec_id"),
-                      vec_d.alias("v"))
+    from .operators.dedup import cosine as cosine_expr
+    base = _vectors(spark, sf_dir)
     queries = base.where(F.col("vec_id") < 10) \
         .select(F.col("vec_id").alias("query_id"), F.col("v").alias("q"))
     joined = queries.crossJoin(base.where(
         F.col("vec_id") >= 10).select(
         F.col("vec_id").alias("neighbor_id"), F.col("v").alias("n")))
+    return _top5(joined.select(
+        "query_id", "neighbor_id",
+        cosine_expr(F.col("q"), F.col("n")).alias("cos")), "cos")
 
-    def dot(a, b):
-        return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                           F.lit(0.0), lambda acc, x: acc + x)
 
-    cos = dot(F.col("q"), F.col("n")) / (
-        F.sqrt(dot(F.col("q"), F.col("q")))
-        * F.sqrt(dot(F.col("n"), F.col("n"))))
-    scored = joined.select("query_id", "neighbor_id", cos.alias("cos"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embeddings as (vec_id BIGINT, v array<double>)."""
+    emb = _read(spark, sf_dir, "embeddings")
+    return emb.select(F.col("vec_id").cast("bigint").alias("vec_id"),
+                      F.transform("embedding",
+                                  lambda x: x.cast("double")).alias("v"))
+
+
+def _top5(scored: DataFrame, score: str,
+          descending: bool = True) -> DataFrame:
+    """The ranking tail every ANN query shares: per query_id the 5 best
+    neighbors by ``score`` (ties by neighbor_id), BIGINT rank, and the
+    score rounded to 4 dp as ``<score>_r`` (SQL twin: _sql_top5)."""
+    order = F.desc(score) if descending else F.asc(score)
+    w = Window.partitionBy("query_id").orderBy(order, "neighbor_id")
     return (scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= 5)
             .select("query_id", "neighbor_id",
                     F.col("rank").cast("bigint").alias("rank"),
-                    F.round("cos", 4).alias("cos_r")))
+                    F.round(score, 4).alias(f"{score}_r")))
 
 
-_SQL_ANN_TOPK = """
-    WITH base AS (
-        SELECT CAST(vec_id AS BIGINT) AS vec_id,
-               CAST(embedding AS DOUBLE[]) AS v
-        FROM embeddings),
-    scored AS (
-        SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-               list_sum(list_transform(list_zip(q.v, n.v),
-                                       x -> x[1] * x[2]))
-               / (sqrt(list_sum(list_transform(q.v, x -> x * x)))
-                  * sqrt(list_sum(list_transform(n.v, x -> x * x)))) AS cos
-        FROM base q, base n
-        WHERE q.vec_id < 10 AND n.vec_id >= 10),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos,
+def _sql_cosine(a: str, b: str) -> str:
+    """Cosine of two DOUBLE[] lists as sequential list_sum folds, which
+    match operators.dedup.cosine's Catalyst left fold bit for bit."""
+    return (f"list_sum(list_transform(list_zip({a}, {b}), x -> x[1] * x[2]))"
+            f" / (sqrt(list_sum(list_transform({a}, x -> x * x)))"
+            f" * sqrt(list_sum(list_transform({b}, x -> x * x))))")
+
+
+def _sql_top5(src: str, score: str, descending: bool = True) -> str:
+    """The ANN ranking tail over CTE ``src`` (query_id, neighbor_id,
+    ``score``): a ``ranked`` CTE and the final top-5 select."""
+    order = f"{score} DESC" if descending else score
+    return f"""ranked AS (
+        SELECT query_id, neighbor_id, {score},
                row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored)
+                                  ORDER BY {order}, neighbor_id) AS rank
+        FROM {src})
     SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-           round(cos, 4) AS cos_r
+           round({score}, 4) AS {score}_r
     FROM ranked WHERE rank <= 5
 """
+
+
+_SQL_VEC_BASE = """base AS (
+        SELECT CAST(vec_id AS BIGINT) AS vec_id,
+               CAST(embedding AS DOUBLE[]) AS v
+        FROM embeddings)"""
+
+_SQL_ANN_TOPK = f"""
+    WITH {_SQL_VEC_BASE},
+    scored AS (
+        SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
+               {_sql_cosine("q.v", "n.v")} AS cos
+        FROM base q, base n
+        WHERE q.vec_id < 10 AND n.vec_id >= 10),
+    {_sql_top5("scored", "cos")}"""
 
 
 def top_similar_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1807,17 +1806,7 @@ def top_similar_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators.scoring.top_n_best).  Exact — same rows as an unbounded
     scan + TakeOrderedAndProject."""
     from .operators.scoring import top_n_best
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"),
-                    F.col("text").alias("text_a"))
-    b = docs.select((F.col("doc_id") - 1).alias("id_a"),
-                    F.col("doc_id").alias("id_b"),
-                    F.col("text").alias("text_b"))
-    pairs = (a.join(b, "id_a")
-             .select(F.col("id_a").cast("bigint").alias("id_a"),
-                     F.col("id_b").cast("bigint").alias("id_b"),
-                     "text_a", "text_b"))
-    return (top_n_best(pairs, 20)
+    return (top_n_best(_doc_pairs(spark, sf_dir), 20)
             .select("id_a", "id_b",
                     F.col("edit_distance").cast("bigint")
                     .alias("edit_distance")))
@@ -1916,18 +1905,14 @@ def doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram overlap for adjacent doc pairs (integer counts keep
     the oracle hash exact; Jaccard = inter/union downstream)."""
     from .operators.textops import ngram_set
-    docs = _read(spark, sf_dir, "documents")
-    grams = docs.select(F.col("doc_id"), ngram_set(F.col("text")).alias("g"))
-    a = grams.select(F.col("doc_id").alias("id_a"), F.col("g").alias("ga"))
-    b = grams.select((F.col("doc_id") - 1).alias("id_a"),
-                     F.col("doc_id").alias("id_b"), F.col("g").alias("gb"))
-    return (a.join(b, "id_a")
-            .select(F.col("id_a").cast("bigint").alias("id_a"),
-                    F.col("id_b").cast("bigint").alias("id_b"),
-                    F.size(F.array_intersect("ga", "gb")).cast("bigint")
-                     .alias("inter_count"),
-                    F.size(F.array_union("ga", "gb")).cast("bigint")
-                     .alias("union_count")))
+    g = ngram_set(F.col("text"))
+    # text_a / text_b carry the two gram sets here
+    return (_doc_pairs(spark, sf_dir, g, g)
+            .select("id_a", "id_b",
+                    F.size(F.array_intersect("text_a", "text_b"))
+                     .cast("bigint").alias("inter_count"),
+                    F.size(F.array_union("text_a", "text_b"))
+                     .cast("bigint").alias("union_count")))
 
 
 _SQL_NGRAM_JACCARD = """
@@ -2244,17 +2229,8 @@ def hw_distance_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration), so no substring expansion and no truncation are
     needed — an exact cross-engine recomputation of the semi-global
     kernel (edlib.cpp:532-704, mode HW) at full document length."""
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"),
-                    F.substring("text", 10, 40).alias("text_a"))
-    b = docs.select((F.col("doc_id") - 1).alias("id_a"),
-                    F.col("doc_id").alias("id_b"),
-                    F.col("text").alias("text_b"))
-    return (a.join(b, "id_a")
-            .select(F.col("id_a").cast("bigint").alias("id_a"),
-                    F.col("id_b").cast("bigint").alias("id_b"),
-                    edit_distance(F.col("text_a"), F.col("text_b"), "HW", -1)
-                    .cast("bigint").alias("edit_distance")))
+    return _distance_of(
+        _doc_pairs(spark, sf_dir, F.substring("text", 10, 40)), "HW")
 
 
 def scored_pairs_hw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2304,18 +2280,8 @@ def shw_distance_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     improve the minimum — the untruncated SHW distance equals the min
     over only the first 2|q| prefixes, which DuckDB evaluates directly
     (_SQL_SHW_DOCUMENTS)."""
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"),
-                    F.substring("text", 1, 40).alias("text_a"))
-    b = docs.select((F.col("doc_id") - 1).alias("id_a"),
-                    F.col("doc_id").alias("id_b"),
-                    F.col("text").alias("text_b"))
-    return (a.join(b, "id_a")
-            .select(F.col("id_a").cast("bigint").alias("id_a"),
-                    F.col("id_b").cast("bigint").alias("id_b"),
-                    edit_distance(F.col("text_a"), F.col("text_b"), "SHW",
-                                  -1)
-                    .cast("bigint").alias("edit_distance")))
+    return _distance_of(
+        _doc_pairs(spark, sf_dir, F.substring("text", 1, 40)), "SHW")
 
 
 def shw_distance_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2323,18 +2289,9 @@ def shw_distance_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     min over j of levenshtein(query, target[:j]), which DuckDB can
     evaluate directly on truncated targets — exact cross-engine check
     of the semi-global kernel (edlib.cpp:532-704, mode SHW)."""
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"),
-                    F.substring("text", 1, 30).alias("text_a"))
-    b = docs.select((F.col("doc_id") - 1).alias("id_a"),
-                    F.col("doc_id").alias("id_b"),
-                    F.substring("text", 1, 120).alias("text_b"))
-    return (a.join(b, "id_a")
-            .select(F.col("id_a").cast("bigint").alias("id_a"),
-                    F.col("id_b").cast("bigint").alias("id_b"),
-                    edit_distance(F.col("text_a"), F.col("text_b"),
-                                  "SHW", -1)
-                    .cast("bigint").alias("edit_distance")))
+    return _distance_of(
+        _doc_pairs(spark, sf_dir, F.substring("text", 1, 30),
+                   F.substring("text", 1, 120)), "SHW")
 
 
 _SQL_SHW_EXACT = """
@@ -2359,18 +2316,9 @@ def hw_distance_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     are truncated to keep the oracle's O(|t|^2) substring expansion
     affordable; the untruncated variant stays in
     ``hw_distance_documents`` (pinned by reference-binary parity)."""
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"),
-                    F.substring("text", 10, 25).alias("text_a"))
-    b = docs.select((F.col("doc_id") - 1).alias("id_a"),
-                    F.col("doc_id").alias("id_b"),
-                    F.substring("text", 1, 80).alias("text_b"))
-    return (a.join(b, "id_a")
-            .select(F.col("id_a").cast("bigint").alias("id_a"),
-                    F.col("id_b").cast("bigint").alias("id_b"),
-                    edit_distance(F.col("text_a"), F.col("text_b"),
-                                  "HW", -1)
-                    .cast("bigint").alias("edit_distance")))
+    return _distance_of(
+        _doc_pairs(spark, sf_dir, F.substring("text", 10, 25),
+                   F.substring("text", 1, 80)), "HW")
 
 
 _SQL_HW_EXACT = """
@@ -2566,20 +2514,11 @@ def equality_align_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     levenshtein(upper(a), upper(b)).  Non-equivalence relations
     ('N'~'A' without 'A'~'C') have no such SQL reduction; those are
     pinned by the reference-binary parity suite."""
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"),
-                    F.upper(F.substring("text", 1, 60)).alias("text_a"))
-    b = docs.select((F.col("doc_id") - 1).alias("id_a"),
-                    F.col("doc_id").alias("id_b"),
-                    F.substring("text", 1, 60).alias("text_b"))
     eqs = [(chr(c), chr(c).upper()) for c in range(ord("a"), ord("z") + 1)]
-    return (a.join(b, "id_a")
-            .select(F.col("id_a").cast("bigint").alias("id_a"),
-                    F.col("id_b").cast("bigint").alias("id_b"),
-                    F.col("text_a"),
-                    edit_distance(F.col("text_a"), F.col("text_b"), "NW",
-                                  -1, additional_equalities=eqs)
-                    .cast("bigint").alias("edit_distance")))
+    pairs = _doc_pairs(spark, sf_dir, F.upper(F.substring("text", 1, 60)),
+                       F.substring("text", 1, 60))
+    return _distance_of(pairs, "NW", extra=("text_a",),
+                        additional_equalities=eqs)
 
 
 # ASCII-only oracle: the 26 (a-z, A-Z) equality pairs equal
@@ -2643,15 +2582,9 @@ def fasta_align_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     seqs = (read_fasta(spark, path)
             .select(F.col("header").cast("bigint").alias("id"),
                     F.substring("sequence", 1, 120).alias("seq")))
-    a = seqs.select(F.col("id").alias("id_a"), F.col("seq").alias("sa"))
-    b = seqs.select((F.col("id") - 1).alias("id_a"),
-                    F.col("id").alias("id_b"), F.col("seq").alias("sb"))
-    return (a.join(b, "id_a")
-            .select(F.col("id_a").cast("bigint").alias("id_a"),
-                    F.col("id_b").cast("bigint").alias("id_b"),
-                    F.length("sa").cast("bigint").alias("len_a"),
-                    edit_distance(F.col("sa"), F.col("sb"), "NW", -1)
-                    .cast("bigint").alias("edit_distance")))
+    pairs = _adjacent_pairs(seqs, F.col("seq"), F.col("seq"), "id")
+    return _distance_of(pairs, "NW", extra=(
+        F.length("text_a").cast("bigint").alias("len_a"),))
 
 
 _SQL_FASTA_ALIGN = """
@@ -2680,21 +2613,17 @@ def hw_locations_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty): the kernel's empty-input short-circuit reports a single -1
     location while the column-min formulation counts every column — a
     location-semantics divergence that only empty inputs exhibit."""
-    docs = _read(spark, sf_dir, "documents")
-    a = (docs.where(F.length("text") >= 20)
-         .select(F.col("doc_id").alias("id_a"),
-                 F.substring("text", 20, 25).alias("text_a")))
-    b = (docs.where(F.length("text") >= 1)
-         .select((F.col("doc_id") - 1).alias("id_a"),
-                 F.col("doc_id").alias("id_b"),
-                 F.substring("text", 1, 80).alias("text_b")))
+    # a non-empty slice from position 20 <=> length(text) >= 20
+    pairs = _doc_pairs(spark, sf_dir, F.substring("text", 20, 25),
+                       F.substring("text", 1, 80))
     res = align_expr(F.col("text_a"), F.col("text_b"), mode="HW",
                      task="locations")
-    joined = (a.join(b, "id_a").where(F.col("id_b") < 100)
+    joined = (pairs.where((F.col("id_b") < 100)
+                          & (F.length("text_a") > 0)
+                          & (F.length("text_b") > 0))
               .select("id_a", "id_b", res.alias("r")))
     return joined.select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
+        "id_a", "id_b",
         F.col("r.editDistance").cast("bigint").alias("edit_distance"),
         F.size("r.locations").cast("bigint").alias("n_locations"),
         F.col("r.locations").getItem(0).getField("end")
@@ -2737,19 +2666,14 @@ def hw_locations_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     column, hence the full end set including the -1 empty-window edge,
     and re-derives first_start as the minimal start achieving the best
     distance at first_end (the reference's reversed-SHW tie-break)."""
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"),
-                    F.substring("text", 20, 25).alias("text_a"))
-    b = docs.select((F.col("doc_id") - 1).alias("id_a"),
-                    F.col("doc_id").alias("id_b"),
-                    F.substring("text", 1, 300).alias("text_b"))
+    pairs = _doc_pairs(spark, sf_dir, F.substring("text", 20, 25),
+                       F.substring("text", 1, 300))
     res = align_expr(F.col("text_a"), F.col("text_b"), mode="HW",
                      task="locations")
-    joined = (a.join(b, "id_a").where(F.col("id_b") < 100)
+    joined = (pairs.where(F.col("id_b") < 100)
               .select("id_a", "id_b", res.alias("r")))
     return joined.select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
+        "id_a", "id_b",
         F.col("r.editDistance").cast("bigint").alias("edit_distance"),
         F.size("r.locations").cast("bigint").alias("n_locations"),
         F.col("r.locations").getItem(0).getField("start")
@@ -2872,18 +2796,25 @@ _SQL_CIGAR_VALID = """ch.runs_ok AND ch.q_used = length(p.text_a)
                  AND ch.cost = levenshtein(p.text_a, p.text_b)
                  AND NOT (ch.first_op = 'I' AND p.lead_ctx > 0)"""
 
-_SQL_NICE_PAIRS = """
+
+def _sql_cigar_pairs(max_id: int, head: int | None = None) -> str:
+    """The NW pairs of the CIGAR certificates: adjacent documents with
+    id_b < ``max_id``, both texts cut to their first ``head`` chars
+    when given, lead_ctx = 0."""
+    ta, tb = ((f"substr(a.text, 1, {head})", f"substr(b.text, 1, {head})")
+              if head else ("a.text", "b.text"))
+    return f"""
         SELECT CAST(a.doc_id AS BIGINT) AS id_a,
                CAST(b.doc_id AS BIGINT) AS id_b,
-               substr(a.text, 1, 80) AS text_a,
-               substr(b.text, 1, 80) AS text_b,
+               {ta} AS text_a, {tb} AS text_b,
                CAST(0 AS BIGINT) AS lead_ctx
         FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
-        WHERE b.doc_id < 30
+        WHERE b.doc_id < {max_id}
 """
 
+
 _SQL_NICE_ALIGNMENT = _sql_cigar_replay(
-    _SQL_NICE_PAIRS, _NICE_CIGARS_PATH, f"""
+    _sql_cigar_pairs(30, head=80), _NICE_CIGARS_PATH, f"""
     SELECT p.id_a, p.id_b,
            CASE WHEN {_SQL_CIGAR_VALID}
                 THEN c.cigar ELSE '!invalid' END AS cigar,
@@ -2891,14 +2822,7 @@ _SQL_NICE_ALIGNMENT = _sql_cigar_replay(
     FROM pairs p JOIN pc c USING (id_a, id_b)
     JOIN checked ch USING (id_a, id_b)""")
 
-_SQL_PATH_PAIRS = """
-        SELECT CAST(a.doc_id AS BIGINT) AS id_a,
-               CAST(b.doc_id AS BIGINT) AS id_b,
-               a.text AS text_a, b.text AS text_b,
-               CAST(0 AS BIGINT) AS lead_ctx
-        FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
-        WHERE b.doc_id < 50
-"""
+_SQL_PATH_PAIRS = _sql_cigar_pairs(50)
 
 _SQL_ALIGN_PATH = _sql_cigar_replay(
     _SQL_PATH_PAIRS, _PATH_CIGARS_PATH, f"""
@@ -2920,21 +2844,15 @@ def nice_alignment_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     aligned renderings from the CIGAR in pure SQL — the rendering math
     of this query is fully SQL-checked."""
     from .functions.alignment import nice_alignment
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"),
-                    F.substring("text", 1, 80).alias("text_a"))
-    b = docs.select((F.col("doc_id") - 1).alias("id_a"),
-                    F.col("doc_id").alias("id_b"),
-                    F.substring("text", 1, 80).alias("text_b"))
-    joined = a.join(b, "id_a").where(F.col("id_b") < 30)
+    head = F.substring("text", 1, 80)
     res = align_expr(F.col("text_a"), F.col("text_b"), mode="NW",
                      task="path")
-    joined = joined.select("id_a", "id_b", "text_a", "text_b",
-                           res.alias("r"))
+    joined = (_doc_pairs(spark, sf_dir, head, head)
+              .where(F.col("id_b") < 30)
+              .select("id_a", "id_b", "text_a", "text_b", res.alias("r")))
     nice = nice_alignment(F.col("r"), F.col("text_a"), F.col("text_b"))
     out = (joined.select(
-        F.col("id_a").cast("bigint").alias("id_a"),
-        F.col("id_b").cast("bigint").alias("id_b"),
+        "id_a", "id_b",
         F.col("r.cigar").alias("cigar"),
         nice.getField("query_aligned").alias("query_aligned"),
         nice.getField("matched_aligned").alias("matched_aligned"),
@@ -2950,18 +2868,10 @@ def align_path_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CIGAR itself rides a side table while DuckDB independently
     verifies it is a valid optimal path and re-derives distance and NW
     end location."""
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"),
-                    F.col("text").alias("text_a"))
-    b = docs.select((F.col("doc_id") - 1).alias("id_a"),
-                    F.col("doc_id").alias("id_b"),
-                    F.col("text").alias("text_b"))
-    joined = a.join(b, "id_a").where(F.col("id_b") < 50)
+    joined = _doc_pairs(spark, sf_dir).where(F.col("id_b") < 50)
     res = align_expr(F.col("text_a"), F.col("text_b"), mode="NW",
                      task="path")
-    out = (joined.select(F.col("id_a").cast("bigint").alias("id_a"),
-                         F.col("id_b").cast("bigint").alias("id_b"),
-                         res.alias("r"))
+    out = (joined.select("id_a", "id_b", res.alias("r"))
            .select("id_a", "id_b",
                    F.col("r.editDistance").cast("bigint")
                     .alias("edit_distance"),
@@ -2999,17 +2909,10 @@ def align_ops_stats_documents(spark: SparkSession,
     or suboptimal path can never grade as correct statistics.
     identity_frac is one bigint/bigint IEEE division (guarded for the
     empty-vs-empty pair on BOTH engines)."""
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"),
-                    F.col("text").alias("text_a"))
-    b = docs.select((F.col("doc_id") - 1).alias("id_a"),
-                    F.col("doc_id").alias("id_b"),
-                    F.col("text").alias("text_b"))
-    joined = a.join(b, "id_a").where(F.col("id_b") < 50)
+    joined = _doc_pairs(spark, sf_dir).where(F.col("id_b") < 50)
     res = align_expr(F.col("text_a"), F.col("text_b"), mode="NW",
                      task="path")
-    out0 = joined.select(F.col("id_a").cast("bigint").alias("id_a"),
-                         F.col("id_b").cast("bigint").alias("id_b"),
+    out0 = joined.select("id_a", "id_b",
                          res.getField("cigar").alias("cigar"))
     _ensure_side_table(sf_dir, _PATH_CIGARS_PATH,
                        lambda: out0.select("id_a", "id_b", "cigar"))
@@ -3068,15 +2971,6 @@ _SQL_ALIGN_OPS = _sql_cigar_replay(
 _PATH_CIGARS_STD_PATH = os.path.join(_REPO_ROOT, "data",
                                      "path_cigars_std_current.parquet")
 
-_SQL_PATH_STD_PAIRS = """
-        SELECT CAST(a.doc_id AS BIGINT) AS id_a,
-               CAST(b.doc_id AS BIGINT) AS id_b,
-               a.text AS text_a, b.text AS text_b,
-               CAST(0 AS BIGINT) AS lead_ctx
-        FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
-        WHERE b.doc_id < 40
-"""
-
 # Standard-format oracle: the EXTENDED cigar rides the side table and
 # is replayed for validity+optimality exactly like _SQL_ALIGN_PATH;
 # the STANDARD form is then re-derived in pure SQL — collapse =/X to M
@@ -3085,7 +2979,7 @@ _SQL_PATH_STD_PAIRS = """
 # (apps/aligner/aligner.cpp:200-221, edlibAlignmentToCigar
 # edlib/src/edlib.cpp:303-350).
 _SQL_ALIGN_PATH_STD = _sql_cigar_replay(
-    _SQL_PATH_STD_PAIRS, _PATH_CIGARS_STD_PATH, f"""
+    _sql_cigar_pairs(40), _PATH_CIGARS_STD_PATH, f"""
     , stdruns AS (
         SELECT id_a, id_b, idx, rl,
                CASE WHEN op IN ('=', 'X') THEN 'M' ELSE op END AS op_std,
@@ -3123,20 +3017,12 @@ def align_path_std_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives the standard collapse in SQL — so Spark's standard
     formatting is checked against an independently verified optimal
     path, not against itself."""
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(F.col("doc_id").alias("id_a"),
-                    F.col("text").alias("text_a"))
-    b = docs.select((F.col("doc_id") - 1).alias("id_a"),
-                    F.col("doc_id").alias("id_b"),
-                    F.col("text").alias("text_b"))
-    joined = a.join(b, "id_a").where(F.col("id_b") < 40)
+    joined = _doc_pairs(spark, sf_dir).where(F.col("id_b") < 40)
     res_std = align_expr(F.col("text_a"), F.col("text_b"), mode="NW",
                          task="path", cigar_format="standard")
     res_ext = align_expr(F.col("text_a"), F.col("text_b"), mode="NW",
                          task="path")
-    out = joined.select(F.col("id_a").cast("bigint").alias("id_a"),
-                        F.col("id_b").cast("bigint").alias("id_b"),
-                        res_std.alias("r"),
+    out = joined.select("id_a", "id_b", res_std.alias("r"),
                         res_ext.getField("cigar").alias("cigar_ext"))
     _ensure_side_table(
         sf_dir, _PATH_CIGARS_STD_PATH,
@@ -3240,44 +3126,22 @@ def doc_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_minhash_neardup(stratum: str = "TRUE") -> str:
-    """``stratum``: extra pair predicate over (a.doc_id, b.doc_id),
-    evaluated with the cheap size-ratio prunes BEFORE the quadratic
-    list_intersect — tools/cross_scale_check.py samples the all-pairs
-    oracle down to a deterministic md5 stratum at sf0.1."""
+    """``stratum``: extra pair predicate over (a.doc_id, b.doc_id) —
+    tools/cross_scale_check.py samples the all-pairs oracle down to a
+    deterministic md5 stratum at sf0.1."""
     return f"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_sort(list_distinct(
-                   [text[i:i+4] FOR i IN
-                    range(1, greatest(length(text) - 4, 1) + 1)])) AS g
-        FROM documents)
-    SELECT CAST(a.doc_id AS BIGINT) AS id_a,
-           CAST(b.doc_id AS BIGINT) AS id_b,
-           CAST(len(list_intersect(a.g, b.g)) AS BIGINT) AS inter_count,
-           CAST(len(list_distinct(list_concat(a.g, b.g))) AS BIGINT)
-               AS union_count
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    -- result-preserving prune: J >= 0.8 forces |A|/|B| ratio >= 0.8
-    -- (inter <= min size, union >= max size), so unmatched-size pairs
-    -- can skip the expensive intersect entirely
-    WHERE ({stratum})
-      AND len(a.g) * 100 >= 80 * len(b.g)
-      AND len(b.g) * 100 >= 80 * len(a.g)
-      AND len(list_intersect(a.g, b.g)) * 100
-          >= 80 * len(list_distinct(list_concat(a.g, b.g)))
+    WITH {_sql_gram_sets()}
+    {_sql_jaccard_edges("sh", stratum)}
 """
-
-
-_SQL_MINHASH_NEARDUP = _sql_minhash_neardup()
 
 
 def _neardup_clusters_of(docs: DataFrame, edges: DataFrame) -> DataFrame:
     """CC assignment (bigint doc_id -> bigint min-member cluster_id)
-    from already-built near-dup edges — shared by doc_neardup_clusters
-    and its downstream consumers (cluster_audit_documents) so a
-    composite query can pin the expensive edge derivation ONCE instead
-    of re-running the MinHash chain per branch."""
-    from .operators.clustering import cluster_assignments
+    from already-built near-dup edges — shared by doc_neardup_clusters,
+    its downstream consumers (cluster_audit_documents) and the training
+    chain's kept stage, so a composite query can pin the expensive edge
+    derivation ONCE instead of re-running the MinHash chain per
+    branch."""
     nodes = docs.select(F.col("doc_id").cast("string").alias("conv_id"))
     assigned = cluster_assignments(
         nodes, edges.select(F.col("id_a").cast("string").alias("id_a"),
@@ -3311,26 +3175,14 @@ def _sql_neardup_clusters(edges_sql: str | None = None) -> str:
     _sql_clusters — same certificate pattern for the cross-scale
     check at sf0.1, where the exhaustive all-pairs Jaccard oracle is
     quadratic-infeasible but the closure re-derivation is not)."""
-    edges = edges_sql or f"SELECT id_a, id_b FROM ({_SQL_MINHASH_NEARDUP})"
+    edges = (edges_sql
+             or f"SELECT id_a, id_b FROM ({_sql_minhash_neardup()})")
     return f"""
-    WITH RECURSIVE e AS (
-        {edges}),
-    sym AS (SELECT id_a AS u, id_b AS v FROM e
-            UNION SELECT id_b, id_a FROM e),
-    reach AS (
-        SELECT u AS node, u AS lab FROM (SELECT DISTINCT u FROM sym)
-        UNION
-        SELECT s.u AS node, r.lab AS lab
-        FROM sym s JOIN reach r ON s.v = r.node
-    ),
-    comp AS (SELECT node, min(lab) AS root FROM reach GROUP BY node)
+    WITH RECURSIVE {_sql_closure(edges)}
     SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
            CAST(coalesce(comp.root, d.doc_id) AS BIGINT) AS cluster_id
     FROM documents d LEFT JOIN comp ON d.doc_id = comp.node
 """
-
-
-_SQL_NEARDUP_CLUSTERS = _sql_neardup_clusters()
 
 
 def doc_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3358,9 +3210,6 @@ def _sql_dedup_corpus(edges_sql: str | None = None) -> str:
     FROM c JOIN documents d ON d.doc_id = c.cluster_id
     GROUP BY c.cluster_id, length(d.text)
 """
-
-
-_SQL_DEDUP_CORPUS = _sql_dedup_corpus()
 
 
 def _training_quality(docs: DataFrame) -> DataFrame:
@@ -3404,17 +3253,8 @@ def _training_kept(exact: DataFrame, edge_pairs: DataFrame) -> DataFrame:
     edge set, keep the min-doc_id representative per component.
     Returns a single-column (doc_id BIGINT) frame — shared by
     doc_training_corpus and the funnel report."""
-    from .operators.clustering import cluster_assignments
-    edges = edge_pairs.select(F.col("id_a").cast("string").alias("id_a"),
-                              F.col("id_b").cast("string").alias("id_b"))
-    nodes = exact.select(F.col("doc_id").cast("string").alias("conv_id"))
-    assigned = cluster_assignments(nodes, edges)
-    return (assigned
-            .select(F.col("conv_id").cast("bigint").alias("doc_id"),
-                    F.col("cluster_id").alias("cid_str"))
-            .withColumn("root", F.min("doc_id")
-                        .over(Window.partitionBy("cid_str")))
-            .where(F.col("doc_id") == F.col("root"))
+    return (_neardup_clusters_of(exact, edge_pairs)
+            .where(F.col("doc_id") == F.col("cluster_id"))
             .select("doc_id"))
 
 
@@ -3449,38 +3289,32 @@ def _sql_training_stages() -> str:
     qf AS (SELECT * FROM q WHERE n_chars >= 100 AND stop_cnt >= 1),
     ex AS (SELECT min(doc_id) AS doc_id FROM qf GROUP BY text),
     exd AS (SELECT qf.* FROM qf JOIN ex USING (doc_id)),
-    grams AS (
-        SELECT doc_id,
-               list_sort(list_distinct(
-                   [text[i:i+4] FOR i IN
-                    range(1, greatest(length(text) - 4, 1) + 1)])) AS g
-        FROM exd)"""
+    {_sql_gram_sets("grams", "exd")}"""
+
+
+def _sql_training_kept(edges_sql: str | None = None) -> str:
+    """``WITH RECURSIVE`` head shared by the training-corpus and funnel
+    oracles: the linear stages, the near-dup closure over the exact
+    all-pairs edges (or ``edges_sql``, the cross-scale certificate
+    table), and ``kept`` — the min-doc_id representative of each
+    component."""
+    edges = (edges_sql
+             or f"SELECT id_a, id_b FROM ({_sql_jaccard_edges('grams')})")
+    return f"""
+    WITH RECURSIVE {_sql_training_stages()},
+    {_sql_closure(edges)},
+    kept AS (
+        SELECT d.doc_id
+        FROM exd d LEFT JOIN comp ON d.doc_id = comp.node
+        WHERE coalesce(comp.root, d.doc_id) = d.doc_id)"""
 
 
 def _sql_doc_training_corpus(edges_sql: str | None = None) -> str:
-    edges = edges_sql or """
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM grams a JOIN grams b ON a.doc_id < b.doc_id
-        WHERE len(a.g) * 100 >= 80 * len(b.g)
-          AND len(b.g) * 100 >= 80 * len(a.g)
-          AND len(list_intersect(a.g, b.g)) * 100
-              >= 80 * len(list_distinct(list_concat(a.g, b.g)))"""
-    return f"""
-    WITH RECURSIVE {_sql_training_stages()},
-    e AS ({edges}),
-    sym AS (SELECT id_a AS u, id_b AS v FROM e
-            UNION SELECT id_b, id_a FROM e),
-    reach AS (
-        SELECT u AS node, u AS lab FROM (SELECT DISTINCT u FROM sym)
-        UNION
-        SELECT s.u AS node, r.lab AS lab
-        FROM sym s JOIN reach r ON s.v = r.node),
-    comp AS (SELECT node, min(lab) AS root FROM reach GROUP BY node)
+    return f"""{_sql_training_kept(edges_sql)}
     SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
            CAST(d.n_chars AS BIGINT) AS n_chars,
            CAST(d.n_tokens AS BIGINT) AS n_tokens
-    FROM exd d LEFT JOIN comp ON d.doc_id = comp.node
-    WHERE coalesce(comp.root, d.doc_id) = d.doc_id
+    FROM kept JOIN exd d USING (doc_id)
     """
 
 
@@ -3518,32 +3352,10 @@ def training_funnel_documents(spark: SparkSession,
 
 def _sql_training_funnel(edges_sql: str | None = None) -> str:
     """Funnel oracle: the doc_training_corpus oracle's own stage CTEs
-    (quality gate, exact dedup, gram sets, edge join, recursive-CTE
-    components) with one count per stage.  ``edges_sql`` swaps in the
-    certificate edge table at cross-scale, exactly as
-    _sql_doc_training_corpus does."""
-    edges = edges_sql or """
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM grams a JOIN grams b ON a.doc_id < b.doc_id
-        WHERE len(a.g) * 100 >= 80 * len(b.g)
-          AND len(b.g) * 100 >= 80 * len(a.g)
-          AND len(list_intersect(a.g, b.g)) * 100
-              >= 80 * len(list_distinct(list_concat(a.g, b.g)))"""
-    return f"""
-    WITH RECURSIVE {_sql_training_stages()},
-    e AS ({edges}),
-    sym AS (SELECT id_a AS u, id_b AS v FROM e
-            UNION SELECT id_b, id_a FROM e),
-    reach AS (
-        SELECT u AS node, u AS lab FROM (SELECT DISTINCT u FROM sym)
-        UNION
-        SELECT s.u AS node, r.lab AS lab
-        FROM sym s JOIN reach r ON s.v = r.node),
-    comp AS (SELECT node, min(lab) AS root FROM reach GROUP BY node),
-    kept AS (
-        SELECT d.doc_id
-        FROM exd d LEFT JOIN comp ON d.doc_id = comp.node
-        WHERE coalesce(comp.root, d.doc_id) = d.doc_id)
+    and kept set (_sql_training_kept) with one count per stage.
+    ``edges_sql`` swaps in the certificate edge table at cross-scale,
+    exactly as _sql_doc_training_corpus does."""
+    return f"""{_sql_training_kept(edges_sql)}
     SELECT CAST(0 AS BIGINT) AS stage, 'raw' AS stage_name,
            CAST((SELECT count(*) FROM documents) AS BIGINT) AS n_docs
     UNION ALL
@@ -3576,18 +3388,12 @@ def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_neardup_pairs(emb, threshold=0.45)
 
 
-_SQL_COSINE_NEARDUP = """
-    WITH base AS (
-        SELECT CAST(vec_id AS BIGINT) AS vid,
-               CAST(embedding AS DOUBLE[]) AS v
-        FROM embeddings),
+_SQL_COSINE_NEARDUP = f"""
+    WITH {_SQL_VEC_BASE},
     scored AS (
-        SELECT a.vid AS id_a, b.vid AS id_b,
-               list_sum(list_transform(list_zip(a.v, b.v),
-                                       x -> x[1] * x[2]))
-               / (sqrt(list_sum(list_transform(a.v, x -> x * x)))
-                  * sqrt(list_sum(list_transform(b.v, x -> x * x)))) AS cos
-        FROM base a JOIN base b ON a.vid < b.vid)
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+               {_sql_cosine("a.v", "b.v")} AS cos
+        FROM base a JOIN base b ON a.vec_id < b.vec_id)
     SELECT id_a, id_b, round(cos, 4) AS cos_r
     FROM scored WHERE cos >= 0.45
 """
@@ -3608,17 +3414,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-dependent, so both engines must read the SAME floats)
     and DuckDB re-derives everything downstream in SQL — assignment,
     the probe set, the cell-pruned join, exact cosine re-rank, top-5."""
-    from .operators.ann import assign_cells, kmeans_centroids
+    from .operators.ann import assign_cells
     from .operators.dedup import cosine as cosine_expr
-    emb = _read(spark, sf_dir, "embeddings")
-    base = emb.select(F.col("vec_id").cast("bigint").alias("vec_id"),
-                      F.transform("embedding",
-                                  lambda x: x.cast("double")).alias("v"))
-    _ensure_side_table(sf_dir, _IVF_CENTROIDS_PATH,
-                       lambda: kmeans_centroids(base, k=8, iters=4))
-    cents = (spark.read.parquet(_IVF_CENTROIDS_PATH)
-             .select("cent_id", "c"))
-
+    base, cents = _ivf_base(spark, sf_dir)
     queries = (assign_cells(base.where(F.col("vec_id") < 10), cents,
                             nprobe=2)
                .select(F.col("vec_id").alias("query_id"),
@@ -3626,56 +3424,50 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors = (assign_cells(base.where(F.col("vec_id") >= 10), cents)
                  .select(F.col("vec_id").alias("neighbor_id"),
                          F.col("v").alias("n"), "cent_id"))
-    scored = (queries.join(neighbors, "cent_id")
-              .select("query_id", "neighbor_id",
-                      cosine_expr(F.col("q"), F.col("n")).alias("cos")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= 5)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("bigint").alias("rank"),
-                    F.round("cos", 4).alias("cos_r")))
+    return _top5(queries.join(neighbors, "cent_id").select(
+        "query_id", "neighbor_id",
+        cosine_expr(F.col("q"), F.col("n")).alias("cos")), "cos")
 
 
-_SQL_ANN_IVF = f"""
-    WITH base AS (
-        SELECT CAST(vec_id AS BIGINT) AS vec_id,
-               CAST(embedding AS DOUBLE[]) AS v
-        FROM embeddings),
+def _ivf_base(spark: SparkSession,
+              sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(base, cents): the double vectors and the trained coarse
+    centroids, written once per sf_dir to the side table the IVF and
+    IVF-PQ oracles read."""
+    from .operators.ann import kmeans_centroids
+    base = _vectors(spark, sf_dir)
+    _ensure_side_table(sf_dir, _IVF_CENTROIDS_PATH,
+                       lambda: kmeans_centroids(base, k=8, iters=4))
+    return base, (spark.read.parquet(_IVF_CENTROIDS_PATH)
+                  .select("cent_id", "c"))
+
+
+# Coarse IVF cells from the shared centroid side table, shared by the
+# IVF and IVF-PQ oracles: each index vector (vec_id >= 10) in its
+# nearest cell, each query in its 2 nearest (nprobe=2), cosine order
+# with the cent_id tie-break.
+_SQL_IVF_CELLS = f"""{_SQL_VEC_BASE},
     cents AS (SELECT cent_id, c
               FROM read_parquet('{_IVF_CENTROIDS_PATH}/*.parquet')),
     assign AS (
         SELECT b.vec_id, b.v, t.cent_id,
                row_number() OVER (
                    PARTITION BY b.vec_id
-                   ORDER BY list_sum(list_transform(list_zip(b.v, t.c),
-                                                    x -> x[1] * x[2]))
-                         / (sqrt(list_sum(list_transform(b.v,
-                                                         x -> x * x)))
-                            * sqrt(list_sum(list_transform(t.c,
-                                                           x -> x * x))))
+                   ORDER BY {_sql_cosine("b.v", "t.c")}
                          DESC, t.cent_id) AS rn
         FROM base b, cents t),
     cells AS (SELECT vec_id, v, cent_id FROM assign
               WHERE rn = 1 AND vec_id >= 10),
     probes AS (SELECT vec_id, v, cent_id FROM assign
-               WHERE rn <= 2 AND vec_id < 10),
+               WHERE rn <= 2 AND vec_id < 10)"""
+
+_SQL_ANN_IVF = f"""
+    WITH {_SQL_IVF_CELLS},
     scored AS (
         SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-               list_sum(list_transform(list_zip(q.v, n.v),
-                                       x -> x[1] * x[2]))
-               / (sqrt(list_sum(list_transform(q.v, x -> x * x)))
-                  * sqrt(list_sum(list_transform(n.v, x -> x * x)))) AS cos
+               {_sql_cosine("q.v", "n.v")} AS cos
         FROM probes q JOIN cells n ON q.cent_id = n.cent_id),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored)
-    SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-           round(cos, 4) AS cos_r
-    FROM ranked WHERE rank <= 5
-"""
+    {_sql_top5("scored", "cos")}"""
 
 
 _PQ_BOOKS_PATH = os.path.join(_REPO_ROOT, "data",
@@ -3696,17 +3488,9 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str):
     scored = (query_id, neighbor_id, adc) over the probed cells —
     ann_ivfpq_topk ranks it directly; ann_ivfpq_rerank_topk shortlists
     it and re-scores exactly."""
-    from .operators.ann import (_books_by_sub, assign_cells,
-                                kmeans_centroids, pq_adc_expr,
+    from .operators.ann import (_books_by_sub, assign_cells, pq_adc_expr,
                                 pq_codebooks, pq_encode_expr, pq_lut_expr)
-    emb = _read(spark, sf_dir, "embeddings")
-    base = emb.select(F.col("vec_id").cast("bigint").alias("vec_id"),
-                      F.transform("embedding",
-                                  lambda x: x.cast("double")).alias("v"))
-    _ensure_side_table(sf_dir, _IVF_CENTROIDS_PATH,
-                       lambda: kmeans_centroids(base, k=8, iters=4))
-    cents = (spark.read.parquet(_IVF_CENTROIDS_PATH)
-             .select("cent_id", "c"))
+    base, cents = _ivf_base(spark, sf_dir)
     _ensure_side_table(sf_dir, _PQ_BOOKS_PATH,
                        lambda: pq_codebooks(base, m=_PQ_M, k=_PQ_K,
                                             iters=3))
@@ -3741,12 +3525,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partition-order float sums), and DuckDB re-derives assignment,
     codes, LUTs, ADC, and the ranking from those shared floats."""
     _, scored = _ivfpq_adc(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy("adc", "neighbor_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= 5)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("bigint").alias("rank"),
-                    F.round("adc", 4).alias("adc_r")))
+    return _top5(scored, "adc", descending=False)
 
 
 _PQ_RERANK_R = 20  # ADC shortlist size feeding the exact re-rank
@@ -3769,6 +3548,7 @@ def ann_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist).  The exact cosine is the family's sequential
     F.aggregate/zip_with fold, so DuckDB's list_sum re-derives it
     bit-for-bit from the shared side-table floats."""
+    from .operators.dedup import cosine as cosine_expr
     base, scored = _ivfpq_adc(spark, sf_dir)
     w1 = Window.partitionBy("query_id").orderBy("adc", "neighbor_id")
     short = (scored.withColumn("srank", F.row_number().over(w1))
@@ -3778,27 +3558,14 @@ def ann_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("v").alias("q"))
     nv = base.select(F.col("vec_id").alias("neighbor_id"),
                      F.col("v").alias("n"))
-
-    def dot(a, b):
-        return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                           F.lit(0.0), lambda acc, x: acc + x)
-
-    cos = dot(F.col("q"), F.col("n")) / (
-        F.sqrt(dot(F.col("q"), F.col("q")))
-        * F.sqrt(dot(F.col("n"), F.col("n"))))
     exact = (short.join(qv, "query_id").join(nv, "neighbor_id")
-             .select("query_id", "neighbor_id", cos.alias("cos")))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"),
-                                                "neighbor_id")
-    return (exact.withColumn("rank", F.row_number().over(w2))
-            .where(F.col("rank") <= 5)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("bigint").alias("rank"),
-                    F.round("cos", 4).alias("cos_r")))
+             .select("query_id", "neighbor_id",
+                     cosine_expr(F.col("q"), F.col("n")).alias("cos")))
+    return _top5(exact, "cos")
 
 
-# IVF-PQ oracle: coarse assignment identical to _SQL_ANN_IVF from the
-# shared centroid side table; PQ codes/LUT/ADC re-derived from the
+# IVF-PQ oracle: the coarse cells of _SQL_IVF_CELLS (shared with
+# _SQL_ANN_IVF); PQ codes/LUT/ADC re-derived from the
 # shared codebooks — subdist holds every (vector, subspace, codeword)
 # squared-L2 (the same (p-q)*(p-q) sequential fold), codes is the
 # per-(vector, subspace) argmin with the cent_id tie-break, and ADC is
@@ -3807,30 +3574,9 @@ def ann_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The CTE chain shared by the plain and reranked IVF-PQ oracles, up
 # to the ADC-scored candidate stream.
 _SQL_IVFPQ_CORE = f"""
-    WITH base AS (
-        SELECT CAST(vec_id AS BIGINT) AS vec_id,
-               CAST(embedding AS DOUBLE[]) AS v
-        FROM embeddings),
-    cents AS (SELECT cent_id, c
-              FROM read_parquet('{_IVF_CENTROIDS_PATH}/*.parquet')),
+    WITH {_SQL_IVF_CELLS},
     books AS (SELECT sub_id, cent_id, c
               FROM read_parquet('{_PQ_BOOKS_PATH}/*.parquet')),
-    assign AS (
-        SELECT b.vec_id, b.v, t.cent_id,
-               row_number() OVER (
-                   PARTITION BY b.vec_id
-                   ORDER BY list_sum(list_transform(list_zip(b.v, t.c),
-                                                    x -> x[1] * x[2]))
-                         / (sqrt(list_sum(list_transform(b.v,
-                                                         x -> x * x)))
-                            * sqrt(list_sum(list_transform(t.c,
-                                                           x -> x * x))))
-                         DESC, t.cent_id) AS rn
-        FROM base b, cents t),
-    cells AS (SELECT vec_id, v, cent_id FROM assign
-              WHERE rn = 1 AND vec_id >= 10),
-    probes AS (SELECT vec_id, cent_id FROM assign
-               WHERE rn <= 2 AND vec_id < 10),
     subdist AS (
         SELECT b.vec_id, k.sub_id, k.cent_id,
                list_sum(list_transform(
@@ -3856,16 +3602,8 @@ _SQL_IVFPQ_CORE = f"""
                        AND qd.cent_id = cn.cent_id
         GROUP BY q.vec_id, n.vec_id)"""
 
-_SQL_ANN_IVFPQ = _SQL_IVFPQ_CORE + """,
-    ranked AS (
-        SELECT query_id, neighbor_id, adc,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY adc, neighbor_id) AS rank
-        FROM scored)
-    SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-           round(adc, 4) AS adc_r
-    FROM ranked WHERE rank <= 5
-"""
+_SQL_ANN_IVFPQ = (_SQL_IVFPQ_CORE + ",\n    "
+                  + _sql_top5("scored", "adc", descending=False))
 
 # Rerank oracle: ADC shortlist (same window as the plain ranking, cut
 # at R), exact cosine re-derived from the raw vectors with the same
@@ -3880,22 +3618,11 @@ _SQL_ANN_IVFPQ_RERANK = _SQL_IVFPQ_CORE + f""",
             FROM scored) WHERE srank <= {_PQ_RERANK_R}),
     exact AS (
         SELECT s.query_id, s.neighbor_id,
-               list_sum(list_transform(list_zip(q.v, n.v),
-                                       x -> x[1] * x[2]))
-             / (sqrt(list_sum(list_transform(q.v, x -> x * x)))
-                * sqrt(list_sum(list_transform(n.v, x -> x * x)))) AS cos
+               {_sql_cosine("q.v", "n.v")} AS cos
         FROM short s
         JOIN base q ON q.vec_id = s.query_id
         JOIN base n ON n.vec_id = s.neighbor_id),
-    rer AS (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
-        FROM exact)
-    SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-           round(cos, 4) AS cos_r
-    FROM rer WHERE rank <= 5
-"""
+    {_sql_top5("exact", "cos")}"""
 
 
 # Full SQL re-derivation of the multi-table multi-probe LSH ANN from
@@ -3907,9 +3634,7 @@ _SQL_ANN_IVFPQ_RERANK = _SQL_IVFPQ_CORE + f""",
 _SQL_ANN_LSH = f"""
     WITH planes AS (
         SELECT tbl, p, w FROM read_parquet('{_LSH_PLANES_PATH}')),
-    base AS (
-        SELECT CAST(vec_id AS BIGINT) AS vec_id, embedding AS v
-        FROM embeddings),
+    {_SQL_VEC_BASE},
     dots AS (
         SELECT b.vec_id, pl.tbl, pl.p,
                list_sum(list_transform(list_zip(b.v, pl.w),
@@ -3941,26 +3666,13 @@ _SQL_ANN_LSH = f"""
     cand AS (
         SELECT DISTINCT p.query_id, i.neighbor_id
         FROM probes p JOIN idx i ON p.bucket = i.bucket),
-    vecs AS (
-        SELECT vec_id, CAST(v AS DOUBLE[]) AS v FROM base),
     scored AS (
         SELECT c.query_id, c.neighbor_id,
-               list_sum(list_transform(list_zip(q.v, n.v),
-                                       x -> x[1] * x[2]))
-               / (sqrt(list_sum(list_transform(q.v, x -> x * x)))
-                  * sqrt(list_sum(list_transform(n.v, x -> x * x)))) AS cos
+               {_sql_cosine("q.v", "n.v")} AS cos
         FROM cand c
-        JOIN vecs q ON q.vec_id = c.query_id
-        JOIN vecs n ON n.vec_id = c.neighbor_id),
-    ranked AS (
-        SELECT query_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored)
-    SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-           round(cos, 4) AS cos_r
-    FROM ranked WHERE rank <= 5
-"""
+        JOIN base q ON q.vec_id = c.query_id
+        JOIN base n ON n.vec_id = c.neighbor_id),
+    {_sql_top5("scored", "cos")}"""
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3993,14 +3705,9 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scoring so ranks see each candidate once
     cand = (queries.join(neighbors, "bucket")
             .dropDuplicates(["query_id", "neighbor_id"]))
-    scored = cand.select("query_id", "neighbor_id",
-                         cosine_expr(F.col("q"), F.col("n")).alias("cos"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= 5)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("bigint").alias("rank"),
-                    F.round("cos", 4).alias("cos_r")))
+    return _top5(cand.select(
+        "query_id", "neighbor_id",
+        cosine_expr(F.col("q"), F.col("n")).alias("cos")), "cos")
 
 
 # ---------------------------------------------------------------------------
@@ -4017,20 +3724,30 @@ def media_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_media(media_from_documents(docs))
 
 
-_SQL_MEDIA_META = """
-    SELECT CAST(doc_id AS BIGINT) AS media_id,
-           (['image', 'audio', 'video'])[(doc_id % 3) + 1] AS kind,
-           CASE WHEN doc_id % 3 = 0
-                THEN CAST(32 + (doc_id % 8) * 16 AS INT) END AS width,
-           CASE WHEN doc_id % 3 = 0
-                THEN CAST(32 + (doc_id % 5) * 24 AS INT) END AS height,
-           CASE WHEN doc_id % 3 = 1
-                THEN CAST(8000 + (doc_id % 4) * 8000 AS INT)
-                END AS sample_rate,
-           CASE WHEN doc_id % 3 = 2
-                THEN CAST(1 + doc_id % 60 AS INT) END AS n_frames,
+# The media metadata formulas of multimodal.media_from_documents, ONE
+# SQL copy for every media oracle: kind cycles image/audio/video and
+# each attribute is NULL outside its kind.
+_SQL_MEDIA_ATTRS = """media AS (
+        SELECT doc_id, text,
+               (['image', 'audio', 'video'])[(doc_id % 3) + 1] AS kind,
+               CASE WHEN doc_id % 3 = 0
+                    THEN 32 + (doc_id % 8) * 16 END AS width,
+               CASE WHEN doc_id % 3 = 0
+                    THEN 32 + (doc_id % 5) * 24 END AS height,
+               CASE WHEN doc_id % 3 = 1
+                    THEN 8000 + (doc_id % 4) * 8000 END AS sample_rate,
+               CASE WHEN doc_id % 3 = 2
+                    THEN 1 + doc_id % 60 END AS n_frames
+        FROM documents)"""
+
+_SQL_MEDIA_META = f"""
+    WITH {_SQL_MEDIA_ATTRS}
+    SELECT CAST(doc_id AS BIGINT) AS media_id, kind,
+           CAST(width AS INT) AS width, CAST(height AS INT) AS height,
+           CAST(sample_rate AS INT) AS sample_rate,
+           CAST(n_frames AS INT) AS n_frames,
            CAST(strlen(coalesce(text, '')) AS BIGINT) AS n_payload_bytes
-    FROM documents
+    FROM media
 """
 
 
@@ -4043,11 +3760,11 @@ def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(decode_media(media_from_documents(docs)), every=10)
 
 
-_SQL_FRAME_SAMPLE = """
+_SQL_FRAME_SAMPLE = f"""
+    WITH {_SQL_MEDIA_ATTRS}
     SELECT CAST(doc_id AS BIGINT) AS media_id,
-           CAST(unnest(range(0, CAST(doc_id % 60 AS BIGINT) + 1, 10))
-                AS INT) AS frame_idx
-    FROM documents WHERE doc_id % 3 = 2
+           CAST(unnest(range(0, n_frames, 10)) AS INT) AS frame_idx
+    FROM media WHERE kind = 'video'
 """
 
 
@@ -4061,11 +3778,10 @@ def media_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                          max_side=64)
 
 
-_SQL_RESIZE_PLAN = """
-    WITH m AS (
-        SELECT doc_id, 32 + (doc_id % 8) * 16 AS w,
-               32 + (doc_id % 5) * 24 AS h
-        FROM documents WHERE doc_id % 3 = 0)
+_SQL_RESIZE_PLAN = f"""
+    WITH {_SQL_MEDIA_ATTRS},
+    m AS (SELECT doc_id, width AS w, height AS h
+          FROM media WHERE kind = 'image')
     SELECT CAST(doc_id AS BIGINT) AS media_id,
            CAST(w AS INT) AS width, CAST(h AS INT) AS height,
            CAST(greatest(floor(w * least(greatest(w, h), 64)
@@ -4095,20 +3811,15 @@ def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_feature_counts(media_from_documents(docs))
 
 
-_SQL_MEDIA_FEATURES = """
-    WITH m AS (
+_SQL_MEDIA_FEATURES = f"""
+    WITH {_SQL_MEDIA_ATTRS},
+    m AS (
         SELECT CAST(doc_id AS BIGINT) AS media_id,
-               'EDSM|' || (['image', 'audio', 'video'])[(doc_id % 3) + 1]
-               || '|' || CASE WHEN doc_id % 3 = 0
-                              THEN 32 + (doc_id % 8) * 16 ELSE 0 END
-               || '|' || CASE WHEN doc_id % 3 = 0
-                              THEN 32 + (doc_id % 5) * 24 ELSE 0 END
-               || '|' || CASE WHEN doc_id % 3 = 1
-                              THEN 8000 + (doc_id % 4) * 8000 ELSE 0 END
-               || '|' || CASE WHEN doc_id % 3 = 2
-                              THEN 1 + doc_id % 60 ELSE 0 END
-               || '|' || coalesce(text, '') AS payload
-        FROM documents),
+               concat_ws('|', 'EDSM', kind, coalesce(width, 0),
+                         coalesce(height, 0), coalesce(sample_rate, 0),
+                         coalesce(n_frames, 0), coalesce(text, ''))
+                   AS payload
+        FROM media),
     pos AS (
         SELECT media_id, payload,
                unnest(range(1, length(payload) + 1)) AS i
@@ -4174,13 +3885,16 @@ def transcripts_clusters_small(spark: SparkSession,
     return run_linkage(t, LinkageConfig())["clusters"]
 
 
-def _sql_transcripts_clusters_small() -> str:
+def _sql_transcript_pairs() -> str:
+    """The flagship pipeline's front in SQL, shared by the cluster and
+    blocking-quality oracles: canon ``c``, structural ``bands`` and
+    ``keys`` (salting drops out — it only re-routes pair generation),
+    and the candidate pairs ``p``."""
     from .plans.linkage import LinkageConfig
     cfg = LinkageConfig()
     path = transcripts_path("small")
     ratio = 1.0 / (1.0 - cfg.band_tau)
-    return f"""
-    WITH RECURSIVE c AS (
+    return f"""c AS (
         SELECT conv_id,
                string_agg(coalesce(text, ''), '{SEP}'
                           ORDER BY turn_idx) AS full_text,
@@ -4201,25 +3915,25 @@ def _sql_transcripts_clusters_small() -> str:
     p AS (
         SELECT DISTINCT a.conv_id AS id_a, b.conv_id AS id_b
         FROM keys a JOIN keys b
-          ON a.bk = b.bk AND a.conv_id < b.conv_id),
+          ON a.bk = b.bk AND a.conv_id < b.conv_id)"""
+
+
+def _sql_transcripts_clusters_small() -> str:
+    from .plans.linkage import LinkageConfig
+    tau = LinkageConfig().tau
+    edges = f"""
+        SELECT id_a, id_b FROM s
+        WHERE CAST(levenshtein(ta, tb) AS DOUBLE)
+              / greatest(greatest(la, lb), 1) <= {tau}"""
+    return f"""
+    WITH RECURSIVE {_sql_transcript_pairs()},
     s AS (
         SELECT p.id_a, p.id_b, ca.full_text AS ta, cb.full_text AS tb,
                ca.text_len AS la, cb.text_len AS lb
         FROM p JOIN c ca ON ca.conv_id = p.id_a
                JOIN c cb ON cb.conv_id = p.id_b
-        WHERE abs(la - lb) <= ceil({cfg.tau} * greatest(la, lb))),
-    e AS (
-        SELECT id_a, id_b FROM s
-        WHERE CAST(levenshtein(ta, tb) AS DOUBLE)
-              / greatest(greatest(la, lb), 1) <= {cfg.tau}),
-    sym AS (SELECT id_a AS u, id_b AS v FROM e
-            UNION SELECT id_b, id_a FROM e),
-    reach AS (
-        SELECT u AS node, u AS lab FROM (SELECT DISTINCT u FROM sym)
-        UNION
-        SELECT s2.u AS node, r.lab AS lab
-        FROM sym s2 JOIN reach r ON s2.v = r.node),
-    comp AS (SELECT node, min(lab) AS root FROM reach GROUP BY node)
+        WHERE abs(la - lb) <= ceil({tau} * greatest(la, lb))),
+    {_sql_closure(edges)}
     SELECT c.conv_id,
            coalesce(comp.root, c.conv_id) AS cluster_id
     FROM c LEFT JOIN comp ON c.conv_id = comp.node
@@ -4270,18 +3984,8 @@ def _sql_cluster_audit(edges_sql: str | None = None) -> str:
     union_count): tools/cross_scale_check.py projects all four from
     the Spark-written certificate side table at sf0.1; the contract
     default recomputes the exhaustive all-pairs Jaccard edges."""
-    edges = edges_sql or _SQL_MINHASH_NEARDUP
     return f"""
-    WITH RECURSIVE e AS ({edges}),
-    sym AS (SELECT id_a AS u, id_b AS v FROM e
-            UNION SELECT id_b, id_a FROM e),
-    reach AS (
-        SELECT u AS node, u AS lab FROM (SELECT DISTINCT u FROM sym)
-        UNION
-        SELECT s.u AS node, r.lab AS lab
-        FROM sym s JOIN reach r ON s.v = r.node
-    ),
-    comp AS (SELECT node, min(lab) AS root FROM reach GROUP BY node),
+    WITH RECURSIVE {_sql_closure(edges_sql or _sql_minhash_neardup())},
     cl AS (SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
                   CAST(coalesce(comp.root, d.doc_id) AS BIGINT)
                       AS cluster_id
@@ -4300,9 +4004,6 @@ def _sql_cluster_audit(edges_sql: str | None = None) -> str:
            ec.mj AS min_jaccard
     FROM m LEFT JOIN ec ON m.cluster_id = ec.cluster_id
 """
-
-
-_SQL_CLUSTER_AUDIT = _sql_cluster_audit()
 
 
 def golden_records_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4351,9 +4052,6 @@ def _sql_golden_records(edges_sql: str | None = None) -> str:
 """
 
 
-_SQL_GOLDEN_RECORDS = _sql_golden_records()
-
-
 def linkage_eval_small(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north-rule metric as a graded operator: pairwise TP/FP/FN +
     precision/recall/F1 of the flagship pipeline's clusters against
@@ -4366,12 +4064,7 @@ def linkage_eval_small(spark: SparkSession, sf_dir: str) -> DataFrame:
     5*10^11 pairs.  plans/linkage.pairwise_f1 is the driver-side dict
     twin (bench reporting); this is the SQL-checked surface, and a
     pytest pins the two coherent."""
-    pred = transcripts_clusters_small(spark, sf_dir)
-    cells = (pred.groupBy(
-                 F.col("cluster_id"),
-                 F.substring_index("conv_id", "_", 1).alias("truth_id"))
-             .agg(F.count(F.lit(1)).alias("n"))
-             .localCheckpoint(eager=False))
+    cells = _truth_cells(spark, sf_dir).localCheckpoint(eager=False)
     # coalesce: with zero cells sum() is NULL; the oracle coalesces
     # to 0, so an empty assignment table must not hash-diverge
     half = "s * (s - 1) div 2"
@@ -4396,18 +4089,36 @@ def linkage_eval_small(spark: SparkSession, sf_dir: str) -> DataFrame:
          .otherwise(F.lit(1.0)).alias("pairwise_f1"))
 
 
-# Eval oracle: predicted clusters re-derived by the flagship query's
-# own recursive-CTE oracle, truth peeled from conv_id, then the same
-# pair-counting identity.  2*tp/(pp+tpp) is F1 exactly (denominator
-# = 2tp+fp+fn); single bigint/bigint divisions keep both engines on
-# one correctly-rounded IEEE step each.
-def _sql_linkage_eval() -> str:
-    return f"""
-    WITH pred AS ({_sql_transcripts_clusters_small()}),
+def _truth_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(cluster_id, truth_id, n): the flagship clusters crossed with
+    the fixture's planted truth (conv_id = c{cluster}_{variant}) — the
+    contingency table both evaluation queries read (SQL twin:
+    _sql_truth_cells)."""
+    pred = transcripts_clusters_small(spark, sf_dir)
+    return (pred.groupBy(
+                F.col("cluster_id"),
+                F.substring_index("conv_id", "_", 1).alias("truth_id"))
+            .agg(F.count(F.lit(1)).alias("n")))
+
+
+def _sql_truth_cells() -> str:
+    """CTEs pred (the flagship query's own recursive-CTE cluster
+    oracle) and cells, the contingency table with truth peeled from
+    conv_id."""
+    return f"""pred AS ({_sql_transcripts_clusters_small()}),
     cells AS (
         SELECT cluster_id, split_part(conv_id, '_', 1) AS truth_id,
                count(*) AS n
-        FROM pred GROUP BY cluster_id, truth_id),
+        FROM pred GROUP BY cluster_id, truth_id)"""
+
+
+# Eval oracle: the shared cell table, then the same pair-counting
+# identity.  2*tp/(pp+tpp) is F1 exactly (denominator = 2tp+fp+fn);
+# single bigint/bigint divisions keep both engines on one
+# correctly-rounded IEEE step each.
+def _sql_linkage_eval() -> str:
+    return f"""
+    WITH {_sql_truth_cells()},
     tp_t AS (SELECT CAST(coalesce(sum(n * (n - 1) // 2), 0) AS BIGINT)
                  AS tp FROM cells),
     pp_t AS (SELECT CAST(coalesce(sum(s * (s - 1) // 2), 0) AS BIGINT)
@@ -4448,11 +4159,7 @@ def bcubed_eval_small(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering; everything here shuffles only the cell table (at most
     one row per cluster-label overlap — O(#clusters), not O(records)),
     and the two marginal sizes share it via two window sums."""
-    pred = transcripts_clusters_small(spark, sf_dir)
-    cells = (pred.groupBy(
-                 F.col("cluster_id"),
-                 F.substring_index("conv_id", "_", 1).alias("truth_id"))
-             .agg(F.count(F.lit(1)).alias("n")))
+    cells = _truth_cells(spark, sf_dir)
     wp = Window.partitionBy("cluster_id")
     wt = Window.partitionBy("truth_id")
     return (cells
@@ -4468,17 +4175,12 @@ def bcubed_eval_small(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("recall_mass")))
 
 
-# B-cubed oracle: the same cell table from the flagship query's
-# recursive-CTE cluster oracle; n*n/size is one exact IEEE division
-# per row in both engines (DuckDB `/` on integers is double division,
-# matching Spark's `/` on bigints).
+# B-cubed oracle: the shared cell table; n*n/size is one exact IEEE
+# division per row in both engines (DuckDB `/` on integers is double
+# division, matching Spark's `/` on bigints).
 def _sql_bcubed_eval() -> str:
     return f"""
-    WITH pred AS ({_sql_transcripts_clusters_small()}),
-    cells AS (
-        SELECT cluster_id, split_part(conv_id, '_', 1) AS truth_id,
-               count(*) AS n
-        FROM pred GROUP BY cluster_id, truth_id),
+    WITH {_sql_truth_cells()},
     sized AS (
         SELECT cluster_id, truth_id, n,
                sum(n) OVER (PARTITION BY cluster_id) AS pred_size,
@@ -4535,36 +4237,12 @@ def blocking_quality_small(spark: SparkSession, sf_dir: str) -> DataFrame:
          .otherwise(F.lit(1.0)).alias("pairs_completeness"))
 
 
-# Blocking-quality oracle: the same canon/band/key/pair CTEs as the
-# flagship cluster oracle (duplicated textually, as the FS oracles
-# duplicate the SNM CTEs — each oracle stays a self-contained SQL
-# string), then four scalar aggregates and the two ratios.
+# Blocking-quality oracle: the flagship cluster oracle's own
+# canon/band/key/pair CTEs (_sql_transcript_pairs), then four scalar
+# aggregates and the two ratios.
 def _sql_blocking_quality() -> str:
-    from .plans.linkage import LinkageConfig
-    cfg = LinkageConfig()
-    path = transcripts_path("small")
-    ratio = 1.0 / (1.0 - cfg.band_tau)
     return f"""
-    WITH c AS (
-        SELECT conv_id,
-               count(*) AS n_turns,
-               length(string_agg(coalesce(text, ''), '{SEP}'
-                                 ORDER BY turn_idx)) AS text_len
-        FROM read_parquet('{path}/*.parquet')
-        GROUP BY conv_id),
-    bands AS (
-        SELECT conv_id, n_turns, text_len,
-               CAST(floor(ln(CAST(greatest(text_len, 1) AS DOUBLE))
-                          / ln({ratio!r})) AS BIGINT) AS band
-        FROM c),
-    keys AS (
-        SELECT conv_id, 'st:' || n_turns || ':' || band AS bk FROM bands
-        UNION ALL
-        SELECT conv_id, 'st:' || n_turns || ':' || (band + 1) FROM bands),
-    p AS (
-        SELECT DISTINCT a.conv_id AS id_a, b.conv_id AS id_b
-        FROM keys a JOIN keys b
-          ON a.bk = b.bk AND a.conv_id < b.conv_id),
+    WITH {_sql_transcript_pairs()},
     tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c),
     cand AS (SELECT CAST(count(*) AS BIGINT) AS n_candidates FROM p),
     cov AS (SELECT CAST(count(*) AS BIGINT) AS n_covered FROM p
@@ -4585,165 +4263,186 @@ def _sql_blocking_quality() -> str:
 """
 
 
-def build_queries():
-    return {
-        "canonical_conversations": canonical_conversations,
-        "length_blocks": length_blocks,
-        "candidate_pairs": candidate_pairs_events,
-        "scored_pairs_nw": scored_pairs_events,
-        "match_edges": match_edges_events,
-        "clusters": clusters_events,
-        "clusters_incremental": clusters_incremental,
-        "nw_distance_customer": nw_distance_customer,
-        "nw_distance_documents": nw_distance_documents,
-        "nw_distance_documents_k": nw_distance_documents_k,
-        "doc_exact_dedup": doc_exact_dedup,
-        "snm_pairs_documents": snm_pairs_documents,
-        "doc_token_stats": doc_token_stats,
-        "doc_bpe_tokens": doc_bpe_tokens,
-        "doc_quality": doc_quality,
-        "doc_tfidf_topterms": doc_tfidf_topterms,
-        "doc_ngram_jaccard": doc_ngram_jaccard,
-        "top_similar_documents": top_similar_documents,
-        "query_vs_corpus": query_vs_corpus,
-        "query_top_corpus": query_top_corpus,
-        "query_infix_corpus": query_infix_corpus,
-        "ann_cosine_topk": ann_cosine_topk,
-        "doc_lang_id": doc_lang_id,
-        "doc_simhash_buckets": doc_simhash_buckets,
-        "doc_fingerprint": doc_fingerprint,
-        "embedding_lsh_buckets": embedding_lsh_buckets,
-        "hw_distance_documents": hw_distance_documents,
-        "scored_pairs_hw": scored_pairs_hw,
-        "shw_distance_documents": shw_distance_documents,
-        "shw_distance_exact": shw_distance_exact,
-        "hw_distance_exact": hw_distance_exact,
-        "equality_align_documents": equality_align_documents,
-        "hw_locations_documents": hw_locations_documents,
-        "hw_locations_exact": hw_locations_exact,
-        "fasta_align_pairs": fasta_align_pairs,
-        "nice_alignment_documents": nice_alignment_documents,
-        "align_path_documents": align_path_documents,
-        "align_path_std_documents": align_path_std_documents,
-        "align_ops_stats_documents": align_ops_stats_documents,
-        "minhash_blocks_documents": minhash_blocks_documents,
-        "doc_minhash_neardup": doc_minhash_neardup,
-        "doc_neardup_clusters": doc_neardup_clusters,
-        "doc_dedup_corpus": doc_dedup_corpus,
-        "doc_training_corpus": doc_training_corpus,
-        "training_funnel_documents": training_funnel_documents,
-        "doc_simhash_neardup": doc_simhash_neardup,
-        "embedding_cosine_neardup": embedding_cosine_neardup,
-        "ann_ivf_topk": ann_ivf_topk,
-        "ann_ivfpq_topk": ann_ivfpq_topk,
-        "ann_ivfpq_rerank_topk": ann_ivfpq_rerank_topk,
-        "ann_lsh_topk": ann_lsh_topk,
-        "fs_match_documents": fs_match_documents,
-        "fs_tf_match_documents": fs_tf_match_documents,
-        "fs_classify_documents": fs_classify_documents,
-        "fs_calibration_documents": fs_calibration_documents,
-        "pprl_bloom_documents": pprl_bloom_documents,
-        "multi_blocking_pairs": multi_blocking_pairs,
-        "meta_blocking_pairs": meta_blocking_pairs,
-        "meta_blocking_wep_pairs": meta_blocking_wep_pairs,
-        "meta_blocking_wep_quality": meta_blocking_wep_quality,
-        "meta_blocking_quality": meta_blocking_quality,
-        "block_size_profile": block_size_profile,
-        "fs_waterfall_documents": fs_waterfall_documents,
-        "fs_review_queue_documents": fs_review_queue_documents,
-        "cluster_audit_documents": cluster_audit_documents,
-        "golden_records_documents": golden_records_documents,
-        "linkage_eval_small": linkage_eval_small,
-        "bcubed_eval_small": bcubed_eval_small,
-        "blocking_quality_small": blocking_quality_small,
-        "media_decode_meta": media_decode_meta,
-        "media_frame_sample": media_frame_sample,
-        "media_resize_plan": media_resize_plan,
-        "media_features": media_features,
-        "transcripts_canonical_small": transcripts_canonical_small,
-        "transcripts_clusters_small": transcripts_clusters_small,
-    }
+# ---------------------------------------------------------------------------
+# the registry: every contract query, its family, Spark side and oracle
+# ---------------------------------------------------------------------------
+
+FAMILIES = ("pipeline", "alignment", "blocking", "fs", "dedup_text", "ann",
+            "cluster", "media")
 
 
-def build_oracle_sql():
-    return {
-        "canonical_conversations": _SQL_CANONICAL,
-        "length_blocks": _SQL_LENGTH_BLOCKS,
-        "candidate_pairs": _SQL_PAIRS,
-        "scored_pairs_nw": _SQL_SCORED,
-        "match_edges": _SQL_EDGES,
-        "clusters": _SQL_CLUSTERS,
-        "clusters_incremental": _SQL_CLUSTERS,
-        "nw_distance_customer": _SQL_NW_CUSTOMER,
-        "nw_distance_documents": _SQL_NW_DOCUMENTS,
-        "nw_distance_documents_k": _SQL_NW_DOCUMENTS_K,
-        "doc_exact_dedup": _SQL_DOC_DEDUP,
-        "snm_pairs_documents": _SQL_SNM_PAIRS,
-        "fs_match_documents": _sql_fs(tf=False),
-        "fs_tf_match_documents": _sql_fs(tf=True),
-        "fs_classify_documents": _sql_fs_classify(),
-        "fs_calibration_documents": _sql_fs_calibration(),
-        "pprl_bloom_documents": _sql_pprl_bloom(),
-        "multi_blocking_pairs": _sql_multi_blocking(),
-        "meta_blocking_pairs": _sql_meta_blocking(),
-        "meta_blocking_wep_pairs": _sql_meta_blocking_wep(),
-        "meta_blocking_wep_quality": _sql_meta_blocking_wep_quality(),
-        "meta_blocking_quality": _sql_meta_blocking_quality(),
-        "block_size_profile": _sql_block_size_profile(),
-        "fs_waterfall_documents": _sql_fs_waterfall(),
-        "fs_review_queue_documents": _sql_fs_review_queue(),
-        "cluster_audit_documents": _SQL_CLUSTER_AUDIT,
-        "golden_records_documents": _SQL_GOLDEN_RECORDS,
-        "linkage_eval_small": _sql_linkage_eval(),
-        "bcubed_eval_small": _sql_bcubed_eval(),
-        "blocking_quality_small": _sql_blocking_quality(),
-        "doc_token_stats": _SQL_DOC_TOKENS,
-        "doc_bpe_tokens": _SQL_BPE_TOKENS,
-        "doc_quality": _SQL_DOC_QUALITY,
-        "doc_tfidf_topterms": _SQL_TFIDF_TOPTERMS,
-        "doc_ngram_jaccard": _SQL_NGRAM_JACCARD,
-        "top_similar_documents": _SQL_TOP_SIMILAR,
-        "query_vs_corpus": _SQL_QUERY_VS_CORPUS,
-        "query_top_corpus": _SQL_QUERY_TOP_CORPUS,
-        "query_infix_corpus": _SQL_QUERY_INFIX,
-        "ann_cosine_topk": _SQL_ANN_TOPK,
-        "doc_minhash_neardup": _SQL_MINHASH_NEARDUP,
-        "doc_neardup_clusters": _SQL_NEARDUP_CLUSTERS,
-        "doc_dedup_corpus": _SQL_DEDUP_CORPUS,
-        "doc_training_corpus": _sql_doc_training_corpus(),
-        "training_funnel_documents": _sql_training_funnel(),
-        "embedding_cosine_neardup": _SQL_COSINE_NEARDUP,
-        "ann_ivf_topk": _SQL_ANN_IVF,
-        "ann_ivfpq_topk": _SQL_ANN_IVFPQ,
-        "ann_ivfpq_rerank_topk": _SQL_ANN_IVFPQ_RERANK,
-        "shw_distance_exact": _SQL_SHW_EXACT,
-        "hw_distance_exact": _SQL_HW_EXACT,
-        "hw_locations_exact": _SQL_HW_LOCATIONS_EXACT,
-        "fasta_align_pairs": _SQL_FASTA_ALIGN,
-        "equality_align_documents": _SQL_EQUALITY_ALIGN,
-        "doc_lang_id": _sql_doc_lang_id(),
-        "media_decode_meta": _SQL_MEDIA_META,
-        "media_frame_sample": _SQL_FRAME_SAMPLE,
-        "media_resize_plan": _SQL_RESIZE_PLAN,
-        "media_features": _SQL_MEDIA_FEATURES,
-        "transcripts_canonical_small": _sql_transcripts_canonical_small(),
-        "transcripts_clusters_small": _sql_transcripts_clusters_small(),
-        "doc_simhash_buckets": _SQL_SIMHASH_BUCKETS,
-        "doc_simhash_neardup": _SQL_SIMHASH_NEARDUP,
-        "doc_fingerprint": _SQL_DOC_FINGERPRINT,
-        "embedding_lsh_buckets": _SQL_LSH_BUCKETS,
-        "ann_lsh_topk": _SQL_ANN_LSH,
-        "minhash_blocks_documents": _sql_minhash_blocks(),
-        "nice_alignment_documents": _SQL_NICE_ALIGNMENT,
-        "align_path_documents": _SQL_ALIGN_PATH,
-        "align_path_std_documents": _SQL_ALIGN_PATH_STD,
-        "align_ops_stats_documents": _SQL_ALIGN_OPS,
-        "shw_distance_documents": _SQL_SHW_DOCUMENTS,
-        "hw_distance_documents": _SQL_HW_DOCUMENTS,
-        "scored_pairs_hw": _SQL_SCORED_HW,
-        "hw_locations_documents": _SQL_HW_LOCATIONS_DOCUMENTS,
-        # every contract query is oracle-backed: the untruncated HW
-        # queries run the full free-start Levenshtein DP as a recursive
-        # CTE (no substring expansion), SHW uses the 2|q| prefix bound,
-        # and CIGAR queries use replay certificates.
-    }
+class Query(NamedTuple):
+    """One contract query: its public name, family, Spark side and the
+    DuckDB oracle that must hash-equal it."""
+    name: str
+    family: str
+    spark_fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str
+
+
+def registry() -> list[Query]:
+    """Every contract query in graded order.  The table is grouped by
+    family; the first entry of each family is its representative and
+    leads the graded order, so the driver's first-50 window covers all
+    of FAMILIES whatever the family sizes."""
+    table = [
+        # pipeline: the events-derived chain and the flagship transcripts
+        Query("canonical_conversations", "pipeline",
+              canonical_conversations, _SQL_CANONICAL),
+        Query("length_blocks", "pipeline", length_blocks, _SQL_LENGTH_BLOCKS),
+        Query("candidate_pairs", "pipeline",
+              candidate_pairs_events, _SQL_PAIRS),
+        Query("scored_pairs_nw", "pipeline",
+              scored_pairs_events, _sql_scored(TAU)),
+        Query("match_edges", "pipeline", match_edges_events, _sql_edges()),
+        Query("clusters", "pipeline", clusters_events, _sql_clusters()),
+        Query("clusters_incremental", "pipeline",
+              clusters_incremental, _sql_clusters()),
+        Query("transcripts_canonical_small", "pipeline",
+              transcripts_canonical_small, _sql_transcripts_canonical_small()),
+        Query("transcripts_clusters_small", "pipeline",
+              transcripts_clusters_small, _sql_transcripts_clusters_small()),
+        # alignment: NW / HW / SHW distances, locations and CIGARs
+        Query("nw_distance_documents", "alignment",
+              nw_distance_documents, _SQL_NW_DOCUMENTS),
+        Query("nw_distance_customer", "alignment",
+              nw_distance_customer, _SQL_NW_CUSTOMER),
+        Query("nw_distance_documents_k", "alignment",
+              nw_distance_documents_k, _SQL_NW_DOCUMENTS_K),
+        Query("top_similar_documents", "alignment",
+              top_similar_documents, _SQL_TOP_SIMILAR),
+        Query("query_vs_corpus", "alignment",
+              query_vs_corpus, _SQL_QUERY_VS_CORPUS),
+        Query("query_top_corpus", "alignment",
+              query_top_corpus, _SQL_QUERY_TOP_CORPUS),
+        Query("query_infix_corpus", "alignment",
+              query_infix_corpus, _SQL_QUERY_INFIX),
+        Query("hw_distance_documents", "alignment",
+              hw_distance_documents, _SQL_HW_DOCUMENTS),
+        Query("scored_pairs_hw", "alignment", scored_pairs_hw, _SQL_SCORED_HW),
+        Query("shw_distance_documents", "alignment",
+              shw_distance_documents, _SQL_SHW_DOCUMENTS),
+        Query("shw_distance_exact", "alignment",
+              shw_distance_exact, _SQL_SHW_EXACT),
+        Query("hw_distance_exact", "alignment",
+              hw_distance_exact, _SQL_HW_EXACT),
+        Query("equality_align_documents", "alignment",
+              equality_align_documents, _SQL_EQUALITY_ALIGN),
+        Query("hw_locations_documents", "alignment",
+              hw_locations_documents, _SQL_HW_LOCATIONS_DOCUMENTS),
+        Query("hw_locations_exact", "alignment",
+              hw_locations_exact, _SQL_HW_LOCATIONS_EXACT),
+        Query("fasta_align_pairs", "alignment",
+              fasta_align_pairs, _SQL_FASTA_ALIGN),
+        Query("nice_alignment_documents", "alignment",
+              nice_alignment_documents, _SQL_NICE_ALIGNMENT),
+        Query("align_path_documents", "alignment",
+              align_path_documents, _SQL_ALIGN_PATH),
+        Query("align_path_std_documents", "alignment",
+              align_path_std_documents, _SQL_ALIGN_PATH_STD),
+        Query("align_ops_stats_documents", "alignment",
+              align_ops_stats_documents, _SQL_ALIGN_OPS),
+        # blocking: SNM / MinHash / structural blocking and meta-blocking
+        Query("snm_pairs_documents", "blocking",
+              snm_pairs_documents, _SQL_SNM_PAIRS),
+        Query("minhash_blocks_documents", "blocking",
+              minhash_blocks_documents, _sql_minhash_blocks()),
+        Query("multi_blocking_pairs", "blocking",
+              multi_blocking_pairs, _sql_multi_blocking()),
+        Query("meta_blocking_pairs", "blocking",
+              meta_blocking_pairs, _sql_meta_blocking()),
+        Query("meta_blocking_wep_pairs", "blocking",
+              meta_blocking_wep_pairs, _sql_meta_blocking_wep()),
+        Query("meta_blocking_quality", "blocking",
+              meta_blocking_quality, _sql_meta_blocking_quality()),
+        Query("meta_blocking_wep_quality", "blocking",
+              meta_blocking_wep_quality, _sql_meta_blocking_wep_quality()),
+        Query("block_size_profile", "blocking",
+              block_size_profile, _sql_block_size_profile()),
+        Query("blocking_quality_small", "blocking",
+              blocking_quality_small, _sql_blocking_quality()),
+        # fs: Fellegi-Sunter linkage over SNM candidates, plus PPRL
+        Query("fs_match_documents", "fs",
+              fs_match_documents, _sql_fs(tf=False)),
+        Query("fs_tf_match_documents", "fs",
+              fs_tf_match_documents, _sql_fs(tf=True)),
+        Query("fs_classify_documents", "fs",
+              fs_classify_documents, _sql_fs_classify()),
+        Query("fs_calibration_documents", "fs",
+              fs_calibration_documents, _sql_fs_calibration()),
+        Query("fs_waterfall_documents", "fs",
+              fs_waterfall_documents, _sql_fs_waterfall()),
+        Query("fs_review_queue_documents", "fs",
+              fs_review_queue_documents, _sql_fs_review_queue()),
+        Query("pprl_bloom_documents", "fs",
+              pprl_bloom_documents, _sql_pprl_bloom()),
+        # dedup_text: text operators and the exact / near-dup dedup chain
+        Query("doc_exact_dedup", "dedup_text",
+              doc_exact_dedup, _SQL_DOC_DEDUP),
+        Query("doc_token_stats", "dedup_text",
+              doc_token_stats, _SQL_DOC_TOKENS),
+        Query("doc_bpe_tokens", "dedup_text", doc_bpe_tokens, _SQL_BPE_TOKENS),
+        Query("doc_quality", "dedup_text", doc_quality, _SQL_DOC_QUALITY),
+        Query("doc_tfidf_topterms", "dedup_text",
+              doc_tfidf_topterms, _SQL_TFIDF_TOPTERMS),
+        Query("doc_ngram_jaccard", "dedup_text",
+              doc_ngram_jaccard, _SQL_NGRAM_JACCARD),
+        Query("doc_lang_id", "dedup_text", doc_lang_id, _sql_doc_lang_id()),
+        Query("doc_simhash_buckets", "dedup_text",
+              doc_simhash_buckets, _SQL_SIMHASH_BUCKETS),
+        Query("doc_simhash_neardup", "dedup_text",
+              doc_simhash_neardup, _SQL_SIMHASH_NEARDUP),
+        Query("doc_fingerprint", "dedup_text",
+              doc_fingerprint, _SQL_DOC_FINGERPRINT),
+        Query("doc_minhash_neardup", "dedup_text",
+              doc_minhash_neardup, _sql_minhash_neardup()),
+        Query("doc_neardup_clusters", "dedup_text",
+              doc_neardup_clusters, _sql_neardup_clusters()),
+        Query("doc_dedup_corpus", "dedup_text",
+              doc_dedup_corpus, _sql_dedup_corpus()),
+        Query("doc_training_corpus", "dedup_text",
+              doc_training_corpus, _sql_doc_training_corpus()),
+        Query("training_funnel_documents", "dedup_text",
+              training_funnel_documents, _sql_training_funnel()),
+        # ann: embedding LSH, brute-force and IVF / IVF-PQ nearest neighbors
+        Query("ann_cosine_topk", "ann", ann_cosine_topk, _SQL_ANN_TOPK),
+        Query("embedding_lsh_buckets", "ann",
+              embedding_lsh_buckets, _SQL_LSH_BUCKETS),
+        Query("embedding_cosine_neardup", "ann",
+              embedding_cosine_neardup, _SQL_COSINE_NEARDUP),
+        Query("ann_ivf_topk", "ann", ann_ivf_topk, _SQL_ANN_IVF),
+        Query("ann_ivfpq_topk", "ann", ann_ivfpq_topk, _SQL_ANN_IVFPQ),
+        Query("ann_ivfpq_rerank_topk", "ann",
+              ann_ivfpq_rerank_topk, _SQL_ANN_IVFPQ_RERANK),
+        Query("ann_lsh_topk", "ann", ann_lsh_topk, _SQL_ANN_LSH),
+        # cluster: audit, survivorship and graded evaluation of clusters
+        Query("cluster_audit_documents", "cluster",
+              cluster_audit_documents, _sql_cluster_audit()),
+        Query("golden_records_documents", "cluster",
+              golden_records_documents, _sql_golden_records()),
+        Query("linkage_eval_small", "cluster",
+              linkage_eval_small, _sql_linkage_eval()),
+        Query("bcubed_eval_small", "cluster",
+              bcubed_eval_small, _sql_bcubed_eval()),
+        # media: binary media decode / sample / resize / features
+        Query("media_decode_meta", "media",
+              media_decode_meta, _SQL_MEDIA_META),
+        Query("media_frame_sample", "media",
+              media_frame_sample, _SQL_FRAME_SAMPLE),
+        Query("media_resize_plan", "media",
+              media_resize_plan, _SQL_RESIZE_PLAN),
+        Query("media_features", "media", media_features, _SQL_MEDIA_FEATURES),
+    ]
+    reps = {}
+    for q in table:
+        reps.setdefault(q.family, q)
+    lead = {q.name for q in reps.values()}
+    return [*reps.values(), *(q for q in table if q.name not in lead)]
+
+
+def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {q.name: q.spark_fn for q in registry()}
+
+
+def build_oracle_sql() -> dict[str, str]:
+    return {q.name: q.oracle for q in registry()}

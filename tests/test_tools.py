@@ -115,3 +115,25 @@ def test_sampled_checker_catches_perturbation(spark, monkeypatch):
     assert frame_hash(scols, bad) != frame_hash(dcols, drows)
     # and a dropped row too (count aside, the hash itself must differ)
     assert frame_hash(scols, srows[1:]) != frame_hash(dcols, drows)
+
+
+def test_registry_is_one_ordered_table():
+    """queries() and oracle_sql() are two views of one registry: the
+    same 75 names in the same order, every entry tagged with one of the
+    fixed families and backed by a non-empty oracle, and the driver's
+    graded window (the first 50 entries) reaches every family."""
+    _tools_dir_on_path()
+    import __spark_entry__ as entry
+    from edlib_spark.driver_contract import FAMILIES, registry
+
+    names = list(entry.queries())
+    assert len(names) == 75 == len(set(names))
+    assert list(entry.oracle_sql()) == names
+    reg = registry()
+    assert [q.name for q in reg] == names
+    assert set(FAMILIES) == {"pipeline", "alignment", "blocking", "fs",
+                             "dedup_text", "ann", "cluster", "media"}
+    assert {q.family for q in reg} == set(FAMILIES)
+    assert all(callable(q.spark_fn) for q in reg)
+    assert all(isinstance(q.oracle, str) and q.oracle.strip() for q in reg)
+    assert {q.family for q in reg[:50]} == set(FAMILIES)

@@ -216,21 +216,9 @@ def build_overrides(spark, sf_dir):
                                training_edges_pq,
                                produce["training"])
                     .where(_stratum_col()),
-            lambda: f"""
-                WITH {dc._sql_training_stages()}
-                SELECT CAST(a.doc_id AS BIGINT) AS id_a,
-                       CAST(b.doc_id AS BIGINT) AS id_b,
-                       CAST(len(list_intersect(a.g, b.g)) AS BIGINT)
-                           AS inter_count,
-                       CAST(len(list_distinct(list_concat(a.g, b.g)))
-                            AS BIGINT) AS union_count
-                FROM grams a JOIN grams b ON a.doc_id < b.doc_id
-                WHERE ({_stratum_sql('a.doc_id', 'b.doc_id')})
-                  AND len(a.g) * 100 >= 80 * len(b.g)
-                  AND len(b.g) * 100 >= 80 * len(a.g)
-                  AND len(list_intersect(a.g, b.g)) * 100
-                      >= 80 * len(list_distinct(list_concat(a.g, b.g)))
-            """,
+            lambda: (f"WITH {dc._sql_training_stages()}"
+                     + dc._sql_jaccard_edges(
+                         "grams", _stratum_sql("a.doc_id", "b.doc_id"))),
             sampled),
     }
     return over
