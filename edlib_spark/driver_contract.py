@@ -32,6 +32,7 @@ from .operators.blocking import minhash_blocks, sorted_neighborhood_pairs
 from .operators.canonicalize import canonicalize
 from .operators.clustering import cluster_assignments
 from .operators.pairs import candidate_pairs
+from .operators.scoring import score_pairs
 from .sources.transcripts import ensure_transcripts_parquet, transcripts_path
 
 # ASCII record separator: 1 byte == 1 char, so DuckDB's byte-based
@@ -166,23 +167,13 @@ def _scored_of(canon: DataFrame, tau: float) -> DataFrame:
     lets composite queries share one canonicalization instead of
     re-deriving it per branch (the sf0.01 driver gate tolerates the
     recompute; the bench-visible composites should not)."""
-    pairs = candidate_pairs(_length_blocks_of(canon))
-    a = canon.select(F.col("conv_id").alias("id_a"),
-                     F.col("full_text").alias("text_a"),
-                     F.col("text_len").alias("len_a"))
-    b = canon.select(F.col("conv_id").alias("id_b"),
-                     F.col("full_text").alias("text_b"),
-                     F.col("text_len").alias("len_b"))
-    df = pairs.join(a, "id_a").join(b, "id_b")
-    max_len = F.greatest("len_a", "len_b")
-    k = F.ceil(F.lit(tau) * max_len).cast("int")
-    df = df.where(F.abs(F.col("len_a") - F.col("len_b")) <= k)
-    return df.select(
+    scored = score_pairs(candidate_pairs(_length_blocks_of(canon)), canon,
+                         tau)
+    return scored.select(
         "id_a", "id_b",
         F.col("len_a").cast("bigint").alias("len_a"),
         F.col("len_b").cast("bigint").alias("len_b"),
-        edit_distance(F.col("text_a"), F.col("text_b"), "NW", k)
-        .cast("bigint").alias("edit_distance"))
+        F.col("edit_distance").cast("bigint").alias("edit_distance"))
 
 
 def scored_pairs_events(spark: SparkSession, sf_dir: str,
@@ -2245,7 +2236,6 @@ def scored_pairs_hw(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-sided prune (len_a - len_b <= k) at the graded surface.
     Oracle: the free-start Levenshtein DP (_sql_hw_dp) with the same
     prune, k truncation, and norm_distance projection."""
-    from .operators.scoring import score_pairs
     docs = _read(spark, sf_dir, "documents")
     needles = docs.select(
         F.concat(F.lit("q"), F.col("doc_id").cast("string"))
@@ -3890,10 +3880,9 @@ def _sql_transcript_pairs() -> str:
     blocking-quality oracles: canon ``c``, structural ``bands`` and
     ``keys`` (salting drops out — it only re-routes pair generation),
     and the candidate pairs ``p``."""
-    from .plans.linkage import LinkageConfig
-    cfg = LinkageConfig()
+    from .plans.linkage import BAND_TAU
     path = transcripts_path("small")
-    ratio = 1.0 / (1.0 - cfg.band_tau)
+    ratio = 1.0 / (1.0 - BAND_TAU)
     return f"""c AS (
         SELECT conv_id,
                string_agg(coalesce(text, ''), '{SEP}'

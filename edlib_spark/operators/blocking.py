@@ -38,16 +38,6 @@ def length_band(text_len: Column, tau: float) -> Column:
                    / F.lit(float(__import__("math").log(ratio))))
 
 
-def length_band_blocks(canon: DataFrame, tau: float = 0.2) -> DataFrame:
-    """(conv_id, block_key) rows from length bands (band and band+1)."""
-    band = length_band(F.col("text_len"), tau)
-    return (canon
-            .select("conv_id", "text_len",
-                    F.explode(F.array(band, band + 1)).alias("band"))
-            .select("conv_id",
-                    F.concat(F.lit("len:"), F.col("band")).alias("block_key")))
-
-
 def char_ngrams(text: Column, n: int = 5) -> Column:
     """Array of character n-grams (JVM-side, via sequence+substr)."""
     length = F.length(text)
@@ -82,14 +72,6 @@ def base_gram_hashes(text: Column, ngram: int = 5) -> Column:
     gram num_hashes times (measured ~10x slowdown at H=16)."""
     grams = char_ngrams(text, ngram)
     return F.transform(grams, lambda g: F.pmod(F.xxhash64(g), F.lit(_P)))
-
-
-def minhash_signature(text: Column, num_hashes: int = 16,
-                      ngram: int = 5, seed: int = 42) -> Column:
-    """Single-expression signature (prefer the two-step
-    base_gram_hashes -> minhash_from_base in pipelines; see note)."""
-    return minhash_from_base(base_gram_hashes(text, ngram), num_hashes,
-                             seed)
 
 
 def minhash_blocks(canon: DataFrame, num_hashes: int = 16, bands: int = 4,
@@ -299,14 +281,3 @@ def weighted_edge_prune(edges: DataFrame,
     return (e.crossJoin(F.broadcast(tot))
             .where(F.col("weight") * F.col("_n_e") >= F.col("_sw"))
             .select("id_a", "id_b", "weight"))
-
-
-def all_blocks(canon: DataFrame, tau: float = 0.2, use_minhash: bool = True,
-               num_hashes: int = 16, bands: int = 4,
-               ngram: int = 5) -> DataFrame:
-    """Union of blocking strategies (deduped per (conv_id, block_key))."""
-    blocks = length_band_blocks(canon, tau)
-    if use_minhash:
-        blocks = blocks.unionByName(
-            minhash_blocks(canon, num_hashes, bands, ngram))
-    return blocks.dropDuplicates(["conv_id", "block_key"])

@@ -1,17 +1,22 @@
 """Pairwise scoring stage: join texts to candidate pairs, prune, score.
 
+Two parts: ``attach_texts`` (repartition + the two text joins) and
+``score_attached``, the one scoring core every entry point runs —
+``score_pairs`` (batch), ``streaming.scorer.score_pair_stream`` and the
+driver contract's scored-pair queries.
+
 Plan shape (deliberate):
-  pairs (id_a, id_b)
+  pairs (id_a, id_b)                             -- attach_texts
     repartition(defaultParallelism, id_a, id_b)  -- the skinny pair
         shuffle is a few bytes a row, so AQE would otherwise coalesce
         it (and the scorer behind it) into a single task; an explicit
         partition count is never coalesced
     join canon (broadcast when small)            -- texts attached twice
-    filter on the mode's length lower bound      -- the reference's
-        k < |tlen-qlen| shortcut (edlib.cpp:744-747) lifted to a Catalyst
-        predicate (NW: |len_a-len_b| <= k; HW/SHW: len_a-len_b <= k,
-        one-sided because the target end/start is free): pairs are
-        pruned JVM-side before any Python runs
+    filter on the mode's length lower bound      -- score_attached; the
+        reference's k < |tlen-qlen| shortcut (edlib.cpp:744-747) lifted
+        to a Catalyst predicate (NW: |len_a-len_b| <= k; HW/SHW:
+        len_a-len_b <= k, one-sided because the target end/start is
+        free): pairs are pruned JVM-side before any Python runs
     edit_distance pandas UDF (batched Myers)     -- per-pair k bound;
         the native scan bands each pair on its own, so batches need no
         length sort
@@ -41,9 +46,9 @@ def _length_prune(mode: str, k):
     return (F.abs(diff) <= k) if mode == "NW" else (diff <= k)
 
 
-def score_pairs(pairs: DataFrame, canon: DataFrame, tau: float = 0.2,
-                mode: str = "NW") -> DataFrame:
-    """(id_a, id_b, len_a, len_b, edit_distance, norm_distance)."""
+def attach_texts(pairs: DataFrame, canon: DataFrame) -> DataFrame:
+    """(id_a, id_b, ...) + text_a/len_a and text_b/len_b from ``canon``
+    (conv_id, full_text, text_len)."""
     a = canon.select(F.col("conv_id").alias("id_a"),
                      F.col("full_text").alias("text_a"),
                      F.col("text_len").alias("len_a"))
@@ -51,9 +56,17 @@ def score_pairs(pairs: DataFrame, canon: DataFrame, tau: float = 0.2,
                      F.col("full_text").alias("text_b"),
                      F.col("text_len").alias("len_b"))
     par = pairs.sparkSession.sparkContext.defaultParallelism
-    df = pairs.repartition(par, "id_a", "id_b") \
+    return pairs.repartition(par, "id_a", "id_b") \
         .join(a, "id_a").join(b, "id_b")
 
+
+def score_attached(df: DataFrame, tau: float = 0.2,
+                   mode: str = "NW") -> DataFrame:
+    """The one scoring core: k = ceil(tau * max_len), the mode's length
+    prune, the k-bounded ``edit_distance`` UDF and ``norm_distance``
+    over a frame that already carries (id_a, id_b, text_a, text_b,
+    len_a, len_b).  -> (id_a, id_b, len_a, len_b, edit_distance,
+    norm_distance)."""
     max_len = F.greatest("len_a", "len_b")
     k = F.ceil(F.lit(float(tau)) * max_len).cast("int")
     df = df.where(_length_prune(mode, k))
@@ -67,6 +80,12 @@ def score_pairs(pairs: DataFrame, canon: DataFrame, tau: float = 0.2,
                       F.col("len_b")))
     return df.select("id_a", "id_b", "len_a", "len_b", "edit_distance",
                      "norm_distance")
+
+
+def score_pairs(pairs: DataFrame, canon: DataFrame, tau: float = 0.2,
+                mode: str = "NW") -> DataFrame:
+    """(id_a, id_b, len_a, len_b, edit_distance, norm_distance)."""
+    return score_attached(attach_texts(pairs, canon), tau, mode)
 
 
 # top_n_best collects n sample distances to the driver; keep n small

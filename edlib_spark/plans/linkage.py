@@ -7,13 +7,12 @@ This is the engine's flagship dataflow (BASELINE.json north_star).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.blocking import (length_band, minhash_blocks,
-                                  sorted_neighborhood_pairs)
+from ..operators.blocking import length_band, minhash_blocks
 from ..operators.canonicalize import canonicalize
 from ..operators.clustering import cluster_assignments
 from ..operators.pairs import candidate_pairs
@@ -21,57 +20,37 @@ from ..operators.scoring import match_edges, score_pairs
 from .catalog import RunCatalog
 
 
+# Width of the structural length bands.  Measured on the medium fixture
+# (4954 true pairs, ~5k convs): structural blocking (n_turns, geometric
+# length band) at 0.04 -> recall 1.000 at 313k candidates.
+BAND_TAU = 0.04
+
+
 @dataclass
 class LinkageConfig:
     tau: float = 0.2                 # match threshold on normalized NW dist
     mode: str = "NW"
-    # blocking.  Measured on the medium fixture (4954 true pairs,
-    # ~5k convs): structural (n_turns, geometric length band) at
-    # band_tau=0.04 -> recall 1.000 at 313k candidates; minhash LSH
-    # (H=16,b=8) -> recall 0.796 at 868k candidates (shared-vocab text
-    # makes ngram Jaccard of unrelated docs high), so minhash is OFF by
-    # default for transcripts and kept as a strategy for corpora where
-    # length bands are uninformative.
+    # MinHash LSH (H=16, b=8) -> recall 0.796 at 868k candidates on the
+    # same fixture (shared-vocab text makes ngram Jaccard of unrelated
+    # docs high), so it is OFF by default for transcripts and kept as a
+    # strategy for corpora where length bands are uninformative.
     use_minhash: bool = False
-    minhash_hashes: int = 16
-    minhash_bands: int = 8
-    ngram: int = 5
-    use_structural: bool = True      # (n_turns, length-band) key
-    band_tau: float = 0.04           # width of structural length bands
-    # sorted-neighborhood pass (rank-window pairs unioned into the
-    # candidate set; O(n*window) extra pairs, no skew by construction).
-    # OFF by default: structural blocking already hits recall 1.000 on
-    # transcripts; SNM is the strategy for corpora where a sort key
-    # (prefix, name, normalized address) is informative.
-    use_snm: bool = False
-    snm_window: int = 8
-    snm_key_len: int = 12
-    # skew
-    hot_block_threshold: int = 256
-    salt_group_size: int = 128
-    extra: dict = field(default_factory=dict)
 
 
 def build_blocks(canon: DataFrame, cfg: LinkageConfig) -> DataFrame:
     """Blocking keys: structural (n_turns + geometric length band, band
-    and band+1 for adjacency) ∪ MinHash LSH buckets."""
-    parts = []
-    if cfg.use_structural:
-        band = length_band(F.col("text_len"), cfg.band_tau)
-        parts.append(
-            canon.select(
-                "conv_id",
-                F.explode(F.array(band, band + 1)).alias("band"),
-                F.col("n_turns"))
-            .select("conv_id",
-                    F.concat(F.lit("st:"), F.col("n_turns"), F.lit(":"),
-                             F.col("band")).alias("block_key")))
+    and band+1 for adjacency), unioned with MinHash LSH buckets when
+    ``cfg.use_minhash``."""
+    band = length_band(F.col("text_len"), BAND_TAU)
+    blocks = (canon.select(
+                  "conv_id",
+                  F.explode(F.array(band, band + 1)).alias("band"),
+                  F.col("n_turns"))
+              .select("conv_id",
+                      F.concat(F.lit("st:"), F.col("n_turns"), F.lit(":"),
+                               F.col("band")).alias("block_key")))
     if cfg.use_minhash:
-        parts.append(minhash_blocks(canon, cfg.minhash_hashes,
-                                    cfg.minhash_bands, cfg.ngram))
-    blocks = parts[0]
-    for p in parts[1:]:
-        blocks = blocks.unionByName(p)
+        blocks = blocks.unionByName(minhash_blocks(canon, 16, 8, 5))
     return blocks.dropDuplicates(["conv_id", "block_key"])
 
 
@@ -98,22 +77,7 @@ def run_linkage(transcripts: DataFrame, cfg: LinkageConfig | None = None,
     canon = _stage("canonical", lambda: canonicalize(transcripts),
                    reused=True)
     blocks = _stage("blocks", lambda: build_blocks(canon, cfg))
-    def _pairs():
-        p = candidate_pairs(blocks, cfg.hot_block_threshold,
-                            cfg.salt_group_size)
-        if cfg.use_snm:
-            keyed = canon.select(
-                F.col("conv_id").alias("rec_id"),
-                F.substring(F.translate(F.col("full_text"), " ", ""),
-                            1, cfg.snm_key_len).alias("snm_key"))
-            snm = (sorted_neighborhood_pairs(
-                       keyed, "snm_key", "rec_id", cfg.snm_window)
-                   .select(F.least("id_a", "id_b").alias("id_a"),
-                           F.greatest("id_a", "id_b").alias("id_b")))
-            p = p.unionByName(snm).dropDuplicates(["id_a", "id_b"])
-        return p
-
-    pairs = _stage("candidate_pairs", _pairs)
+    pairs = _stage("candidate_pairs", lambda: candidate_pairs(blocks))
     scored = _stage("scored_pairs",
                     lambda: score_pairs(pairs, canon, cfg.tau, cfg.mode),
                     reused=True)

@@ -7,15 +7,37 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Spark settings every engine session carries, whatever launches it
+# (get_spark here, tools/run_linkage_job.py under spark-submit).
+ENGINE_CONF = {
+    # AQE: runtime re-planning + skew-join splitting, the first line of
+    # defense for hot block keys
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # the scorer is an Arrow-batched pandas UDF
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # 2048, not the 10k default: with multi-KB text columns, 10k-row
+    # Arrow batches (~30 MB) collapse JVM->worker feed throughput at
+    # 32-way concurrency (measured 5-20x degradation, worsening per
+    # run); ~6 MB batches pipeline smoothly.
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    # AQE sizes stages by SHUFFLE bytes, but the linkage stages join
+    # skinny (id_a, id_b) rows to multi-KB texts and feed an Arrow UDF
+    # (output ~100x input); the 1m default once coalesced the sf0.1
+    # scorer to 4 tasks (11 s vs 3.5 s).  score_pairs now repartitions
+    # its own input, so this floor protects the stages around the
+    # scorer; retests at link scale put its effect within run-to-run
+    # spread (docs/SCALE.md §AQE).
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "128k",
+}
+
+
 def get_spark(app_name: str = "edlib-spark", master: str | None = None,
               shuffle_partitions: int | None = None, **extra) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for the linkage pipeline.
 
-    Defaults chosen for scale-out behavior, not just local mode:
-      * AQE on (runtime re-planning + skew-join splitting — first line of
-        defense for hot block keys),
-      * Arrow on (the scorer is an Arrow-batched pandas UDF),
-      * shuffle partitions sized to the parallelism at hand.
+    ``ENGINE_CONF`` plus shuffle partitions sized to the parallelism
+    at hand.
     """
     # Warm the cffi kernel's on-disk compile cache from THIS process
     # before any executor exists: _native is imported lazily inside the
@@ -39,25 +61,8 @@ def get_spark(app_name: str = "edlib-spark", master: str | None = None,
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
+        .config(map=ENGINE_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 2048, not the 10k default: with multi-KB text columns, 10k-row
-        # Arrow batches (~30 MB) collapse JVM->worker feed throughput at
-        # 32-way concurrency (measured 5-20x degradation, worsening per
-        # run); ~6 MB batches pipeline smoothly.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_ARROW_BATCH", "2048"))
-        # AQE sizes stages by SHUFFLE bytes, but our pair-scoring stages
-        # join skinny (id_a, id_b) shuffle rows to multi-KB texts and
-        # feed an Arrow UDF — output bytes ~100x input bytes.  With the
-        # default 1m floor AQE coalesced the sf0.1 scorer to 4 tasks
-        # (11s); a 128k floor keeps the full parallelism (3.5s).  At
-        # cluster scale the same reasoning holds per-executor: stages
-        # feeding the kernel must be sized by their amplified output.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_MIN_PARTITION_SIZE", "128k"))
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

@@ -29,6 +29,10 @@ tests/test_streaming.py::test_stream_canonicalize_on_rocksdb_state_store
 (same output as the default provider).  Timeout/tombstone behavior
 under a continuous processing-time trigger is soaked in
 tests/test_streaming.py::test_stream_canonicalize_continuous_soak.
+
+A ``transformWithStateInPandas`` port (last at commit 5d91d36) was evaluated
+and dropped: it needs the ``protobuf`` package, which the engine does not
+require; revisit if applyInPandasWithState is deprecated.
 """
 
 from __future__ import annotations
@@ -132,119 +136,6 @@ def stream_canonicalize(turns: DataFrame, end_role: str = "end",
     return (turns.groupBy("conv_id")
             .applyInPandasWithState(fn, CANONICAL_SCHEMA, _STATE_SCHEMA,
                                     "append", timeout_conf))
-
-
-def make_tws_canonicalize_processor(end_role: str = "end",
-                                    timeout_ms: int | None = None,
-                                    sep: str = TURN_SEP):
-    """Build the StatefulProcessor behind :func:`stream_canonicalize_tws`
-    (factory so tests can drive the processor directly with fake state
-    handles — the live transformWithStateInPandas path needs the
-    ``protobuf`` package, see stream_canonicalize_tws)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    class _Canon(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._turns = handle.getListState(
-                "turns", "turn_idx integer, text string")
-            self._done = handle.getValueState("done", "done integer")
-
-        def _arm(self, timer_values) -> None:
-            if timeout_ms is None:
-                return
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(
-                timer_values.getCurrentProcessingTimeInMs() + timeout_ms)
-
-        def _flush(self, conv_id, how, timer_values):
-            pairs = list(self._turns.get())
-            idxs = [int(p[0]) for p in pairs]
-            texts = [p[1] for p in pairs]
-            self._turns.clear()
-            self._done.update((1,))
-            self._arm(timer_values)  # tombstone expiry clock
-            return iter([_emit(conv_id, idxs, texts, sep, how)])
-
-        def handleInputRows(self, key, rows, timerValues):
-            conv_id = key[0]
-            if self._done.exists():
-                for _ in rows:     # swallow post-emission stragglers
-                    pass
-                self._arm(timerValues)
-                return iter(())
-            new = []
-            saw_end = False
-            for pdf in rows:
-                saw_end |= bool((pdf["role"] == end_role).any())
-                keep = pdf[pdf["role"] != end_role]
-                new.extend(
-                    zip(keep["turn_idx"].astype("int64").tolist(),
-                        keep["text"].fillna("").tolist()))
-            if new:
-                self._turns.appendList(
-                    [(int(i), t) for i, t in new])
-            if saw_end:
-                return self._flush(conv_id, "end", timerValues)
-            self._arm(timerValues)
-            return iter(())
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if self._done.exists():
-                # tombstone expiry: drop all state, emit nothing
-                self._done.clear()
-                self._turns.clear()
-                return iter(())
-            return self._flush(key[0], "timeout", timerValues)
-
-        def close(self) -> None:
-            pass
-
-    return _Canon()
-
-
-def stream_canonicalize_tws(turns: DataFrame, end_role: str = "end",
-                            timeout_ms: int | None = None,
-                            sep: str = TURN_SEP) -> DataFrame:
-    """``transformWithStateInPandas`` twin of :func:`stream_canonicalize`
-    — the Spark 4.x successor stateful API (StatefulProcessor + typed
-    state handles + explicit timers), semantically identical (the
-    processor logic is pinned by tests/test_streaming.py::
-    test_tws_processor_logic_matches_semantics; the live-query
-    equivalence test runs wherever the protobuf dependency exists).
-
-    Migration evaluation (round-4 verdict item 8) — DECISION: keep
-    ``stream_canonicalize`` (applyInPandasWithState) the default,
-    ship this twin ready for deployments that can run it:
-
-    * The new API is a genuine fit: ``ListState`` lets stragglers
-      APPEND in O(delta) where applyInPandasWithState rewrites the
-      whole accumulated array every micro-batch, and the tombstone is
-      a separate ``ValueState`` instead of a sentinel packed into one
-      state row.
-    * ``transformWithStateInPandas`` requires the RocksDB state-store
-      provider (already this engine's documented production config)
-      AND the ``protobuf`` Python package — its state server speaks
-      protobuf (pyspark/sql/streaming/proto/StateMessage_pb2), and the
-      import error crashes the TWS driver worker
-      (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE).  protobuf is
-      not installed in this container, so the old operator remains
-      the default; revisit when applyInPandasWithState is formally
-      deprecated and protobuf is a standard dependency.
-    * Timers are absolute and survive re-registration, so the
-      per-batch re-arm DELETES stale timers first; with
-      ``timeMode='none'`` (the availableNow/backfill default) no
-      timers exist, mirroring the NoTimeout default and sidestepping
-      the availableNow+ProcessingTimeTimeout hang documented on the
-      old operator.
-    """
-    proc = make_tws_canonicalize_processor(end_role, timeout_ms, sep)
-    time_mode = "processingTime" if timeout_ms is not None else "none"
-    return (turns.groupBy("conv_id")
-            .transformWithStateInPandas(proc, CANONICAL_SCHEMA,
-                                        "append", time_mode))
 
 
 def _emit(conv_id: str, idxs: list, texts: list, sep: str,

@@ -2,10 +2,10 @@
 
 The reference is strictly batch (no streaming exists to mirror —
 SURVEY.md §2B), but the scoring stage is stateless per pair, so lifting
-it onto a stream is a straight reuse of the batch column expressions:
-``readStream`` source -> same select/filter/UDF pipeline ->
-``writeStream`` sink.  Late/duplicate pairs are handled by a watermark +
-dropDuplicates on the pair key.
+it onto a stream is a straight reuse of the batch scorer's core
+(``operators.scoring.score_attached``): ``readStream`` source -> the
+same prune/UDF pipeline -> ``writeStream`` sink.  Late/duplicate pairs
+are handled by a watermark + dropDuplicates on the pair key.
 
 Clustering is NOT streamed: connected components is an iterative global
 fixpoint; the intended deployment scores matches continuously and runs
@@ -18,8 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.alignment import edit_distance, norm_distance
-from ..operators.scoring import _length_prune
+from ..operators.scoring import score_attached
 
 
 def score_pair_stream(pairs: DataFrame, tau: float = 0.2,
@@ -28,25 +27,14 @@ def score_pair_stream(pairs: DataFrame, tau: float = 0.2,
 
     Input columns: id_a, id_b, text_a, text_b (len_a/len_b derived if
     absent).  Works identically on batch and streaming DataFrames —
-    the plan is fully stateless."""
+    the plan is fully stateless, and the scoring itself is the batch
+    scorer's core (operators.scoring.score_attached)."""
     df = pairs
     if "len_a" not in df.columns:
         df = df.withColumn("len_a", F.length("text_a"))
     if "len_b" not in df.columns:
         df = df.withColumn("len_b", F.length("text_b"))
-    max_len = F.greatest("len_a", "len_b")
-    k = F.ceil(F.lit(float(tau)) * max_len).cast("int")
-    # mode-correct length prune (NW two-sided, HW/SHW one-sided) —
-    # shared with the batch scorer
-    df = df.where(_length_prune(mode, k))
-    df = df.withColumn("edit_distance",
-                       edit_distance(F.col("text_a"), F.col("text_b"),
-                                     mode=mode, k=k))
-    return df.withColumn(
-        "norm_distance",
-        norm_distance(F.col("edit_distance"), F.col("len_a"),
-                      F.col("len_b"))).select(
-        "id_a", "id_b", "len_a", "len_b", "edit_distance", "norm_distance")
+    return score_attached(df, tau, mode)
 
 
 def dedup_pair_stream(pairs: DataFrame, ts_col: str = "ts",

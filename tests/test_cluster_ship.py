@@ -42,6 +42,14 @@ def test_spark_submit_multi_executor_ship(spark, tmp_path):
     payload = json.loads(proc.stdout[proc.stdout.index("{"):])
     assert payload["run_id"] == "t1"
     assert payload["n_clusters"] == 20  # planted clusters recovered
+    # the job's session carries the engine settings, not spark-submit's
+    # defaults (10k-row Arrow batches, AQE's 1m coalescing floor)
+    from edlib_spark.session import ENGINE_CONF
+    assert payload["conf"] == ENGINE_CONF
+    assert payload["conf"][
+        "spark.sql.execution.arrow.maxRecordsPerBatch"] == "2048"
+    assert payload["conf"][
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize"] == "128k"
     stages = {s["stage"] for s in payload["stages"]}
     assert {"canonical", "blocks", "candidate_pairs", "scored_pairs",
             "edges", "clusters"} <= stages

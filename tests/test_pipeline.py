@@ -134,6 +134,46 @@ def test_pipeline_scored_pairs_sane(spark, linkage_result):
     assert scored.where(F.col("edit_distance") >= 0).count() > 0
 
 
+# pairs absent from an expected map are pruned by the mode's length
+# bound; k = ceil(0.2 * max_len), so (a, b) and NW (b, d) sit at d == k
+_ENTRY_TEXTS = {"a": "abcdefghij", "b": "abcdefghXY",
+                "c": "abcdefghijklmnopqrst", "d": "abcdefghijk",
+                "e": "zzzzzzzzzz"}
+_ENTRY_EXPECTED = {
+    "NW": {("a", "b"): 2, ("a", "d"): 1, ("a", "e"): -1, ("b", "d"): 3,
+           ("b", "e"): -1, ("d", "e"): -1},
+    "HW": {("a", "b"): 2, ("a", "c"): 0, ("a", "d"): 0, ("a", "e"): -1,
+           ("b", "c"): 2, ("b", "d"): 2, ("b", "e"): -1, ("d", "e"): -1},
+}
+
+
+@pytest.mark.parametrize("mode", ["NW", "HW"])
+def test_scorer_entry_points_agree(spark, mode):
+    """The batch scorer, the stream scorer over the same pairs with
+    texts attached (lengths derived) and the contract's scored-pairs
+    builder (NW only) return identical rows."""
+    from edlib_spark import driver_contract as dc
+    from edlib_spark.operators.pairs import candidate_pairs
+    from edlib_spark.operators.scoring import attach_texts, score_pairs
+    from edlib_spark.streaming.scorer import score_pair_stream
+
+    canon = spark.createDataFrame(
+        [(cid, t, 1, len(t)) for cid, t in sorted(_ENTRY_TEXTS.items())],
+        "conv_id string, full_text string, n_turns bigint, text_len bigint")
+    pairs = candidate_pairs(dc._length_blocks_of(canon))
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(
+            "id_a", "id_b", "len_a", "len_b", "edit_distance").collect())
+
+    batch = rows(score_pairs(pairs, canon, 0.2, mode))
+    assert {(r[0], r[1]): r[4] for r in batch} == _ENTRY_EXPECTED[mode]
+    attached = attach_texts(pairs, canon).drop("len_a", "len_b")
+    assert rows(score_pair_stream(attached, 0.2, mode)) == batch
+    if mode == "NW":
+        assert rows(dc._scored_of(canon, 0.2)) == batch
+
+
 def test_pipeline_resume_from_checkpoint(spark, tmp_run_dir):
     """Interrupt after the blocks stage; resuming must (a) skip completed
     stages and (b) produce identical clusters."""

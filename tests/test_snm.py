@@ -87,24 +87,6 @@ def test_window_larger_than_input_is_all_pairs(spark):
     assert len(got) == 6 * 5 // 2
 
 
-def test_linkage_snm_union_is_superset(spark):
-    """use_snm=True unions rank-window pairs into the candidate set:
-    the result must be a superset of structural blocking's pairs and
-    keep the (id_a < id_b, deduped) pair contract."""
-    from edlib_spark.plans.linkage import LinkageConfig, run_linkage
-    from edlib_spark.sources.transcripts import synth_transcripts
-
-    t = synth_transcripts(spark, n_clusters=20, seed=5)
-    base = {(r["id_a"], r["id_b"]) for r in
-            run_linkage(t, LinkageConfig())["pairs"].collect()}
-    snm_rows = run_linkage(
-        t, LinkageConfig(use_snm=True))["pairs"].collect()
-    snm = {(r["id_a"], r["id_b"]) for r in snm_rows}
-    assert base <= snm
-    assert len(snm_rows) == len(snm)  # deduped
-    assert all(a < b for a, b in snm)
-
-
 def test_blocking_quality_hand_computed(spark):
     from edlib_spark.plans.linkage import blocking_quality
 

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 from edlib_spark.functions import align_expr, edit_distance, norm_distance
 from edlib_spark.operators import canonicalize, TURN_SEP
 from edlib_spark.operators.blocking import (
-    char_ngrams, length_band_blocks, minhash_blocks,
+    char_ngrams, length_band, minhash_blocks,
 )
 from edlib_spark.operators.pairs import candidate_pairs
 from edlib_spark.oracle import simple_edit_distance
@@ -104,18 +104,16 @@ def test_char_ngrams(spark):
     assert grams == ["abc", "bcd", "cde", "def"]
 
 
-def test_length_band_blocks_adjacency(spark):
+def test_length_band_adjacency(spark):
     """Pairs within the tau length ratio share at least one band key."""
     df = spark.createDataFrame(
         [("a", "x" * 100), ("b", "x" * 119)], ["conv_id", "full_text"]) \
-        .withColumn("text_len", F.length("full_text")) \
-        .withColumn("n_turns", F.lit(1))
-    blocks = length_band_blocks(df, tau=0.2)
-    a_keys = {r["block_key"] for r in
-              blocks.where(F.col("conv_id") == "a").collect()}
-    b_keys = {r["block_key"] for r in
-              blocks.where(F.col("conv_id") == "b").collect()}
-    assert a_keys & b_keys
+        .withColumn("text_len", F.length("full_text"))
+    band = length_band(F.col("text_len"), 0.2)
+    keys = {r["conv_id"]: {r["b0"], r["b1"]} for r in
+            df.select("conv_id", band.alias("b0"),
+                      (band + 1).alias("b1")).collect()}
+    assert keys["a"] & keys["b"]
 
 
 def test_minhash_blocks_near_duplicates_collide(spark):

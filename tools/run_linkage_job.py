@@ -10,7 +10,8 @@ parquet/Iceberg table, checkpointed + resumable via RunCatalog.
 
 Every stage writes parquet + a JSON lineage manifest (per-partition row
 counts, wall ms); rerunning with the same --run-id resumes from the
-last completed stage.
+last completed stage.  The printed summary echoes the session's engine
+settings (edlib_spark.session.ENGINE_CONF) as the job ran with them.
 """
 
 from __future__ import annotations
@@ -33,11 +34,11 @@ def main() -> None:
 
     from edlib_spark.plans.catalog import RunCatalog
     from edlib_spark.plans.linkage import LinkageConfig, run_linkage
+    from edlib_spark.session import ENGINE_CONF
 
+    # the engine's session settings; the master stays spark-submit's
     spark = (SparkSession.builder.appName("edlib-spark-linkage")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.enabled", "true")
-             .getOrCreate())
+             .config(map=ENGINE_CONF).getOrCreate())
 
     transcripts = spark.read.parquet(args.input)
     catalog = RunCatalog(spark, args.output, args.run_id)
@@ -48,6 +49,7 @@ def main() -> None:
     print(json.dumps({
         "run_id": args.run_id,
         "n_clusters": int(n_clusters),
+        "conf": {key: spark.conf.get(key) for key in ENGINE_CONF},
         "stages": catalog.manifests(),
     }, indent=2))
     spark.stop()
