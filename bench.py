@@ -29,7 +29,8 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution
                      # needs 'pd' in module globals under
                      # `from __future__ import annotations`
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -45,7 +46,7 @@ SCALING_ROUNDS = 3
 # bench-scale pair table (~15k clusters -> a few million candidate
 # pairs): big enough that the scoring stage is compute-bound and the
 # N-vs-4N scaling measurement is not startup-noise-dominated.
-PAIRS_PATH = "/root/repo/data/bench_pairs_bench.parquet"
+PAIRS_PATH = os.path.join(ROOT, "data", "bench_pairs_bench.parquet")
 BENCH_SCALE = os.environ.get("SPARK_GRAFT_BENCH_SCALE", "bench")
 
 
@@ -70,6 +71,7 @@ def ensure_bench_pairs(spark):
 
     from edlib_spark.operators.canonicalize import canonicalize
     from edlib_spark.operators.pairs import candidate_pairs
+    from edlib_spark.operators.scoring import attach_texts
     from edlib_spark.plans.linkage import LinkageConfig, build_blocks
     from edlib_spark.sources.transcripts import ensure_transcripts_parquet
 
@@ -83,35 +85,26 @@ def ensure_bench_pairs(spark):
     # candidates — compute-bound for the scaling run yet fast to build
     pairs = candidate_pairs(blocks).where(
         F.pmod(F.xxhash64("id_a", "id_b"), F.lit(6)) == 0)
-    a = canon.select(F.col("conv_id").alias("id_a"),
-                     F.col("full_text").alias("text_a"),
-                     F.col("text_len").alias("len_a"))
-    b = canon.select(F.col("conv_id").alias("id_b"),
-                     F.col("full_text").alias("text_b"),
-                     F.col("text_len").alias("len_b"))
-    joined = pairs.join(a, "id_a").join(b, "id_b")
-    joined.repartition(128).write.mode("overwrite").parquet(PAIRS_PATH)
+    (attach_texts(pairs, canon).repartition(128)
+     .write.mode("overwrite").parquet(PAIRS_PATH))
     canon.unpersist()
 
 
 def scoring_job(spark) -> tuple[float, int]:
     """The scaling-evidence job: batched Myers scoring of the prebuilt
-    pair table.  Returns (seconds, n_pairs).
+    pair table through the engine's scoring core (k, length prune and
+    UDF of ``score_attached``).  Returns (seconds, n_pairs).
 
-    No sortWithinPartitions here, like score_pairs: the native scan
-    bands each pair on its own, so length-sorted batches buy nothing.
+    The count filters on the UDF's output, so Catalyst cannot prune the
+    scorer away.
     """
     from pyspark.sql import functions as F
 
-    from edlib_spark.functions.alignment import edit_distance
+    from edlib_spark.operators.scoring import score_attached
 
-    df = spark.read.parquet(PAIRS_PATH)
-    max_len = F.greatest("len_a", "len_b")
-    k = F.ceil(F.lit(0.2) * max_len).cast("int")
-    scored = (df.where(F.abs(F.col("len_a") - F.col("len_b")) <= k)
-              .select(edit_distance(F.col("text_a"), F.col("text_b"),
-                                    "NW", k).alias("d")))
-    secs, n = _timed(lambda: scored.where(F.col("d").isNotNull()).count())
+    scored = score_attached(spark.read.parquet(PAIRS_PATH), 0.2, "NW")
+    secs, n = _timed(lambda: scored.where(
+        F.col("edit_distance").isNotNull()).count())
     return secs, n
 
 
@@ -548,7 +541,7 @@ def main():
 
 
 def _write_scaling_md(scaling, results, headline_from_scaling):
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
     rows = "\n".join(
         f"| local[{scaling[f'cores={nc}']['cores']}] "
         f"| {scaling[f'cores={nc}']['cores']} "
@@ -664,7 +657,7 @@ once r4's compile cache is warm, and r5 structurally removes the
 105 s first-cache-cold catastrophe (the 32-worker g++ compile storm)
 via driver-side pre-compile + atomic publish of the native kernel.
 """
-    with open("/root/repo/BENCH/BASELINE.md", "w") as fh:
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "w") as fh:
         fh.write(md)
 
 

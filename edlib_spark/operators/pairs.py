@@ -9,6 +9,17 @@ cells (x, x..g-1) and as join-right for salt cells (0..x, x), so every
 unordered pair meets in exactly one (block_key, s1, s2) cell and the
 block's quadratic work is spread over g*(g+1)/2 independent cells.
 AQE skew-join splitting remains enabled on top as the runtime net.
+
+The dedupe runs on the scorer's partitioning: ``by_pair`` hashes
+(id_a, id_b) into ``defaultParallelism`` partitions, the dedupe is then
+partition-local, and ``scoring.attach_texts`` repeats the same
+``by_pair`` call, which Spark satisfies with the existing exchange.  So
+candidate pairs reach the text attach after ONE skinny shuffle.  There
+is no map-side partial dedupe before it; instead the join emits each
+pair once per shared block key (not once per order), so callers that
+shuffle the pairs again on their own keys (``dedup.py``'s gram join,
+the contract's multi-rule union) ship fewer pair bytes than a
+partial-dedupe exchange did (BENCH/LINK_PASS.md).
 """
 
 from __future__ import annotations
@@ -17,9 +28,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def by_pair(pairs: DataFrame) -> DataFrame:
+    """``pairs`` hash-partitioned on (id_a, id_b) into the session's
+    defaultParallelism partitions: the one partitioning the pair dedupe
+    and the scorer share.  The skinny pair shuffle is a few bytes a row,
+    so AQE would otherwise coalesce it (and the scorer behind it) into a
+    single task; an explicit partition count is never coalesced."""
+    par = pairs.sparkSession.sparkContext.defaultParallelism
+    return pairs.repartition(par, "id_a", "id_b")
+
+
 def candidate_pairs(blocks: DataFrame, hot_block_threshold: int = 256,
                     salt_group_size: int = 128) -> DataFrame:
-    """(id_a, id_b) with id_a < id_b, deduped across block keys.
+    """(id_a, id_b) with id_a < id_b, deduped across block keys and
+    partitioned by :func:`by_pair`.
 
     ``blocks``: (conv_id, block_key).  Blocks with more than
     ``hot_block_threshold`` members are salted into groups of about
@@ -56,11 +78,14 @@ def candidate_pairs(blocks: DataFrame, hot_block_threshold: int = 256,
         F.col("grp").alias("s2"),
     )
 
-    # A pair meets in exactly one salt cell when its groups differ (as
-    # (min_grp_member AS left, max_grp_member AS right)) and twice in the
-    # diagonal cell when they match — normalize to id_a < id_b and dedupe.
+    # A pair meets in exactly one salt cell: once, as (min_grp_member AS
+    # left, max_grp_member AS right), when its groups differ, and in both
+    # orders in the diagonal cell when they match.  Keeping one order
+    # there emits each pair once per shared block key, which halves the
+    # rows the dedupe shuffles; normalize to id_a < id_b and dedupe.
     pairs = (left.join(right, ["block_key", "s1", "s2"])
-             .where(F.col("id_a") != F.col("id_b"))
+             .where((F.col("s1") < F.col("s2"))
+                    | (F.col("id_a") < F.col("id_b")))
              .select(F.least("id_a", "id_b").alias("id_a"),
                      F.greatest("id_a", "id_b").alias("id_b")))
-    return pairs.dropDuplicates(["id_a", "id_b"])
+    return by_pair(pairs).dropDuplicates(["id_a", "id_b"])

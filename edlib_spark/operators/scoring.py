@@ -7,10 +7,13 @@ driver contract's scored-pair queries.
 
 Plan shape (deliberate):
   pairs (id_a, id_b)                             -- attach_texts
-    repartition(defaultParallelism, id_a, id_b)  -- the skinny pair
-        shuffle is a few bytes a row, so AQE would otherwise coalesce
-        it (and the scorer behind it) into a single task; an explicit
-        partition count is never coalesced
+    pairs.by_pair: repartition(defaultParallelism, id_a, id_b) -- the
+        skinny pair shuffle is a few bytes a row, so AQE would
+        otherwise coalesce it (and the scorer behind it) into a single
+        task; an explicit partition count is never coalesced.  Pairs
+        from ``candidate_pairs`` already carry this partitioning (its
+        dedupe runs on it), so Spark plans no second exchange for
+        them; pairs from anywhere else are shuffled here
     join canon (broadcast when small)            -- texts attached twice
     filter on the mode's length lower bound      -- score_attached; the
         reference's k < |tlen-qlen| shortcut (edlib.cpp:744-747) lifted
@@ -29,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.alignment import edit_distance, norm_distance
+from .pairs import by_pair
 
 
 def _length_prune(mode: str, k):
@@ -55,9 +59,7 @@ def attach_texts(pairs: DataFrame, canon: DataFrame) -> DataFrame:
     b = canon.select(F.col("conv_id").alias("id_b"),
                      F.col("full_text").alias("text_b"),
                      F.col("text_len").alias("len_b"))
-    par = pairs.sparkSession.sparkContext.defaultParallelism
-    return pairs.repartition(par, "id_a", "id_b") \
-        .join(a, "id_a").join(b, "id_b")
+    return by_pair(pairs).join(a, "id_a").join(b, "id_b")
 
 
 def score_attached(df: DataFrame, tau: float = 0.2,

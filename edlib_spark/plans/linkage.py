@@ -40,7 +40,15 @@ class LinkageConfig:
 def build_blocks(canon: DataFrame, cfg: LinkageConfig) -> DataFrame:
     """Blocking keys: structural (n_turns + geometric length band, band
     and band+1 for adjacency), unioned with MinHash LSH buckets when
-    ``cfg.use_minhash``."""
+    ``cfg.use_minhash``.
+
+    Precondition: ``canon`` has one row per ``conv_id`` (as
+    ``canonicalize`` returns it).  The (conv_id, block_key) rows are
+    then unique by construction, so no dedupe (and no shuffle) runs
+    here: a conversation's two structural keys differ (band vs
+    band + 1), each MinHash band key carries its own ``mh{i}:``
+    prefix, and neither prefix collides with ``st:``.
+    """
     band = length_band(F.col("text_len"), BAND_TAU)
     blocks = (canon.select(
                   "conv_id",
@@ -51,7 +59,7 @@ def build_blocks(canon: DataFrame, cfg: LinkageConfig) -> DataFrame:
                                F.col("band")).alias("block_key")))
     if cfg.use_minhash:
         blocks = blocks.unionByName(minhash_blocks(canon, 16, 8, 5))
-    return blocks.dropDuplicates(["conv_id", "block_key"])
+    return blocks
 
 
 def run_linkage(transcripts: DataFrame, cfg: LinkageConfig | None = None,
@@ -70,19 +78,24 @@ def run_linkage(transcripts: DataFrame, cfg: LinkageConfig | None = None,
         if reused:
             # without a checkpoint catalog, pin stages that downstream
             # consumers would otherwise recompute (the scorer UDF must
-            # run exactly once; CC iterates over the edge set)
+            # run exactly once)
             df = df.localCheckpoint(eager=False)
         return df
 
     canon = _stage("canonical", lambda: canonicalize(transcripts),
                    reused=True)
-    blocks = _stage("blocks", lambda: build_blocks(canon, cfg))
+    # candidate_pairs scans its blocks three times (size stats, both
+    # salt roles): a select over the pinned canon for structural keys,
+    # but the MinHash signatures are worth computing once
+    blocks = _stage("blocks", lambda: build_blocks(canon, cfg),
+                    reused=cfg.use_minhash)
     pairs = _stage("candidate_pairs", lambda: candidate_pairs(blocks))
     scored = _stage("scored_pairs",
                     lambda: score_pairs(pairs, canon, cfg.tau, cfg.mode),
                     reused=True)
-    edges = _stage("edges", lambda: match_edges(scored, cfg.tau),
-                   reused=True)
+    # edges is a narrow filter over the pinned scored stage, and
+    # connected_components pins its own input: no second pin here
+    edges = _stage("edges", lambda: match_edges(scored, cfg.tau))
     clusters = _stage("clusters",
                       lambda: cluster_assignments(canon, edges))
     return {"canonical": canon, "blocks": blocks, "pairs": pairs,

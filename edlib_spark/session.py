@@ -29,6 +29,13 @@ ENGINE_CONF = {
     # scorer; retests at link scale put its effect within run-to-run
     # spread (docs/SCALE.md §AQE).
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "128k",
+    # PySpark 4 defaults this to true: every F.* call and Column
+    # operator on the driver then walks the Python stack and makes JVM
+    # calls to set and clear PySparkCurrentOrigin.  Measured: F.col
+    # 13 -> 3-4 py4j commands, building run_linkage's plan 1,414 -> 624
+    # (BENCH/LINK_PASS.md).  The only loss is the Python call-site
+    # section of Spark's error context.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

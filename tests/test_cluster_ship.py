@@ -58,3 +58,20 @@ def test_spark_submit_multi_executor_ship(spark, tmp_path):
     # checkpoints really landed on disk
     assert (out_dir / "t1" / "clusters" / "_SUCCESS").exists()
     assert (out_dir / "t1" / "clusters.json").exists()
+
+
+def test_engine_session_skips_call_site_capture(spark):
+    """ENGINE_CONF turns off PySpark's DataFrame debugging, so building
+    a plan on the driver does not walk the Python stack and set the JVM
+    call-site origin on every F.* call and Column operator.  PySpark
+    reads the flag from the active session once per process and caches
+    it (``pyspark.errors.utils._enable_debugging_cache``), so the check
+    is only as fresh as the first plan this process built."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    from edlib_spark.session import ENGINE_CONF
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert ENGINE_CONF[key] == "false"
+    assert spark.conf.get(key) == "false"
+    assert is_debugging_enabled() is False

@@ -4,6 +4,7 @@ column pruning reaching the parquet scan, no cartesian products)."""
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,6 +39,83 @@ def test_scorer_plan_single_arrow_boundary_no_cartesian(
     p = plan_of(scored, "simple")
     assert p.count("ArrowEvalPython") == 1, p
     assert "CartesianProduct" not in p, p
+
+
+def _exchanges(plan, keys):
+    """Hash exchanges of ``plan`` whose keys start with ``keys``."""
+    pat = re.compile(r"Exchange hashpartitioning\("
+                     + "".join(rf"{k}#\d+, " for k in keys))
+    return [ln.strip() for ln in plan.splitlines() if pat.search(ln)]
+
+
+def test_pair_stage_has_one_pair_exchange(spark, transcripts_parquet):
+    """Blocks -> pairs -> scorer shuffles the skinny pairs once: block
+    keys are unique by construction (no (conv_id, block_key) dedupe
+    exchange), and the pair dedupe runs on the scorer's
+    (id_a, id_b) -> defaultParallelism partitioning, so the text attach
+    plans no exchange of its own."""
+    from edlib_spark.operators.canonicalize import canonicalize
+    from edlib_spark.operators.pairs import candidate_pairs
+    from edlib_spark.operators.scoring import score_pairs
+    from edlib_spark.plans.linkage import LinkageConfig, build_blocks
+
+    canon = canonicalize(spark.read.parquet(transcripts_parquet))
+    p = plan_of(score_pairs(
+        candidate_pairs(build_blocks(canon, LinkageConfig())), canon),
+        "simple")
+    assert not _exchanges(p, ["conv_id", "block_key"]), p
+    pair_ex = _exchanges(p, ["id_a", "id_b"])
+    par = spark.sparkContext.defaultParallelism
+    assert len(pair_ex) == 1, p
+    assert f", {par}), REPARTITION_BY_NUM" in pair_ex[0], pair_ex
+
+
+def test_scorer_repartitions_pairs_from_elsewhere(spark):
+    """Pairs that did not come from candidate_pairs still get the
+    scorer's (id_a, id_b) -> defaultParallelism repartition."""
+    from edlib_spark.operators.scoring import score_pairs
+
+    canon = spark.createDataFrame(
+        [("a", "xyz", 3), ("b", "xyy", 3)],
+        "conv_id string, full_text string, text_len int")
+    pairs = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
+    p = plan_of(score_pairs(pairs, canon), "simple")
+    par = spark.sparkContext.defaultParallelism
+    pair_ex = _exchanges(p, ["id_a", "id_b"])
+    assert len(pair_ex) == 1, p
+    assert f", {par}), REPARTITION_BY_NUM" in pair_ex[0], pair_ex
+
+
+def test_block_keys_unique_by_construction(spark):
+    """build_blocks runs no dedupe: with one row per conv_id, its
+    (conv_id, block_key) rows are unique by construction, with and
+    without MinHash, even where bands and MinHash buckets collide
+    (equal-length conversations, identical and near-duplicate
+    texts)."""
+    from edlib_spark.operators.canonicalize import canonicalize
+    from edlib_spark.plans.linkage import LinkageConfig, build_blocks
+
+    base = "the quick brown fox jumps over the lazy dog " * 4
+    texts = [base, base, base[:-2] + "x ", "y" + base[1:],
+             base[::-1], "z" * len(base)]
+    rows = [(f"c{i}", turn, half) for i, text in enumerate(texts)
+            for turn, half in enumerate((text[:80], text[80:]))]
+    canon = canonicalize(spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, text string"))
+    for use_minhash in (False, True):
+        blocks = build_blocks(canon, LinkageConfig(use_minhash=use_minhash))
+        keys = [(r.conv_id, r.block_key) for r in blocks.collect()]
+        assert len(keys) == len(set(keys)), (use_minhash, keys)
+        # the collisions the deleted dedupe would have covered happen
+        members = {}
+        for conv, key in keys:
+            members.setdefault(key, set()).add(conv)
+        shared = {k for k, m in members.items() if len(m) > 1}
+        assert any(k.startswith("st:") for k in shared), members
+        if use_minhash:
+            assert any(k.startswith("mh") for k in shared), members
+        per_conv = 2 + (8 if use_minhash else 0)
+        assert len(keys) == per_conv * len(texts), keys
 
 
 def test_block_size_stats_are_broadcast(spark, transcripts_parquet):

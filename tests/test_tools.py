@@ -137,3 +137,31 @@ def test_registry_is_one_ordered_table():
     assert all(callable(q.spark_fn) for q in reg)
     assert all(isinstance(q.oracle, str) and q.oracle.strip() for q in reg)
     assert {q.family for q in reg[:50]} == set(FAMILIES)
+
+
+def test_tools_import_their_own_checkout():
+    """Every script that puts the package on sys.path derives the path
+    from its own ``__file__``, and none names this checkout's directory
+    in a literal: a tool run from a second checkout (a parent-commit
+    copy for an A/B, say) must import and grade that copy, and write
+    its reports and side tables there."""
+    import ast
+    import glob
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    scripts = sorted(glob.glob(os.path.join(repo, "tools", "*.py")))
+    scripts.append(os.path.join(repo, "bench.py"))
+    inserts = 0
+    for path in scripts:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call)
+                    and ast.unparse(node.func) == "sys.path.insert"):
+                inserts += 1
+                assert not isinstance(node.args[1], ast.Constant), (
+                    path, ast.unparse(node))
+            if isinstance(node, ast.Constant) and isinstance(
+                    node.value, str):
+                assert repo not in node.value, (path, node.value)
+    assert inserts >= 6, inserts  # the five contract/bench tools + bench.py

@@ -29,7 +29,8 @@ import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 K = 5
@@ -543,7 +544,7 @@ lever (linear index cost), `probes` the cheap query-time lever.
 
 Reproduce: `python tools/ann_recall.py {SF_DIR}`
 """
-    with open("/root/repo/BENCH/ANN_RECALL.md", "w") as fh:
+    with open(os.path.join(REPO, "BENCH", "ANN_RECALL.md"), "w") as fh:
         fh.write(md)
     print("wrote BENCH/ANN_RECALL.md")
 

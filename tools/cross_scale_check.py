@@ -46,7 +46,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from check_contract import (TABLES, frame_hash, make_duckdb_views,  # noqa: E402,F401
                             parse_only, run_checks)
@@ -60,7 +61,7 @@ STRATUM = os.environ.get("XS_STRATUM", "07")
 # side table is still written either way — the certificate oracles
 # need it.  Costs roughly one extra full edge derivation per query.
 XS_FRESH = os.environ.get("XS_FRESH") == "1"
-DATA = "/root/repo/data"
+DATA = os.path.join(REPO, "data")
 
 
 def _stratum_sql(a: str, b: str) -> str:

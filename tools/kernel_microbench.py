@@ -25,7 +25,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 REF = "/root/reference/edlib"  # same tree the parity suite compiles
 
@@ -144,7 +145,7 @@ def main() -> None:
     live_rows = "\n".join(
         f"| {L}×{L} | {ours:.2f} | {ref:.2f} | {r:.2f}x |"
         for L, ours, ref, r in live) if live else "(g++ unavailable)"
-    with open("/root/repo/BENCH/KERNEL.md", "w") as fh:
+    with open(os.path.join(REPO, "BENCH", "KERNEL.md"), "w") as fh:
         fh.write(f"""# Kernel throughput vs the reference (single core)
 
 ## Live, same host (drift-free comparison)

@@ -12,7 +12,7 @@ past sf0.1.  Correctness is unaffected by the duplication: every
 oracle re-derives from the same parquet.
 
 Usage: python tools/make_soak_dir.py [src_sf_dir] [out_dir] [copies]
-       (defaults: /root/testdata/sf0.1 /root/repo/data/soak_sf0.3 3)
+       (defaults: SRC below, <checkout>/data/soak_sf0.3, 3)
 """
 
 from __future__ import annotations
@@ -23,7 +23,9 @@ import sys
 import duckdb
 
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-OUT = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/data/soak_sf0.3"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+OUT = (sys.argv[2] if len(sys.argv) > 2
+       else os.path.join(REPO, "data", "soak_sf0.3"))
 COPIES = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 OFFSET = 10_000_000
 

@@ -8,9 +8,11 @@ Usage: python tools/pipeline_bench.py [scale]   (default: medium)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -57,8 +59,8 @@ runs): **pre {pre:.2f} / post {post:.2f}**.
 
 Reproduce: `python tools/pipeline_bench.py {scale}`
 """
-    out_path = ("/root/repo/BENCH/PIPELINE.md" if scale == "medium"
-                else f"/root/repo/BENCH/PIPELINE_{scale}.md")
+    name = "PIPELINE.md" if scale == "medium" else f"PIPELINE_{scale}.md"
+    out_path = os.path.join(REPO, "BENCH", name)
     with open(out_path, "w") as fh:
         fh.write(md)
     print(md)
