@@ -29,19 +29,13 @@ from pyspark.sql import functions as F
 
 from .functions.alignment import align_expr, edit_distance
 from .operators.blocking import minhash_blocks, sorted_neighborhood_pairs
-from .operators.canonicalize import canonicalize
+from .operators.canonicalize import TURN_SEP, canonicalize
 from .operators.clustering import cluster_assignments
 from .operators.pairs import candidate_pairs
 from .operators.scoring import score_pairs
-from .sources.transcripts import ensure_transcripts_parquet, transcripts_path
+from .sources.transcripts import (DATA_DIR, ensure_transcripts_parquet,
+                                  transcripts_path)
 
-# ASCII record separator: 1 byte == 1 char, so DuckDB's byte-based
-# levenshtein() agrees with the kernel's codepoint-based distances.
-SEP = "\x1e"
-# Repo root (parent of the edlib_spark package) — derived, not
-# hardcoded, so generated artifacts land next to the package wherever
-# the repo is checked out.
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Several oracles (equality_align's upper()+levenshtein twin, the
 # media_features per-character ord() histogram) are exact only when
 # documents.text is pure ASCII: DuckDB's levenshtein/ord are byte-based
@@ -105,7 +99,7 @@ def canonical_conversations(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.row_number().over(w) - 1).cast("bigint").alias("turn_idx"),
         F.concat(F.col("event_type"), F.lit(" "), F.col("props"))
          .alias("text"))
-    return (canonicalize(t, sep=SEP)
+    return (canonicalize(t)
             .select(F.concat(F.lit("u"), F.col("conv_id").cast("string"))
                     .alias("conv_id"),
                     "full_text",
@@ -116,9 +110,9 @@ def canonical_conversations(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_CANONICAL = f"""
     WITH t AS ({_SQL_TRANSCRIPTS})
     SELECT conv_id,
-           string_agg(text, '{SEP}' ORDER BY turn_idx) AS full_text,
+           string_agg(text, '{TURN_SEP}' ORDER BY turn_idx) AS full_text,
            CAST(count(*) AS BIGINT) AS n_turns,
-           CAST(length(string_agg(text, '{SEP}' ORDER BY turn_idx))
+           CAST(length(string_agg(text, '{TURN_SEP}' ORDER BY turn_idx))
                 AS BIGINT) AS text_len
     FROM t GROUP BY conv_id
 """
@@ -473,8 +467,7 @@ _SQL_SNM_PAIRS = f"""
 """
 
 
-_FS_PARAMS_PATH = os.path.join(_REPO_ROOT, "data",
-                               "fs_params_current.parquet")
+_FS_PARAMS_PATH = os.path.join(DATA_DIR, "fs_params_current.parquet")
 _FS_N_FIELDS = 4
 _FS_BAND = 64  # n_chars length-band width (field 2)
 # The head every FS oracle opens with: the shared params side table
@@ -1110,9 +1103,7 @@ def multi_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     key with a map-side-combined SUM of distinct bits."""
     _ensure_gram_hashes(spark, sf_dir)
     docs = _read(spark, sf_dir, "documents")
-    # zero-padded ids: candidate_pairs normalizes with least/greatest
-    # on STRINGS; padding makes that lexicographic order numeric
-    pad_id = F.lpad(F.col("doc_id").cast("string"), 12, "0")
+    doc_id = F.col("doc_id").cast("bigint").alias("conv_id")
     # SNM orders pairs by RANK (sort-key position), not id — normalize
     # to (min, max) so the same pair merges with the other rules' rows
     snm = _snm_pairs(docs).select(
@@ -1121,8 +1112,7 @@ def multi_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("id_b"),
         F.lit(1).alias("bit"))
 
-    canon = docs.select(pad_id.alias("conv_id"),
-                        F.col("text").alias("full_text"))
+    canon = docs.select(doc_id, F.col("text").alias("full_text"))
     # pin the LSH keys: candidate_pairs consumes its blocks input four
     # times (size stats, the annotate join, then both pair roles), and
     # recomputing the gram-hash -> 16-permutation signatures per scan
@@ -1130,17 +1120,13 @@ def multi_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     mh_blocks = (minhash_blocks(canon, num_hashes=_MB_MH_HASHES,
                                 bands=_MB_MH_BANDS)
                  .localCheckpoint(eager=False))
-    mh = (candidate_pairs(mh_blocks)
-          .select(F.col("id_a").cast("bigint").alias("id_a"),
-                  F.col("id_b").cast("bigint").alias("id_b"),
-                  F.lit(2).alias("bit")))
+    mh = candidate_pairs(mh_blocks).select("id_a", "id_b",
+                                           F.lit(2).alias("bit"))
 
-    st_blocks = docs.select(pad_id.alias("conv_id"),
+    st_blocks = docs.select(doc_id,
                             _structural_block_key().alias("block_key"))
-    st = (candidate_pairs(st_blocks)
-          .select(F.col("id_a").cast("bigint").alias("id_a"),
-                  F.col("id_b").cast("bigint").alias("id_b"),
-                  F.lit(4).alias("bit")))
+    st = candidate_pairs(st_blocks).select("id_a", "id_b",
+                                           F.lit(4).alias("bit"))
 
     return (snm.unionByName(mh).unionByName(st)
             .groupBy("id_a", "id_b")
@@ -1501,10 +1487,7 @@ def block_size_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigint arithmetic."""
     _ensure_gram_hashes(spark, sf_dir)
     docs = _read(spark, sf_dir, "documents")
-    # no id padding here: block keys don't depend on the id and this
-    # query never forms pairs (multi_blocking_pairs pads only because
-    # candidate_pairs normalizes with least/greatest on strings)
-    canon = docs.select(F.col("doc_id").cast("string").alias("conv_id"),
+    canon = docs.select(F.col("doc_id").cast("bigint").alias("conv_id"),
                         F.col("text").alias("full_text"))
     mh = (minhash_blocks(canon, num_hashes=_MB_MH_HASHES,
                          bands=_MB_MH_BANDS)
@@ -1982,8 +1965,7 @@ def _sql_doc_lang_id() -> str:
     """
 
 
-_TOKEN_HASHES_PATH = os.path.join(_REPO_ROOT, "data",
-                                  "token_hashes_current.parquet")
+_TOKEN_HASHES_PATH = os.path.join(DATA_DIR, "token_hashes_current.parquet")
 
 
 def _ensure_side_table(sf_dir: str, path: str, build) -> None:
@@ -2097,8 +2079,7 @@ def doc_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("band_key")))
 
 
-_SHINGLE_HASHES_PATH = os.path.join(_REPO_ROOT, "data",
-                                    "shingle_hashes_current.parquet")
+_SHINGLE_HASHES_PATH = os.path.join(DATA_DIR, "shingle_hashes_current.parquet")
 
 
 def _ensure_shingle_hashes(spark: SparkSession, sf_dir: str,
@@ -2146,8 +2127,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                        .alias("fingerprint"))
 
 
-_LSH_PLANES_PATH = os.path.join(_REPO_ROOT, "data",
-                                "lsh_planes_current.parquet")
+_LSH_PLANES_PATH = os.path.join(DATA_DIR, "lsh_planes_current.parquet")
 
 
 def _ensure_lsh_planes(num_planes: int = 8, n_tables: int = 4,
@@ -2537,7 +2517,7 @@ def _ensure_fasta(sf_dir: str) -> str:
     import pyarrow.parquet as pq
 
     tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(_REPO_ROOT, "data", f"docs_{tag}.fasta")
+    path = os.path.join(DATA_DIR, f"docs_{tag}.fasta")
     os.makedirs(os.path.dirname(path), exist_ok=True)
     src = os.path.join(sf_dir, "documents.parquet")
     stale = (os.path.exists(path)
@@ -2672,10 +2652,8 @@ def hw_locations_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint").alias("first_end"))
 
 
-_NICE_CIGARS_PATH = os.path.join(_REPO_ROOT, "data",
-                                 "nice_cigars_current.parquet")
-_PATH_CIGARS_PATH = os.path.join(_REPO_ROOT, "data",
-                                 "path_cigars_current.parquet")
+_NICE_CIGARS_PATH = os.path.join(DATA_DIR, "nice_cigars_current.parquet")
+_PATH_CIGARS_PATH = os.path.join(DATA_DIR, "path_cigars_current.parquet")
 
 
 def _sql_cigar_replay(pairs_sql: str, side_path: str,
@@ -2958,7 +2936,7 @@ _SQL_ALIGN_OPS = _sql_cigar_replay(
     JOIN opsum o USING (id_a, id_b)""")
 
 
-_PATH_CIGARS_STD_PATH = os.path.join(_REPO_ROOT, "data",
+_PATH_CIGARS_STD_PATH = os.path.join(DATA_DIR,
                                      "path_cigars_std_current.parquet")
 
 # Standard-format oracle: the EXTENDED cigar rides the side table and
@@ -3024,8 +3002,7 @@ def align_path_std_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("r.cigar").alias("cigar_std"))
 
 
-_GRAM_HASHES_PATH = os.path.join(_REPO_ROOT, "data",
-                                 "gram_hashes_current.parquet")
+_GRAM_HASHES_PATH = os.path.join(DATA_DIR, "gram_hashes_current.parquet")
 
 
 def _ensure_gram_hashes(spark: SparkSession, sf_dir: str,
@@ -3132,22 +3109,9 @@ def _neardup_clusters_of(docs: DataFrame, edges: DataFrame) -> DataFrame:
     chain's kept stage, so a composite query can pin the expensive edge
     derivation ONCE instead of re-running the MinHash chain per
     branch."""
-    nodes = docs.select(F.col("doc_id").cast("string").alias("conv_id"))
-    assigned = cluster_assignments(
-        nodes, edges.select(F.col("id_a").cast("string").alias("id_a"),
-                            F.col("id_b").cast("string").alias("id_b")))
-    # cluster ids were min'ed as STRINGS; renormalize numerically via a
-    # window-min — one shuffle on the cluster key, O(1) state per row.
-    # (A collect_list of members would materialize each cluster as one
-    # array row: a boilerplate near-dup cluster in a web corpus can be
-    # millions of docs, i.e. a multi-GB single row.)
-    return (assigned
-            .select(F.col("conv_id").cast("bigint").alias("doc_id"),
-                    F.col("cluster_id").alias("cid_str"))
-            .withColumn("cluster_id",
-                        F.min("doc_id").over(Window.partitionBy("cid_str"))
-                        .cast("bigint"))
-            .select("doc_id", "cluster_id"))
+    nodes = docs.select(F.col("doc_id").cast("bigint").alias("conv_id"))
+    return (cluster_assignments(nodes, edges.select("id_a", "id_b"))
+            .select(F.col("conv_id").alias("doc_id"), "cluster_id"))
 
 
 def doc_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3389,8 +3353,7 @@ _SQL_COSINE_NEARDUP = f"""
 """
 
 
-_IVF_CENTROIDS_PATH = os.path.join(_REPO_ROOT, "data",
-                                   "ivf_centroids_current.parquet")
+_IVF_CENTROIDS_PATH = os.path.join(DATA_DIR, "ivf_centroids_current.parquet")
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3460,8 +3423,7 @@ _SQL_ANN_IVF = f"""
     {_sql_top5("scored", "cos")}"""
 
 
-_PQ_BOOKS_PATH = os.path.join(_REPO_ROOT, "data",
-                              "pq_codebooks_current.parquet")
+_PQ_BOOKS_PATH = os.path.join(DATA_DIR, "pq_codebooks_current.parquet")
 # PQ geometry, coupled between the Spark call and the SQL oracle's
 # list_slice width: m subspaces over the fixture's d=64 embeddings,
 # k codewords per subspace; dsub derived so retuning m keeps the
@@ -3835,7 +3797,7 @@ def transcripts_canonical_small(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     path = ensure_transcripts_parquet(spark, "small")
     t = spark.read.parquet(path)
-    return (canonicalize(t, sep=SEP)
+    return (canonicalize(t)
             .select("conv_id", "full_text",
                     F.col("n_turns").cast("bigint").alias("n_turns"),
                     F.col("text_len").cast("bigint").alias("text_len")))
@@ -3845,10 +3807,10 @@ def _sql_transcripts_canonical_small() -> str:
     path = transcripts_path("small")
     return f"""
         SELECT conv_id,
-               string_agg(coalesce(text, ''), '{SEP}'
+               string_agg(coalesce(text, ''), '{TURN_SEP}'
                           ORDER BY turn_idx) AS full_text,
                CAST(count(*) AS BIGINT) AS n_turns,
-               CAST(length(string_agg(coalesce(text, ''), '{SEP}'
+               CAST(length(string_agg(coalesce(text, ''), '{TURN_SEP}'
                                       ORDER BY turn_idx)) AS BIGINT)
                    AS text_len
         FROM read_parquet('{path}/*.parquet')
@@ -3885,10 +3847,10 @@ def _sql_transcript_pairs() -> str:
     ratio = 1.0 / (1.0 - BAND_TAU)
     return f"""c AS (
         SELECT conv_id,
-               string_agg(coalesce(text, ''), '{SEP}'
+               string_agg(coalesce(text, ''), '{TURN_SEP}'
                           ORDER BY turn_idx) AS full_text,
                count(*) AS n_turns,
-               length(string_agg(coalesce(text, ''), '{SEP}'
+               length(string_agg(coalesce(text, ''), '{TURN_SEP}'
                                  ORDER BY turn_idx)) AS text_len
         FROM read_parquet('{path}/*.parquet')
         GROUP BY conv_id),
@@ -4045,49 +4007,22 @@ def linkage_eval_small(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north-rule metric as a graded operator: pairwise TP/FP/FN +
     precision/recall/F1 of the flagship pipeline's clusters against
     the fixture's planted ground truth (conv_id = c{cluster}_{variant},
-    sources/transcripts.py) — computed with the contingency-table
-    pair-counting identity (sum of C(n,2) over cells and over the two
-    marginals), so NOTHING quadratic is materialized: three
-    map-side-combined groupBys over the assignment table.  A hot
-    predicted cluster of 10^6 records contributes one cell row, not
-    5*10^11 pairs.  plans/linkage.pairwise_f1 is the driver-side dict
-    twin (bench reporting); this is the SQL-checked surface, and a
-    pytest pins the two coherent."""
-    cells = _truth_cells(spark, sf_dir).localCheckpoint(eager=False)
-    # coalesce: with zero cells sum() is NULL; the oracle coalesces
-    # to 0, so an empty assignment table must not hash-diverge
-    half = "s * (s - 1) div 2"
-    zero = F.lit(0).cast("bigint")
-    tp = cells.agg(F.coalesce(F.sum(F.expr("n * (n - 1) div 2")), zero)
-                   .alias("tp"))
-    pp = (cells.groupBy("cluster_id").agg(F.sum("n").alias("s"))
-          .agg(F.coalesce(F.sum(F.expr(half)), zero).alias("pp")))
-    tt = (cells.groupBy("truth_id").agg(F.sum("n").alias("s"))
-          .agg(F.coalesce(F.sum(F.expr(half)), zero).alias("tpp")))
-    j = tp.crossJoin(pp).crossJoin(tt)
-    tp_c, pp_c, tt_c = F.col("tp"), F.col("pp"), F.col("tpp")
-    return j.select(
-        tp_c.cast("bigint").alias("tp"),
-        (pp_c - tp_c).cast("bigint").alias("fp"),
-        (tt_c - tp_c).cast("bigint").alias("fn"),
-        F.when(pp_c > 0, tp_c / pp_c).otherwise(F.lit(1.0))
-         .alias("pairwise_precision"),
-        F.when(tt_c > 0, tp_c / tt_c).otherwise(F.lit(1.0))
-         .alias("pairwise_recall"),
-        F.when(pp_c + tt_c > 0, (F.lit(2.0) * tp_c) / (pp_c + tt_c))
-         .otherwise(F.lit(1.0)).alias("pairwise_f1"))
+    sources/transcripts.py), computed with the contingency-table
+    pair-counting identity, so nothing quadratic is materialized.  One
+    builder in plans/linkage.py (``pairwise_eval``) computes it here
+    and in the dict helper ``pairwise_f1`` that bench reporting reads."""
+    from .plans.linkage import pairwise_eval
+    return pairwise_eval(_truth_assignment(spark, sf_dir))
 
 
-def _truth_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(cluster_id, truth_id, n): the flagship clusters crossed with
-    the fixture's planted truth (conv_id = c{cluster}_{variant}) — the
-    contingency table both evaluation queries read (SQL twin:
-    _sql_truth_cells)."""
+def _truth_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(cluster_id, truth_id): the flagship clusters with the fixture's
+    planted truth peeled from conv_id (c{cluster}_{variant}), one row
+    per conversation; both evaluation queries build their contingency
+    cells from it (SQL twin: _sql_truth_cells)."""
     pred = transcripts_clusters_small(spark, sf_dir)
-    return (pred.groupBy(
-                F.col("cluster_id"),
-                F.substring_index("conv_id", "_", 1).alias("truth_id"))
-            .agg(F.count(F.lit(1)).alias("n")))
+    return pred.select(
+        "cluster_id", F.substring_index("conv_id", "_", 1).alias("truth_id"))
 
 
 def _sql_truth_cells() -> str:
@@ -4142,26 +4077,15 @@ def bcubed_eval_small(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ONE bigint-over-bigint IEEE division, so both engines land on
     the identical double (the repo's hash-stable float convention);
     the global P/R/F1 = sum(mass)/N is a cross-row double sum whose
-    addition order Spark does not define, so the scalar rollup lives
-    in plans/linkage.bcubed (dict twin, pytest-pinned coherent).
+    addition order Spark does not define, so the scalar rollup is the
+    dict helper ``bcubed``.  One builder in plans/linkage.py
+    (``bcubed_eval``) computes the cells for both.
     Scale shape: the corpus is touched once by the flagship's own
     clustering; everything here shuffles only the cell table (at most
     one row per cluster-label overlap — O(#clusters), not O(records)),
     and the two marginal sizes share it via two window sums."""
-    cells = _truth_cells(spark, sf_dir)
-    wp = Window.partitionBy("cluster_id")
-    wt = Window.partitionBy("truth_id")
-    return (cells
-            .withColumn("pred_size", F.sum("n").over(wp))
-            .withColumn("truth_size", F.sum("n").over(wt))
-            .select("cluster_id", "truth_id",
-                    F.col("n").cast("bigint").alias("n"),
-                    F.col("pred_size").cast("bigint").alias("pred_size"),
-                    F.col("truth_size").cast("bigint").alias("truth_size"),
-                    (F.col("n") * F.col("n") / F.col("pred_size"))
-                    .alias("precision_mass"),
-                    (F.col("n") * F.col("n") / F.col("truth_size"))
-                    .alias("recall_mass")))
+    from .plans.linkage import bcubed_eval
+    return bcubed_eval(_truth_assignment(spark, sf_dir))
 
 
 # B-cubed oracle: the shared cell table; n*n/size is one exact IEEE
@@ -4192,38 +4116,17 @@ def blocking_quality_small(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction ratio, true-match pairs (from truth-cluster sizes —
     never materialized), how many of them blocking kept, and pairs
     completeness — the recall CEILING any downstream scorer can
-    reach, the number that justifies a blocking strategy.  The truth
-    side uses the pair-counting identity; the covered count filters
-    the candidate set (already bounded by blocking) on truth-prefix
-    equality — nothing quadratic.  plans/linkage.blocking_quality is
-    the driver-side dict twin (BENCH/BLOCKING.md)."""
-    from .plans.linkage import LinkageConfig, run_linkage
+    reach, the number that justifies a blocking strategy.  One builder
+    in plans/linkage.py (``blocking_eval``) computes it here and in
+    the dict helper ``blocking_quality`` (BENCH/BLOCKING.md); this
+    query passes it the truth prefix of every canonical conv_id."""
+    from .plans.linkage import LinkageConfig, blocking_eval, run_linkage
     path = ensure_transcripts_parquet(spark, "small")
     stages = run_linkage(spark.read.parquet(path), LinkageConfig())
-    canon = stages["canonical"]
-    pairs = stages["pairs"].localCheckpoint(eager=False)
-    tot = canon.agg(F.count(F.lit(1)).alias("n"))
-    cand = pairs.agg(F.count(F.lit(1)).alias("n_candidates"))
-    cov = (pairs.where(F.substring_index("id_a", "_", 1)
-                       == F.substring_index("id_b", "_", 1))
-           .agg(F.count(F.lit(1)).alias("n_covered")))
-    tru = (canon.groupBy(F.substring_index("conv_id", "_", 1)
-                         .alias("truth_id"))
-           .agg(F.count(F.lit(1)).alias("s"))
-           .agg(F.sum(F.expr("s * (s - 1) div 2")).alias("n_truth")))
-    j = tot.crossJoin(cand).crossJoin(cov).crossJoin(tru)
-    total = F.expr("n * (n - 1) div 2")
-    return j.select(
-        F.col("n").cast("bigint").alias("n_records"),
-        total.cast("bigint").alias("n_total_pairs"),
-        F.col("n_candidates").cast("bigint").alias("n_candidates"),
-        F.col("n_truth").cast("bigint").alias("n_truth_pairs"),
-        F.col("n_covered").cast("bigint").alias("n_covered_pairs"),
-        (F.lit(1.0) - F.col("n_candidates") / total)
-        .alias("reduction_ratio"),
-        F.when(F.col("n_truth") > 0,
-               F.col("n_covered") / F.col("n_truth"))
-         .otherwise(F.lit(1.0)).alias("pairs_completeness"))
+    truth = stages["canonical"].select(
+        "conv_id", F.substring_index("conv_id", "_", 1).alias("truth_id"))
+    return blocking_eval(stages["pairs"].localCheckpoint(eager=False),
+                         truth)
 
 
 # Blocking-quality oracle: the flagship cluster oracle's own

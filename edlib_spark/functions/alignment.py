@@ -47,6 +47,12 @@ ALIGN_RESULT_TYPE = StructType([
 ])
 
 
+def _k_column(k) -> Column:
+    """``k`` as the per-row bound column the UDFs take: a Column passes
+    through, an int becomes a literal (negative = unbounded)."""
+    return k if isinstance(k, Column) else F.lit(int(k))
+
+
 def edit_distance(query: Column, target: Column, mode: str = "NW",
                   k=-1, additional_equalities=None) -> Column:
     """Edit distance column; -1 where the distance exceeds k.
@@ -62,23 +68,13 @@ def edit_distance(query: Column, target: Column, mode: str = "NW",
     # validated and turned into characters driver-side, before any job
     eqs = _symbol_pairs(additional_equalities)
 
-    if isinstance(k, Column):
-        @pandas_udf(IntegerType())
-        def _dist(q: pd.Series, t: pd.Series, kk: pd.Series) -> pd.Series:
-            ks = kk.fillna(-1).astype("int64").to_numpy()
-            return pd.Series(
-                batch_edit_distance(q.tolist(), t.tolist(), mode, ks,
-                                    equalities=eqs))
-        return _dist(query, target, k)
-
-    k_val = int(k)
-
     @pandas_udf(IntegerType())
-    def _dist_fixed(q: pd.Series, t: pd.Series) -> pd.Series:
+    def _dist(q: pd.Series, t: pd.Series, kk: pd.Series) -> pd.Series:
+        ks = kk.fillna(-1).astype("int64").to_numpy()
         return pd.Series(
-            batch_edit_distance(q.tolist(), t.tolist(), mode, k_val,
+            batch_edit_distance(q.tolist(), t.tolist(), mode, ks,
                                 equalities=eqs))
-    return _dist_fixed(query, target)
+    return _dist(query, target, _k_column(k))
 
 
 def align_expr(query: Column, target: Column, mode: str = "NW",
@@ -126,19 +122,10 @@ def align_expr(query: Column, target: Column, mode: str = "NW",
                             ks, mode, task, eqs, max_alphabet,
                             cigar_format)
 
-    if isinstance(k, Column):
-        @pandas_udf(ALIGN_RESULT_TYPE)
-        def _align_k(q: pd.Series, t: pd.Series,
-                     kk: pd.Series) -> pd.DataFrame:
-            return _batch(q, t, kk.fillna(-1).astype("int64").to_numpy())
-        return _align_k(query, target, k)
-
-    k_val = int(k)
-
     @pandas_udf(ALIGN_RESULT_TYPE)
-    def _align(q: pd.Series, t: pd.Series) -> pd.DataFrame:
-        return _batch(q, t, k_val)
-    return _align(query, target)
+    def _align_k(q: pd.Series, t: pd.Series, kk: pd.Series) -> pd.DataFrame:
+        return _batch(q, t, kk.fillna(-1).astype("int64").to_numpy())
+    return _align_k(query, target, _k_column(k))
 
 
 def _align_batch(qs: list, ts: list, ks, mode: str, task: str, eqs,

@@ -18,20 +18,16 @@ from pyspark.sql import functions as F
 TURN_SEP = "\x1e"
 
 
-def canonicalize(transcripts: DataFrame, sep: str = TURN_SEP,
-                 include_role: bool = False) -> DataFrame:
+def canonicalize(transcripts: DataFrame) -> DataFrame:
     """(conv_id, full_text, n_turns, text_len) — one row per conversation.
 
     ``array_sort`` on struct(turn_idx, text) orders by turn_idx first
     (struct ordering is field-by-field), giving the stable turn ordering;
-    ``transform`` then projects the text back out.  All JVM-side.
+    ``transform`` then projects the text back out, and ``TURN_SEP``
+    joins the turns.  All JVM-side.
     """
-    turn = F.struct(
-        F.col("turn_idx"),
-        (F.concat_ws(":", F.col("role"), F.coalesce(F.col("text"), F.lit("")))
-         if include_role else
-         F.coalesce(F.col("text"), F.lit(""))).alias("t"),
-    )
+    turn = F.struct(F.col("turn_idx"),
+                    F.coalesce(F.col("text"), F.lit("")).alias("t"))
     return (
         transcripts
         .groupBy("conv_id")
@@ -39,7 +35,7 @@ def canonicalize(transcripts: DataFrame, sep: str = TURN_SEP,
             F.array_join(
                 F.transform(F.array_sort(F.collect_list(turn)),
                             lambda s: s["t"]),
-                sep).alias("full_text"),
+                TURN_SEP).alias("full_text"),
             F.count(F.lit(1)).alias("n_turns"),
         )
         .withColumn("text_len", F.length("full_text"))

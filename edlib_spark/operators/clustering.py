@@ -70,6 +70,9 @@ def _edge_fingerprint(edges: DataFrame):
 # dominates wall time on small graphs and is pure scheduling overhead
 # at every scale.
 DRIVER_CC_MAX_EDGES = 200_000
+# Cap on the distributed star passes before the assignment is read off
+# the current edge set; each pass shrinks the edge set geometrically.
+CC_MAX_ITERATIONS = 25
 
 
 def _finish_on_driver(edges: DataFrame) -> DataFrame:
@@ -118,7 +121,7 @@ def _finish_on_driver(edges: DataFrame) -> DataFrame:
     return spark.createDataFrame(assign, out_schema)
 
 
-def connected_components(edges: DataFrame, max_iterations: int = 25,
+def connected_components(edges: DataFrame,
                          driver_finish_max_edges: int = DRIVER_CC_MAX_EDGES)\
         -> DataFrame:
     """(conv_id, cluster_id) for every node appearing in ``edges``;
@@ -139,7 +142,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 25,
     prev_fp = _edge_fingerprint(current)
     if prev_fp[0] == 0:
         return _finish_on_driver(current)  # empty, schema-typed result
-    for _ in range(max_iterations):
+    for _ in range(CC_MAX_ITERATIONS):
         if prev_fp[0] <= driver_finish_max_edges:
             return _finish_on_driver(current)
         # ONE driver-synchronous job per (large-star . small-star) pass:

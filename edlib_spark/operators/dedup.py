@@ -58,31 +58,30 @@ def minhash_neardup_pairs(docs: DataFrame, id_col: str = "doc_id",
     spark = docs.sparkSession
     par = spark.sparkContext.defaultParallelism
     # a small input may arrive as one parquet split; the per-doc gram
-    # hashing is the expensive part, so spread it before computing
-    docs = docs.repartition(par, id_col)
-    canon = docs.select(F.col(id_col).cast("string").alias("conv_id"),
+    # hashing is the expensive part, so spread it before computing.
+    # Pinned twice: the documents, so the blocker and the gram join
+    # read one shuffle (the join's inferred not-null filter would
+    # otherwise make Spark shuffle them again), and the blocks, which
+    # candidate_pairs scans three times (signatures computed once;
+    # BENCH/LINK_PASS.md)
+    docs = (docs.select(F.col(id_col).cast("bigint").alias("conv_id"),
                         F.col(text_col).alias("full_text"))
-    blocks = minhash_blocks(canon, num_hashes=num_hashes, bands=bands,
-                            ngram=ngram)
+            .repartition(par, "conv_id").localCheckpoint(eager=False))
+    blocks = minhash_blocks(docs, num_hashes=num_hashes, bands=bands,
+                            ngram=ngram).localCheckpoint(eager=False)
     pairs = candidate_pairs(blocks, hot_block_threshold=hot_block_threshold,
                             salt_group_size=salt_group_size)
 
-    grams = docs.select(F.col(id_col).cast("string").alias("conv_id"),
-                        char_ngram_set(F.col(text_col), ngram).alias("g"))
+    grams = docs.select("conv_id",
+                        char_ngram_set(F.col("full_text"), ngram).alias("g"))
     a = grams.select(F.col("conv_id").alias("id_a"), F.col("g").alias("ga"))
     b = grams.select(F.col("conv_id").alias("id_b"), F.col("g").alias("gb"))
     inter = F.size(F.array_intersect("ga", "gb"))
     union = F.size(F.array_union("ga", "gb"))
-    scored = (pairs.join(a, "id_a").join(b, "id_b")
-              .select(F.col("id_a").cast("bigint").alias("ia"),
-                      F.col("id_b").cast("bigint").alias("ib"),
-                      inter.cast("bigint").alias("inter_count"),
-                      union.cast("bigint").alias("union_count")))
-    # candidate_pairs ordered the STRING ids; renormalize numerically
-    return (scored
-            .select(F.least("ia", "ib").alias("id_a"),
-                    F.greatest("ia", "ib").alias("id_b"),
-                    "inter_count", "union_count")
+    return (pairs.join(a, "id_a").join(b, "id_b")
+            .select("id_a", "id_b",
+                    inter.cast("bigint").alias("inter_count"),
+                    union.cast("bigint").alias("union_count"))
             .where(F.col("inter_count") * 100
                    >= F.lit(tau_pct) * F.col("union_count")))
 

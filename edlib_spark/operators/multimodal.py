@@ -26,8 +26,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, BinaryType, FloatType, IntegerType,
-                               LongType, StringType, StructField, StructType)
+from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
+                               StructField, StructType)
 
 KINDS = ("image", "audio", "video")
 
@@ -45,11 +45,6 @@ DECODED_SCHEMA = StructType([
     StructField("sample_rate", IntegerType()),
     StructField("n_frames", IntegerType()),
     StructField("n_payload_bytes", LongType()),
-])
-
-FEATURES_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("features", ArrayType(FloatType())),
 ])
 
 FEATURE_COUNTS_SCHEMA = StructType([
@@ -139,36 +134,14 @@ def decode_media(media: DataFrame) -> DataFrame:
     return media.mapInPandas(decode, DECODED_SCHEMA)
 
 
-def extract_features(media: DataFrame,
-                     n_bins: int = _N_FEATURE_BINS) -> DataFrame:
-    """Byte-histogram feature vector per payload (normalized ``n_bins``
-    bins over the raw media bytes) — the feature-extraction stand-in,
-    fully vectorized with numpy inside each Arrow batch."""
-
-    def features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for p in pdf["payload"]:
-                if p is None or len(p) == 0:
-                    feats.append([0.0] * n_bins)
-                    continue
-                a = np.frombuffer(bytes(p), dtype=np.uint8)
-                hist = np.bincount(a >> int(np.log2(256 // n_bins)),
-                                   minlength=n_bins).astype(np.float64)
-                feats.append((hist / hist.sum()).astype(np.float32).tolist())
-            yield pd.DataFrame({"media_id": pdf["media_id"].values,
-                                "features": feats})
-
-    return media.mapInPandas(features, FEATURES_SCHEMA)
-
-
 def extract_feature_counts(media: DataFrame,
                            n_bins: int = _N_FEATURE_BINS) -> DataFrame:
-    """Exploded byte-histogram features: one row per (media_id, bin_idx)
-    carrying the raw byte count, dense (zero bins included) so the row
-    set per media is exactly ``n_bins`` wide.  This is the hashable /
-    SQL-oracle-able form of :func:`extract_features` — ``cnt /
-    sum(cnt) over media_id`` reproduces the normalized vector.
+    """Byte-histogram features (the feature-extraction stand-in): one
+    row per (media_id, bin_idx) carrying the raw count of payload bytes
+    in that bin (``n_bins`` equal bins over 0..255), dense (zero bins
+    included) so the row set per media is exactly ``n_bins`` wide.
+    Integer counts keep the result hashable and SQL-oracle-able;
+    ``cnt / sum(cnt) over media_id`` is the normalized feature vector.
 
     The whole Arrow batch is histogrammed in one vectorized pass: all
     payloads are concatenated into a single uint8 array and binned with

@@ -93,17 +93,19 @@ def score_pairs(pairs: DataFrame, canon: DataFrame, tau: float = 0.2,
 # top_n_best collects n sample distances to the driver; keep n small
 # enough that the collect and the global top-n sort are trivially safe
 MAX_TOP_N = 100_000
+# top_n_best's first pass scores a hash sample of ~this many times n
+# pairs (unbounded k) to find the k bound of the second pass
+TOP_N_SAMPLE_FACTOR = 8
 
 
-def top_n_best(pairs: DataFrame, n: int, mode: str = "NW",
-               sample_factor: int = 8) -> DataFrame:
+def top_n_best(pairs: DataFrame, n: int, mode: str = "NW") -> DataFrame:
     """Top-``n`` smallest edit distances over (id_a, id_b, text_a,
     text_b) pairs — the reference CLI's adaptive-k heap
     (apps/aligner/aligner.cpp:181-195) re-expressed for a distributed
     scan as two passes:
 
       1. an UNBOUNDED scoring pass over a deterministic hash sample of
-         ~``sample_factor * n`` pairs; the sample's n-th best distance
+         ~``TOP_N_SAMPLE_FACTOR * n`` pairs; the sample's n-th best distance
          is a guaranteed upper bound on the global n-th best (any
          subset's n-th order statistic dominates the global one);
       2. a k-BOUNDED scoring pass over all pairs with k = that bound —
@@ -136,10 +138,10 @@ def top_n_best(pairs: DataFrame, n: int, mode: str = "NW",
     # sample pass, bounded pass) — materialize it once
     pairs = pairs.localCheckpoint(eager=False)
     total = pairs.count()
-    if total <= sample_factor * n:
+    if total <= TOP_N_SAMPLE_FACTOR * n:
         return top(pairs.withColumn("edit_distance", dist(-1)))
 
-    frac = (sample_factor * n) / total
+    frac = (TOP_N_SAMPLE_FACTOR * n) / total
     sample = pairs.where(
         F.pmod(F.xxhash64("id_a", "id_b"), F.lit(1 << 20))
         < int(frac * (1 << 20)))

@@ -1,6 +1,8 @@
 """End-to-end record-linkage plan: canonicalize → block → pair → score →
-cluster, with optional stage checkpointing (resume) and an evaluation
-helper (pairwise F1 vs ground-truth labels).
+cluster, with optional stage checkpointing (resume), and the one
+DataFrame builder per evaluation metric (pairwise F1, B-cubed, blocking
+quality against ground-truth labels): the graded driver-contract
+queries return the builders' rows, and the dict helpers read them.
 
 This is the engine's flagship dataflow (BASELINE.json north_star).
 """
@@ -9,7 +11,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.blocking import length_band, minhash_blocks
@@ -102,71 +104,149 @@ def run_linkage(transcripts: DataFrame, cfg: LinkageConfig | None = None,
             "scored": scored, "edges": edges, "clusters": clusters}
 
 
+def contingency(assign: DataFrame) -> DataFrame:
+    """(cluster_id, truth_id, n): the contingency table of predicted
+    clusters against truth labels, from one (cluster_id, truth_id) row
+    per record.  At most one row per (cluster, label) overlap, so every
+    evaluation below shuffles O(#clusters) rows, never record pairs."""
+    return (assign.groupBy("cluster_id", "truth_id")
+            .agg(F.count(F.lit(1)).alias("n")))
+
+
+def pairwise_eval(assign: DataFrame) -> DataFrame:
+    """One row (tp, fp, fn, pairwise_precision, pairwise_recall,
+    pairwise_f1) of predicted clusters against truth; ``assign`` has one
+    (cluster_id, truth_id) row per record.
+
+    The contingency-table pair-counting identity: tp = sum of C(n,2)
+    over the cells, tp + fp and tp + fn the same sum over the two
+    marginals, so nothing quadratic is materialized and a predicted
+    cluster of 10^6 records is one cell row, not 5*10^11 pairs.  F1 is
+    2tp/(pp + tpp) (the denominator is 2tp + fp + fn); each ratio is one
+    bigint/bigint division."""
+    cells = contingency(assign).localCheckpoint(eager=False)
+    # coalesce: with zero cells sum() is NULL, and an empty assignment
+    # must still report zero counts
+    half = "s * (s - 1) div 2"
+    zero = F.lit(0).cast("bigint")
+    tp = cells.agg(F.coalesce(F.sum(F.expr("n * (n - 1) div 2")), zero)
+                   .alias("tp"))
+    pp = (cells.groupBy("cluster_id").agg(F.sum("n").alias("s"))
+          .agg(F.coalesce(F.sum(F.expr(half)), zero).alias("pp")))
+    tt = (cells.groupBy("truth_id").agg(F.sum("n").alias("s"))
+          .agg(F.coalesce(F.sum(F.expr(half)), zero).alias("tpp")))
+    tp_c, pp_c, tt_c = F.col("tp"), F.col("pp"), F.col("tpp")
+    return tp.crossJoin(pp).crossJoin(tt).select(
+        tp_c.cast("bigint").alias("tp"),
+        (pp_c - tp_c).cast("bigint").alias("fp"),
+        (tt_c - tp_c).cast("bigint").alias("fn"),
+        F.when(pp_c > 0, tp_c / pp_c).otherwise(F.lit(1.0))
+         .alias("pairwise_precision"),
+        F.when(tt_c > 0, tp_c / tt_c).otherwise(F.lit(1.0))
+         .alias("pairwise_recall"),
+        F.when(pp_c + tt_c > 0, (F.lit(2.0) * tp_c) / (pp_c + tt_c))
+         .otherwise(F.lit(1.0)).alias("pairwise_f1"))
+
+
+def bcubed_eval(assign: DataFrame) -> DataFrame:
+    """B-cubed (Bagga & Baldwin 1998) cell table of predicted clusters
+    against truth: (cluster_id, truth_id, n, pred_size, truth_size,
+    precision_mass, recall_mass), one row per contingency cell;
+    ``assign`` has one (cluster_id, truth_id) row per record.
+
+    The per-record definition (a record's precision is the share of
+    its predicted cluster that carries its truth label) collapses onto
+    the cells: B-cubed precision = sum(precision_mass) / N with
+    precision_mass = n^2 / pred_size, recall likewise over truth_size.
+    Each mass is one bigint/bigint division; the two marginal sizes
+    are window sums over the cell table."""
+    cells = contingency(assign)
+    wp = Window.partitionBy("cluster_id")
+    wt = Window.partitionBy("truth_id")
+    return (cells
+            .withColumn("pred_size", F.sum("n").over(wp))
+            .withColumn("truth_size", F.sum("n").over(wt))
+            .select("cluster_id", "truth_id",
+                    F.col("n").cast("bigint").alias("n"),
+                    F.col("pred_size").cast("bigint").alias("pred_size"),
+                    F.col("truth_size").cast("bigint").alias("truth_size"),
+                    (F.col("n") * F.col("n") / F.col("pred_size"))
+                    .alias("precision_mass"),
+                    (F.col("n") * F.col("n") / F.col("truth_size"))
+                    .alias("recall_mass")))
+
+
+def blocking_eval(pairs: DataFrame, truth: DataFrame) -> DataFrame:
+    """One row of blocking quality (Christen, "Data Matching", 2012):
+    n_records, n_total_pairs = C(n,2), n_candidates, n_truth_pairs,
+    n_covered_pairs (true pairs among the candidates), reduction_ratio
+    RR = 1 - n_candidates / C(n,2) and pairs_completeness
+    PC = n_covered_pairs / n_truth_pairs, the recall ceiling of any
+    scorer downstream.
+
+    ``pairs``: (id_a, id_b); ``truth``: one (conv_id, truth_id) row per
+    record.  True pairs come from the label sizes and the covered count
+    from two equi-joins of the candidates against the labels, so
+    nothing quadratic is materialized."""
+    tot = truth.agg(F.count(F.lit(1)).alias("n"))
+    cand = pairs.agg(F.count(F.lit(1)).alias("n_candidates"))
+    cov = (pairs
+           .join(truth.select(F.col("conv_id").alias("id_a"),
+                              F.col("truth_id").alias("lab_a")), "id_a")
+           .join(truth.select(F.col("conv_id").alias("id_b"),
+                              F.col("truth_id").alias("lab_b")), "id_b")
+           .where(F.col("lab_a") == F.col("lab_b"))
+           .agg(F.count(F.lit(1)).alias("n_covered")))
+    tru = (truth.groupBy("truth_id").agg(F.count(F.lit(1)).alias("s"))
+           .agg(F.coalesce(F.sum(F.expr("s * (s - 1) div 2")),
+                           F.lit(0).cast("bigint")).alias("n_truth")))
+    total = F.expr("n * (n - 1) div 2")
+    return tot.crossJoin(cand).crossJoin(cov).crossJoin(tru).select(
+        F.col("n").cast("bigint").alias("n_records"),
+        total.cast("bigint").alias("n_total_pairs"),
+        F.col("n_candidates").cast("bigint").alias("n_candidates"),
+        F.col("n_truth").cast("bigint").alias("n_truth_pairs"),
+        F.col("n_covered").cast("bigint").alias("n_covered_pairs"),
+        F.when(total > 0, F.lit(1.0) - F.col("n_candidates") / total)
+         .otherwise(F.lit(1.0)).alias("reduction_ratio"),
+        F.when(F.col("n_truth") > 0,
+               F.col("n_covered") / F.col("n_truth"))
+         .otherwise(F.lit(1.0)).alias("pairs_completeness"))
+
+
+def _labelled(clusters: DataFrame, truth: DataFrame) -> DataFrame:
+    """One (cluster_id, truth_id) row per record of ``clusters`` that
+    ``truth`` labels; both inputs are (conv_id, cluster_id)."""
+    return clusters.join(
+        truth.select("conv_id", F.col("cluster_id").alias("truth_id")),
+        "conv_id").select("cluster_id", "truth_id")
+
+
 def pairwise_f1(clusters: DataFrame, truth: DataFrame) -> dict:
-    """Pairwise precision/recall/F1 of predicted clusters vs truth.
-
-    Both inputs: (conv_id, cluster_id).  Pair counts are computed from
-    cluster/label sizes and an intersection contingency — no quadratic
-    pair materialization, so this evaluates at any scale.
-    """
-    joined = (clusters.withColumnRenamed("cluster_id", "pred")
-              .join(truth.withColumnRenamed("cluster_id", "label"),
-                    "conv_id"))
-
-    def _pairs(count_col):
-        return (count_col * (count_col - 1) / 2)
-
-    pred_pairs = (joined.groupBy("pred").count()
-                  .agg(F.sum(_pairs(F.col("count")))).collect()[0][0]) or 0
-    true_pairs = (joined.groupBy("label").count()
-                  .agg(F.sum(_pairs(F.col("count")))).collect()[0][0]) or 0
-    both_pairs = (joined.groupBy("pred", "label").count()
-                  .agg(F.sum(_pairs(F.col("count")))).collect()[0][0]) or 0
-
-    precision = both_pairs / pred_pairs if pred_pairs else 1.0
-    recall = both_pairs / true_pairs if true_pairs else 1.0
-    f1 = (2 * precision * recall / (precision + recall)
-          if precision + recall else 0.0)
-    return {"precision": precision, "recall": recall, "f1": f1,
-            "pred_pairs": float(pred_pairs), "true_pairs": float(true_pairs),
-            "common_pairs": float(both_pairs)}
+    """Pairwise precision/recall/F1 of predicted clusters vs truth, as a
+    dict over :func:`pairwise_eval`'s row.  Both inputs:
+    (conv_id, cluster_id)."""
+    r = pairwise_eval(_labelled(clusters, truth)).first()
+    return {"precision": r["pairwise_precision"],
+            "recall": r["pairwise_recall"], "f1": r["pairwise_f1"],
+            "pred_pairs": float(r["tp"] + r["fp"]),
+            "true_pairs": float(r["tp"] + r["fn"]),
+            "common_pairs": float(r["tp"])}
 
 
 def bcubed(clusters: DataFrame, truth: DataFrame) -> dict:
-    """B-cubed precision/recall/F1 (Bagga & Baldwin 1998) of predicted
-    clusters vs truth — the record-weighted complement to
-    :func:`pairwise_f1`: pairwise counting weighs a cluster
-    quadratically in its size, so one giant merged cluster dominates
-    the score, while B-cubed weighs every RECORD once (singleton
-    handling and small-cluster purity stay visible).  Standard ER
-    practice reports both.
-
-    Both inputs: (conv_id, cluster_id).  The per-record definition
-    (precision of a record = the fraction of its predicted cluster
-    sharing its truth label) collapses onto the contingency cells:
-    precision = sum over cells of n^2/|pred cluster| / N and recall =
-    sum of n^2/|truth cluster| / N — nothing quadratic is
-    materialized; two window sums + one aggregation over the cell
-    table, which is at most one row per (pred, truth) overlap.
-    """
-    from pyspark.sql import Window
-    joined = (clusters.withColumnRenamed("cluster_id", "pred")
-              .join(truth.withColumnRenamed("cluster_id", "label"),
-                    "conv_id"))
-    cells = joined.groupBy("pred", "label").count()
-    wp = Window.partitionBy("pred")
-    wt = Window.partitionBy("label")
-    row = (cells
-           .withColumn("p_mass", F.col("count") * F.col("count")
-                       / F.sum("count").over(wp))
-           .withColumn("r_mass", F.col("count") * F.col("count")
-                       / F.sum("count").over(wt))
-           .agg(F.sum("p_mass").alias("p"), F.sum("r_mass").alias("r"),
-                F.sum("count").alias("n"))
-           .collect()[0])
-    n = row["n"] or 0
-    precision = row["p"] / n if n else 1.0
-    recall = row["r"] / n if n else 1.0
+    """B-cubed precision/recall/F1 of predicted clusters vs truth: the
+    masses of :func:`bcubed_eval`'s cells summed and divided by the
+    record count.  Pairwise counting weighs a cluster quadratically in
+    its size, so one giant merged cluster dominates it; B-cubed weighs
+    every record once.  Both inputs: (conv_id, cluster_id)."""
+    r = (bcubed_eval(_labelled(clusters, truth))
+         .agg(F.sum("precision_mass").alias("p"),
+              F.sum("recall_mass").alias("r"), F.sum("n").alias("n"))
+         .first())
+    n = r["n"] or 0
+    precision = r["p"] / n if n else 1.0
+    recall = r["r"] / n if n else 1.0
     f1 = (2 * precision * recall / (precision + recall)
           if precision + recall else 0.0)
     return {"precision": precision, "recall": recall, "f1": f1,
@@ -174,34 +254,15 @@ def bcubed(clusters: DataFrame, truth: DataFrame) -> dict:
 
 
 def blocking_quality(pairs: DataFrame, truth: DataFrame) -> dict:
-    """Standard blocking-evaluation metrics (Christen, "Data Matching",
-    2012): reduction ratio RR = 1 - |candidates| / C(n,2) and pairs
-    completeness PC = |true-match pairs among candidates| / |true-match
-    pairs| — PC bounds the recall any downstream scorer can reach.
-
-    ``pairs``: (id_a, id_b); ``truth``: (conv_id, cluster_id).  The
-    true-pair total comes from cluster sizes and the intersection from
-    two equi-joins of candidates against per-record labels — nothing
-    quadratic is materialized, so this evaluates at any scale."""
-    n = truth.count()
-    total = n * (n - 1) / 2
-    cand = pairs.count()
-    lab = truth.select(F.col("conv_id"), F.col("cluster_id"))
-    matched = (pairs
-               .join(lab.select(F.col("conv_id").alias("id_a"),
-                                F.col("cluster_id").alias("lab_a")), "id_a")
-               .join(lab.select(F.col("conv_id").alias("id_b"),
-                                F.col("cluster_id").alias("lab_b")), "id_b")
-               .where(F.col("lab_a") == F.col("lab_b")).count())
-    true_pairs = (truth.groupBy("cluster_id").count()
-                  .agg(F.sum(F.col("count") * (F.col("count") - 1) / 2))
-                  .collect()[0][0]) or 0
-    return {"n_records": n, "candidates": cand,
-            "reduction_ratio": 1.0 - cand / total if total else 1.0,
-            "pairs_completeness": (matched / true_pairs
-                                   if true_pairs else 1.0),
-            "true_pairs": float(true_pairs),
-            "true_in_candidates": matched}
+    """:func:`blocking_eval`'s row as a dict.  ``pairs``: (id_a, id_b);
+    ``truth``: (conv_id, cluster_id)."""
+    r = blocking_eval(pairs, truth.select(
+        "conv_id", F.col("cluster_id").alias("truth_id"))).first()
+    return {"n_records": r["n_records"], "candidates": r["n_candidates"],
+            "reduction_ratio": r["reduction_ratio"],
+            "pairs_completeness": r["pairs_completeness"],
+            "true_pairs": float(r["n_truth_pairs"]),
+            "true_in_candidates": r["n_covered_pairs"]}
 
 
 def measure_linkage(spark, scale: str,

@@ -31,6 +31,13 @@ from pyspark.sql.types import (
     IntegerType, StringType, StructField, StructType, TimestampType,
 )
 
+# The data dir of the checkout this package lives in (next to the
+# edlib_spark package): named corpora and the driver contract's side
+# tables land here, so a second checkout never reads the first one's.
+DATA_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__)))), "data")
+
 TRANSCRIPT_SCHEMA = StructType([
     StructField("conv_id", StringType(), False),
     StructField("turn_idx", IntegerType(), False),
@@ -135,12 +142,12 @@ def synth_transcripts(spark: SparkSession, n_clusters: int,
             .mapInPandas(gen, schema=TRANSCRIPT_SCHEMA))
 
 
-def transcripts_path(scale: str, base_dir: str = "/root/repo/data") -> str:
+def transcripts_path(scale: str, base_dir: str = DATA_DIR) -> str:
     return os.path.join(base_dir, f"transcripts_{scale}.parquet")
 
 
 def ensure_transcripts_parquet(spark: SparkSession, scale: str,
-                               base_dir: str = "/root/repo/data",
+                               base_dir: str = DATA_DIR,
                                seed: int = 42) -> str:
     """Materialize (once) the synthetic transcripts for a named scale;
     returns the parquet path.  Used by the driver-contract queries and

@@ -67,8 +67,7 @@ _STATE_SCHEMA = StructType([
 
 
 def stream_canonicalize(turns: DataFrame, end_role: str = "end",
-                        timeout_ms: int | None = None,
-                        sep: str = TURN_SEP) -> DataFrame:
+                        timeout_ms: int | None = None) -> DataFrame:
     """(conv_id, turn_idx, role, text) stream -> canonical conversation
     stream.  Marker turns (role == end_role) trigger emission and are
     excluded from the canonical text.
@@ -102,7 +101,7 @@ def stream_canonicalize(turns: DataFrame, end_role: str = "end",
             state.update(([], [], 1))
             if timeout_ms is not None:
                 state.setTimeoutDuration(timeout_ms)
-            yield _emit(conv_id, idxs, texts, sep, "timeout")
+            yield _emit(conv_id, idxs, texts, "timeout")
             return
         idxs, texts, done = state.get if state.exists else ([], [], 0)
         if done:
@@ -124,7 +123,7 @@ def stream_canonicalize(turns: DataFrame, end_role: str = "end",
             state.update(([], [], 1))  # tombstone against late turns
             if timeout_ms is not None:
                 state.setTimeoutDuration(timeout_ms)
-            yield _emit(conv_id, idxs, texts, sep, "end")
+            yield _emit(conv_id, idxs, texts, "end")
         else:
             state.update((idxs, texts, 0))
             if timeout_ms is not None:
@@ -138,9 +137,8 @@ def stream_canonicalize(turns: DataFrame, end_role: str = "end",
                                     "append", timeout_conf))
 
 
-def _emit(conv_id: str, idxs: list, texts: list, sep: str,
-          how: str) -> pd.DataFrame:
+def _emit(conv_id: str, idxs: list, texts: list, how: str) -> pd.DataFrame:
     order = sorted(range(len(idxs)), key=lambda i: (idxs[i], texts[i]))
-    full = sep.join(texts[i] for i in order)
+    full = TURN_SEP.join(texts[i] for i in order)
     return pd.DataFrame({"conv_id": [conv_id], "full_text": [full],
                          "n_turns": [len(idxs)], "complete": [how]})

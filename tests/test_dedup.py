@@ -183,7 +183,7 @@ def test_minhash_hot_block_salting_invariance(spark):
     # regardless of hot-block membership.
     n_groups = -(-hot_n // group_size)
     occupancy = (hot.select(
-        F.pmod(F.xxhash64(F.col("doc_id").cast("string")),
+        F.pmod(F.xxhash64(F.col("doc_id")),
                F.lit(n_groups)).alias("grp"))
         .groupBy("grp").count().collect())
     assert len(occupancy) == n_groups

@@ -50,6 +50,12 @@ def test_documents_text_ascii_and_gt_free(sf_dir):
 
 
 def test_turn_separator_single_byte():
-    from edlib_spark.driver_contract import SEP
+    """DuckDB's levenshtein() counts bytes and the kernel counts
+    codepoints, so the canonical oracles agree with the engine only
+    while the one turn separator, shared by canonicalize and the
+    contract's SQL, is a single byte."""
+    from edlib_spark import driver_contract as dc
+    from edlib_spark.operators.canonicalize import TURN_SEP
 
-    assert len(SEP.encode("utf-8")) == 1
+    assert len(TURN_SEP.encode()) == 1
+    assert f"string_agg(text, '{TURN_SEP}'" in dc._SQL_CANONICAL

@@ -2,13 +2,13 @@
 frame-sample -> resize, with the EDSM fake codec (real codecs stubbed,
 see operators.multimodal._decode_image_real)."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from edlib_spark.operators.multimodal import (_decode_image_real,
                                               decode_media,
                                               extract_feature_counts,
-                                              extract_features,
                                               media_from_documents,
                                               resize_images, sample_frames)
 
@@ -54,32 +54,21 @@ def test_decode_round_trip(docs, media):
             assert row.n_frames == 1 + mid % 60
 
 
-def test_features_shape_and_normalization(media):
-    feats = extract_features(media, n_bins=16).collect()
-    assert len(feats) == media.count()
-    for r in feats:
-        assert len(r.features) == 16
-        assert abs(sum(r.features) - 1.0) < 1e-5
-        assert all(v >= 0 for v in r.features)
-
-
 def test_feature_counts_match_vectors(media):
     """Exploded (media_id, bin_idx, cnt) rows are dense (16 per media)
-    and normalize to exactly the array form of extract_features."""
+    and equal a per-payload numpy byte histogram over 16 equal bins."""
     n_media = media.count()
     rows = extract_feature_counts(media, n_bins=16).collect()
     assert len(rows) == n_media * 16
     hist = {}
     for r in rows:
         hist.setdefault(r.media_id, [0] * 16)[r.bin_idx] = r.cnt
-    vecs = {r.media_id: r.features
-            for r in extract_features(media, n_bins=16).collect()}
-    assert set(hist) == set(vecs)
-    for mid, counts in hist.items():
-        total = sum(counts)
-        assert total > 0
-        for got, want in zip((c / total for c in counts), vecs[mid]):
-            assert abs(got - want) < 1e-6
+    want = {r.media_id: np.bincount(
+                np.frombuffer(bytes(r.payload), dtype=np.uint8) >> 4,
+                minlength=16).tolist()
+            for r in media.collect()}
+    assert hist == want
+    assert all(sum(counts) > 0 for counts in hist.values())
 
 
 def test_frame_sampling(media):

@@ -118,6 +118,24 @@ def test_block_keys_unique_by_construction(spark):
         assert len(keys) == per_conv * len(texts), keys
 
 
+def test_neardup_clusters_keep_native_ids(spark):
+    """Near-dup CC runs on the bigint doc ids themselves: no string
+    round trip, so no window re-min of the cluster id (one shuffle
+    fewer in every near-dup cluster query)."""
+    from edlib_spark import driver_contract as dc
+
+    docs = spark.createDataFrame([(1, "a"), (2, "b"), (10, "c")],
+                                 "doc_id bigint, text string")
+    edges = spark.createDataFrame([(2, 10)], "id_a bigint, id_b bigint")
+    clusters = dc._neardup_clusters_of(docs, edges)
+    p = plan_of(clusters, "simple")
+    assert "Window" not in p, p
+    assert clusters.dtypes == [("doc_id", "bigint"), ("cluster_id", "bigint")]
+    # numeric min: a string min would pick "10" < "2"
+    assert sorted(map(tuple, clusters.collect())) == [(1, 1), (2, 2),
+                                                      (10, 2)]
+
+
 def test_block_size_stats_are_broadcast(spark, transcripts_parquet):
     from edlib_spark.operators.canonicalize import canonicalize
     from edlib_spark.operators.pairs import candidate_pairs

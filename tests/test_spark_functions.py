@@ -184,7 +184,7 @@ def test_top_n_best_matches_unbounded_scan(spark):
     got = top_n_best(pairs, 15).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
-    # small-input fallback (total <= sample_factor * n)
+    # small-input fallback (total <= TOP_N_SAMPLE_FACTOR * n)
     small = pairs.limit(30)
     want_s = (small.withColumn("edit_distance",
                                edit_distance(F.col("text_a"),

@@ -165,3 +165,32 @@ def test_tools_import_their_own_checkout():
                     node.value, str):
                 assert repo not in node.value, (path, node.value)
     assert inserts >= 6, inserts  # the five contract/bench tools + bench.py
+
+
+def test_package_data_dir_is_its_own_checkout(tmp_path):
+    """The named corpora and the contract's side tables default to the
+    data dir next to the imported package: a second checkout of the
+    package (a parent-commit copy for an A/B, say) must read and write
+    its own ``data/``, never the first checkout's."""
+    import shutil
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    checkout = tmp_path / "checkout"
+    shutil.copytree(os.path.join(repo, "edlib_spark"),
+                    checkout / "edlib_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    probe = ("import inspect\n"
+             "from edlib_spark import driver_contract as dc\n"
+             "from edlib_spark.sources import transcripts as t\n"
+             "print(t.transcripts_path('small'))\n"
+             "print(inspect.signature(t.ensure_transcripts_parquet)"
+             ".parameters['base_dir'].default)\n"
+             "print(dc._GRAM_HASHES_PATH)\n")
+    out = subprocess.run([sys.executable, "-c", probe], cwd=checkout,
+                         env={**os.environ, "PYTHONPATH": str(checkout)},
+                         capture_output=True, text=True, check=True)
+    data = os.path.join(str(checkout), "data")
+    lines = out.stdout.split()
+    assert lines == [os.path.join(data, "transcripts_small.parquet"), data,
+                     os.path.join(data, "gram_hashes_current.parquet")]
