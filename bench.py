@@ -69,25 +69,20 @@ def ensure_bench_pairs(spark):
     throughput job (built once, reused across rounds)."""
     from pyspark.sql import functions as F
 
-    from edlib_spark.operators.canonicalize import canonicalize
-    from edlib_spark.operators.pairs import candidate_pairs
     from edlib_spark.operators.scoring import attach_texts
-    from edlib_spark.plans.linkage import LinkageConfig, build_blocks
+    from edlib_spark.plans.linkage import link_pairs
     from edlib_spark.sources.transcripts import ensure_transcripts_parquet
 
     if os.path.exists(os.path.join(PAIRS_PATH, "_SUCCESS")):
         return
     tpath = ensure_transcripts_parquet(spark, BENCH_SCALE)
-    t = spark.read.parquet(tpath)
-    canon = canonicalize(t).cache()
-    blocks = build_blocks(canon, LinkageConfig())
+    front = link_pairs(spark.read.parquet(tpath))
     # deterministic 1-in-6 pair sample: ~3M of the ~18M bench-scale
     # candidates — compute-bound for the scaling run yet fast to build
-    pairs = candidate_pairs(blocks).where(
+    pairs = front["pairs"].where(
         F.pmod(F.xxhash64("id_a", "id_b"), F.lit(6)) == 0)
-    (attach_texts(pairs, canon).repartition(128)
+    (attach_texts(pairs, front["canonical"]).repartition(128)
      .write.mode("overwrite").parquet(PAIRS_PATH))
-    canon.unpersist()
 
 
 def scoring_job(spark) -> tuple[float, int]:

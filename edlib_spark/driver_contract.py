@@ -4119,13 +4119,14 @@ def blocking_quality_small(spark: SparkSession, sf_dir: str) -> DataFrame:
     reach, the number that justifies a blocking strategy.  One builder
     in plans/linkage.py (``blocking_eval``) computes it here and in
     the dict helper ``blocking_quality`` (BENCH/BLOCKING.md); this
-    query passes it the truth prefix of every canonical conv_id."""
-    from .plans.linkage import LinkageConfig, blocking_eval, run_linkage
+    query passes it ``link_pairs``' pairs (no scorer, no CC) and the
+    truth prefix of every canonical conv_id."""
+    from .plans.linkage import blocking_eval, link_pairs
     path = ensure_transcripts_parquet(spark, "small")
-    stages = run_linkage(spark.read.parquet(path), LinkageConfig())
-    truth = stages["canonical"].select(
+    front = link_pairs(spark.read.parquet(path))
+    truth = front["canonical"].select(
         "conv_id", F.substring_index("conv_id", "_", 1).alias("truth_id"))
-    return blocking_eval(stages["pairs"].localCheckpoint(eager=False),
+    return blocking_eval(front["pairs"].localCheckpoint(eager=False),
                          truth)
 
 

@@ -23,12 +23,12 @@ Plan shape (deliberate):
     edit_distance pandas UDF (batched Myers)     -- per-pair k bound;
         the native scan bands each pair on its own, so batches need no
         length sort
-    norm_distance + match filter
+    norm_distance + match filter (match_rule)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.alignment import edit_distance, norm_distance
@@ -157,27 +157,14 @@ def top_n_best(pairs: DataFrame, n: int, mode: str = "NW") -> DataFrame:
     return top(bounded)
 
 
-def pending_pairs(pairs: DataFrame, done: DataFrame) -> DataFrame:
-    """Pair-level resume delta: candidate pairs not yet scored.
-
-    ``done``: any DataFrame carrying (id_a, id_b) of already-scored
-    pairs (e.g. the scored_pairs checkpoint of an interrupted run).
-    A left-anti join — the shuffle hashes only the id columns, so the
-    delta costs nothing text-wise; downstream scoring then runs on the
-    remainder and the union of old + new scored pairs is complete.
-    """
-    return pairs.join(done.select("id_a", "id_b"), ["id_a", "id_b"],
-                      "left_anti")
+def match_rule(tau: float = 0.2) -> Column:
+    """A scored pair matches when it is within the kernel's k bound
+    (edit_distance -1 otherwise) and its exact normalized distance is
+    within ``tau``."""
+    return ((F.col("edit_distance") >= 0)
+            & (F.col("norm_distance") <= F.lit(float(tau))))
 
 
 def match_edges(scored: DataFrame, tau: float = 0.2) -> DataFrame:
-    """(id_a, id_b) edges whose normalized distance is within threshold.
-
-    The scorer already enforced dist <= k = ceil(tau*max_len) via the
-    kernel's k bound (dist == -1 otherwise), so this is a residual
-    filter on the exact normalized value.
-    """
-    return (scored
-            .where((F.col("edit_distance") >= 0)
-                   & (F.col("norm_distance") <= F.lit(float(tau))))
-            .select("id_a", "id_b"))
+    """(id_a, id_b) of the scored pairs that pass :func:`match_rule`."""
+    return scored.where(match_rule(tau)).select("id_a", "id_b")

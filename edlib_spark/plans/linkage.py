@@ -64,44 +64,57 @@ def build_blocks(canon: DataFrame, cfg: LinkageConfig) -> DataFrame:
     return blocks
 
 
-def run_linkage(transcripts: DataFrame, cfg: LinkageConfig | None = None,
-                catalog: RunCatalog | None = None) -> dict:
-    """Run the full pipeline; returns dict of stage DataFrames.
+def _stage(catalog, name, build, pin=False):
+    """Checkpoint stage ``name`` through ``catalog`` (resumed when
+    complete), or else build it and, with ``pin``, lazily
+    localCheckpoint it: its consumers would otherwise recompute it."""
+    if catalog is not None:
+        return catalog.stage(name, build)
+    df = build()
+    return df.localCheckpoint(eager=False) if pin else df
 
-    With a ``catalog``, every stage checkpoints (parquet + manifest) and
-    an interrupted run resumes from the last completed stage.
-    """
+
+def link_pairs(transcripts: DataFrame, cfg: LinkageConfig | None = None,
+               catalog: RunCatalog | None = None) -> dict:
+    """The pipeline's front, canonical -> blocks -> candidate pairs, as
+    {"canonical", "blocks", "pairs"}; it builds no scorer and no CC.
+    Without a ``catalog``, the lazy pin of canonical (and of blocks
+    when ``use_minhash``) runs its exchange's map stage here."""
     cfg = cfg or LinkageConfig()
-
-    def _stage(name, build, reused=False):
-        if catalog is not None:
-            return catalog.stage(name, build)
-        df = build()
-        if reused:
-            # without a checkpoint catalog, pin stages that downstream
-            # consumers would otherwise recompute (the scorer UDF must
-            # run exactly once)
-            df = df.localCheckpoint(eager=False)
-        return df
-
-    canon = _stage("canonical", lambda: canonicalize(transcripts),
-                   reused=True)
+    canon = _stage(catalog, "canonical", lambda: canonicalize(transcripts),
+                   pin=True)
     # candidate_pairs scans its blocks three times (size stats, both
     # salt roles): a select over the pinned canon for structural keys,
     # but the MinHash signatures are worth computing once
-    blocks = _stage("blocks", lambda: build_blocks(canon, cfg),
-                    reused=cfg.use_minhash)
-    pairs = _stage("candidate_pairs", lambda: candidate_pairs(blocks))
-    scored = _stage("scored_pairs",
-                    lambda: score_pairs(pairs, canon, cfg.tau, cfg.mode),
-                    reused=True)
+    blocks = _stage(catalog, "blocks", lambda: build_blocks(canon, cfg),
+                    pin=cfg.use_minhash)
+    pairs = _stage(catalog, "candidate_pairs",
+                   lambda: candidate_pairs(blocks))
+    return {"canonical": canon, "blocks": blocks, "pairs": pairs}
+
+
+def run_linkage(transcripts: DataFrame, cfg: LinkageConfig | None = None,
+                catalog: RunCatalog | None = None) -> dict:
+    """:func:`link_pairs`, then scored_pairs -> edges -> clusters;
+    returns dict of stage DataFrames.  With a ``catalog``, every stage
+    checkpoints (parquet + manifest) and an interrupted run resumes
+    from the last completed stage.  Without one, Spark jobs run while
+    the dict is built: each lazy pin's map stage (canonical, scored),
+    then CC's edge fingerprints and, for a small edge set, its driver
+    collect, which run canonical -> edges in full.
+    """
+    cfg = cfg or LinkageConfig()
+    front = link_pairs(transcripts, cfg, catalog)
+    canon = front["canonical"]
+    # pinned: the scorer UDF must run exactly once
+    scored = _stage(catalog, "scored_pairs", lambda: score_pairs(
+        front["pairs"], canon, cfg.tau, cfg.mode), pin=True)
     # edges is a narrow filter over the pinned scored stage, and
     # connected_components pins its own input: no second pin here
-    edges = _stage("edges", lambda: match_edges(scored, cfg.tau))
-    clusters = _stage("clusters",
+    edges = _stage(catalog, "edges", lambda: match_edges(scored, cfg.tau))
+    clusters = _stage(catalog, "clusters",
                       lambda: cluster_assignments(canon, edges))
-    return {"canonical": canon, "blocks": blocks, "pairs": pairs,
-            "scored": scored, "edges": edges, "clusters": clusters}
+    return {**front, "scored": scored, "edges": edges, "clusters": clusters}
 
 
 def contingency(assign: DataFrame) -> DataFrame:
@@ -288,8 +301,9 @@ def measure_linkage(spark, scale: str,
     n_convs = transcripts.select("conv_id").distinct().count()
 
     t0 = time.perf_counter()
-    # run_linkage executes the chain during construction: the CC loop's
-    # fixpoint iterations force canonical -> ... -> edges eagerly
+    # run_linkage runs Spark jobs during construction: each lazy pin's
+    # map stage, and CC's edge fingerprint and driver collect, which
+    # force canonical -> ... -> edges; clusters.count() runs the rest
     stages = run_linkage(transcripts, cfg or LinkageConfig())
     clusters = stages["clusters"]
     clusters.count()

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.scoring import score_attached
+from ..operators.scoring import match_rule, score_attached
 
 
 def score_pair_stream(pairs: DataFrame, tau: float = 0.2,
@@ -83,9 +83,7 @@ def run_stream_scoring(spark: SparkSession, input_path: str,
     stops (used by tests and backfills); False runs continuously."""
     stream = (spark.readStream.schema(schema).parquet(input_path))
     scored = score_pair_stream(stream, tau=tau, mode=mode)
-    matches = scored.where((F.col("edit_distance") >= 0)
-                           & (F.col("norm_distance") <= F.lit(float(tau))))
-    writer = (matches.writeStream
+    writer = (scored.where(match_rule(tau)).writeStream
               .format("parquet")
               .option("path", output_path)
               .option("checkpointLocation", checkpoint_path)

@@ -121,14 +121,12 @@ def test_bcubed_eval_invariants_and_matches_dict_twin(spark):
         assert r["n"] == r["pred_size"] == r["truth_size"], r
 
 
-def test_blocking_quality_matches_dict_twin(spark):
-    """Same coherence pin for the blocking audit: the graded query and
-    plans/linkage.blocking_quality must agree on every count, and the
-    structural blocker must keep ALL true pairs (PC = 1.0 is why it is
-    the transcripts default) while pruning the vast majority of the
-    pair space."""
-    from edlib_spark.plans.linkage import (LinkageConfig,
-                                           blocking_quality, run_linkage)
+def _check_blocking_twin(spark):
+    """The graded blocking audit's row equals the dict helper's over
+    link_pairs' own pairs, keeps ALL true pairs (PC = 1.0 is why the
+    structural blocker is the transcripts default) and prunes the vast
+    majority of the pair space."""
+    from edlib_spark.plans.linkage import blocking_quality, link_pairs
     from edlib_spark.sources.transcripts import ensure_transcripts_parquet
     row = dc.blocking_quality_small(spark, SF).collect()[0]
     assert row["pairs_completeness"] == 1.0, row
@@ -136,13 +134,34 @@ def test_blocking_quality_matches_dict_twin(spark):
     assert (row["n_total_pairs"]
             == row["n_records"] * (row["n_records"] - 1) // 2)
     path = ensure_transcripts_parquet(spark, "small")
-    stages = run_linkage(spark.read.parquet(path), LinkageConfig())
-    truth = stages["canonical"].select(
+    front = link_pairs(spark.read.parquet(path))
+    truth = front["canonical"].select(
         "conv_id",
         F.substring_index("conv_id", "_", 1).alias("cluster_id"))
-    d = blocking_quality(stages["pairs"], truth)
+    d = blocking_quality(front["pairs"], truth)
     assert row["n_records"] == d["n_records"]
     assert row["n_candidates"] == d["candidates"]
     assert row["n_truth_pairs"] == d["true_pairs"]
     assert row["n_covered_pairs"] == d["true_in_candidates"]
     assert row["reduction_ratio"] == pytest.approx(d["reduction_ratio"])
+    assert row["pairs_completeness"] == pytest.approx(
+        d["pairs_completeness"])
+
+
+def test_blocking_quality_matches_dict_twin(spark):
+    """Same coherence pin for the blocking audit: the graded query and
+    plans/linkage.blocking_quality must agree on every count."""
+    _check_blocking_twin(spark)
+
+
+def test_blocking_quality_builds_no_scorer_or_cc(spark, monkeypatch):
+    """Pairs-only callers build the pair front and nothing more: with
+    the scorer and CC made to raise, the graded blocking audit and
+    link_pairs still return the same row."""
+    from edlib_spark.plans import linkage
+
+    def back_half(*args, **kwargs):
+        raise AssertionError("a pairs-only caller built the scorer or CC")
+    monkeypatch.setattr(linkage, "score_pairs", back_half)
+    monkeypatch.setattr(linkage, "cluster_assignments", back_half)
+    _check_blocking_twin(spark)

@@ -211,20 +211,6 @@ def test_checkpoint_manifests_lineage(spark, tmp_run_dir):
         assert all("partition_id" in p for p in m["partitions"])
 
 
-def test_pending_pairs_resume_delta(spark):
-    from edlib_spark.operators.scoring import pending_pairs
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "c"), ("b", "d")],
-        "id_a string, id_b string")
-    done = spark.createDataFrame(
-        [("a", "b"), ("b", "c")], "id_a string, id_b string")
-    got = {(r.id_a, r.id_b) for r in pending_pairs(pairs, done).collect()}
-    assert got == {("a", "c"), ("b", "d")}
-    # scoring the delta and unioning with done covers every pair
-    assert got | {(r.id_a, r.id_b) for r in done.collect()} == \
-        {(r.id_a, r.id_b) for r in pairs.collect()}
-
-
 def test_incremental_cc_equals_batch(spark):
     """merge_edges_into_clusters(assignments(old), delta) must equal a
     full-batch recompute over old+delta, across random graphs covering:

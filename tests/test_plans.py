@@ -25,18 +25,22 @@ def transcripts_parquet(spark, tmp_path_factory):
     return path
 
 
-def test_scorer_plan_single_arrow_boundary_no_cartesian(
-        spark, transcripts_parquet):
-    from edlib_spark.operators.canonicalize import canonicalize
-    from edlib_spark.operators.pairs import candidate_pairs
-    from edlib_spark.operators.scoring import score_pairs
-    from edlib_spark.plans.linkage import LinkageConfig, build_blocks
+@pytest.fixture(scope="module")
+def front(spark, transcripts_parquet):
+    """The pair front as run_linkage builds it (canonical pinned)."""
+    from edlib_spark.plans.linkage import link_pairs
+    return link_pairs(spark.read.parquet(transcripts_parquet))
 
-    t = spark.read.parquet(transcripts_parquet)
-    canon = canonicalize(t)
-    pairs = candidate_pairs(build_blocks(canon, LinkageConfig()))
-    scored = score_pairs(pairs, canon)
-    p = plan_of(scored, "simple")
+
+def scored_plan(front):
+    """Plan of run_linkage's scored_pairs stage over ``front``."""
+    from edlib_spark.operators.scoring import score_pairs
+    return plan_of(score_pairs(front["pairs"], front["canonical"]),
+                   "simple")
+
+
+def test_scorer_plan_single_arrow_boundary_no_cartesian(front):
+    p = scored_plan(front)
     assert p.count("ArrowEvalPython") == 1, p
     assert "CartesianProduct" not in p, p
 
@@ -48,21 +52,13 @@ def _exchanges(plan, keys):
     return [ln.strip() for ln in plan.splitlines() if pat.search(ln)]
 
 
-def test_pair_stage_has_one_pair_exchange(spark, transcripts_parquet):
+def test_pair_stage_has_one_pair_exchange(spark, front):
     """Blocks -> pairs -> scorer shuffles the skinny pairs once: block
     keys are unique by construction (no (conv_id, block_key) dedupe
     exchange), and the pair dedupe runs on the scorer's
     (id_a, id_b) -> defaultParallelism partitioning, so the text attach
     plans no exchange of its own."""
-    from edlib_spark.operators.canonicalize import canonicalize
-    from edlib_spark.operators.pairs import candidate_pairs
-    from edlib_spark.operators.scoring import score_pairs
-    from edlib_spark.plans.linkage import LinkageConfig, build_blocks
-
-    canon = canonicalize(spark.read.parquet(transcripts_parquet))
-    p = plan_of(score_pairs(
-        candidate_pairs(build_blocks(canon, LinkageConfig())), canon),
-        "simple")
+    p = scored_plan(front)
     assert not _exchanges(p, ["conv_id", "block_key"]), p
     pair_ex = _exchanges(p, ["id_a", "id_b"])
     par = spark.sparkContext.defaultParallelism
@@ -136,15 +132,8 @@ def test_neardup_clusters_keep_native_ids(spark):
                                                       (10, 2)]
 
 
-def test_block_size_stats_are_broadcast(spark, transcripts_parquet):
-    from edlib_spark.operators.canonicalize import canonicalize
-    from edlib_spark.operators.pairs import candidate_pairs
-    from edlib_spark.plans.linkage import LinkageConfig, build_blocks
-
-    t = spark.read.parquet(transcripts_parquet)
-    pairs = candidate_pairs(
-        build_blocks(canonicalize(t), LinkageConfig()))
-    p = plan_of(pairs)
+def test_block_size_stats_are_broadcast(front):
+    p = plan_of(front["pairs"])
     # the per-block size annotation join must not shuffle the members
     assert "BroadcastHashJoin" in p, p
 
@@ -167,19 +156,10 @@ def test_query_vs_corpus_uses_broadcast(spark):
     assert "CartesianProduct" not in p, p
 
 
-def test_length_prefilter_precedes_kernel(spark, transcripts_parquet):
+def test_length_prefilter_precedes_kernel(front):
     """The k < |len diff| shortcut must run JVM-side BEFORE the Arrow
     boundary (pairs pruned without invoking Python)."""
-    from edlib_spark.operators.canonicalize import canonicalize
-    from edlib_spark.operators.pairs import candidate_pairs
-    from edlib_spark.operators.scoring import score_pairs
-    from edlib_spark.plans.linkage import LinkageConfig, build_blocks
-
-    t = spark.read.parquet(transcripts_parquet)
-    canon = canonicalize(t)
-    scored = score_pairs(
-        candidate_pairs(build_blocks(canon, LinkageConfig())), canon)
-    p = plan_of(scored, "simple")
+    p = scored_plan(front)
     arrow_pos = p.find("ArrowEvalPython")
     # the abs(len diff) filter must appear BELOW (later in the printed
     # tree = earlier in execution than) the Arrow node

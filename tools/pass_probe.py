@@ -19,8 +19,8 @@ the tool records the wall, Spark jobs, stages run, py4j commands sent by
 the driver and shuffle bytes written.  The linkage modes also time
 building the canonical -> edges DataFrames with no action (py4j
 commands and ms).  Then one more run of the pair query (the scored
-pairs, over a pinned canon as ``run_linkage`` pins it; for ``contract``
-the query itself) gives the final AQE plan's shuffle and
+pairs over ``link_pairs``' front, as ``run_linkage`` scores them; for
+``contract`` the query itself) gives the final AQE plan's shuffle and
 broadcast query stages and the bytes written by each exchange.
 
 Prints one JSON object.  The tool imports the checkout it lives in, so
@@ -156,7 +156,7 @@ def main(argv=None) -> None:
     from edlib_spark.operators.pairs import candidate_pairs
     from edlib_spark.operators.scoring import match_edges, score_pairs
     from edlib_spark.plans.linkage import (LinkageConfig, build_blocks,
-                                           run_linkage)
+                                           link_pairs, run_linkage)
     from edlib_spark.session import get_spark
     from edlib_spark.sources.transcripts import SCALES, synth_transcripts
 
@@ -197,9 +197,9 @@ def main(argv=None) -> None:
             row = {"group": group, "wall_s": time.perf_counter() - t0,
                    "py4j": py4j[0] - c0}
             if args.mode != "contract":
-                # construction only: no action and no pin (a lazy
-                # localCheckpoint over an AQE plan with an exchange runs
-                # that exchange's map stages at the call)
+                # construction only: no action and no pin, so not
+                # link_pairs (a lazy localCheckpoint over an AQE plan with
+                # an exchange runs that exchange's map stages at the call)
                 sc.setJobGroup(f"build{i}", "build")
                 c0, t0 = py4j[0], time.perf_counter()
                 canon = canonicalize(transcripts)
@@ -213,9 +213,9 @@ def main(argv=None) -> None:
         if args.mode == "contract":
             query = query_fn(spark, args.sf_dir)
         else:
-            canon = canonicalize(transcripts).localCheckpoint(eager=False)
-            query = score_pairs(candidate_pairs(build_blocks(canon, cfg)),
-                                canon, cfg.tau)
+            front = link_pairs(transcripts, cfg)
+            query = score_pairs(front["pairs"], front["canonical"],
+                                cfg.tau, cfg.mode)
         out["query_rows"] = len(query.collect())
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
