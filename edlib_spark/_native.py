@@ -1,32 +1,39 @@
-"""cffi-compiled banded Myers scan: the batch distance kernel.
+"""cffi-compiled banded Myers scans: the batch distance kernel and the
+NW traceback.
 
-``batch_distance`` JIT-compiles (once, cached on disk) a small C
-implementation of the banded Myers bit-vector scan with per-pair k,
-score-maintained Ukkonen band (extend while the bottom cell <= k, shrink
-while a boundary block's bottom cell >= k+64), in-flight k tightening,
-bottom-row popcount correction and band-death early exit, and runs it
-per pair directly over raw codepoint buffers (per-pair alphabet mapping
-happens in C via a generation-stamped table, like the reference's
-transformSequences but without its 256-symbol cap: the table is sized
-to the batch's largest codepoint + 1, so any Unicode text, astral
-plane included, is scored here).  An unbounded pair (k < 0) runs
-edlib's dynamic-k doubling (edlib.cpp:196-217): banded scans at
-k = 64, 128, ... up to the largest possible distance, stopping at the
-first one that finds the distance.
+The C source (JIT-compiled once, cached on disk) holds ONE banded NW
+scan, ``nw_scan``: a transcription of kernel._scan_nw and of the
+reference's single myersCalcEditDistanceNW (edlib.cpp:707-928), the
+one C home of the NW band rules (initial width, in-flight k
+tightening, extend, the two shrinks, the strong reduce every 2048
+columns).  Its optional band save serves every NW caller:
 
-The same module carries the NW traceback (saved-band scan + walk, a
-transcription of kernel._scan_nw / kernel._traceback) and
-``batch_nw_align``, align_expr's NW lane for a whole Arrow batch: per
-pair it recodes through the same stamped map, reports the alphabet
-size and, where asked, runs the traceback at k = d and run-length
-encodes the CIGAR into one shared byte buffer.
+- ``batch_distance`` (per-pair k; k < 0 runs edlib's k = 64, 128, ...
+  doubling, edlib.cpp:196-217) saves nothing;
+- ``batch_nw_align`` (align_expr's NW lane) and ``nw_align_path``
+  save every column, then walk the band (``nw_walk``, a transcription
+  of kernel._traceback) and, in the batch lane, run-length encode the
+  CIGAR;
+- ``nw_fill_alignment`` saves every column or one ``target_stop``
+  column (the Hirschberg hook) for kernel.py to walk.
+
+HW / SHW distances keep their own semi-global loop, as edlib keeps a
+separate myersCalcEditDistanceSemiGlobal.  One builder makes the match
+profile (Peq) for every scan from dense codes plus equality pairs in
+code space: the batch lanes recode each pair through a
+generation-stamped codepoint table sized to the batch's largest
+codepoint + 1 (any Unicode text, astral plane included, without the
+reference's 256-symbol cap) and map their codepoint equality pairs
+through it; the per-pair exports take kernel.encode_pair's dense codes
+and turn its equality matrix into pairs in Python.
 
 Results equal the exact single-pair kernel (``kernel.align``); the
 differential tests run every batch case with and without this
-library.  This is an implementation of the published Myers 1999
-bit-vector algorithm with Ukkonen banding written from scratch for this
-engine — NOT a copy of the reference C++ (semantics cross-checked
-against the reference suite via the Python kernels).
+library, and pin the saved band to kernel._scan_nw bit-for-bit.  This
+is an implementation of the published Myers 1999 bit-vector algorithm
+with Ukkonen banding written from scratch for this engine — NOT a copy
+of the reference C++ (semantics cross-checked against the reference
+suite via the Python kernels).
 
 Degrades loudly: if cffi or a C compiler is unavailable the import
 leaves ``lib = None``, records the cause in ``build_error`` and emits
@@ -85,6 +92,7 @@ typedef struct {
     int64_t *score;
     int64_t cap_nb, cap_sigma, cap_q, cap_t;
     const uint32_t *eqa, *eqb;  /* additional-equality codepoint pairs */
+    int32_t *eqca, *eqcb;       /* the same pairs in the current pair's codes */
     int64_t n_eq;
 } scratch;
 
@@ -111,44 +119,60 @@ static int32_t recode_pair(const uint32_t *q, int64_t qlen,
     return sigma;
 }
 
-/* Match profile of the pair recode_pair just mapped, into s->peq:
-   sigma planes of nb words, bit r of plane c set iff query row r
-   matches symbol c; padding rows past the query end match every
-   symbol.  Needs sigma <= s->cap_sigma and nb <= s->cap_nb. */
-static void fill_peq(scratch *s, int32_t sigma, int64_t qlen, int64_t nb) {
-    word *peq = s->peq;
+/* The match profile (edlib's buildPeq, edlib.cpp:352-384; kernel.build_peq)
+   over dense query codes qs: sigma planes of nb words, bit r of plane
+   c set iff query row r matches symbol c; padding rows past the query
+   end match every symbol.  (eqa[e], eqb[e]) are additional equalities
+   in code space: each pair ORs the other symbol's query rows into both
+   planes, read from a SNAPSHOT of the identity planes in snap (sigma *
+   nb words, untouched when n_eq == 0), so the relation is not
+   transitive ('N'~'A' and 'N'~'C' must not imply 'A'~'C'), matching
+   the reference matrix (edlib.cpp:63-94). */
+static void build_peq(word *peq, word *snap, const int32_t *qs,
+                      int64_t qlen, int64_t nb, int64_t sigma,
+                      const int32_t *eqa, const int32_t *eqb,
+                      int64_t n_eq) {
     memset(peq, 0, (size_t)(sigma * nb) * sizeof(word));
     for (int64_t r = 0; r < qlen; r++)
-        peq[(int64_t)s->qs[r] * nb + (r >> 6)] |= 1ULL << (r & 63);
-    if (s->n_eq > 0) {
-        /* Additional equalities widen the match profile: plane[b] also
-           gets the query-row bits of every symbol declared equal to b.
-           ORs read a SNAPSHOT of the identity planes: the relation is
-           not transitive ('N'~'A' and 'N'~'C' must not imply 'A'~'C'),
-           matching the reference matrix (edlib.cpp:63-94). */
-        memcpy(s->peq2, peq, (size_t)(sigma * nb) * sizeof(word));
-        for (int64_t e = 0; e < s->n_eq; e++) {
-            uint32_t a = s->eqa[e], c = s->eqb[e];
-            if (a >= s->n_cp || c >= s->n_cp) continue;
-            if (s->stamp[a] != s->gen || s->stamp[c] != s->gen) continue;
-            int64_t ca = s->map[a], cb = s->map[c];
-            if (ca == cb) continue;
+        peq[(int64_t)qs[r] * nb + (r >> 6)] |= 1ULL << (r & 63);
+    if (n_eq > 0) {
+        memcpy(snap, peq, (size_t)(sigma * nb) * sizeof(word));
+        for (int64_t e = 0; e < n_eq; e++) {
+            int64_t ca = eqa[e], cb = eqb[e];
             for (int64_t blk = 0; blk < nb; blk++) {
-                peq[cb * nb + blk] |= s->peq2[ca * nb + blk];
-                peq[ca * nb + blk] |= s->peq2[cb * nb + blk];
+                peq[cb * nb + blk] |= snap[ca * nb + blk];
+                peq[ca * nb + blk] |= snap[cb * nb + blk];
             }
         }
     }
     int64_t w = nb * WBITS - qlen;
     if (w > 0) {
         word padmask = ~0ULL << (WBITS - w);
-        for (int32_t c = 0; c < sigma; c++) peq[c * nb + nb - 1] |= padmask;
+        for (int64_t c = 0; c < sigma; c++) peq[c * nb + nb - 1] |= padmask;
     }
+}
+
+/* build_peq for the pair recode_pair just mapped, into s->peq: the
+   batch's codepoint equality pairs go through the stamped map, and a
+   pair naming a symbol this pair lacks drops out.  Needs sigma <=
+   s->cap_sigma and nb <= s->cap_nb. */
+static void fill_peq(scratch *s, int32_t sigma, int64_t qlen, int64_t nb) {
+    int64_t n = 0;
+    for (int64_t e = 0; e < s->n_eq; e++) {
+        uint32_t a = s->eqa[e], c = s->eqb[e];
+        if (a >= s->n_cp || c >= s->n_cp) continue;
+        if (s->stamp[a] != s->gen || s->stamp[c] != s->gen) continue;
+        s->eqca[n] = s->map[a];
+        s->eqcb[n] = s->map[c];
+        n++;
+    }
+    build_peq(s->peq, s->peq2, s->qs, qlen, nb, sigma, s->eqca, s->eqcb, n);
 }
 
 static void scratch_free(scratch *s) {
     free(s->map); free(s->stamp); free(s->qs); free(s->ts); free(s->peq);
     free(s->peq2); free(s->pv); free(s->mv); free(s->score);
+    free(s->eqca); free(s->eqcb);
 }
 
 /* Batch scratch: the codepoint table sized to the batch's largest
@@ -188,14 +212,19 @@ static int scratch_init(scratch *s,
     s->qs = (int32_t *)malloc((size_t)max_q * sizeof(int32_t));
     s->ts = (int32_t *)malloc((size_t)max_t * sizeof(int32_t));
     s->peq = (word *)malloc((size_t)(s->cap_sigma * max_nb) * sizeof(word));
-    s->peq2 = (n_eq > 0)
-        ? (word *)malloc((size_t)(s->cap_sigma * max_nb) * sizeof(word))
-        : NULL;
+    s->peq2 = NULL; s->eqca = NULL; s->eqcb = NULL;
+    if (n_eq > 0) {
+        s->peq2 = (word *)malloc((size_t)(s->cap_sigma * max_nb)
+                                 * sizeof(word));
+        s->eqca = (int32_t *)malloc((size_t)n_eq * sizeof(int32_t));
+        s->eqcb = (int32_t *)malloc((size_t)n_eq * sizeof(int32_t));
+    }
     s->pv = (word *)malloc((size_t)max_nb * sizeof(word));
     s->mv = (word *)malloc((size_t)max_nb * sizeof(word));
     s->score = (int64_t *)malloc((size_t)max_nb * sizeof(int64_t));
     if (!s->map || !s->stamp || !s->qs || !s->ts || !s->peq || !s->pv
-        || !s->mv || !s->score || (n_eq > 0 && !s->peq2)) {
+        || !s->mv || !s->score
+        || (n_eq > 0 && (!s->peq2 || !s->eqca || !s->eqcb))) {
         scratch_free(s);
         return -1;
     }
@@ -224,6 +253,178 @@ static int scratch_reserve(scratch *s, int64_t need) {
     return 1;
 }
 
+/* Value of the cell in block row i (0 = top): the bottom cell's score
+   minus the vertical deltas of the rows below row i (the reference's
+   getBlockCellValues, edlib/src/edlib.cpp:470-482, one cell at a
+   time; kernel._block_cells). */
+static inline int64_t cell_value(word p, word m, int64_t score, int64_t i) {
+    word below = (i == WBITS - 1) ? 0ULL : (~0ULL << (i + 1));
+    return score - __builtin_popcountll(p & below)
+           + __builtin_popcountll(m & below);
+}
+
+/* Where nw_scan saves its band.  target_stop < 0: every column, layout
+   [c*nb + b], plus each column's first and last block — the
+   traceback's input.  target_stop >= 0: only that column, into slot 0,
+   and the scan stops there (the Hirschberg hook). */
+typedef struct {
+    word *ps, *ms;
+    int64_t *scores, *first_blocks, *last_blocks;
+    int64_t target_stop;
+} band_save;
+
+/* The banded NW scan: the one C home of the NW band rules, a
+   transcription of kernel._scan_nw and of the reference's single
+   myersCalcEditDistanceNW (edlib/src/edlib.cpp:707-928) — the
+   k < |tlen-qlen| shortcut, the initial width, in-flight k tightening,
+   extend, the two shrinks and the strong reduce every 2048 columns.
+   Like the reference's findAlignment / targetStopPosition arguments,
+   ``save`` picks what it keeps: NULL for pair_distance's distance
+   lane, every column for nw_path's traceback, and every column or the
+   target_stop column for nw_fill_alignment.  The saved band's SHAPE
+   feeds the traceback's block-availability checks, so
+   tests/test_batch.py pins it bit-for-bit to the Python scan.
+
+   peq: the query's match profile over the target's dense codes t.
+   bp/bm/bs: nb words of column state from the caller (the batch
+   scratch, or the per-pair exports' block); the scan allocates
+   nothing.  Returns the distance, or -1 when it exceeds k or the scan
+   stopped at target_stop. */
+static int32_t nw_scan(int64_t qlen, const int32_t *t, int64_t tlen,
+                       const word *peq, int64_t k,
+                       word *bp, word *bm, int64_t *bs,
+                       const band_save *save) {
+    int64_t diff = qlen > tlen ? qlen - tlen : tlen - qlen;
+    if (k < diff) return -1;
+    {
+        int64_t cap = qlen > tlen ? qlen : tlen;
+        if (k > cap) k = cap;
+    }
+    int64_t nb = (qlen + WBITS - 1) / WBITS;
+    int64_t w = nb * WBITS - qlen;
+
+    int64_t first = 0;
+    int64_t half = (k + qlen - tlen) / 2;     /* >= 0: k >= |q|-|t| */
+    int64_t band = half < k ? half : k;
+    int64_t last = (band + 1 + WBITS - 1) / WBITS;
+    if (last > nb) last = nb;
+    last -= 1;
+
+    for (int64_t b = 0; b <= last; b++) {
+        bs[b] = (b + 1) * WBITS;
+        bp[b] = ~0ULL;
+        bm[b] = 0ULL;
+    }
+
+    for (int64_t c = 0; c < tlen; c++) {
+        const word *pq = peq + (int64_t)t[c] * nb;
+        int hout = 1;
+        for (int64_t b = first; b <= last; b++) {
+            hout = step_block(&bp[b], &bm[b], pq[b], hout);
+            bs[b] += hout;
+        }
+
+        /* tighten k (edlib.cpp:791-795): the final cell is at most
+           this bottom-of-band cell plus the remaining rows/columns
+           (+W padding when in the last block) */
+        {
+            int64_t rem_t = tlen - c - 1;
+            int64_t rem_q = qlen - ((1 + last) * WBITS - 1) - 1;
+            int64_t cap = bs[last] + (rem_t > rem_q ? rem_t : rem_q)
+                          + (last == nb - 1 ? w : 0);
+            if (cap < k) k = cap;
+        }
+
+        /* extend band down when the next block's bottom row is still
+           diagonally feasible for <= k (edlib.cpp:797-808); the
+           entering block starts from the previous column's boundary
+           state and is advanced within this column */
+        if (last + 1 < nb
+            && !((last + 1) * WBITS - 1
+                 > k - bs[last] + 2 * WBITS - 2 - tlen + c + qlen)) {
+            last++;
+            bp[last] = ~0ULL;
+            bm[last] = 0ULL;
+            int nh = step_block(&bp[last], &bm[last], pq[last], hout);
+            bs[last] = bs[last - 1] - hout + WBITS + nh;
+            hout = nh;
+        }
+
+        /* shrink from below: value-dead or diagonally infeasible
+           (edlib.cpp:810-818, incl. the +1 slack) */
+        while (last >= first
+               && (bs[last] >= k + WBITS
+                   || ((last + 1) * WBITS - 1
+                       > k - bs[last] + 2 * WBITS - 2 - tlen + c + qlen
+                         + 1))) {
+            last--;
+        }
+        /* shrink from above (edlib.cpp:822-827) */
+        while (first <= last
+               && (bs[first] >= k + WBITS
+                   || ((first + 1) * WBITS - 1
+                       < bs[first] - k - tlen + qlen + c))) {
+            first++;
+        }
+
+        /* strong reduce (STRONG_REDUCE_NUM): drop boundary blocks none
+           of whose cells can still reach the final cell within k.  Each
+           block test is an existence check, so it starts from the rows
+           nearer the band's middle, where a live cell turns up first:
+           top row down for the bottom block, bottom row up for the top
+           one. */
+        if (c % 2048 == 0) {
+            while (last >= first) {
+                int64_t ncells = (last == nb - 1) ? WBITS - w : WBITS;
+                int reduce = 1;
+                for (int64_t i = 0; i < ncells; i++) {
+                    int64_t v = cell_value(bp[last], bm[last], bs[last], i);
+                    if (v <= k && last * WBITS + i
+                                  <= k - v - tlen + c + qlen + 1) {
+                        reduce = 0;
+                        break;
+                    }
+                }
+                if (!reduce) break;
+                last--;
+            }
+            while (first <= last) {
+                int64_t ncells = (first == nb - 1) ? WBITS - w : WBITS;
+                int reduce = 1;
+                for (int64_t i = ncells - 1; i >= 0; i--) {
+                    int64_t v = cell_value(bp[first], bm[first], bs[first],
+                                           i);
+                    if (v <= k && first * WBITS + i
+                                  >= v - k - tlen + c + qlen) {
+                        reduce = 0;
+                        break;
+                    }
+                }
+                if (!reduce) break;
+                first++;
+            }
+        }
+
+        if (last < first) return -1;      /* band death: provably > k */
+
+        if (save && (save->target_stop < 0 || c == save->target_stop)) {
+            int64_t slot = save->target_stop < 0 ? c : 0;
+            for (int64_t b = first; b <= last; b++) {
+                save->ps[nb * slot + b] = bp[b];
+                save->ms[nb * slot + b] = bm[b];
+                save->scores[nb * slot + b] = bs[b];
+            }
+            save->first_blocks[slot] = first;
+            save->last_blocks[slot] = last;
+            if (c == save->target_stop) return -1;
+        }
+    }
+
+    if (last < nb - 1) return -1;
+    int64_t best = cell_value(bp[last], bm[last], bs[last], WBITS - 1 - w);
+    return (best <= k) ? (int32_t)best : -1;
+}
+
 /* Distance for one pair of raw codepoint sequences at bound k >= 0.
    mode: 0=NW, 1=SHW, 2=HW.  Returns distance, -1 if > k, or
    UNSUPPORTED when the scratch buffers are too small for the pair. */
@@ -236,38 +437,25 @@ static int32_t pair_distance(const uint32_t *q, int64_t qlen,
         return (int32_t)d;
     }
     if (mode == 2 && k > qlen) k = qlen;
-    if (mode == 0) {
-        int64_t diff = qlen > tlen ? qlen - tlen : tlen - qlen;
-        if (k < diff) return -1;
-    }
 
     int32_t sigma = recode_pair(q, qlen, t, tlen, s);
     int64_t nb = (qlen + WBITS - 1) / WBITS;
     if (sigma > s->cap_sigma || nb > s->cap_nb) return UNSUPPORTED;
 
     fill_peq(s, sigma, qlen, nb);
-    word *peq = s->peq;
-    int64_t w = nb * WBITS - qlen;
-    word topw = (w > 0) ? (~0ULL << (WBITS - w)) : 0ULL;
+    if (mode == 0)
+        return nw_scan(qlen, s->ts, tlen, s->peq, k, s->pv, s->mv, s->score,
+                       NULL);
 
-    word *pv = s->pv, *mv = s->mv;
+    /* Semi-global scan (edlib's separate myersCalcEditDistanceSemiGlobal,
+       edlib.cpp:532-704).  The initial band covers ceil((k+1)/64)
+       blocks (edlib.cpp:562). */
+    word *peq = s->peq, *pv = s->pv, *mv = s->mv;
     int64_t *score = s->score;
-    /* Initial Ukkonen band (block indices [bf, bl]).  NW uses the
-       reference's tighter formula based on the diagonal offset
-       (edlib.cpp:755); semi-global covers ceil((k+1)/64) blocks
-       (edlib.cpp:562). */
-    int64_t bl, bf = 0;
-    if (mode == 0) {
-        int64_t diag = (k + qlen - tlen) / 2;   /* >= 0: k >= |q|-|t| */
-        int64_t band = diag < k ? diag : k;
-        bl = (band + 1 + WBITS - 1) / WBITS;
-        if (bl > nb) bl = nb;
-        bl -= 1;
-    } else {
-        bl = (k + 1 + WBITS - 1) / WBITS;
-        if (bl > nb) bl = nb;
-        bl -= 1;
-    }
+    int64_t w = nb * WBITS - qlen;
+    int64_t bl = (k + 1 + WBITS - 1) / WBITS, bf = 0;
+    if (bl > nb) bl = nb;
+    bl -= 1;
     for (int64_t b = 0; b <= bl; b++) {
         pv[b] = ~0ULL; mv[b] = 0ULL; score[b] = (b + 1) * WBITS;
     }
@@ -283,312 +471,40 @@ static int32_t pair_distance(const uint32_t *q, int64_t qlen,
             score[b] += h;
         }
 
-        if (mode == 0) {
-            /* in-flight k tightening (edlib.cpp:791-795): the final
-               cell is at most this bottom-of-band cell plus remaining
-               rows/columns (+W padding when in the last block) */
-            int64_t rem_t = tlen - j - 1;
-            int64_t rem_q = qlen - ((bl + 1) * WBITS - 1) - 1;
-            int64_t cap = score[bl] + (rem_t > rem_q ? rem_t : rem_q)
-                          + (bl == nb - 1 ? w : 0);
-            if (cap < k) k = cap;
-
-            /* extend down when the next block's bottom row is still
-               diagonally feasible for <= k (edlib.cpp:797-808); the
-               entering block starts from the previous column's
-               boundary state and is advanced within this column */
-            if (bl + 1 < nb
-                && !((bl + 1) * WBITS - 1
-                     > k - score[bl] + 2 * WBITS - 2 - tlen + j + qlen)) {
-                bl++;
-                pv[bl] = ~0ULL; mv[bl] = 0ULL;
-                int nh = step_block(&pv[bl], &mv[bl], pq[bl], h);
-                score[bl] = score[bl - 1] - h + WBITS + nh;
-                h = nh;
-            }
-            /* shrink from the bottom: value-dead or diagonally
-               infeasible (edlib.cpp:810-818, incl. the +1 slack) */
-            while (bl >= bf
-                   && (score[bl] >= k + WBITS
-                       || ((bl + 1) * WBITS - 1
-                           > k - score[bl] + 2 * WBITS - 2 - tlen + j
-                             + qlen + 1))) {
-                bl--;
-            }
-            /* advance the top (edlib.cpp:822-827) */
-            while (bf <= bl
-                   && (score[bf] >= k + WBITS
-                       || ((bf + 1) * WBITS - 1
-                           < score[bf] - k - tlen + qlen + j))) {
-                bf++;
-            }
-            if (bl < bf) return -1;       /* band death: provably > k */
-
-            if (bl == nb - 1 && j == tlen - 1) {
-                int64_t lrow = score[nb - 1]
-                    - __builtin_popcountll(pv[nb - 1] & topw)
-                    + __builtin_popcountll(mv[nb - 1] & topw);
-                return (lrow <= k) ? (int32_t)lrow : -1;
-            }
+        /* semi-global band step (edlib.cpp:600-641): extend when
+           the PREVIOUS column's bottom value was <= k and the next
+           block's first row can match or improve; otherwise shrink
+           value-dead bottom blocks.  HW keeps block 0 alive (free
+           starts make it a candidate every column). */
+        if (bl < nb - 1 && (score[bl] - h <= k)
+            && ((pq[bl + 1] & 1ULL) || h < 0)) {
+            bl++;
+            pv[bl] = ~0ULL; mv[bl] = 0ULL;
+            int nh = step_block(&pv[bl], &mv[bl], pq[bl], h);
+            score[bl] = score[bl - 1] - h + WBITS + nh;
+            h = nh;
         } else {
-            /* semi-global band step (edlib.cpp:600-641): extend when
-               the PREVIOUS column's bottom value was <= k and the next
-               block's first row can match or improve; otherwise shrink
-               value-dead bottom blocks.  HW keeps block 0 alive (free
-               starts make it a candidate every column). */
-            if (bl < nb - 1 && (score[bl] - h <= k)
-                && ((pq[bl + 1] & 1ULL) || h < 0)) {
-                bl++;
-                pv[bl] = ~0ULL; mv[bl] = 0ULL;
-                int nh = step_block(&pv[bl], &mv[bl], pq[bl], h);
-                score[bl] = score[bl - 1] - h + WBITS + nh;
-                h = nh;
-            } else {
-                while (bl >= bf && score[bl] >= k + WBITS) bl--;
-            }
-            if (mode == 2) {
-                if (bl < 0) bl = 0;
-            } else {
-                while (bf <= bl && score[bf] >= k + WBITS) bf++;
-            }
-            if (bl < bf)   /* SHW band death: no better score ahead */
-                return (best <= orig_k) ? (int32_t)best : -1;
+            while (bl >= bf && score[bl] >= k + WBITS) bl--;
+        }
+        if (mode == 2) {
+            if (bl < 0) bl = 0;
+        } else {
+            while (bf <= bl && score[bf] >= k + WBITS) bf++;
+        }
+        if (bl < bf)   /* SHW band death: no better score ahead */
+            return (best <= orig_k) ? (int32_t)best : -1;
 
-            if (bl == nb - 1) {
-                int64_t lrow = score[nb - 1]
-                    - __builtin_popcountll(pv[nb - 1] & topw)
-                    + __builtin_popcountll(mv[nb - 1] & topw);
-                if (lrow < best) {
-                    best = lrow;
-                    if (best < k) k = best;  /* improvements only */
-                }
-                if (best == 0) break;
+        if (bl == nb - 1) {
+            int64_t lrow = cell_value(pv[nb - 1], mv[nb - 1], score[nb - 1],
+                                      WBITS - 1 - w);
+            if (lrow < best) {
+                best = lrow;
+                if (best < k) k = best;  /* improvements only */
             }
+            if (best == 0) break;
         }
     }
-    if (mode == 0) return -1;
     return (best <= orig_k) ? (int32_t)best : -1;
-}
-
-/* Values of all 64 cells of a block, bottom cell first (mirror of
-   kernel._block_cells / reference getBlockCellValues,
-   edlib/src/edlib.cpp:470-482). */
-static void block_cells(word p, word m, int64_t score, int64_t *cells) {
-    int64_t s = score;
-    word mask = 1ULL << 63;
-    for (int i = 0; i < WBITS - 1; i++) {
-        cells[i] = s;
-        if (p & mask) s--;
-        if (m & mask) s++;
-        mask >>= 1;
-    }
-    cells[WBITS - 1] = s;
-}
-
-/* Banded NW scan that SAVES the band (the find_alignment /
-   target_stop scan, an exact transcription of kernel._scan_nw —
-   reference myersCalcEditDistanceNW, edlib/src/edlib.cpp:707-928).
-   The saved band's SHAPE feeds the traceback's block-availability
-   checks, so every band move (initial width, in-flight k tightening,
-   extend, shrink, the strong reduce every 2048 columns) must match
-   the Python scan bit-for-bit — paths are pinned byte-exact against
-   the compiled reference.
-
-   Inputs: the query length, the target's dense symbol codes and the
-   query's Peq profile over those codes (nw_fill_alignment builds it
-   from kernel.encode_pair's equality matrix, batch_nw_align from the
-   stamped recode).
-   target_stop < 0: save every column into ps/ms/scores (layout
-   [c*nblocks + b]) + first/last per column; returns best or -1.
-   target_stop >= 0: save only that column into slot 0 (the
-   Hirschberg hook) and return -1 on reaching it (same value the
-   Python scan reports).  Returns INT32_MIN on allocation failure. */
-static int32_t nw_scan_saved(int64_t qlen, const int32_t *t,
-                             int64_t tlen, const word *peq,
-                             int64_t k, int64_t target_stop,
-                             uint64_t *ps, uint64_t *ms, int64_t *scores,
-                             int64_t *first_blocks,
-                             int64_t *last_blocks) {
-    int64_t diff = qlen > tlen ? qlen - tlen : tlen - qlen;
-    if (k < diff) return -1;
-    {
-        int64_t cap = qlen > tlen ? qlen : tlen;
-        if (k > cap) k = cap;
-    }
-    int64_t nb = (qlen + WBITS - 1) / WBITS;
-    int64_t w = nb * WBITS - qlen;
-
-    word *bp = (word *)malloc((size_t)nb * sizeof(word));
-    word *bm = (word *)malloc((size_t)nb * sizeof(word));
-    int64_t *bs = (int64_t *)malloc((size_t)nb * sizeof(int64_t));
-    int64_t *cells = (int64_t *)malloc(WBITS * sizeof(int64_t));
-    if (!bp || !bm || !bs || !cells) {
-        free(bp); free(bm); free(bs); free(cells);
-        return INT32_MIN;
-    }
-
-    int64_t first = 0;
-    int64_t half = (k + qlen - tlen) / 2;     /* >= 0: k >= |q|-|t| */
-    int64_t band = half < k ? half : k;
-    int64_t last = (band + 1 + WBITS - 1) / WBITS;
-    if (last > nb) last = nb;
-    last -= 1;
-
-    for (int64_t b = 0; b <= last; b++) {
-        bs[b] = (b + 1) * WBITS;
-        bp[b] = ~0ULL;
-        bm[b] = 0ULL;
-    }
-
-    int32_t result = -1;
-    for (int64_t c = 0; c < tlen; c++) {
-        const word *pq = peq + (int64_t)t[c] * nb;
-        int hout = 1;
-        for (int64_t b = first; b <= last; b++) {
-            hout = step_block(&bp[b], &bm[b], pq[b], hout);
-            bs[b] += hout;
-        }
-
-        /* tighten k (kernel._scan_nw lines 339-343) */
-        {
-            int64_t rem_t = tlen - c - 1;
-            int64_t rem_q = qlen - ((1 + last) * WBITS - 1) - 1;
-            int64_t cap = bs[last] + (rem_t > rem_q ? rem_t : rem_q)
-                          + (last == nb - 1 ? w : 0);
-            if (cap < k) k = cap;
-        }
-
-        /* extend band down */
-        if (last + 1 < nb
-            && !((last + 1) * WBITS - 1
-                 > k - bs[last] + 2 * WBITS - 2 - tlen + c + qlen)) {
-            last++;
-            bp[last] = ~0ULL;
-            bm[last] = 0ULL;
-            int nh = step_block(&bp[last], &bm[last], pq[last], hout);
-            bs[last] = bs[last - 1] - hout + WBITS + nh;
-            hout = nh;
-        }
-
-        /* shrink from below */
-        while (last >= first
-               && (bs[last] >= k + WBITS
-                   || ((last + 1) * WBITS - 1
-                       > k - bs[last] + 2 * WBITS - 2 - tlen + c + qlen
-                         + 1))) {
-            last--;
-        }
-        /* shrink from above */
-        while (first <= last
-               && (bs[first] >= k + WBITS
-                   || ((first + 1) * WBITS - 1
-                       < bs[first] - k - tlen + qlen + c))) {
-            first++;
-        }
-
-        if (c % 2048 == 0) {     /* strong reduce (lines 369-395) */
-            while (last >= first) {
-                block_cells(bp[last], bm[last], bs[last], cells);
-                int64_t ncells = (last == nb - 1) ? WBITS - w : WBITS;
-                int64_t r = last * WBITS + ncells - 1;
-                int reduce = 1;
-                for (int64_t i = WBITS - ncells; i < WBITS; i++) {
-                    if (cells[i] <= k
-                        && r <= k - cells[i] - tlen + c + qlen + 1) {
-                        reduce = 0;
-                        break;
-                    }
-                    r--;
-                }
-                if (!reduce) break;
-                last--;
-            }
-            while (first <= last) {
-                block_cells(bp[first], bm[first], bs[first], cells);
-                int64_t ncells = (first == nb - 1) ? WBITS - w : WBITS;
-                int64_t r = first * WBITS + ncells - 1;
-                int reduce = 1;
-                for (int64_t i = WBITS - ncells; i < WBITS; i++) {
-                    if (cells[i] <= k
-                        && r >= cells[i] - k - tlen + c + qlen) {
-                        reduce = 0;
-                        break;
-                    }
-                    r--;
-                }
-                if (!reduce) break;
-                first++;
-            }
-        }
-
-        if (last < first) { result = -1; goto done; }   /* band died */
-
-        if (target_stop < 0) {
-            int64_t base = nb * c;
-            for (int64_t b = first; b <= last; b++) {
-                ps[base + b] = bp[b];
-                ms[base + b] = bm[b];
-                scores[base + b] = bs[b];
-            }
-            first_blocks[c] = first;
-            last_blocks[c] = last;
-        } else if (c == target_stop) {
-            for (int64_t b = first; b <= last; b++) {
-                ps[b] = bp[b];
-                ms[b] = bm[b];
-                scores[b] = bs[b];
-            }
-            first_blocks[0] = first;
-            last_blocks[0] = last;
-            result = -1;
-            goto done;
-        }
-    }
-
-    if (last == nb - 1) {
-        block_cells(bp[last], bm[last], bs[last], cells);
-        int64_t best = cells[w];
-        if (best <= k) result = (int32_t)best;
-    }
-done:
-    free(bp); free(bm); free(bs); free(cells);
-    return result;
-}
-
-/* Peq planes from a dense pair's equality matrix (kernel.build_peq):
-   bit r of plane s set iff eq[s][q[r]]; padding rows match every
-   symbol.  NULL on allocation failure. */
-static word *peq_from_matrix(const int32_t *q, int64_t qlen,
-                             const uint8_t *eq, int64_t sigma) {
-    int64_t nb = (qlen + WBITS - 1) / WBITS;
-    int64_t w = nb * WBITS - qlen;
-    word *peq = (word *)calloc((size_t)((sigma + 1) * nb), sizeof(word));
-    if (!peq) return NULL;
-    for (int64_t r = 0; r < qlen; r++) {
-        int64_t qc = q[r];
-        word bit = 1ULL << (r & 63);
-        for (int64_t s = 0; s < sigma; s++)
-            if (eq[s * sigma + qc]) peq[s * nb + (r >> 6)] |= bit;
-    }
-    if (w > 0) {
-        word padmask = ~0ULL << (WBITS - w);
-        for (int64_t s = 0; s < sigma; s++) peq[s * nb + nb - 1] |= padmask;
-    }
-    return peq;
-}
-
-int32_t nw_fill_alignment(const int32_t *q, int64_t qlen,
-                          const int32_t *t, int64_t tlen,
-                          const uint8_t *eq, int64_t sigma,
-                          int64_t k, int64_t target_stop,
-                          uint64_t *ps, uint64_t *ms, int64_t *scores,
-                          int64_t *first_blocks, int64_t *last_blocks) {
-    word *peq = peq_from_matrix(q, qlen, eq, sigma);
-    if (!peq) return INT32_MIN;
-    int32_t got = nw_scan_saved(qlen, t, tlen, peq, k, target_stop, ps, ms,
-                                scores, first_blocks, last_blocks);
-    free(peq);
-    return got;
 }
 
 /* Traceback walk over a saved band (exact transcription of
@@ -765,12 +681,13 @@ static int64_t nw_walk(int64_t qlen, int64_t tlen, int64_t best,
     return n;
 }
 
-/* Saved-band scan + traceback over a ready Peq profile.  Caller sizes
-   out_moves to qlen + tlen.  Returns path length, -1 when the scan
-   exceeded ``best`` or the walk broke, or INT32_MIN on allocation
-   failure. */
+/* Saved-band scan + traceback over a ready Peq profile; bp/bm/bs are
+   nw_scan's column state.  Caller sizes out_moves to qlen + tlen.
+   Returns path length, -1 when the scan exceeded ``best`` or the walk
+   broke, or INT32_MIN on allocation failure. */
 static int64_t nw_path(int64_t qlen, const int32_t *t, int64_t tlen,
-                       const word *peq, int64_t best, int8_t *out_moves) {
+                       const word *peq, int64_t best,
+                       word *bp, word *bm, int64_t *bs, int8_t *out_moves) {
     int64_t nb = (qlen + WBITS - 1) / WBITS;
     word *ps = (word *)calloc((size_t)(nb * tlen), sizeof(word));
     word *ms = (word *)calloc((size_t)(nb * tlen), sizeof(word));
@@ -778,35 +695,70 @@ static int64_t nw_path(int64_t qlen, const int32_t *t, int64_t tlen,
                                         sizeof(int64_t));
     int64_t *fbs = (int64_t *)calloc((size_t)tlen, sizeof(int64_t));
     int64_t *lbs = (int64_t *)calloc((size_t)tlen, sizeof(int64_t));
-    int64_t ret;
-    if (!ps || !ms || !scores || !fbs || !lbs) {
-        ret = INT32_MIN;
-        goto out;
+    int64_t ret = INT32_MIN;
+    if (ps && ms && scores && fbs && lbs) {
+        band_save save = {ps, ms, scores, fbs, lbs, -1};
+        int32_t got = nw_scan(qlen, t, tlen, peq, best, bp, bm, bs, &save);
+        ret = (got < 0) ? -1
+            : nw_walk(qlen, tlen, (int64_t)got, nb, ps, ms, scores, fbs,
+                      lbs, out_moves);
     }
-    {
-        int32_t got = nw_scan_saved(qlen, t, tlen, peq, best, -1, ps, ms,
-                                    scores, fbs, lbs);
-        if (got == INT32_MIN) { ret = INT32_MIN; goto out; }
-        if (got < 0) { ret = -1; goto out; }
-        ret = nw_walk(qlen, tlen, (int64_t)got, nb, ps, ms, scores,
-                      fbs, lbs, out_moves);
-    }
-out:
     free(ps); free(ms); free(scores); free(fbs); free(lbs);
     return ret;
+}
+
+/* The per-pair exports' working set for one pair of kernel.encode_pair
+   dense codes, in one block the caller frees: the query's Peq profile
+   (built here) and build_peq's snapshot, sigma * nb words each, then
+   nw_scan's column state bp / bm / bs, nb words each.  NULL on
+   allocation failure. */
+static word *pair_setup(const int32_t *q, int64_t qlen, int64_t sigma,
+                        const int32_t *eqa, const int32_t *eqb,
+                        int64_t n_eq) {
+    int64_t nb = (qlen + WBITS - 1) / WBITS;
+    word *blk = (word *)malloc((size_t)((2 * sigma + 3) * nb)
+                               * sizeof(word));
+    if (blk)
+        build_peq(blk, blk + sigma * nb, q, qlen, nb, sigma, eqa, eqb, n_eq);
+    return blk;
+}
+
+/* nw_scan with its band saved (the find_alignment / Hirschberg-hook
+   scan) for one dense-encoded pair; (eqa[e], eqb[e]) are equality
+   pairs in code space.  target_stop as in band_save.  Returns nw_scan's
+   result, or INT32_MIN on allocation failure. */
+int32_t nw_fill_alignment(const int32_t *q, int64_t qlen,
+                          const int32_t *t, int64_t tlen, int64_t sigma,
+                          const int32_t *eqa, const int32_t *eqb,
+                          int64_t n_eq, int64_t k, int64_t target_stop,
+                          uint64_t *ps, uint64_t *ms, int64_t *scores,
+                          int64_t *first_blocks, int64_t *last_blocks) {
+    int64_t nb = (qlen + WBITS - 1) / WBITS;
+    word *blk = pair_setup(q, qlen, sigma, eqa, eqb, n_eq);
+    if (!blk) return INT32_MIN;
+    word *col = blk + 2 * sigma * nb;
+    band_save save = {ps, ms, scores, first_blocks, last_blocks,
+                      target_stop};
+    int32_t got = nw_scan(qlen, t, tlen, blk, k, col, col + nb,
+                          (int64_t *)(col + 2 * nb), &save);
+    free(blk);
+    return got;
 }
 
 /* Saved-band scan + traceback in one call (the direct-traceback arm
    of kernel._obtain_alignment) for one dense-encoded pair.  Same
    returns as nw_path; -1 makes the caller fall back to Python. */
 int64_t nw_align_path(const int32_t *q, int64_t qlen,
-                      const int32_t *t, int64_t tlen,
-                      const uint8_t *eq, int64_t sigma,
+                      const int32_t *t, int64_t tlen, int64_t sigma,
+                      const int32_t *eqa, const int32_t *eqb, int64_t n_eq,
                       int64_t best, int8_t *out_moves) {
-    word *peq = peq_from_matrix(q, qlen, eq, sigma);
-    if (!peq) return INT32_MIN;
-    int64_t ret = nw_path(qlen, t, tlen, peq, best, out_moves);
-    free(peq);
+    int64_t nb = (qlen + WBITS - 1) / WBITS;
+    word *blk = pair_setup(q, qlen, sigma, eqa, eqb, n_eq);
+    if (!blk) return INT32_MIN;
+    word *col = blk + 2 * sigma * nb;
+    int64_t ret = nw_path(qlen, t, tlen, blk, best, col, col + nb,
+                          (int64_t *)(col + 2 * nb), out_moves);
+    free(blk);
     return ret;
 }
 
@@ -871,7 +823,8 @@ int batch_nw_align(const uint32_t *qbuf, const int64_t *qstart,
         if (!scratch_reserve(&s, sigma)) continue;
         int64_t nb = (ql + WBITS - 1) / WBITS;
         fill_peq(&s, sigma, ql, nb);
-        int64_t m = nw_path(ql, s.ts, tl, s.peq, path_d[i], moves);
+        int64_t m = nw_path(ql, s.ts, tl, s.peq, path_d[i], s.pv, s.mv,
+                            s.score, moves);
         if (m < 0) continue;
         pos += cigar_rle(moves, m, extended, cigar + pos);
         cigar_end[i] = pos;
@@ -923,14 +876,14 @@ int batch_distance(const uint32_t *qbuf, const int64_t *qstart,
                    const uint32_t *eqa, const uint32_t *eqb, int64_t n_eq,
                    int32_t *out);
 int32_t nw_fill_alignment(const int32_t *q, int64_t qlen,
-                          const int32_t *t, int64_t tlen,
-                          const uint8_t *eq, int64_t sigma,
-                          int64_t k, int64_t target_stop,
+                          const int32_t *t, int64_t tlen, int64_t sigma,
+                          const int32_t *eqa, const int32_t *eqb,
+                          int64_t n_eq, int64_t k, int64_t target_stop,
                           uint64_t *ps, uint64_t *ms, int64_t *scores,
                           int64_t *first_blocks, int64_t *last_blocks);
 int64_t nw_align_path(const int32_t *q, int64_t qlen,
-                      const int32_t *t, int64_t tlen,
-                      const uint8_t *eq, int64_t sigma,
+                      const int32_t *t, int64_t tlen, int64_t sigma,
+                      const int32_t *eqa, const int32_t *eqb, int64_t n_eq,
                       int64_t best, int8_t *out_moves);
 int batch_nw_align(const uint32_t *qbuf, const int64_t *qstart,
                    const int64_t *qlens,
@@ -1104,6 +1057,16 @@ def native_batch_align(q_flat, q_start, q_lens, t_flat, t_start, t_lens,
     return sigma, cigars
 
 
+def _code_pairs(eq):
+    """kernel.encode_pair's symmetric equality matrix as the C Peq
+    builder's code-space pairs (its upper triangle off the diagonal):
+    (a, b, n) C arguments; the arrays stay alive in the returned
+    ``from_buffer`` objects."""
+    a, b = np.nonzero(np.triu(eq, 1))
+    return (ffi.from_buffer("int32_t[]", a.astype(np.int32)),
+            ffi.from_buffer("int32_t[]", b.astype(np.int32)), len(a))
+
+
 def native_fill_nw(q_codes, t_codes, eq, sigma, k, target_stop=-1):
     """Saved-band NW scan (the find_alignment / Hirschberg-hook scan)
     in C over one dense-encoded pair.
@@ -1126,12 +1089,10 @@ def native_fill_nw(q_codes, t_codes, eq, sigma, k, target_stop=-1):
     lb = np.zeros(ncols, dtype=np.int64)
     qa = np.ascontiguousarray(q_codes, dtype=np.int32)
     ta = np.ascontiguousarray(t_codes, dtype=np.int32)
-    eqm = np.ascontiguousarray(eq, dtype=np.uint8)
     best = lib.nw_fill_alignment(
         ffi.cast("const int32_t *", qa.ctypes.data), qlen,
-        ffi.cast("const int32_t *", ta.ctypes.data), tlen,
-        ffi.cast("const uint8_t *", eqm.ctypes.data), int(sigma),
-        int(k), int(target_stop),
+        ffi.cast("const int32_t *", ta.ctypes.data), tlen, int(sigma),
+        *_code_pairs(eq), int(k), int(target_stop),
         ffi.cast("uint64_t *", ps.ctypes.data),
         ffi.cast("uint64_t *", ms.ctypes.data),
         ffi.cast("int64_t *", scores.ctypes.data),
@@ -1154,13 +1115,11 @@ def native_align_path(q_codes, t_codes, eq, sigma, best):
     qlen, tlen = len(q_codes), len(t_codes)
     qa = np.ascontiguousarray(q_codes, dtype=np.int32)
     ta = np.ascontiguousarray(t_codes, dtype=np.int32)
-    eqm = np.ascontiguousarray(eq, dtype=np.uint8)
     moves = np.empty(qlen + tlen, dtype=np.int8)
     n = lib.nw_align_path(
         ffi.cast("const int32_t *", qa.ctypes.data), qlen,
-        ffi.cast("const int32_t *", ta.ctypes.data), tlen,
-        ffi.cast("const uint8_t *", eqm.ctypes.data), int(sigma),
-        int(best),
+        ffi.cast("const int32_t *", ta.ctypes.data), tlen, int(sigma),
+        *_code_pairs(eq), int(best),
         ffi.cast("int8_t *", moves.ctypes.data))
     if n < 0:
         return None

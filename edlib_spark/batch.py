@@ -1,20 +1,21 @@
 """Batch edit-distance dispatcher (the Arrow hot path).
 
 Computes NW / SHW / HW edit distances for a whole Arrow batch of
-(query, target) string pairs in five steps:
+(query, target) string pairs in three steps:
 
   1. encode both sides once into flat uint32 codepoint buffers
      (``encode_flat``);
-  2. empty-side short circuit (edlib.cpp:165-184);
-  3. NW length shortcut, k < |tlen - qlen| => -1 (edlib.cpp:744-747);
-  4. one call into the cffi-compiled banded Myers scan
+  2. one call into the cffi-compiled banded Myers scan
      (``_native.native_batch_distance``), which scores every pair,
-     astral-plane text included, and runs edlib's k = 64, 128, ...
-     doubling for unbounded pairs (edlib.cpp:196-217) in C;
-  5. the exact single-pair kernel (``kernel.align``) for whatever the
-     native call did not score: no native library (no compiler on the
-     host), a batch-level allocation failure, or a per-pair
-     ``UNSUPPORTED`` entry.
+     astral-plane text included, makes the reference's short circuits
+     (empty sides, edlib.cpp:165-184; NW k < |tlen - qlen|,
+     edlib.cpp:744-747; the HW clamp of k to qlen) and runs edlib's
+     k = 64, 128, ... doubling for unbounded pairs (edlib.cpp:196-217)
+     in C;
+  3. the exact single-pair kernel (``kernel.align``, which makes the
+     same short circuits) for whatever the native call did not score:
+     no native library (no compiler on the host), a batch-level
+     allocation failure, or a per-pair ``UNSUPPORTED`` entry.
 
 Results equal ``kernel.align``'s distance (-1 when d > k) on both lanes;
 the differential tests run every case with and without the native
@@ -110,42 +111,15 @@ def _flat_distance(queries, targets, q_enc, t_enc, mode, k, eqs):
     q_buf, q_start, q_lens = q_enc
     t_buf, t_start, t_lens = t_enc
     n = len(q_lens)
-    out = np.full(n, -1, dtype=np.int32)
-    if n == 0:
-        return out
     k_arr = np.broadcast_to(np.asarray(k, dtype=np.int64), (n,)).copy()
-    if mode == "HW":  # solution never exceeds qlen (edlib.cpp:566-568)
-        k_arr = np.minimum(k_arr, q_lens)
-
-    # ---- empty-sequence short circuit (edlib.cpp:165-184) ----
-    # NOTE: the reference returns the distance here WITHOUT comparing
-    # against k (its short-circuit precedes all k logic); kernel.align
-    # matches, so the batch path must too.
-    empty = (q_lens == 0) | (t_lens == 0)
-    if empty.any():
-        d = np.maximum(q_lens, t_lens) if mode == "NW" else q_lens
-        out[empty] = d[empty]
-
-    todo = np.nonzero(~empty)[0]
-    if mode == "NW":
-        # k < |tlen - qlen| shortcut (edlib.cpp:744-747); unbounded
-        # rows always pass
-        kt = k_arr[todo]
-        todo = todo[(kt < 0) | (np.abs(t_lens - q_lens)[todo] <= kt)]
-    if len(todo) == 0:
-        return out
 
     from . import _native
-    got = _native.native_batch_distance(
-        q_buf, np.ascontiguousarray(q_start[todo]),
-        np.ascontiguousarray(q_lens[todo]),
-        t_buf, np.ascontiguousarray(t_start[todo]),
-        np.ascontiguousarray(t_lens[todo]),
-        np.ascontiguousarray(k_arr[todo]), mode, _encode_equalities(eqs))
-    if got is not None:
-        ok = got != _native.UNSUPPORTED
-        out[todo[ok]] = got[ok]
-        todo = todo[~ok]
+    out = _native.native_batch_distance(q_buf, q_start, q_lens, t_buf,
+                                        t_start, t_lens, k_arr, mode,
+                                        _encode_equalities(eqs))
+    if out is None:
+        out = np.full(n, _native.UNSUPPORTED, dtype=np.int32)
+    todo = np.nonzero(out == _native.UNSUPPORTED)[0]
     if len(todo):
         out[todo] = _exact_distances(
             [queries[i] for i in todo], [targets[i] for i in todo],
@@ -155,8 +129,8 @@ def _flat_distance(queries, targets, q_enc, t_enc, mode, k, eqs):
 
 def _exact_distances(queries, targets, mode, ks, eqs):
     """Per-pair exact fallback: ``kernel.align``'s distance for pairs
-    the native scan did not score (both sides non-empty)."""
-    return [kernel.align(q, t, mode, "distance", int(k),
+    the native scan did not score (a None side is "")."""
+    return [kernel.align(q or "", t or "", mode, "distance", int(k),
                          additionalEqualities=eqs,
                          max_alphabet=None)["editDistance"]
             for q, t, k in zip(queries, targets, ks)]

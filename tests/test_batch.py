@@ -241,7 +241,7 @@ def test_batch_tight_k_long_near_identical(mode):
     band conditions (edlib.cpp:600-641, 797-827)."""
     rng = np.random.default_rng(13)
     letters = "abcdefgh"
-    for L in (65, 100, 400, 1100):
+    for L in (65, 100, 400, 1100, 2600):
         base = "".join(letters[i] for i in rng.integers(0, 8, L))
         tl = list(base)
         for e in range(3):
@@ -359,12 +359,17 @@ def test_native_path_matches_python_walk():
     cases += [(rand(64), rand(64)), (rand(128), rand(50)),
               ("a" * 65, "a" * 65), (rand(1), rand(200)),
               (rand(200), rand(1)), (rand(90), rand(2500))]
-    for q, t in cases:
-        q_codes, t_codes, sigma, eq = encode_pair(q, t, None, None)
+    cases = [(q, t, None) for q, t in cases]
+    cases.append((rand(150), rand(170), [("a", "b")]))   # equalities
+    for q, t, eqs in cases:
+        q_codes, t_codes, sigma, eq = encode_pair(q, t, eqs, None)
         qlen, tlen = len(q_codes), len(t_codes)
         nblocks = _ceil_div(qlen, WORD)
         w = nblocks * WORD - qlen
-        d_true, _ = simple_edit_distance(q, t, "NW")
+        # under the one pair a ~ b, the DP oracle's distance with every
+        # b spelled a
+        d_true, _ = simple_edit_distance(
+            *(s.replace("b", "a") if eqs else s for s in (q, t)), "NW")
         peq = build_peq(sigma, q_codes, eq)
         _, _, data = _scan_nw(peq, w, nblocks, qlen, t_codes, d_true,
                               find_alignment=True)
