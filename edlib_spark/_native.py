@@ -1,5 +1,5 @@
-"""cffi-compiled banded Myers scans: the batch distance kernel and the
-NW traceback.
+"""cffi-compiled banded Myers scans: one batch entry for both
+alignment lanes, plus the per-pair NW exports kernel.py calls.
 
 The C source (JIT-compiled once, cached on disk) holds ONE banded NW
 scan, ``nw_scan``: a transcription of kernel._scan_nw and of the
@@ -8,19 +8,21 @@ one C home of the NW band rules (initial width, in-flight k
 tightening, extend, the two shrinks, the strong reduce every 2048
 columns).  Its optional band save serves every NW caller:
 
-- ``batch_distance`` (per-pair k; k < 0 runs edlib's k = 64, 128, ...
-  doubling, edlib.cpp:196-217) saves nothing;
-- ``batch_nw_align`` (align_expr's NW lane) and ``nw_align_path``
-  save every column, then walk the band (``nw_walk``, a transcription
-  of kernel._traceback) and, in the batch lane, run-length encode the
-  CIGAR;
+- ``batch_align`` (``native_batch``, the one batch entry) follows
+  edlibAlign per pair: recode, Peq once, the scan at per-pair k, or
+  edlib's k = 64, 128, ... doubling around the scan alone for k < 0
+  (edlib.cpp:196-217), saving nothing; NW pairs asked for a path are
+  then scanned once more at k = d with every column saved into reused
+  batch buffers, walked (``nw_walk``, a transcription of
+  kernel._traceback) and run-length encoded as a CIGAR;
+- ``nw_align_path`` saves every column and walks, for one pair;
 - ``nw_fill_alignment`` saves every column or one ``target_stop``
   column (the Hirschberg hook) for kernel.py to walk.
 
-HW / SHW distances keep their own semi-global loop, as edlib keeps a
-separate myersCalcEditDistanceSemiGlobal.  One builder makes the match
-profile (Peq) for every scan from dense codes plus equality pairs in
-code space: the batch lanes recode each pair through a
+HW / SHW distances keep their own semi-global scan (``sg_scan``), as
+edlib keeps a separate myersCalcEditDistanceSemiGlobal.  One builder
+makes the match profile (Peq) for every scan from dense codes plus
+equality pairs in code space: the batch entry recodes each pair through a
 generation-stamped codepoint table sized to the batch's largest
 codepoint + 1 (any Unicode text, astral plane included, without the
 reference's 256-symbol cap) and map their codepoint equality pairs
@@ -82,6 +84,30 @@ static inline int step_block(word *pv, word *mv, word eq, int hin) {
     return hout;
 }
 
+/* Where nw_scan saves its band.  target_stop < 0: every column, layout
+   [c*nb + b], plus each column's first and last block — the
+   traceback's input.  target_stop >= 0: only that column, into slot 0,
+   and the scan stops there (the Hirschberg hook). */
+typedef struct {
+    word *ps, *ms;
+    int64_t *scores, *first_blocks, *last_blocks;
+    int64_t target_stop;
+} band_save;
+
+/* Words of one pair's full band save (target_stop < 0). */
+static inline int64_t band_words(int64_t nb, int64_t tlen) {
+    return 3 * nb * tlen + 2 * tlen;
+}
+
+/* The full band save laid out in band_words(nb, tlen) words at buf:
+   ps, ms and scores (nb * tlen each), then first and last blocks. */
+static band_save band_in(word *buf, int64_t nb, int64_t tlen) {
+    band_save b = {buf, buf + nb * tlen, (int64_t *)(buf + 2 * nb * tlen),
+                   (int64_t *)(buf + 3 * nb * tlen),
+                   (int64_t *)(buf + 3 * nb * tlen + tlen), -1};
+    return b;
+}
+
 typedef struct {
     int32_t *map;       /* codepoint -> dense symbol id, n_cp entries */
     int64_t *stamp;     /* generation stamps (avoids per-pair memset) */
@@ -94,6 +120,8 @@ typedef struct {
     const uint32_t *eqa, *eqb;  /* additional-equality codepoint pairs */
     int32_t *eqca, *eqcb;       /* the same pairs in the current pair's codes */
     int64_t n_eq;
+    word *band;                 /* nw_path's band + moves, scratch_band */
+    int64_t cap_band;
 } scratch;
 
 /* Per-pair alphabet inference through the generation-stamped map
@@ -173,6 +201,7 @@ static void scratch_free(scratch *s) {
     free(s->map); free(s->stamp); free(s->qs); free(s->ts); free(s->peq);
     free(s->peq2); free(s->pv); free(s->mv); free(s->score);
     free(s->eqca); free(s->eqcb);
+    free(s->band);
 }
 
 /* Batch scratch: the codepoint table sized to the batch's largest
@@ -213,6 +242,7 @@ static int scratch_init(scratch *s,
     s->ts = (int32_t *)malloc((size_t)max_t * sizeof(int32_t));
     s->peq = (word *)malloc((size_t)(s->cap_sigma * max_nb) * sizeof(word));
     s->peq2 = NULL; s->eqca = NULL; s->eqcb = NULL;
+    s->band = NULL; s->cap_band = 0;
     if (n_eq > 0) {
         s->peq2 = (word *)malloc((size_t)(s->cap_sigma * max_nb)
                                  * sizeof(word));
@@ -253,6 +283,20 @@ static int scratch_reserve(scratch *s, int64_t need) {
     return 1;
 }
 
+/* Grow the traceback buffer to ``words`` words, committing capacity
+   as scratch_reserve does.  It is never zeroed: like the reference's
+   alignData it is overwritten per pair, and nw_walk reads only inside
+   each column's saved [first, last].  Returns 1 on success, 0 on
+   allocation failure. */
+static int scratch_band(scratch *s, int64_t words) {
+    if (words <= s->cap_band) return 1;
+    word *p = (word *)realloc(s->band, (size_t)words * sizeof(word));
+    if (!p) return 0;
+    s->band = p;
+    s->cap_band = words;
+    return 1;
+}
+
 /* Value of the cell in block row i (0 = top): the bottom cell's score
    minus the vertical deltas of the rows below row i (the reference's
    getBlockCellValues, edlib/src/edlib.cpp:470-482, one cell at a
@@ -263,23 +307,13 @@ static inline int64_t cell_value(word p, word m, int64_t score, int64_t i) {
            + __builtin_popcountll(m & below);
 }
 
-/* Where nw_scan saves its band.  target_stop < 0: every column, layout
-   [c*nb + b], plus each column's first and last block — the
-   traceback's input.  target_stop >= 0: only that column, into slot 0,
-   and the scan stops there (the Hirschberg hook). */
-typedef struct {
-    word *ps, *ms;
-    int64_t *scores, *first_blocks, *last_blocks;
-    int64_t target_stop;
-} band_save;
-
 /* The banded NW scan: the one C home of the NW band rules, a
    transcription of kernel._scan_nw and of the reference's single
    myersCalcEditDistanceNW (edlib/src/edlib.cpp:707-928) — the
    k < |tlen-qlen| shortcut, the initial width, in-flight k tightening,
    extend, the two shrinks and the strong reduce every 2048 columns.
    Like the reference's findAlignment / targetStopPosition arguments,
-   ``save`` picks what it keeps: NULL for pair_distance's distance
+   ``save`` picks what it keeps: NULL for batch_align's distance
    lane, every column for nw_path's traceback, and every column or the
    target_stop column for nw_fill_alignment.  The saved band's SHAPE
    feeds the traceback's block-availability checks, so
@@ -425,33 +459,16 @@ static int32_t nw_scan(int64_t qlen, const int32_t *t, int64_t tlen,
     return (best <= k) ? (int32_t)best : -1;
 }
 
-/* Distance for one pair of raw codepoint sequences at bound k >= 0.
-   mode: 0=NW, 1=SHW, 2=HW.  Returns distance, -1 if > k, or
-   UNSUPPORTED when the scratch buffers are too small for the pair. */
-static int32_t pair_distance(const uint32_t *q, int64_t qlen,
-                             const uint32_t *t, int64_t tlen,
-                             int64_t k, int mode, scratch *s) {
-    if (qlen == 0 || tlen == 0) {
-        /* reference short-circuit ignores k entirely (edlib.cpp:165-184) */
-        int64_t d = (mode == 0) ? (qlen > tlen ? qlen : tlen) : qlen;
-        return (int32_t)d;
-    }
-    if (mode == 2 && k > qlen) k = qlen;
-
-    int32_t sigma = recode_pair(q, qlen, t, tlen, s);
+/* The semi-global scan (edlib's separate
+   myersCalcEditDistanceSemiGlobal, edlib.cpp:532-704) over a ready
+   Peq profile, mode 1 = SHW, 2 = HW, at bound k >= 0 (HW: k <= qlen);
+   pv/mv/score are nb words of column state.  The initial band covers
+   ceil((k+1)/64) blocks (edlib.cpp:562).  Returns the distance, or -1
+   when it exceeds k. */
+static int32_t sg_scan(int64_t qlen, const int32_t *t, int64_t tlen,
+                       const word *peq, int64_t k, int mode,
+                       word *pv, word *mv, int64_t *score) {
     int64_t nb = (qlen + WBITS - 1) / WBITS;
-    if (sigma > s->cap_sigma || nb > s->cap_nb) return UNSUPPORTED;
-
-    fill_peq(s, sigma, qlen, nb);
-    if (mode == 0)
-        return nw_scan(qlen, s->ts, tlen, s->peq, k, s->pv, s->mv, s->score,
-                       NULL);
-
-    /* Semi-global scan (edlib's separate myersCalcEditDistanceSemiGlobal,
-       edlib.cpp:532-704).  The initial band covers ceil((k+1)/64)
-       blocks (edlib.cpp:562). */
-    word *peq = s->peq, *pv = s->pv, *mv = s->mv;
-    int64_t *score = s->score;
     int64_t w = nb * WBITS - qlen;
     int64_t bl = (k + 1 + WBITS - 1) / WBITS, bf = 0;
     if (bl > nb) bl = nb;
@@ -464,7 +481,7 @@ static int32_t pair_distance(const uint32_t *q, int64_t qlen,
     int64_t orig_k = k;
 
     for (int64_t j = 0; j < tlen; j++) {
-        const word *pq = peq + (int64_t)s->ts[j] * nb;
+        const word *pq = peq + (int64_t)t[j] * nb;
         int h = start_h;
         for (int64_t b = bf; b <= bl; b++) {
             h = step_block(&pv[b], &mv[b], pq[b], h);
@@ -512,8 +529,11 @@ static int32_t pair_distance(const uint32_t *q, int64_t qlen,
    edlib/src/edlib.cpp:931-1141).  Move codes: 0 match, 1 insert
    (up), 2 delete (left), 3 mismatch — kernel.OP_*.  Moves are
    emitted in reverse discovery order exactly like the Python walk,
-   then flipped in place.  Returns path length, or -1 if the walk
-   broke (cannot happen on a band saved with k >= best). */
+   then flipped in place.  A move into a block outside its column's
+   saved [first, last] also breaks the walk: the band is reused across
+   pairs without zeroing, so nothing outside it is read.  Returns path
+   length, or -1 if the walk broke (neither happens on a band saved
+   with k >= best). */
 static int64_t nw_walk(int64_t qlen, int64_t tlen, int64_t best,
                        int64_t nb,
                        const word *ps, const word *ms,
@@ -585,6 +605,7 @@ static int64_t nw_walk(int64_t qlen, int64_t tlen, int64_t best,
                 }
                 block_pos = WBITS - 1;
                 b--;
+                if (b < fbs[c] || b > lbs[c]) return -1;
                 curr_p = ps[c * nb + b];
                 curr_m = ms[c * nb + b];
                 if (c > 0 && fbs[c - 1] <= b && b <= lbs[c - 1]) {
@@ -649,6 +670,7 @@ static int64_t nw_walk(int64_t qlen, int64_t tlen, int64_t best,
                 }
                 block_pos = WBITS - 1;
                 b--;
+                if (b < fbs[c] || b > lbs[c]) return -1;
                 curr_p = ps[c * nb + b];
                 curr_m = ms[c * nb + b];
             } else {
@@ -682,41 +704,31 @@ static int64_t nw_walk(int64_t qlen, int64_t tlen, int64_t best,
 }
 
 /* Saved-band scan + traceback over a ready Peq profile; bp/bm/bs are
-   nw_scan's column state.  Caller sizes out_moves to qlen + tlen.
-   Returns path length, -1 when the scan exceeded ``best`` or the walk
-   broke, or INT32_MIN on allocation failure. */
+   nw_scan's column state and ``save`` (target_stop < 0) holds nb *
+   tlen words per array and tlen columns, so nothing is allocated
+   here.  Caller sizes out_moves to qlen + tlen.  Returns path length,
+   or -1 when the scan exceeded ``best`` or the walk broke. */
 static int64_t nw_path(int64_t qlen, const int32_t *t, int64_t tlen,
                        const word *peq, int64_t best,
-                       word *bp, word *bm, int64_t *bs, int8_t *out_moves) {
-    int64_t nb = (qlen + WBITS - 1) / WBITS;
-    word *ps = (word *)calloc((size_t)(nb * tlen), sizeof(word));
-    word *ms = (word *)calloc((size_t)(nb * tlen), sizeof(word));
-    int64_t *scores = (int64_t *)calloc((size_t)(nb * tlen),
-                                        sizeof(int64_t));
-    int64_t *fbs = (int64_t *)calloc((size_t)tlen, sizeof(int64_t));
-    int64_t *lbs = (int64_t *)calloc((size_t)tlen, sizeof(int64_t));
-    int64_t ret = INT32_MIN;
-    if (ps && ms && scores && fbs && lbs) {
-        band_save save = {ps, ms, scores, fbs, lbs, -1};
-        int32_t got = nw_scan(qlen, t, tlen, peq, best, bp, bm, bs, &save);
-        ret = (got < 0) ? -1
-            : nw_walk(qlen, tlen, (int64_t)got, nb, ps, ms, scores, fbs,
-                      lbs, out_moves);
-    }
-    free(ps); free(ms); free(scores); free(fbs); free(lbs);
-    return ret;
+                       word *bp, word *bm, int64_t *bs,
+                       const band_save *save, int8_t *out_moves) {
+    int32_t got = nw_scan(qlen, t, tlen, peq, best, bp, bm, bs, save);
+    if (got < 0) return -1;
+    return nw_walk(qlen, tlen, (int64_t)got, (qlen + WBITS - 1) / WBITS,
+                   save->ps, save->ms, save->scores, save->first_blocks,
+                   save->last_blocks, out_moves);
 }
 
 /* The per-pair exports' working set for one pair of kernel.encode_pair
    dense codes, in one block the caller frees: the query's Peq profile
    (built here) and build_peq's snapshot, sigma * nb words each, then
-   nw_scan's column state bp / bm / bs, nb words each.  NULL on
-   allocation failure. */
+   nw_scan's column state bp / bm / bs, nb words each, then ``extra``
+   words for the caller.  NULL on allocation failure. */
 static word *pair_setup(const int32_t *q, int64_t qlen, int64_t sigma,
                         const int32_t *eqa, const int32_t *eqb,
-                        int64_t n_eq) {
+                        int64_t n_eq, int64_t extra) {
     int64_t nb = (qlen + WBITS - 1) / WBITS;
-    word *blk = (word *)malloc((size_t)((2 * sigma + 3) * nb)
+    word *blk = (word *)malloc((size_t)((2 * sigma + 3) * nb + extra)
                                * sizeof(word));
     if (blk)
         build_peq(blk, blk + sigma * nb, q, qlen, nb, sigma, eqa, eqb, n_eq);
@@ -734,7 +746,7 @@ int32_t nw_fill_alignment(const int32_t *q, int64_t qlen,
                           uint64_t *ps, uint64_t *ms, int64_t *scores,
                           int64_t *first_blocks, int64_t *last_blocks) {
     int64_t nb = (qlen + WBITS - 1) / WBITS;
-    word *blk = pair_setup(q, qlen, sigma, eqa, eqb, n_eq);
+    word *blk = pair_setup(q, qlen, sigma, eqa, eqb, n_eq, 0);
     if (!blk) return INT32_MIN;
     word *col = blk + 2 * sigma * nb;
     band_save save = {ps, ms, scores, first_blocks, last_blocks,
@@ -746,18 +758,22 @@ int32_t nw_fill_alignment(const int32_t *q, int64_t qlen,
 }
 
 /* Saved-band scan + traceback in one call (the direct-traceback arm
-   of kernel._obtain_alignment) for one dense-encoded pair.  Same
-   returns as nw_path; -1 makes the caller fall back to Python. */
+   of kernel._obtain_alignment) for one dense-encoded pair; the band
+   lives in the same block as the Peq.  Same returns as nw_path, or
+   INT32_MIN on allocation failure; either makes the caller fall back
+   to Python. */
 int64_t nw_align_path(const int32_t *q, int64_t qlen,
                       const int32_t *t, int64_t tlen, int64_t sigma,
                       const int32_t *eqa, const int32_t *eqb, int64_t n_eq,
                       int64_t best, int8_t *out_moves) {
     int64_t nb = (qlen + WBITS - 1) / WBITS;
-    word *blk = pair_setup(q, qlen, sigma, eqa, eqb, n_eq);
+    word *blk = pair_setup(q, qlen, sigma, eqa, eqb, n_eq,
+                           band_words(nb, tlen));
     if (!blk) return INT32_MIN;
     word *col = blk + 2 * sigma * nb;
+    band_save save = band_in(col + 3 * nb, nb, tlen);
     int64_t ret = nw_path(qlen, t, tlen, blk, best, col, col + nb,
-                          (int64_t *)(col + 2 * nb), out_moves);
+                          (int64_t *)(col + 2 * nb), &save, out_moves);
     free(blk);
     return ret;
 }
@@ -785,32 +801,38 @@ static int64_t cigar_rle(const int8_t *moves, int64_t n, int extended,
     return pos;
 }
 
-/* align_expr's NW lane for a whole batch.  Writes the alphabet size of
-   every pair to sigma_out.  Pairs with path_d[i] >= 0 (path_d may be
-   NULL) and both sides non-empty also get their traceback at
-   k = path_d[i], the exact distance: the CIGAR is appended to
-   ``cigar`` and cigar_end[i] is its end offset there (it starts at the
-   previous non-negative end).  cigar_end[i] = -1 where no CIGAR was
-   built: not asked for, or a per-pair allocation / walk failure (the
-   caller re-runs those pairs).  The caller sizes ``cigar`` to the sum
-   of 2 * (qlen + tlen) over the asked-for pairs.  Returns 0, or -1
-   when the batch scratch could not be allocated. */
-int batch_nw_align(const uint32_t *qbuf, const int64_t *qstart,
-                   const int64_t *qlens,
-                   const uint32_t *tbuf, const int64_t *tstart,
-                   const int64_t *tlens, int64_t n,
-                   const uint32_t *eqa, const uint32_t *eqb, int64_t n_eq,
-                   const int32_t *path_d, int extended,
-                   int32_t *sigma_out, char *cigar, int64_t *cigar_end) {
+/* The one batch entry: edlibAlign's steps (edlib.cpp:146-301) for
+   every pair of the flat codepoint encoding.  Per pair: recode it
+   (sigma_out[i], its alphabet size); short-circuit an empty side,
+   which ignores k (edlib.cpp:165-184); clamp an HW k to qlen; build
+   the Peq once; run the scan (nw_scan, or sg_scan for mode 1 = SHW /
+   2 = HW) at k = ks[i], or for ks[i] < 0 edlib's k = 64, 128, ...
+   doubling around the scan alone, capped at the largest possible
+   distance (edlib.cpp:196-217).  dist[i] is the distance, -1 when it
+   exceeds k, or UNSUPPORTED when the Peq could not be grown.
+   NW pairs with path[i] != 0 (path may be NULL), both sides non-empty
+   and a distance also get their traceback at k = dist[i], edlib's
+   obtainAlignment at bestScore: the CIGAR (=/I/D/X when extended, else
+   M/I/D) is appended to ``cigar`` and cigar_end[i] is its end offset
+   there (it starts at the previous non-negative end).  cigar_end[i] =
+   -1 where no CIGAR was built: not asked for, no distance, or a band
+   allocation / walk failure (the caller re-runs those pairs).  The
+   caller sizes ``cigar`` to the sum of 2 * (qlen + tlen) over the
+   asked-for pairs.  Returns 0, or -1 when the batch scratch could not
+   be allocated. */
+int batch_align(const uint32_t *qbuf, const int64_t *qstart,
+                const int64_t *qlens,
+                const uint32_t *tbuf, const int64_t *tstart,
+                const int64_t *tlens,
+                const int64_t *ks, int64_t n, int mode,
+                const uint32_t *eqa, const uint32_t *eqb, int64_t n_eq,
+                const uint8_t *path, int extended,
+                int32_t *dist, int32_t *sigma_out, char *cigar,
+                int64_t *cigar_end) {
     scratch s;
     if (scratch_init(&s, qbuf, qstart, qlens, tbuf, tstart, tlens, n,
                      eqa, eqb, n_eq) != 0)
         return -1;
-    int8_t *moves = NULL;
-    if (path_d) {
-        moves = (int8_t *)malloc((size_t)(s.cap_q + s.cap_t));
-        if (!moves) { scratch_free(&s); return -1; }
-    }
     int64_t pos = 0;
     for (int64_t i = 0; i < n; i++) {
         int64_t ql = qlens[i];
@@ -819,48 +841,34 @@ int batch_nw_align(const uint32_t *qbuf, const int64_t *qstart,
                                     tl, &s);
         sigma_out[i] = sigma;
         cigar_end[i] = -1;
-        if (!path_d || path_d[i] < 0 || ql == 0 || tl == 0) continue;
-        if (!scratch_reserve(&s, sigma)) continue;
+        int64_t cap = (mode == 0 && tl > ql) ? tl : ql;
+        if (ql == 0 || tl == 0) { dist[i] = (int32_t)cap; continue; }
+        int64_t k = ks[i] >= 0 ? ks[i] : WBITS;
+        if ((ks[i] < 0 || mode == 2) && k > cap) k = cap;
         int64_t nb = (ql + WBITS - 1) / WBITS;
+        if (!scratch_reserve(&s, sigma)) { dist[i] = UNSUPPORTED; continue; }
         fill_peq(&s, sigma, ql, nb);
-        int64_t m = nw_path(ql, s.ts, tl, s.peq, path_d[i], s.pv, s.mv,
-                            s.score, moves);
+        int32_t d;
+        while ((d = mode == 0
+                    ? nw_scan(ql, s.ts, tl, s.peq, k, s.pv, s.mv, s.score,
+                              NULL)
+                    : sg_scan(ql, s.ts, tl, s.peq, k, mode, s.pv, s.mv,
+                              s.score)) == -1
+               && ks[i] < 0 && k < cap)
+            k = 2 * k < cap ? 2 * k : cap;
+        dist[i] = d;
+        /* the band, then ql + tl moves */
+        int64_t bw = band_words(nb, tl);
+        if (!path || !path[i] || mode != 0 || d < 0
+            || !scratch_band(&s, bw + (ql + tl) / 8 + 1))
+            continue;
+        band_save save = band_in(s.band, nb, tl);
+        int8_t *moves = (int8_t *)(s.band + bw);
+        int64_t m = nw_path(ql, s.ts, tl, s.peq, d, s.pv, s.mv, s.score,
+                            &save, moves);
         if (m < 0) continue;
         pos += cigar_rle(moves, m, extended, cigar + pos);
         cigar_end[i] = pos;
-    }
-    free(moves);
-    scratch_free(&s);
-    return 0;
-}
-
-int batch_distance(const uint32_t *qbuf, const int64_t *qstart,
-                   const int64_t *qlens,
-                   const uint32_t *tbuf, const int64_t *tstart,
-                   const int64_t *tlens,
-                   const int64_t *ks, int64_t n, int mode,
-                   const uint32_t *eqa, const uint32_t *eqb, int64_t n_eq,
-                   int32_t *out) {
-    scratch s;
-    if (scratch_init(&s, qbuf, qstart, qlens, tbuf, tstart, tlens, n,
-                     eqa, eqb, n_eq) != 0)
-        return -1;
-    for (int64_t i = 0; i < n; i++) {
-        int64_t ql = qlens[i];
-        int64_t tl = tlens[i];
-        /* alphabet can't exceed ql + tl; grow peq when needed */
-        int64_t need = ql + tl < s.n_cp ? ql + tl : s.n_cp;
-        if (!scratch_reserve(&s, need)) { out[i] = UNSUPPORTED; continue; }
-        const uint32_t *q = qbuf + qstart[i], *t = tbuf + tstart[i];
-        /* unbounded (k < 0): banded scans at k = 64, 128, ... up to the
-           largest possible distance (edlib.cpp:196-217) */
-        int64_t cap = (mode == 0 && tl > ql) ? tl : ql;
-        int64_t k = ks[i] >= 0 ? ks[i] : (WBITS < cap ? WBITS : cap);
-        int32_t d;
-        while ((d = pair_distance(q, ql, t, tl, k, mode, &s)) == -1
-               && ks[i] < 0 && k < cap)
-            k = 2 * k < cap ? 2 * k : cap;
-        out[i] = d;
     }
     scratch_free(&s);
     return 0;
@@ -868,13 +876,15 @@ int batch_distance(const uint32_t *qbuf, const int64_t *qstart,
 """
 
 _CDEF = """
-int batch_distance(const uint32_t *qbuf, const int64_t *qstart,
-                   const int64_t *qlens,
-                   const uint32_t *tbuf, const int64_t *tstart,
-                   const int64_t *tlens,
-                   const int64_t *ks, int64_t n, int mode,
-                   const uint32_t *eqa, const uint32_t *eqb, int64_t n_eq,
-                   int32_t *out);
+int batch_align(const uint32_t *qbuf, const int64_t *qstart,
+                const int64_t *qlens,
+                const uint32_t *tbuf, const int64_t *tstart,
+                const int64_t *tlens,
+                const int64_t *ks, int64_t n, int mode,
+                const uint32_t *eqa, const uint32_t *eqb, int64_t n_eq,
+                const uint8_t *path, int extended,
+                int32_t *dist, int32_t *sigma_out, char *cigar,
+                int64_t *cigar_end);
 int32_t nw_fill_alignment(const int32_t *q, int64_t qlen,
                           const int32_t *t, int64_t tlen, int64_t sigma,
                           const int32_t *eqa, const int32_t *eqb,
@@ -885,13 +895,6 @@ int64_t nw_align_path(const int32_t *q, int64_t qlen,
                       const int32_t *t, int64_t tlen, int64_t sigma,
                       const int32_t *eqa, const int32_t *eqb, int64_t n_eq,
                       int64_t best, int8_t *out_moves);
-int batch_nw_align(const uint32_t *qbuf, const int64_t *qstart,
-                   const int64_t *qlens,
-                   const uint32_t *tbuf, const int64_t *tstart,
-                   const int64_t *tlens, int64_t n,
-                   const uint32_t *eqa, const uint32_t *eqb, int64_t n_eq,
-                   const int32_t *path_d, int extended,
-                   int32_t *sigma_out, char *cigar, int64_t *cigar_end);
 """
 
 _COMPILE_ARGS = ["-O3", "-march=native"]
@@ -960,29 +963,67 @@ def _build():
 _build()
 
 
-def native_batch_distance(q_flat, q_start, q_lens, t_flat, t_start,
-                          t_lens, ks, mode: str, equalities=None):
-    """Run the native kernel over flat uint32 codepoint buffers with
-    per-pair (start, len) views — no copying or recoding in Python.
-    ``equalities``: optional (eqa, eqb) pair of uint32 codepoint arrays
-    (additional-equality pairs applied to every pair in the batch).
+def native_batch(q_flat, q_start, q_lens, t_flat, t_start, t_lens, ks,
+                 mode: str, equalities=None, path=None, extended=True):
+    """Both alignment lanes for a whole batch in one C call
+    (``batch_align``), over the flat uint32 codepoint encoding
+    ``batch.encode_flat`` builds — no copying or recoding in Python.
+
     ``ks``: per-pair bounds; k < 0 runs the dynamic-k doubling.
-    Returns int32 results (UNSUPPORTED sentinel per unhandled pair), or
-    None when the native library is unavailable or the batch scratch
-    could not be allocated."""
+    ``equalities``: optional (eqa, eqb) pair of uint32 codepoint arrays
+    (additional-equality pairs applied to every pair).  ``path``:
+    optional per-pair bool mask (NW only) of the pairs whose CIGAR to
+    trace at k = their distance (extended =/I/D/X or standard M/I/D).
+
+    Returns ``(dist, sigma, cigars)``: int32 distances (-1 past k, the
+    ``UNSUPPORTED`` sentinel per unscored pair), int32 alphabet sizes,
+    and a list holding each masked pair's CIGAR where it was built and
+    None elsewhere — an empty side, no distance, or an allocation / walk
+    failure the caller re-runs per pair.  None when the native library
+    is unavailable or the batch scratch could not be allocated."""
     if lib is None:
         return None
     n = len(q_lens)
-    out = np.empty(n, dtype=np.int32)
-    mode_id = {"NW": 0, "SHW": 1, "HW": 2}[mode]
-    rc = lib.batch_distance(
+    ks = np.ascontiguousarray(ks, dtype=np.int64)
+    # the C entry reads one entry per pair from each
+    if len(ks) != n or (path is not None and len(path) != n):
+        raise ValueError("ks and path need one entry per pair")
+    dist = np.empty(n, dtype=np.int32)
+    sigma = np.empty(n, dtype=np.int32)
+    ends = np.empty(n, dtype=np.int64)
+    if path is None:
+        path_p, cap = ffi.NULL, 0
+    else:
+        if mode != "NW":
+            raise ValueError("only NW pairs trace a path")
+        path = np.ascontiguousarray(path, dtype=np.uint8)
+        path_p = ffi.cast("const uint8_t *", path.ctypes.data)
+        cap = int(np.where(path, 2 * (q_lens + t_lens), 0).sum())
+    buf = np.empty(max(cap, 1), dtype=np.uint8)
+    rc = lib.batch_align(
         *_flat_args(q_flat, q_start, q_lens, t_flat, t_start, t_lens),
-        ffi.cast("const int64_t *", ks.ctypes.data),
-        n, mode_id, *_equality_args(equalities),
-        ffi.cast("int32_t *", out.ctypes.data))
+        ffi.cast("const int64_t *", ks.ctypes.data), n,
+        {"NW": 0, "SHW": 1, "HW": 2}[mode], *_equality_args(equalities),
+        path_p, int(bool(extended)),
+        ffi.cast("int32_t *", dist.ctypes.data),
+        ffi.cast("int32_t *", sigma.ctypes.data),
+        ffi.cast("char *", buf.ctypes.data),
+        ffi.cast("int64_t *", ends.ctypes.data))
     if rc != 0:
         return None
-    return out
+    if path is None:
+        return dist, sigma, [None] * n
+    ends = ends.tolist()
+    text = buf[:max([0, *ends])].tobytes().decode("ascii")
+    cigars = []
+    start = 0
+    for end in ends:
+        if end < 0:
+            cigars.append(None)
+        else:
+            cigars.append(text[start:end])
+            start = end
+    return dist, sigma, cigars
 
 
 def _flat_args(q_flat, q_start, q_lens, t_flat, t_start, t_lens):
@@ -1005,56 +1046,6 @@ def _equality_args(equalities):
     eqb = np.ascontiguousarray(equalities[1], dtype=np.uint32)
     return (ffi.from_buffer("uint32_t[]", eqa),
             ffi.from_buffer("uint32_t[]", eqb), len(eqa))
-
-
-def native_batch_align(q_flat, q_start, q_lens, t_flat, t_start, t_lens,
-                       path_d=None, equalities=None, extended=True):
-    """align_expr's NW lane for a whole batch in one C call, over the
-    flat encoding ``batch.encode_flat`` builds.
-
-    Returns ``(sigma, cigars)``: the int32 alphabet size of every pair,
-    and a list holding the CIGAR of every pair with ``path_d[i] >= 0``
-    and both sides non-empty (NW traceback at k = ``path_d[i]``, the
-    pair's exact distance; extended =/I/D/X or standard M/I/D), None
-    elsewhere — including pairs whose traceback could not be built
-    (allocation failure), which the caller re-runs per pair.
-    ``path_d=None`` computes alphabet sizes only.  ``equalities``: the
-    optional (eqa, eqb) uint32 codepoint arrays.  Returns None when the
-    native library is unavailable or the batch scratch could not be
-    allocated."""
-    if lib is None:
-        return None
-    n = len(q_lens)
-    sigma = np.empty(n, dtype=np.int32)
-    ends = np.empty(n, dtype=np.int64)
-    if path_d is None:
-        path_p, cap = ffi.NULL, 0
-    else:
-        path_d = np.ascontiguousarray(path_d, dtype=np.int32)
-        if len(path_d) != n:   # C reads one entry per pair
-            raise ValueError("path_d needs one entry per pair")
-        path_p = ffi.cast("const int32_t *", path_d.ctypes.data)
-        cap = int(np.where(path_d >= 0, 2 * (q_lens + t_lens), 0).sum())
-    buf = np.empty(max(cap, 1), dtype=np.uint8)
-    rc = lib.batch_nw_align(
-        *_flat_args(q_flat, q_start, q_lens, t_flat, t_start, t_lens), n,
-        *_equality_args(equalities), path_p, int(bool(extended)),
-        ffi.cast("int32_t *", sigma.ctypes.data),
-        ffi.cast("char *", buf.ctypes.data),
-        ffi.cast("int64_t *", ends.ctypes.data))
-    if rc != 0:
-        return None
-    ends = ends.tolist()
-    text = buf[:max(ends, default=0)].tobytes().decode("ascii")
-    cigars = []
-    start = 0
-    for end in ends:
-        if end < 0:
-            cigars.append(None)
-        else:
-            cigars.append(text[start:end])
-            start = end
-    return sigma, cigars
 
 
 def _code_pairs(eq):

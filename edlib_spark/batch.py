@@ -1,17 +1,18 @@
-"""Batch edit-distance dispatcher (the Arrow hot path).
+"""Batch alignment dispatcher (the Arrow hot path).
 
-Computes NW / SHW / HW edit distances for a whole Arrow batch of
-(query, target) string pairs in three steps:
+Computes NW / SHW / HW edit distances (and, for ``align_expr``,
+alphabet sizes and NW CIGARs) for a whole Arrow batch of (query,
+target) string pairs in three steps:
 
   1. encode both sides once into flat uint32 codepoint buffers
      (``encode_flat``);
-  2. one call into the cffi-compiled banded Myers scan
-     (``_native.native_batch_distance``), which scores every pair,
-     astral-plane text included, makes the reference's short circuits
-     (empty sides, edlib.cpp:165-184; NW k < |tlen - qlen|,
-     edlib.cpp:744-747; the HW clamp of k to qlen) and runs edlib's
-     k = 64, 128, ... doubling for unbounded pairs (edlib.cpp:196-217)
-     in C;
+  2. one call into the cffi-compiled banded Myers scans
+     (``_native.native_batch``), which scores every pair, astral-plane
+     text included, makes the reference's short circuits (empty sides,
+     edlib.cpp:165-184; NW k < |tlen - qlen|, edlib.cpp:744-747; the
+     HW clamp of k to qlen), runs edlib's k = 64, 128, ... doubling for
+     unbounded pairs (edlib.cpp:196-217) and traces the asked-for NW
+     paths, all in C;
   3. the exact single-pair kernel (``kernel.align``, which makes the
      same short circuits) for whatever the native call did not score:
      no native library (no compiler on the host), a batch-level
@@ -98,39 +99,43 @@ def batch_edit_distance(queries, targets, mode: str = "NW", k=-1,
         raise ValueError("queries and targets must have equal length")
     return _flat_distance(queries, targets, encode_flat(queries),
                           encode_flat(targets), mode, k,
-                          _symbol_pairs(equalities))
+                          _symbol_pairs(equalities))[0]
 
 
-def _flat_distance(queries, targets, q_enc, t_enc, mode, k, eqs):
-    """``batch_edit_distance`` over the strings AND their
-    ``encode_flat`` encodings, so a caller that needs the encoding for
-    another native call encodes once.  ``eqs``: ``_symbol_pairs``
-    output."""
+def _flat_distance(queries, targets, q_enc, t_enc, mode, k, eqs,
+                   path=None, extended=True):
+    """The one dispatcher over ``_native.native_batch``: the strings AND
+    their ``encode_flat`` encodings in, ``(dist, sigma, cigars)`` out —
+    int32 distances, alphabet sizes and the NW CIGARs of the ``path``
+    mask's pairs (``native_batch``'s contract; None where not built).
+    ``eqs``: ``_symbol_pairs`` output.  Rows the native call did not
+    score take ``_exact_distances``."""
     if mode not in ("NW", "SHW", "HW"):
         raise ValueError(f"invalid mode {mode!r}")
-    q_buf, q_start, q_lens = q_enc
-    t_buf, t_start, t_lens = t_enc
-    n = len(q_lens)
+    n = len(q_enc[2])
     k_arr = np.broadcast_to(np.asarray(k, dtype=np.int64), (n,)).copy()
 
     from . import _native
-    out = _native.native_batch_distance(q_buf, q_start, q_lens, t_buf,
-                                        t_start, t_lens, k_arr, mode,
-                                        _encode_equalities(eqs))
-    if out is None:
-        out = np.full(n, _native.UNSUPPORTED, dtype=np.int32)
-    todo = np.nonzero(out == _native.UNSUPPORTED)[0]
+    got = _native.native_batch(*q_enc, *t_enc, k_arr, mode,
+                               _encode_equalities(eqs), path, extended)
+    if got is None:
+        got = (np.full(n, _native.UNSUPPORTED, dtype=np.int32),
+               np.zeros(n, dtype=np.int32), [None] * n)
+    dist, sigma, cigars = got
+    todo = np.nonzero(dist == _native.UNSUPPORTED)[0]
     if len(todo):
-        out[todo] = _exact_distances(
+        dist[todo], sigma[todo] = _exact_distances(
             [queries[i] for i in todo], [targets[i] for i in todo],
             mode, k_arr[todo], eqs)
-    return out
+    return dist, sigma, cigars
 
 
 def _exact_distances(queries, targets, mode, ks, eqs):
-    """Per-pair exact fallback: ``kernel.align``'s distance for pairs
-    the native scan did not score (a None side is "")."""
-    return [kernel.align(q or "", t or "", mode, "distance", int(k),
-                         additionalEqualities=eqs,
-                         max_alphabet=None)["editDistance"]
-            for q, t, k in zip(queries, targets, ks)]
+    """Per-pair exact fallback: ``kernel.align``'s distances and
+    alphabet sizes for pairs the native scan did not score (a None side
+    is "")."""
+    res = [kernel.align(q or "", t or "", mode, "distance", int(k),
+                        additionalEqualities=eqs, max_alphabet=None)
+           for q, t, k in zip(queries, targets, ks)]
+    return ([r["editDistance"] for r in res],
+            [r["alphabetLength"] for r in res])

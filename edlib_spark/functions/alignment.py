@@ -8,10 +8,10 @@ Public surface mirrors the reference Python binding
     Myers kernel (edlib_spark.batch, one native call per batch): no
     per-row Python, per-pair k bounds (pass a Column for k).
   * ``align_expr(q, t, mode, task, k, ...)`` — full result struct
-    (editDistance, alphabetLength, locations, cigar).  Distances come
-    from the same batch kernel; the NW lane gets every row's alphabet
-    size and traceback CIGAR from one native call per Arrow batch, and the
-    exact single-pair kernel runs only for HW/SHW location scans and
+    (editDistance, alphabetLength, locations, cigar).  The same one
+    native call per Arrow batch returns every row's distance and
+    alphabet size and, on the NW lane, its traceback CIGAR; the exact
+    single-pair kernel runs only for HW/SHW location scans and
     tracebacks (banded at the known distance) and for edge cases (empty
     sides, tracebacks past the Hirschberg boundary, no native library).
     Bulk 'distance' scoring should still prefer ``edit_distance``
@@ -32,8 +32,7 @@ from pyspark.sql.types import (
 
 from .. import kernel
 from ..batch import (
-    _encode_equalities, _flat_distance, _symbol_pairs, batch_edit_distance,
-    encode_flat,
+    _flat_distance, _symbol_pairs, batch_edit_distance, encode_flat,
 )
 
 ALIGN_RESULT_TYPE = StructType([
@@ -84,17 +83,16 @@ def align_expr(query: Column, target: Column, mode: str = "NW",
     """Full alignment result struct (editDistance, alphabetLength,
     locations, cigar).
 
-    Each Arrow batch runs ``_align_batch``: distances come from the
-    batch kernel (``batch_edit_distance``'s native scan), and for NW
-    one more native call over the same encoding returns every row's
-    alphabet size and, under ``task='path'``, every row's CIGAR
-    (traceback banded at the known distance, k = d, the tightest
-    admissible band; the reference's traceback is per-pair,
-    edlib/src/edlib.cpp:931-1141, but the batch loop around it need not
-    be).  NW locations follow from the distance alone.  Rows whose
-    distance exceeds ``k`` never reach a per-pair scan; HW/SHW rows
-    with a distance run the exact single-pair kernel (``kernel.align``)
-    for their locations / path.
+    Each Arrow batch runs ``_align_batch``: one native call (the batch
+    entry ``batch_edit_distance`` also runs) returns every row's
+    distance and alphabet size and, for NW under ``task='path'``,
+    every row's CIGAR (traceback banded at the known distance, k = d,
+    the tightest admissible band; the reference's traceback is
+    per-pair, edlib/src/edlib.cpp:931-1141, but the batch loop around
+    it need not be).  NW locations follow from the distance alone.
+    Rows whose distance exceeds ``k`` never reach a per-pair scan;
+    HW/SHW rows with a distance run the exact single-pair kernel
+    (``kernel.align``) for their locations / path.
 
     ``k`` may be an int (same bound for all rows) or a Column (per-pair
     bound, same as ``edit_distance``).
@@ -133,90 +131,66 @@ def _align_batch(qs: list, ts: list, ks, mode: str, task: str, eqs,
     """``align_expr``'s result rows for one batch of str pairs.
 
     ``ks``: scalar or per-row k; ``eqs``: equality pairs of single
-    characters (``_symbol_pairs`` output).  Both sides are encoded once
-    for the distance call and the NW align call.  The per-pair Python
-    kernel runs only for rows with an empty side, HW/SHW rows with a
-    distance, and NW paths the batch call did not build: pairs past
-    the direct-traceback memory limit (kernel._direct_traceback, the
-    reference's Hirschberg boundary), a native allocation failure, or
-    no native library at all.
+    characters (``_symbol_pairs`` output).  One native call
+    (``batch._flat_distance``) returns every row's distance and
+    alphabet size, and under NW ``task='path'`` the CIGAR of every row
+    on the direct traceback.  The per-pair Python kernel runs only for
+    rows with an empty side, HW/SHW rows with a distance, and NW paths
+    the batch call did not build: pairs past the direct-traceback
+    memory limit (kernel._direct_traceback, the reference's Hirschberg
+    boundary), a native allocation failure, or no native library at
+    all.
     """
-    from .. import _native
-
     n = len(qs)
     q_enc, t_enc = encode_flat(qs), encode_flat(ts)
-    dists = _flat_distance(qs, ts, q_enc, t_enc, mode, ks, eqs)
-    per_row_k = np.broadcast_to(np.asarray(ks, dtype=np.int64), (n,))
     q_lens, t_lens = q_enc[2], t_enc[2]
     extended = cigar_format == "extended"
-
-    path_d = None
+    nonempty = (q_lens > 0) & (t_lens > 0)
+    path = None
     if mode == "NW" and task == "path":
-        path_d = np.where((q_lens > 0) & (t_lens > 0) & (dists >= 0)
-                          & kernel._direct_traceback(q_lens, t_lens),
-                          dists, -1)
-    got = _native.native_batch_align(*q_enc, *t_enc, path_d,
-                                     _encode_equalities(eqs), extended)
-    if got is None:
-        # alphabet size as kernel.encode_pair counts it: unique symbols
-        # across both sequences (equality pairs relate symbols, they
-        # don't merge alphabet letters — reference edlib.cpp:63-94)
-        sigma = np.fromiter((len(set(q) | set(t)) for q, t in zip(qs, ts)),
-                            dtype=np.int64, count=n)
-        cigars = [None] * n
-    else:
-        sigma, cigars = got
+        path = nonempty & kernel._direct_traceback(q_lens, t_lens)
+    dists, sigma, cigars = _flat_distance(qs, ts, q_enc, t_enc, mode, ks,
+                                          eqs, path, extended)
     if max_alphabet is not None and n and sigma.max() > max_alphabet:
         raise ValueError(
             "query and target combined have more than %d unique "
             "values, this is not supported." % max_alphabet)
 
-    rows = []
-    for qi, ti, d, sg, cigar, ki in zip(qs, ts, dists.tolist(),
-                                        sigma.tolist(), cigars, per_row_k):
-        if not qi or not ti:
-            # empty-sequence semantics live in the kernel (and the
-            # short-circuit ignores k, so d already agrees)
-            r = kernel.align(qi, ti, mode=mode, task=task, k=int(ki),
-                             additionalEqualities=eqs,
-                             max_alphabet=max_alphabet,
-                             cigar_format=cigar_format)
-        elif d < 0:
-            rows.append((-1, sg, [], None))
-            continue
-        elif mode == "NW":
-            # NW locations are fully determined by the distance: end =
-            # tlen-1 always, start = 0 when asked (kernel.align's NW
-            # branch)
-            end = len(ti) - 1
-            if task == "distance":
-                rows.append((d, sg, [(None, end)], None))
-                continue
-            if task == "path" and cigar is None:
+    if mode == "NW":
+        # NW locations are fully determined by the distance: end =
+        # tlen-1 always, start = 0 when asked (kernel.align's NW branch)
+        start = None if task == "distance" else 0
+        locations = [[(start, end)] if d >= 0 else []
+                     for d, end in zip(dists.tolist(), (t_lens - 1).tolist())]
+        redo = ~nonempty
+    else:
+        locations = [[] for _ in range(n)]
+        redo = ~nonempty | (dists >= 0)
+    per_row_k = np.broadcast_to(np.asarray(ks, dtype=np.int64), (n,))
+    for i in np.flatnonzero(redo).tolist():
+        # empty sides: the kernel's semantics (the short circuit ignores
+        # k, so the distance already agrees).  HW/SHW locations / path
+        # / semi-global ends: a per-pair scan banded at the known
+        # distance (same result for any band >= d; property-pinned in
+        # tests/test_kernel.py::test_band_at_exact_distance_invariance)
+        k = dists[i] if nonempty[i] else per_row_k[i]
+        r = kernel.align(qs[i], ts[i], mode=mode, task=task, k=int(k),
+                         additionalEqualities=eqs,
+                         max_alphabet=max_alphabet, cigar_format=cigar_format)
+        dists[i], sigma[i] = r["editDistance"], r["alphabetLength"]
+        locations[i] = [(s, e) for s, e in r["locations"]]
+        cigars[i] = r["cigar"]
+    if path is not None:
+        for i in np.flatnonzero(nonempty & (dists >= 0)).tolist():
+            if cigars[i] is None:
                 q_codes, t_codes, _, eqm = kernel.encode_pair(
-                    qi, ti, eqs, None)
-                path = kernel._obtain_alignment(q_codes, t_codes, eqm,
-                                                sg, d)
-                cigar = kernel.path_to_cigar(path, extended=extended)
-            rows.append((d, sg, [(0, end)], cigar))
-            continue
-        else:
-            # locations / path / semi-global ends: per-pair scan,
-            # banded at the known distance (same result for any
-            # band >= d; property-pinned in tests/test_kernel.py::
-            # test_band_at_exact_distance_invariance)
-            r = kernel.align(qi, ti, mode=mode, task=task, k=d,
-                             additionalEqualities=eqs,
-                             max_alphabet=max_alphabet,
-                             cigar_format=cigar_format)
-        rows.append((
-            r["editDistance"],
-            r["alphabetLength"],
-            [(s, e) for s, e in r["locations"]],
-            r["cigar"],
-        ))
-    return pd.DataFrame(rows, columns=["editDistance", "alphabetLength",
-                                       "locations", "cigar"])
+                    qs[i], ts[i], eqs, None)
+                cigars[i] = kernel.path_to_cigar(
+                    kernel._obtain_alignment(q_codes, t_codes, eqm,
+                                             int(sigma[i]), int(dists[i])),
+                    extended=extended)
+    return pd.DataFrame({"editDistance": dists, "alphabetLength": sigma,
+                         "locations": locations, "cigar": cigars})
 
 
 def nice_alignment(align_result: Column, query: Column,

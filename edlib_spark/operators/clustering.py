@@ -70,8 +70,9 @@ def _edge_fingerprint(edges: DataFrame):
 # dominates wall time on small graphs and is pure scheduling overhead
 # at every scale.
 DRIVER_CC_MAX_EDGES = 200_000
-# Cap on the distributed star passes before the assignment is read off
-# the current edge set; each pass shrinks the edge set geometrically.
+# Cap on the distributed star passes; each pass shrinks the edge set
+# geometrically.  A loop that hits it without a fixpoint finishes on
+# the driver when the edges left fit there, and raises otherwise.
 CC_MAX_ITERATIONS = 25
 
 
@@ -164,6 +165,17 @@ def connected_components(edges: DataFrame,
         if fp == prev_fp:
             break
         prev_fp = fp
+    else:
+        # no fixpoint within the cap: the star passes preserve the
+        # components, so a union-find over what is left is still exact;
+        # reading the assignment off a non-fixpoint would split clusters
+        if prev_fp[0] <= driver_finish_max_edges:
+            return _finish_on_driver(current)
+        raise RuntimeError(
+            f"connected_components found no fixpoint within "
+            f"CC_MAX_ITERATIONS={CC_MAX_ITERATIONS} star passes and "
+            f"{prev_fp[0]} edges are left, more than the driver finish "
+            f"takes (driver_finish_max_edges={driver_finish_max_edges})")
 
     # at fixpoint every edge points node -> component root
     members = current.select(F.col("id_a").alias("conv_id"),

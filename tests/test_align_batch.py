@@ -19,26 +19,39 @@ _BIG_T = ("acgt" * 400)[:1590] + "ttgg" * 5
 
 def _suite(rng, n=60):
     """Variant pairs over a small alphabet with astral symbols and lone
-    surrogates mixed in, plus empties and one near-miss."""
+    surrogates mixed in, plus empties and one near-miss.  Three long
+    pairs (450-900 chars) lead the batch: their distances pass 64 and
+    128, so unbounded rows run the native k-doubling and then trace at
+    k = d, and the short pairs after them run on batch scratch the
+    long ones left dirty."""
     alpha = list("abcde") + ["\U0001F600", "\U0010FFFF", "\ud800", "\udfff"]
     qs, ts = ["", "", "abc", "a😀b"], ["", "xyz", "", "ab"]
     for _ in range(n):
-        q = [alpha[i] for i in rng.integers(0, len(alpha),
-                                            rng.integers(1, 150))]
-        t = list(q)
-        for _ in range(int(rng.integers(0, 25))):
-            pos = int(rng.integers(0, len(t) + 1))
-            op = rng.random()
-            if op < 0.3:
-                t.insert(pos, alpha[int(rng.integers(0, len(alpha)))])
-            elif op < 0.6 and len(t) > 1:
-                t.pop(min(pos, len(t) - 1))
-            else:
-                t[min(pos, len(t) - 1)] = alpha[
-                    int(rng.integers(0, len(alpha)))]
-        qs.append("".join(q))
-        ts.append("".join(t))
-    return qs, ts
+        _mutate(rng, alpha, [alpha[i] for i in rng.integers(
+            0, len(alpha), rng.integers(1, 150))],
+            int(rng.integers(0, 25)), qs, ts)
+    long_qs, long_ts = [], []
+    for length, edits in ((450, 90), (700, 170), (900, 260)):
+        _mutate(rng, alpha, [alpha[i] for i in rng.integers(
+            0, len(alpha), length)], edits, long_qs, long_ts)
+    return long_qs + qs, long_ts + ts
+
+
+def _mutate(rng, alpha, q, edits, qs, ts):
+    """Append query ``q`` and a copy with ``edits`` random inserts,
+    deletes and substitutions to ``qs`` / ``ts``."""
+    t = list(q)
+    for _ in range(edits):
+        pos = int(rng.integers(0, len(t) + 1))
+        op = rng.random()
+        if op < 0.3:
+            t.insert(pos, alpha[int(rng.integers(0, len(alpha)))])
+        elif op < 0.6 and len(t) > 1:
+            t.pop(min(pos, len(t) - 1))
+        else:
+            t[min(pos, len(t) - 1)] = alpha[int(rng.integers(0, len(alpha)))]
+    qs.append("".join(q))
+    ts.append("".join(t))
 
 
 def _rows(df):
@@ -61,6 +74,16 @@ def _want(qs, ts, ks, mode, task, eqs, fmt):
 @pytest.fixture(scope="module")
 def suite():
     return _suite(np.random.default_rng(11))
+
+
+@pytest.mark.parametrize("mode", kernel.MODES)
+def test_suite_needs_k_doubling(suite, mode):
+    """The long pairs leading the suite need a second and a third
+    doubling round (distance past 64 and past 128) on every mode."""
+    qs, ts = suite
+    d = [kernel.align(q, t, mode=mode)["editDistance"]
+         for q, t in zip(qs[:3], ts[:3])]
+    assert any(64 < x <= 128 for x in d) and any(x > 128 for x in d), d
 
 
 @pytest.mark.parametrize("fmt", FORMATS)
@@ -116,12 +139,22 @@ def test_lane_empty_batch():
 @pytest.mark.skipif(_native.lib is None, reason="native kernel unavailable")
 @pytest.mark.parametrize("fmt", FORMATS)
 def test_lane_runs_natively(suite, monkeypatch, fmt):
-    """With the native library loaded, no non-empty NW row may reach
-    the per-pair Python encode, traceback or CIGAR builder."""
+    """With the native library loaded, every task on the NW lane makes
+    exactly one native call per batch, and no non-empty row reaches the
+    per-pair Python kernel, encode, traceback or CIGAR builder."""
     qs, ts = suite
     eqs = [("a", "b")]
-    want = _rows(_align_batch(qs, ts, -1, "NW", "path", eqs, None, fmt))
-    real_encode = kernel.encode_pair
+    want = {task: _rows(_align_batch(qs, ts, -1, "NW", task, eqs, None,
+                                     fmt))
+            for task in kernel.TASKS}
+    real_align, real_encode = kernel.align, kernel.encode_pair
+    real_batch = _native.native_batch
+    calls = []
+
+    def align(q, t, *args, **kwargs):
+        if len(q) and len(t):
+            raise AssertionError("per-pair kernel on a non-empty row")
+        return real_align(q, t, *args, **kwargs)
 
     def encode(q, t, *args, **kwargs):
         if len(q) and len(t):
@@ -131,11 +164,20 @@ def test_lane_runs_natively(suite, monkeypatch, fmt):
     def forbidden(*args, **kwargs):
         raise AssertionError("per-pair traceback on the NW lane")
 
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real_batch(*args, **kwargs)
+
+    monkeypatch.setattr(kernel, "align", align)
     monkeypatch.setattr(kernel, "encode_pair", encode)
     monkeypatch.setattr(kernel, "_obtain_alignment", forbidden)
     monkeypatch.setattr(kernel, "path_to_cigar", forbidden)
-    got = _rows(_align_batch(qs, ts, -1, "NW", "path", eqs, None, fmt))
-    assert got == want
+    monkeypatch.setattr(_native, "native_batch", counted)
+    for task in kernel.TASKS:
+        calls.clear()
+        got = _rows(_align_batch(qs, ts, -1, "NW", task, eqs, None, fmt))
+        assert got == want[task], task
+        assert len(calls) == 1, (task, len(calls))
 
 
 @pytest.mark.parametrize("mode", kernel.MODES)
@@ -151,22 +193,26 @@ def test_lane_without_native_library(suite, monkeypatch, mode):
 
 
 def test_native_batch_align_direct():
-    """The C entry point on its own: alphabet sizes for every row,
-    CIGARs only where asked, and an empty batch."""
+    """The C entry point on its own: distances and alphabet sizes for
+    every row, CIGARs only where asked and built (an empty side never
+    gets one), and an empty batch."""
     from edlib_spark.batch import encode_flat
 
     if _native.lib is None:
         pytest.skip("native kernel unavailable")
     qs, ts = ["telephone", "caba", "", "a\U0001F600"], \
         ["elephant", "bbcbaa", "xy", "\U0001F600\U0001F600"]
-    args = (*encode_flat(qs), *encode_flat(ts))
-    sigma, cigars = _native.native_batch_align(
-        *args, path_d=np.array([3, 4, 2, -1]), extended=True)
+    args = (*encode_flat(qs), *encode_flat(ts), np.full(4, -1, np.int64),
+            "NW")
+    dist, sigma, cigars = _native.native_batch(
+        *args, path=np.array([True, True, True, False]), extended=True)
+    assert dist.tolist() == [3, 4, 2, 1]
     assert sigma.tolist() == [8, 3, 2, 2]
     assert cigars == ["1I5=1X1=1X", "2D1=1I2=1D", None, None]
-    sigma, cigars = _native.native_batch_align(*args)
+    dist, sigma, cigars = _native.native_batch(*args)
     assert sigma.tolist() == [8, 3, 2, 2] and cigars == [None] * 4
     empty = encode_flat([])
-    sigma, cigars = _native.native_batch_align(
-        *empty, *empty, path_d=np.array([], dtype=np.int32))
+    dist, sigma, cigars = _native.native_batch(
+        *empty, *empty, np.empty(0, np.int64), "NW",
+        path=np.array([], dtype=bool))
     assert len(sigma) == 0 and cigars == []

@@ -489,9 +489,9 @@ def test_native_empty_batch(native_only):
     for mode in MODES:
         assert batch_edit_distance([], [], mode).tolist() == []
     buf, start, lens = encode_flat([])
-    got = _native.native_batch_distance(buf, start, lens, buf, start,
-                                        lens, np.empty(0, np.int64), "NW")
-    assert got is not None and got.tolist() == []
+    got = _native.native_batch(buf, start, lens, buf, start, lens,
+                               np.empty(0, np.int64), "NW")
+    assert got is not None and got[0].tolist() == []
 
 
 @pytest.mark.parametrize("mode", MODES)
@@ -541,29 +541,29 @@ def test_unscored_native_rows_rescored_exactly(monkeypatch, mode):
                   additionalEqualities=eqs)["editDistance"]
             for q, t, k in zip(qs, ts, ks)]
 
-    real = _native.native_batch_distance
+    real = _native.native_batch
     exact = batch._exact_distances
     native_rows, fallback_rows = [], []
 
     def unsupported_every_third(*args, **kwargs):
-        out = real(*args, **kwargs)
+        got = real(*args, **kwargs)
+        out = got[0]
         native_rows.append(len(out))
         out[::3] = _native.UNSUPPORTED
-        return out
+        return got
 
     def spy(queries, *args):
         fallback_rows.append(len(queries))
         return exact(queries, *args)
 
     monkeypatch.setattr(batch, "_exact_distances", spy)
-    monkeypatch.setattr(_native, "native_batch_distance",
-                        unsupported_every_third)
+    monkeypatch.setattr(_native, "native_batch", unsupported_every_third)
     got = batch_edit_distance(qs, ts, mode, ks, equalities=eqs)
     assert got.tolist() == want
     assert fallback_rows == [len(range(0, native_rows[0], 3))]
 
     fallback_rows.clear()
-    monkeypatch.setattr(_native, "native_batch_distance",
+    monkeypatch.setattr(_native, "native_batch",
                         lambda *args, **kwargs: None)
     got = batch_edit_distance(qs, ts, mode, ks, equalities=eqs)
     assert got.tolist() == want

@@ -71,6 +71,25 @@ def test_cc_driver_finish_equals_distributed(spark):
         assert len(fast) == len({r[0] for r in fast})  # one row per node
 
 
+def test_cc_iteration_cap_fails_loudly(spark, monkeypatch):
+    """A distributed loop that hits CC_MAX_ITERATIONS without a
+    fixpoint raises instead of reading clusters off a non-fixpoint, or
+    finishes on the driver when the edges left fit there.  A path
+    needs more than one star pass; one pass shrinks the clique's 28
+    edges to 7, so 38 edges become at most 30."""
+    from edlib_spark.operators import clustering
+
+    clique = [(a, b) for a in range(8) for b in range(a + 1, 8)]
+    path = [(i, i + 1) for i in range(10, 20)]
+    edges = spark.createDataFrame(clique + path, "id_a long, id_b long")
+    want = {(i, 0) for i in range(8)} | {(i, 10) for i in range(10, 21)}
+    monkeypatch.setattr(clustering, "CC_MAX_ITERATIONS", 1)
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components(edges, driver_finish_max_edges=0)
+    got = connected_components(edges, driver_finish_max_edges=30)
+    assert {tuple(r) for r in got.collect()} == want
+
+
 def test_cc_empty_edges_keep_id_type(spark):
     """An empty edge set yields an empty result typed like the ids."""
     for id_type in ("string", "bigint", "int"):

@@ -194,3 +194,39 @@ def test_package_data_dir_is_its_own_checkout(tmp_path):
     lines = out.stdout.split()
     assert lines == [os.path.join(data, "transcripts_small.parquet"), data,
                      os.path.join(data, "gram_hashes_current.parquet")]
+
+
+def test_kernel_microbench_keeps_hand_written_sections(tmp_path):
+    """``tools/kernel_microbench.py`` rewrites only its own marked
+    sections of BENCH/KERNEL.md: a hand-written section survives, and a
+    run without the live race keeps the live table it last measured."""
+    import importlib.util
+    import shutil
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "edlib_spark_tools_kernel_microbench",
+        os.path.join(repo, "tools", "kernel_microbench.py"))
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    path = tmp_path / "KERNEL.md"
+    shutil.copy(os.path.join(repo, "BENCH", "KERNEL.md"), path)
+    hand = "## A hand-written A/B\n\nparent 1.00 / change 0.99\n"
+    with open(path, "a") as fh:
+        fh.write("\n" + hand)
+    before = path.read_text()
+    live_table = before[before.index("## Live"):
+                        before.index("<!-- kernel_microbench:live end")]
+
+    bench.write_report(str(path), [(30, 1.25, 1.88, 1.5)], [], 0.5, 0.6)
+    after = path.read_text()
+    assert hand in after
+    assert live_table in after
+    assert "| 30×30 | 1.25 | 1.88 | 1.50x |" in after
+    assert "pre 0.50 / post\n0.60 units/s" in after
+    bench.write_report(str(path), [(30, 1.25, 1.88, 1.5)],
+                       [(30, 1.25, 1.30, 1.04)], 0.5, 0.6)
+    after = path.read_text()
+    assert hand in after and live_table not in after
+    assert "| 30×30 | 1.25 | 1.30 | 1.04x |" in after
+    assert after.count("kernel_microbench:live begin") == 1
