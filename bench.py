@@ -122,10 +122,16 @@ def host_cpu_ceiling(n_procs: int) -> float:
     """Raw-CPU throughput (work units/sec) at ``n_procs`` parallel
     processes — the attainable ceiling for any CPU-bound job at that
     parallelism on this host (the sandbox VM advertises 32 vCPUs but
-    the host delivers fewer effective cores)."""
+    the host delivers fewer effective cores).
+
+    The pool is spawned, not forked: a forked child inherits the
+    caller's heap, and after the caller has done work ``_cpu_unit``'s
+    temporaries stop page-faulting, so a forked stamp read the
+    caller's state (about 2x higher late in a process), not the
+    host's."""
     import multiprocessing as mp
     best = 0.0
-    with mp.Pool(n_procs) as pool:
+    with mp.get_context("spawn").Pool(n_procs) as pool:
         pool.map(_cpu_unit, range(n_procs))         # warm
         # best of 2 rounds: the host is shared, so single samples are
         # noisy; the max is the least-contended capability estimate
@@ -244,7 +250,11 @@ def path_workload_section(spark, sf_dir) -> dict:
 
     Both lanes are checksum-compared (sum of cigar lengths + sum of
     distances) before timing, so the speedup is measured on verified
-    identical output."""
+    identical output.
+
+    The legacy lane's ``kernel.align`` is pure Python end to end: its
+    traceback no longer calls the C walk, as it did up to r05, so this
+    section's ``speedup`` is not comparable with r05 and earlier."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 

@@ -1,41 +1,39 @@
-"""cffi-compiled banded Myers scans: one batch entry for both
-alignment lanes, plus the per-pair NW exports kernel.py calls.
+"""cffi-compiled banded Myers scans behind one batch entry,
+``batch_align``, which runs every alignment step the engine compiles.
 
 The C source (JIT-compiled once, cached on disk) holds ONE banded NW
 scan, ``nw_scan``: a transcription of kernel._scan_nw and of the
 reference's single myersCalcEditDistanceNW (edlib.cpp:707-928), the
 one C home of the NW band rules (initial width, in-flight k
 tightening, extend, the two shrinks, the strong reduce every 2048
-columns).  Its optional band save serves every NW caller:
-
-- ``batch_align`` (``native_batch``, the one batch entry) follows
-  edlibAlign per pair: recode, Peq once, the scan at per-pair k, or
-  edlib's k = 64, 128, ... doubling around the scan alone for k < 0
-  (edlib.cpp:196-217), saving nothing; NW pairs asked for a path are
-  then scanned once more at k = d with every column saved into reused
-  batch buffers, walked (``nw_walk``, a transcription of
-  kernel._traceback) and run-length encoded as a CIGAR;
-- ``nw_align_path`` saves every column and walks, for one pair;
-- ``nw_fill_alignment`` saves every column or one ``target_stop``
-  column (the Hirschberg hook) for kernel.py to walk.
+columns).  ``batch_align`` (``native_batch``) follows edlibAlign per
+pair: recode, Peq once, the scan at per-pair k, or edlib's k = 64,
+128, ... doubling around the scan alone for k < 0 (edlib.cpp:196-217),
+saving nothing.  NW pairs asked for a path then take ``nw_align``,
+edlib's obtainAlignment (edlib.cpp:1144-1396) at k = d: under
+kernel._direct_traceback's memory bound the scan saves every column
+into reused batch buffers and ``nw_walk`` (a transcription of
+kernel._traceback) walks it; past the bound a Hirschberg split saves
+one column of a forward and of a reversed scan, finds their crossing
+row and recurses into both halves (kernel._hirschberg).  The moves are
+run-length encoded as a CIGAR.
 
 HW / SHW distances keep their own semi-global scan (``sg_scan``), as
 edlib keeps a separate myersCalcEditDistanceSemiGlobal.  One builder
 makes the match profile (Peq) for every scan from dense codes plus
-equality pairs in code space: the batch entry recodes each pair through a
-generation-stamped codepoint table sized to the batch's largest
+equality pairs in code space: the batch entry recodes each pair through
+a generation-stamped codepoint table sized to the batch's largest
 codepoint + 1 (any Unicode text, astral plane included, without the
-reference's 256-symbol cap) and map their codepoint equality pairs
-through it; the per-pair exports take kernel.encode_pair's dense codes
-and turn its equality matrix into pairs in Python.
+reference's 256-symbol cap) and maps their codepoint equality pairs
+through it.
 
-Results equal the exact single-pair kernel (``kernel.align``); the
-differential tests run every batch case with and without this
-library, and pin the saved band to kernel._scan_nw bit-for-bit.  This
-is an implementation of the published Myers 1999 bit-vector algorithm
-with Ukkonen banding written from scratch for this engine — NOT a copy
-of the reference C++ (semantics cross-checked against the reference
-suite via the Python kernels).
+Results equal the exact single-pair kernel (``kernel.align``, pure
+Python); the differential tests run every batch case with and without
+this library and compare every path with the Python scan + walk and
+Hirschberg.  This is an implementation of the published Myers 1999
+bit-vector algorithm with Ukkonen banding written from scratch for this
+engine — NOT a copy of the reference C++ (semantics cross-checked
+against the reference suite via the Python kernels).
 
 Degrades loudly: if cffi or a C compiler is unavailable the import
 leaves ``lib = None``, records the cause in ``build_error`` and emits
@@ -87,24 +85,26 @@ static inline int step_block(word *pv, word *mv, word eq, int hin) {
 /* Where nw_scan saves its band.  target_stop < 0: every column, layout
    [c*nb + b], plus each column's first and last block — the
    traceback's input.  target_stop >= 0: only that column, into slot 0,
-   and the scan stops there (the Hirschberg hook). */
+   and the scan stops there (the Hirschberg split). */
 typedef struct {
     word *ps, *ms;
     int64_t *scores, *first_blocks, *last_blocks;
     int64_t target_stop;
 } band_save;
 
-/* Words of one pair's full band save (target_stop < 0). */
-static inline int64_t band_words(int64_t nb, int64_t tlen) {
-    return 3 * nb * tlen + 2 * tlen;
+/* Words of a band save of ncols columns. */
+static inline int64_t band_words(int64_t nb, int64_t ncols) {
+    return 3 * nb * ncols + 2 * ncols;
 }
 
-/* The full band save laid out in band_words(nb, tlen) words at buf:
-   ps, ms and scores (nb * tlen each), then first and last blocks. */
-static band_save band_in(word *buf, int64_t nb, int64_t tlen) {
-    band_save b = {buf, buf + nb * tlen, (int64_t *)(buf + 2 * nb * tlen),
-                   (int64_t *)(buf + 3 * nb * tlen),
-                   (int64_t *)(buf + 3 * nb * tlen + tlen), -1};
+/* A band save of ncols columns (tlen, or 1 with a target_stop) laid
+   out in band_words(nb, ncols) words at buf: ps, ms and scores (nb *
+   ncols each), then first and last blocks. */
+static band_save band_in(word *buf, int64_t nb, int64_t ncols,
+                         int64_t target_stop) {
+    band_save b = {buf, buf + nb * ncols, (int64_t *)(buf + 2 * nb * ncols),
+                   (int64_t *)(buf + 3 * nb * ncols),
+                   (int64_t *)(buf + 3 * nb * ncols + ncols), target_stop};
     return b;
 }
 
@@ -118,9 +118,10 @@ typedef struct {
     int64_t *score;
     int64_t cap_nb, cap_sigma, cap_q, cap_t;
     const uint32_t *eqa, *eqb;  /* additional-equality codepoint pairs */
-    int32_t *eqca, *eqcb;       /* the same pairs in the current pair's codes */
     int64_t n_eq;
-    word *band;                 /* nw_path's band + moves, scratch_band */
+    int32_t *eqca, *eqcb;       /* the same pairs in the current pair's codes */
+    int64_t n_ceq;              /* ... of which the current pair has */
+    word *band;                 /* path moves + nw_align's band, scratch_band */
     int64_t cap_band;
 } scratch;
 
@@ -180,21 +181,28 @@ static void build_peq(word *peq, word *snap, const int32_t *qs,
     }
 }
 
-/* build_peq for the pair recode_pair just mapped, into s->peq: the
-   batch's codepoint equality pairs go through the stamped map, and a
-   pair naming a symbol this pair lacks drops out.  Needs sigma <=
-   s->cap_sigma and nb <= s->cap_nb. */
-static void fill_peq(scratch *s, int32_t sigma, int64_t qlen, int64_t nb) {
-    int64_t n = 0;
+/* Map the batch's codepoint equality pairs through the stamped map of
+   the pair recode_pair just mapped into s->eqca / s->eqcb (s->n_ceq of
+   them); a pair naming a symbol this pair lacks drops out. */
+static void map_equalities(scratch *s) {
+    s->n_ceq = 0;
     for (int64_t e = 0; e < s->n_eq; e++) {
         uint32_t a = s->eqa[e], c = s->eqb[e];
         if (a >= s->n_cp || c >= s->n_cp) continue;
         if (s->stamp[a] != s->gen || s->stamp[c] != s->gen) continue;
-        s->eqca[n] = s->map[a];
-        s->eqcb[n] = s->map[c];
-        n++;
+        s->eqca[s->n_ceq] = s->map[a];
+        s->eqcb[s->n_ceq] = s->map[c];
+        s->n_ceq++;
     }
-    build_peq(s->peq, s->peq2, s->qs, qlen, nb, sigma, s->eqca, s->eqcb, n);
+}
+
+/* build_peq into s->peq for query codes q (the pair's query or a slice
+   or reversal of it) under the pair's mapped equalities.  Needs sigma
+   <= s->cap_sigma and ceil(qlen / 64) <= s->cap_nb. */
+static void pair_peq(scratch *s, const int32_t *q, int64_t qlen,
+                     int32_t sigma) {
+    build_peq(s->peq, s->peq2, q, qlen, (qlen + WBITS - 1) / WBITS, sigma,
+              s->eqca, s->eqcb, s->n_ceq);
 }
 
 static void scratch_free(scratch *s) {
@@ -235,7 +243,7 @@ static int scratch_init(scratch *s,
     s->cap_sigma = 512;
     s->gen = 0;
     s->n_cp = n_cp;
-    s->eqa = eqa; s->eqb = eqb; s->n_eq = n_eq;
+    s->eqa = eqa; s->eqb = eqb; s->n_eq = n_eq; s->n_ceq = 0;
     s->map = (int32_t *)malloc((size_t)n_cp * sizeof(int32_t));
     s->stamp = (int64_t *)calloc((size_t)n_cp, sizeof(int64_t));
     s->qs = (int32_t *)malloc((size_t)max_q * sizeof(int32_t));
@@ -314,16 +322,16 @@ static inline int64_t cell_value(word p, word m, int64_t score, int64_t i) {
    extend, the two shrinks and the strong reduce every 2048 columns.
    Like the reference's findAlignment / targetStopPosition arguments,
    ``save`` picks what it keeps: NULL for batch_align's distance
-   lane, every column for nw_path's traceback, and every column or the
-   target_stop column for nw_fill_alignment.  The saved band's SHAPE
-   feeds the traceback's block-availability checks, so
-   tests/test_batch.py pins it bit-for-bit to the Python scan.
+   lane, every column for nw_path's traceback, and the target_stop
+   column for nw_align's Hirschberg split.  The saved band's SHAPE
+   feeds the traceback's block-availability checks and the split's
+   crossing search, so tests/test_batch.py pins the paths built on it
+   to the Python scan's.
 
    peq: the query's match profile over the target's dense codes t.
-   bp/bm/bs: nb words of column state from the caller (the batch
-   scratch, or the per-pair exports' block); the scan allocates
-   nothing.  Returns the distance, or -1 when it exceeds k or the scan
-   stopped at target_stop. */
+   bp/bm/bs: nb words of column state from the batch scratch; the scan
+   allocates nothing.  Returns the distance, or -1 when it exceeds k or
+   the scan stopped at target_stop. */
 static int32_t nw_scan(int64_t qlen, const int32_t *t, int64_t tlen,
                        const word *peq, int64_t k,
                        word *bp, word *bm, int64_t *bs,
@@ -703,11 +711,12 @@ static int64_t nw_walk(int64_t qlen, int64_t tlen, int64_t best,
     return n;
 }
 
-/* Saved-band scan + traceback over a ready Peq profile; bp/bm/bs are
-   nw_scan's column state and ``save`` (target_stop < 0) holds nb *
-   tlen words per array and tlen columns, so nothing is allocated
-   here.  Caller sizes out_moves to qlen + tlen.  Returns path length,
-   or -1 when the scan exceeded ``best`` or the walk broke. */
+/* Saved-band scan + traceback over a ready Peq profile (the direct
+   arm of obtainAlignment); bp/bm/bs are nw_scan's column state and
+   ``save`` (target_stop < 0) holds nb * tlen words per array and tlen
+   columns, so nothing is allocated here.  Caller sizes out_moves to
+   qlen + tlen.  Returns path length, or -1 when the scan exceeded
+   ``best`` or the walk broke. */
 static int64_t nw_path(int64_t qlen, const int32_t *t, int64_t tlen,
                        const word *peq, int64_t best,
                        word *bp, word *bm, int64_t *bs,
@@ -719,63 +728,89 @@ static int64_t nw_path(int64_t qlen, const int32_t *t, int64_t tlen,
                    save->last_blocks, out_moves);
 }
 
-/* The per-pair exports' working set for one pair of kernel.encode_pair
-   dense codes, in one block the caller frees: the query's Peq profile
-   (built here) and build_peq's snapshot, sigma * nb words each, then
-   nw_scan's column state bp / bm / bs, nb words each, then ``extra``
-   words for the caller.  NULL on allocation failure. */
-static word *pair_setup(const int32_t *q, int64_t qlen, int64_t sigma,
-                        const int32_t *eqa, const int32_t *eqb,
-                        int64_t n_eq, int64_t extra) {
-    int64_t nb = (qlen + WBITS - 1) / WBITS;
-    word *blk = (word *)malloc((size_t)((2 * sigma + 3) * nb + extra)
-                               * sizeof(word));
-    if (blk)
-        build_peq(blk, blk + sigma * nb, q, qlen, nb, sigma, eqa, eqb, n_eq);
-    return blk;
+/* Value of row i of a single-column band save (nw_scan's target_stop
+   slot 0). */
+static inline int64_t saved_cell(const band_save *c, int64_t i) {
+    return cell_value(c->ps[i / WBITS], c->ms[i / WBITS],
+                      c->scores[i / WBITS], i % WBITS);
 }
 
-/* nw_scan with its band saved (the find_alignment / Hirschberg-hook
-   scan) for one dense-encoded pair; (eqa[e], eqb[e]) are equality
-   pairs in code space.  target_stop as in band_save.  Returns nw_scan's
-   result, or INT32_MIN on allocation failure. */
-int32_t nw_fill_alignment(const int32_t *q, int64_t qlen,
-                          const int32_t *t, int64_t tlen, int64_t sigma,
-                          const int32_t *eqa, const int32_t *eqb,
-                          int64_t n_eq, int64_t k, int64_t target_stop,
-                          uint64_t *ps, uint64_t *ms, int64_t *scores,
-                          int64_t *first_blocks, int64_t *last_blocks) {
-    int64_t nb = (qlen + WBITS - 1) / WBITS;
-    word *blk = pair_setup(q, qlen, sigma, eqa, eqb, n_eq, 0);
-    if (!blk) return INT32_MIN;
-    word *col = blk + 2 * sigma * nb;
-    band_save save = {ps, ms, scores, first_blocks, last_blocks,
-                      target_stop};
-    int32_t got = nw_scan(qlen, t, tlen, blk, k, col, col + nb,
-                          (int64_t *)(col + 2 * nb), &save);
-    free(blk);
-    return got;
-}
+/* One optimal NW path of dense codes q / t at distance best: edlib's
+   obtainAlignment (edlib.cpp:1144-1213; kernel._obtain_alignment).  The
+   direct traceback (nw_path) runs while kernel._direct_traceback's
+   memory bound holds (edlib.cpp:1186-1190); otherwise one Hirschberg
+   split (obtainAlignmentHirschberg, edlib.cpp:1216-1396;
+   kernel._hirschberg) finds the row where the forward scan's column
+   tlen/2 - 1 and the reversed scan's column meet at best, and both
+   halves recurse.  An empty half is all deletes (empty query) or all
+   inserts.  Moves are appended at byte *n of s->band, whose first mw
+   words hold them; the band past them is this call's working space,
+   grown on demand.  Returns 0, or -1 when an allocation failed or the
+   banded scans lost the solution (the caller re-runs the pair). */
+static int nw_align(scratch *s, const int32_t *q, int64_t ql,
+                    const int32_t *t, int64_t tl, int32_t sigma,
+                    int64_t best, int64_t mw, int64_t *n) {
+    if (ql == 0 || tl == 0) {
+        memset((int8_t *)s->band + *n, ql == 0 ? 2 : 1,
+               (size_t)(ql + tl));
+        *n += ql + tl;
+        return 0;
+    }
+    int64_t nb = (ql + WBITS - 1) / WBITS;
+    if ((2 * 8 + 4) * nb * tl + 2 * 4 * tl < (1 << 20) || tl == 1) {
+        if (!scratch_band(s, mw + band_words(nb, tl))) return -1;
+        band_save save = band_in(s->band + mw, nb, tl, -1);
+        pair_peq(s, q, ql, sigma);
+        int64_t m = nw_path(ql, t, tl, s->peq, best, s->pv, s->mv, s->score,
+                            &save, (int8_t *)s->band + *n);
+        if (m < 0) return -1;
+        *n += m;
+        return 0;
+    }
+    /* both saved columns, then the reversed query and target */
+    int64_t lw = tl / 2, rw = tl - lw, cw = band_words(nb, 1);
+    if (!scratch_band(s, mw + 2 * cw + (ql + tl) / 2 + 1)) return -1;
+    band_save left = band_in(s->band + mw, nb, 1, lw - 1);
+    band_save right = band_in(s->band + mw + cw, nb, 1, rw - 1);
+    int32_t *rq = (int32_t *)(s->band + mw + 2 * cw), *rt = rq + ql;
+    for (int64_t i = 0; i < ql; i++) rq[i] = q[ql - 1 - i];
+    for (int64_t i = 0; i < tl; i++) rt[i] = t[tl - 1 - i];
+    left.last_blocks[0] = right.last_blocks[0] = -1;
+    pair_peq(s, q, ql, sigma);
+    nw_scan(ql, t, tl, s->peq, best, s->pv, s->mv, s->score, &left);
+    pair_peq(s, rq, ql, sigma);
+    nw_scan(ql, rt, tl, s->peq, best, s->pv, s->mv, s->score, &right);
+    if (left.last_blocks[0] < 0 || right.last_blocks[0] < 0) return -1;
 
-/* Saved-band scan + traceback in one call (the direct-traceback arm
-   of kernel._obtain_alignment) for one dense-encoded pair; the band
-   lives in the same block as the Peq.  Same returns as nw_path, or
-   INT32_MIN on allocation failure; either makes the caller fall back
-   to Python. */
-int64_t nw_align_path(const int32_t *q, int64_t qlen,
-                      const int32_t *t, int64_t tlen, int64_t sigma,
-                      const int32_t *eqa, const int32_t *eqb, int64_t n_eq,
-                      int64_t best, int8_t *out_moves) {
-    int64_t nb = (qlen + WBITS - 1) / WBITS;
-    word *blk = pair_setup(q, qlen, sigma, eqa, eqb, n_eq,
-                           band_words(nb, tlen));
-    if (!blk) return INT32_MIN;
-    word *col = blk + 2 * sigma * nb;
-    band_save save = band_in(col + 3 * nb, nb, tlen);
-    int64_t ret = nw_path(qlen, t, tlen, blk, best, col, col + nb,
-                          (int64_t *)(col + 2 * nb), &save, out_moves);
-    free(blk);
-    return ret;
+    /* left cell of forward row i: distance of q[0..i] to the left half;
+       right cell of forward row i (reversed row ql-1-i): of q[i..] to
+       the right half.  The crossing row: left(i) + right(i+1) == best
+       (edlib.cpp:1314-1353). */
+    int64_t l0 = left.first_blocks[0] * WBITS;
+    int64_t l1 = (left.last_blocks[0] + 1) * WBITS;
+    int64_t r0 = ql - (right.last_blocks[0] + 1) * WBITS;
+    int64_t r1 = ql - right.first_blocks[0] * WBITS;
+    if (l1 > ql) l1 = ql;
+    if (r0 < 0) r0 = 0;
+    int64_t row = -2, lsc = 0, rsc = 0;
+    for (int64_t i = l0 > r0 - 1 ? l0 : r0 - 1;
+         i < l1 && i < r1 - 1; i++) {
+        lsc = saved_cell(&left, i);
+        rsc = saved_cell(&right, ql - 2 - i);
+        if (lsc + rsc == best) { row = i; break; }
+    }
+    if (row == -2 && l0 == 0 && r0 == 0
+        && lw + saved_cell(&right, ql - 1) == best) {
+        row = -1; lsc = lw; rsc = saved_cell(&right, ql - 1);
+    }
+    if (row == -2 && l1 == ql && r1 == ql
+        && saved_cell(&left, ql - 1) + rw == best) {
+        row = ql - 1; lsc = saved_cell(&left, ql - 1); rsc = rw;
+    }
+    if (row == -2) return -1;
+    if (nw_align(s, q, row + 1, t, lw, sigma, lsc, mw, n) < 0) return -1;
+    return nw_align(s, q + row + 1, ql - row - 1, t + lw, rw, sigma, rsc,
+                    mw, n);
 }
 
 /* Run-length encode a move path (kernel.OP_* codes) as CIGAR text
@@ -811,12 +846,13 @@ static int64_t cigar_rle(const int8_t *moves, int64_t n, int extended,
    distance (edlib.cpp:196-217).  dist[i] is the distance, -1 when it
    exceeds k, or UNSUPPORTED when the Peq could not be grown.
    NW pairs with path[i] != 0 (path may be NULL), both sides non-empty
-   and a distance also get their traceback at k = dist[i], edlib's
-   obtainAlignment at bestScore: the CIGAR (=/I/D/X when extended, else
-   M/I/D) is appended to ``cigar`` and cigar_end[i] is its end offset
-   there (it starts at the previous non-negative end).  cigar_end[i] =
-   -1 where no CIGAR was built: not asked for, no distance, or a band
-   allocation / walk failure (the caller re-runs those pairs).  The
+   and a distance also get their path at k = dist[i] (nw_align, edlib's
+   obtainAlignment at bestScore: direct traceback or Hirschberg): the
+   CIGAR (=/I/D/X when extended, else M/I/D) is appended to ``cigar``
+   and cigar_end[i] is its end offset there (it starts at the previous
+   non-negative end).  cigar_end[i] = -1 where no CIGAR was built: not
+   asked for, no distance, or a band allocation / walk failure (the
+   caller re-runs those pairs).  The
    caller sizes ``cigar`` to the sum of 2 * (qlen + tlen) over the
    asked-for pairs.  Returns 0, or -1 when the batch scratch could not
    be allocated. */
@@ -845,9 +881,9 @@ int batch_align(const uint32_t *qbuf, const int64_t *qstart,
         if (ql == 0 || tl == 0) { dist[i] = (int32_t)cap; continue; }
         int64_t k = ks[i] >= 0 ? ks[i] : WBITS;
         if ((ks[i] < 0 || mode == 2) && k > cap) k = cap;
-        int64_t nb = (ql + WBITS - 1) / WBITS;
         if (!scratch_reserve(&s, sigma)) { dist[i] = UNSUPPORTED; continue; }
-        fill_peq(&s, sigma, ql, nb);
+        map_equalities(&s);
+        pair_peq(&s, s.qs, ql, sigma);
         int32_t d;
         while ((d = mode == 0
                     ? nw_scan(ql, s.ts, tl, s.peq, k, s.pv, s.mv, s.score,
@@ -857,17 +893,13 @@ int batch_align(const uint32_t *qbuf, const int64_t *qstart,
                && ks[i] < 0 && k < cap)
             k = 2 * k < cap ? 2 * k : cap;
         dist[i] = d;
-        /* the band, then ql + tl moves */
-        int64_t bw = band_words(nb, tl);
-        if (!path || !path[i] || mode != 0 || d < 0
-            || !scratch_band(&s, bw + (ql + tl) / 8 + 1))
+        if (!path || !path[i] || mode != 0 || d < 0) continue;
+        /* ql + tl moves lead s.band, nw_align's working band follows */
+        int64_t m = 0;
+        if (nw_align(&s, s.qs, ql, s.ts, tl, sigma, d, (ql + tl) / 8 + 1,
+                     &m) < 0)
             continue;
-        band_save save = band_in(s.band, nb, tl);
-        int8_t *moves = (int8_t *)(s.band + bw);
-        int64_t m = nw_path(ql, s.ts, tl, s.peq, d, s.pv, s.mv, s.score,
-                            &save, moves);
-        if (m < 0) continue;
-        pos += cigar_rle(moves, m, extended, cigar + pos);
+        pos += cigar_rle((int8_t *)s.band, m, extended, cigar + pos);
         cigar_end[i] = pos;
     }
     scratch_free(&s);
@@ -885,16 +917,6 @@ int batch_align(const uint32_t *qbuf, const int64_t *qstart,
                 const uint8_t *path, int extended,
                 int32_t *dist, int32_t *sigma_out, char *cigar,
                 int64_t *cigar_end);
-int32_t nw_fill_alignment(const int32_t *q, int64_t qlen,
-                          const int32_t *t, int64_t tlen, int64_t sigma,
-                          const int32_t *eqa, const int32_t *eqb,
-                          int64_t n_eq, int64_t k, int64_t target_stop,
-                          uint64_t *ps, uint64_t *ms, int64_t *scores,
-                          int64_t *first_blocks, int64_t *last_blocks);
-int64_t nw_align_path(const int32_t *q, int64_t qlen,
-                      const int32_t *t, int64_t tlen, int64_t sigma,
-                      const int32_t *eqa, const int32_t *eqb, int64_t n_eq,
-                      int64_t best, int8_t *out_moves);
 """
 
 _COMPILE_ARGS = ["-O3", "-march=native"]
@@ -973,7 +995,9 @@ def native_batch(q_flat, q_start, q_lens, t_flat, t_start, t_lens, ks,
     ``equalities``: optional (eqa, eqb) pair of uint32 codepoint arrays
     (additional-equality pairs applied to every pair).  ``path``:
     optional per-pair bool mask (NW only) of the pairs whose CIGAR to
-    trace at k = their distance (extended =/I/D/X or standard M/I/D).
+    build at k = their distance, by direct traceback or Hirschberg as
+    ``kernel._obtain_alignment`` picks (extended =/I/D/X or standard
+    M/I/D).
 
     Returns ``(dist, sigma, cigars)``: int32 distances (-1 past k, the
     ``UNSUPPORTED`` sentinel per unscored pair), int32 alphabet sizes,
@@ -1047,71 +1071,3 @@ def _equality_args(equalities):
     return (ffi.from_buffer("uint32_t[]", eqa),
             ffi.from_buffer("uint32_t[]", eqb), len(eqa))
 
-
-def _code_pairs(eq):
-    """kernel.encode_pair's symmetric equality matrix as the C Peq
-    builder's code-space pairs (its upper triangle off the diagonal):
-    (a, b, n) C arguments; the arrays stay alive in the returned
-    ``from_buffer`` objects."""
-    a, b = np.nonzero(np.triu(eq, 1))
-    return (ffi.from_buffer("int32_t[]", a.astype(np.int32)),
-            ffi.from_buffer("int32_t[]", b.astype(np.int32)), len(a))
-
-
-def native_fill_nw(q_codes, t_codes, eq, sigma, k, target_stop=-1):
-    """Saved-band NW scan (the find_alignment / Hirschberg-hook scan)
-    in C over one dense-encoded pair.
-
-    Returns (best, ps, ms, scores, first_blocks, last_blocks) where
-    the arrays use kernel._AlignData's [c*nblocks + b] layout (one
-    column slot when ``target_stop`` >= 0), or None when the native
-    library is unavailable or allocation failed — callers fall back to
-    the pure-Python scan, which produces the identical band
-    (differentially pinned in tests/test_batch.py)."""
-    if lib is None:
-        return None
-    qlen, tlen = len(q_codes), len(t_codes)
-    nb = (qlen + 63) // 64
-    ncols = 1 if target_stop >= 0 else tlen
-    ps = np.zeros(nb * ncols, dtype=np.uint64)
-    ms = np.zeros(nb * ncols, dtype=np.uint64)
-    scores = np.zeros(nb * ncols, dtype=np.int64)
-    fb = np.zeros(ncols, dtype=np.int64)
-    lb = np.zeros(ncols, dtype=np.int64)
-    qa = np.ascontiguousarray(q_codes, dtype=np.int32)
-    ta = np.ascontiguousarray(t_codes, dtype=np.int32)
-    best = lib.nw_fill_alignment(
-        ffi.cast("const int32_t *", qa.ctypes.data), qlen,
-        ffi.cast("const int32_t *", ta.ctypes.data), tlen, int(sigma),
-        *_code_pairs(eq), int(k), int(target_stop),
-        ffi.cast("uint64_t *", ps.ctypes.data),
-        ffi.cast("uint64_t *", ms.ctypes.data),
-        ffi.cast("int64_t *", scores.ctypes.data),
-        ffi.cast("int64_t *", fb.ctypes.data),
-        ffi.cast("int64_t *", lb.ctypes.data))
-    if best == UNSUPPORTED:
-        return None
-    return best, ps, ms, scores, fb, lb
-
-
-def native_align_path(q_codes, t_codes, eq, sigma, best):
-    """Direct-traceback path (saved-band scan + walk) fully in C for
-    one dense-encoded pair.  Returns the move-code list (kernel.OP_*),
-    or None when the native library is unavailable or the native call
-    could not produce a path — callers fall back to the pure-Python
-    scan+walk, which is byte-identical (reference-parity suite +
-    tests/test_batch.py pin both)."""
-    if lib is None:
-        return None
-    qlen, tlen = len(q_codes), len(t_codes)
-    qa = np.ascontiguousarray(q_codes, dtype=np.int32)
-    ta = np.ascontiguousarray(t_codes, dtype=np.int32)
-    moves = np.empty(qlen + tlen, dtype=np.int8)
-    n = lib.nw_align_path(
-        ffi.cast("const int32_t *", qa.ctypes.data), qlen,
-        ffi.cast("const int32_t *", ta.ctypes.data), tlen, int(sigma),
-        *_code_pairs(eq), int(best),
-        ffi.cast("int8_t *", moves.ctypes.data))
-    if n < 0:
-        return None
-    return moves[:n].tolist()

@@ -11,8 +11,8 @@ target) string pairs in three steps:
      text included, makes the reference's short circuits (empty sides,
      edlib.cpp:165-184; NW k < |tlen - qlen|, edlib.cpp:744-747; the
      HW clamp of k to qlen), runs edlib's k = 64, 128, ... doubling for
-     unbounded pairs (edlib.cpp:196-217) and traces the asked-for NW
-     paths, all in C;
+     unbounded pairs (edlib.cpp:196-217) and builds the asked-for NW
+     paths, direct traceback or Hirschberg, all in C;
   3. the exact single-pair kernel (``kernel.align``, which makes the
      same short circuits) for whatever the native call did not score:
      no native library (no compiler on the host), a batch-level

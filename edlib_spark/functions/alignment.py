@@ -10,10 +10,11 @@ Public surface mirrors the reference Python binding
   * ``align_expr(q, t, mode, task, k, ...)`` — full result struct
     (editDistance, alphabetLength, locations, cigar).  The same one
     native call per Arrow batch returns every row's distance and
-    alphabet size and, on the NW lane, its traceback CIGAR; the exact
-    single-pair kernel runs only for HW/SHW location scans and
-    tracebacks (banded at the known distance) and for edge cases (empty
-    sides, tracebacks past the Hirschberg boundary, no native library).
+    alphabet size and, on the NW lane, its CIGAR (direct traceback or
+    Hirschberg, in C); HW/SHW paths take a second native call over the
+    located substrings.  The exact single-pair kernel runs only for
+    HW/SHW location scans (banded at the known distance) and for edge
+    cases (empty sides, no native library).
     Bulk 'distance' scoring should still prefer ``edit_distance``
     (narrower output column).
   * ``norm_distance`` — JVM-side normalized-distance expression.
@@ -86,13 +87,14 @@ def align_expr(query: Column, target: Column, mode: str = "NW",
     Each Arrow batch runs ``_align_batch``: one native call (the batch
     entry ``batch_edit_distance`` also runs) returns every row's
     distance and alphabet size and, for NW under ``task='path'``,
-    every row's CIGAR (traceback banded at the known distance, k = d,
-    the tightest admissible band; the reference's traceback is
-    per-pair, edlib/src/edlib.cpp:931-1141, but the batch loop around
-    it need not be).  NW locations follow from the distance alone.
-    Rows whose distance exceeds ``k`` never reach a per-pair scan;
-    HW/SHW rows with a distance run the exact single-pair kernel
-    (``kernel.align``) for their locations / path.
+    every row's CIGAR (built at the known distance, k = d, the
+    tightest admissible band, by direct traceback or Hirschberg as
+    edlib's obtainAlignment picks, edlib/src/edlib.cpp:1144-1396).  NW
+    locations follow from the distance alone.  Rows whose distance
+    exceeds ``k`` never reach a per-pair scan; HW/SHW rows with a
+    distance run the exact single-pair kernel (``kernel.align``) for
+    their locations, and under ``task='path'`` one more native call
+    builds their CIGARs over the located substrings.
 
     ``k`` may be an int (same bound for all rows) or a Column (per-pair
     bound, same as ``edit_distance``).
@@ -133,22 +135,22 @@ def _align_batch(qs: list, ts: list, ks, mode: str, task: str, eqs,
     ``ks``: scalar or per-row k; ``eqs``: equality pairs of single
     characters (``_symbol_pairs`` output).  One native call
     (``batch._flat_distance``) returns every row's distance and
-    alphabet size, and under NW ``task='path'`` the CIGAR of every row
-    on the direct traceback.  The per-pair Python kernel runs only for
-    rows with an empty side, HW/SHW rows with a distance, and NW paths
-    the batch call did not build: pairs past the direct-traceback
-    memory limit (kernel._direct_traceback, the reference's Hirschberg
-    boundary), a native allocation failure, or no native library at
-    all.
+    alphabet size, and under NW ``task='path'`` every row's CIGAR (the
+    compiled entry picks direct traceback or Hirschberg).  HW / SHW
+    rows with a distance take their locations from the per-pair
+    kernel; under ``task='path'`` a second native call then builds
+    their CIGARs as kernel.align does: the NW path of the query against
+    the located target substring at k = d.  The per-pair Python kernel
+    builds a path only for rows with an empty side and CIGARs the
+    native calls did not build (an allocation failure, or no native
+    library at all).
     """
     n = len(qs)
     q_enc, t_enc = encode_flat(qs), encode_flat(ts)
     q_lens, t_lens = q_enc[2], t_enc[2]
     extended = cigar_format == "extended"
     nonempty = (q_lens > 0) & (t_lens > 0)
-    path = None
-    if mode == "NW" and task == "path":
-        path = nonempty & kernel._direct_traceback(q_lens, t_lens)
+    path = nonempty if mode == "NW" and task == "path" else None
     dists, sigma, cigars = _flat_distance(qs, ts, q_enc, t_enc, mode, ks,
                                           eqs, path, extended)
     if max_alphabet is not None and n and sigma.max() > max_alphabet:
@@ -169,25 +171,41 @@ def _align_batch(qs: list, ts: list, ks, mode: str, task: str, eqs,
     per_row_k = np.broadcast_to(np.asarray(ks, dtype=np.int64), (n,))
     for i in np.flatnonzero(redo).tolist():
         # empty sides: the kernel's semantics (the short circuit ignores
-        # k, so the distance already agrees).  HW/SHW locations / path
-        # / semi-global ends: a per-pair scan banded at the known
-        # distance (same result for any band >= d; property-pinned in
+        # k, so the distance already agrees).  HW/SHW locations /
+        # semi-global ends: a per-pair scan banded at the known distance
+        # (same result for any band >= d; property-pinned in
         # tests/test_kernel.py::test_band_at_exact_distance_invariance)
         k = dists[i] if nonempty[i] else per_row_k[i]
-        r = kernel.align(qs[i], ts[i], mode=mode, task=task, k=int(k),
+        row_task = "locations" if nonempty[i] and task == "path" else task
+        r = kernel.align(qs[i], ts[i], mode=mode, task=row_task, k=int(k),
                          additionalEqualities=eqs,
                          max_alphabet=max_alphabet, cigar_format=cigar_format)
         dists[i], sigma[i] = r["editDistance"], r["alphabetLength"]
         locations[i] = [(s, e) for s, e in r["locations"]]
         cigars[i] = r["cigar"]
-    if path is not None:
-        for i in np.flatnonzero(nonempty & (dists >= 0)).tolist():
+    if task == "path":
+        rows = np.flatnonzero(nonempty & (dists >= 0)).tolist()
+        if mode == "NW":
+            sub_t = [ts[i] for i in rows]
+        else:
+            # kernel.align's HW / SHW path: the NW path of the query
+            # against target[start:end + 1] of its first location, at
+            # k = d
+            sub_t = [ts[i][locations[i][0][0]:locations[i][0][1] + 1]
+                     for i in rows]
+            sub_q = [qs[i] for i in rows]
+            got = _flat_distance(sub_q, sub_t, encode_flat(sub_q),
+                                 encode_flat(sub_t), "NW", dists[rows],
+                                 eqs, np.ones(len(rows), bool), extended)
+            for i, cigar in zip(rows, got[2]):
+                cigars[i] = cigar
+        for i, t in zip(rows, sub_t):
             if cigars[i] is None:
-                q_codes, t_codes, _, eqm = kernel.encode_pair(
-                    qs[i], ts[i], eqs, None)
+                q_codes, t_codes, sub_sigma, eqm = kernel.encode_pair(
+                    qs[i], t, eqs, None)
                 cigars[i] = kernel.path_to_cigar(
                     kernel._obtain_alignment(q_codes, t_codes, eqm,
-                                             int(sigma[i]), int(dists[i])),
+                                             sub_sigma, int(dists[i])),
                     extended=extended)
     return pd.DataFrame({"editDistance": dists, "alphabetLength": sigma,
                          "locations": locations, "cigar": cigars})

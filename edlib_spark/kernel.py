@@ -10,11 +10,14 @@ own golden vectors (reference tests: test/runTests.cpp,
 bindings/python/test.py).
 
 The hot distributed path does NOT call this module per row — see
-``edlib_spark.batch`` for the Arrow-batch vectorized distance kernel.
-This module is used for:
-  * task='locations' / task='path' on the (few) pairs that survive the
-    match threshold,
-  * differential testing of the batch kernel,
+``edlib_spark.batch`` for the Arrow-batch dispatcher over the one
+compiled entry (``_native.batch_align``), which transcribes this
+module's scans, traceback and Hirschberg in C.  This module imports
+nothing from ``_native`` and is used for:
+  * HW / SHW task='locations' on the pairs that survive the match
+    threshold, and every row the compiled entry did not handle (empty
+    sides, no native library),
+  * differential testing of the compiled entry,
   * the public ``align()`` API mirroring the reference Python binding
     (reference: bindings/python/edlib.pyx:56-155).
 
@@ -593,54 +596,17 @@ def _read_block(p, m, score):
     return cells
 
 
-class _IntView:
-    """O(1)-per-access int view over a numpy array so the traceback's
-    Python-int bit arithmetic stays exact (np.uint64 would silently
-    wrap mixed-type expressions)."""
-
-    __slots__ = ("a",)
-
-    def __init__(self, a):
-        self.a = a
-
-    def __getitem__(self, i):
-        return int(self.a[i])
-
-
-def _native_align_data(q_codes, t_codes, eq, sigma, k, target_stop=-1):
-    """Saved-band scan via the native kernel, wrapped to duck-type
-    _AlignData for _traceback/_hirschberg.  None when the cffi library
-    is unavailable (callers keep the pure-Python scan; both bands are
-    differentially pinned identical in tests/test_batch.py)."""
-    from . import _native
-    res = _native.native_fill_nw(q_codes, t_codes, eq, sigma, k,
-                                 target_stop)
-    if res is None:
-        return None
-    best, ps, ms, scores, fb, lb = res
-    data = _AlignData.__new__(_AlignData)
-    data.nblocks = _ceil_div(len(q_codes), WORD)
-    data.ps = _IntView(ps)
-    data.ms = _IntView(ms)
-    data.scores = _IntView(scores)
-    data.first_blocks = fb.tolist()
-    data.last_blocks = lb.tolist()
-    return best, data
-
-
 def _direct_traceback(qlen, tlen):
     """Whether a pair's path comes from the direct traceback (saved
     band under _TRACEBACK_MEM_LIMIT) rather than Hirschberg — the
-    reference's boundary, edlib.cpp:1186-1190.  Works elementwise on
-    numpy length arrays too.
+    reference's boundary, edlib.cpp:1186-1190.  ``_native.nw_align``
+    mirrors this bound in C; change the two together.
 
     tlen == 1 must never reach _hirschberg: its left half would be
-    empty and target_stop = left_width - 1 = -1 means "no stop / full
-    save" to both scans (native saves every column, Python saves
-    none), not the virtual initial column the crossing search expects
-    — the native lane would search the wrong column and the Python
-    lane would raise.  The direct traceback's saved band is a single
-    column here (O(nblocks) memory), so it is always safe."""
+    empty and target_stop = left_width - 1 = -1 means "no stop" to the
+    scan, not the virtual initial column the crossing search expects.
+    The direct traceback's saved band is a single column here
+    (O(nblocks) memory), so it is always safe."""
     mem = (2 * 8 + 4) * _ceil_div(qlen, WORD) * tlen + 2 * 4 * tlen
     return (mem < _TRACEBACK_MEM_LIMIT) | (tlen == 1)
 
@@ -657,11 +623,6 @@ def _obtain_alignment(q_codes, t_codes, eq, sigma, best):
     nblocks = _ceil_div(qlen, WORD)
     w = nblocks * WORD - qlen
     if _direct_traceback(qlen, tlen):
-        from . import _native
-        path = _native.native_align_path(q_codes, t_codes, eq, sigma,
-                                         best)
-        if path is not None:
-            return path
         peq = build_peq(sigma, q_codes, eq)
         _, _, data = _scan_nw(peq, w, nblocks, qlen, t_codes, best,
                               find_alignment=True)
@@ -684,19 +645,12 @@ def _hirschberg(q_codes, t_codes, eq, sigma, best):
     left_width = tlen // 2
     right_width = tlen - left_width
 
-    nd_l = _native_align_data(q_codes, t_codes, eq, sigma, best,
-                              target_stop=left_width - 1)
-    nd_r = _native_align_data(r_q, r_t, eq, sigma, best,
-                              target_stop=right_width - 1)
-    if nd_l is not None and nd_r is not None:
-        left_data, right_data = nd_l[1], nd_r[1]
-    else:
-        peq = build_peq(sigma, q_codes, eq)
-        r_peq = build_peq(sigma, r_q, eq)
-        _, _, left_data = _scan_nw(peq, w, nblocks, qlen, t_codes, best,
-                                   target_stop=left_width - 1)
-        _, _, right_data = _scan_nw(r_peq, w, nblocks, qlen, r_t, best,
-                                    target_stop=right_width - 1)
+    peq = build_peq(sigma, q_codes, eq)
+    r_peq = build_peq(sigma, r_q, eq)
+    _, _, left_data = _scan_nw(peq, w, nblocks, qlen, t_codes, best,
+                               target_stop=left_width - 1)
+    _, _, right_data = _scan_nw(r_peq, w, nblocks, qlen, r_t, best,
+                                target_stop=right_width - 1)
     if left_data is None or right_data is None:
         raise RuntimeError("hirschberg: banded scan lost the solution")
 

@@ -40,6 +40,24 @@ def native_lane(native: bool):
         _native.lib = saved
 
 
+def native_nw_paths(qs, ts, ks, eqs=None, extended=True):
+    """``native_batch`` over (qs, ts) at per-pair bounds ``ks`` with
+    every pair asked for its NW path: (distances, CIGARs), the CIGAR
+    None where the entry built none."""
+    import numpy as np
+
+    from edlib_spark import _native
+    from edlib_spark.batch import (
+        _encode_equalities, _symbol_pairs, encode_flat,
+    )
+
+    dist, _, cigars = _native.native_batch(
+        *encode_flat(qs), *encode_flat(ts), np.asarray(ks, np.int64), "NW",
+        _encode_equalities(_symbol_pairs(eqs)),
+        path=np.ones(len(qs), bool), extended=extended)
+    return dist.tolist(), cigars
+
+
 @pytest.fixture(scope="session")
 def spark():
     from edlib_spark.session import get_spark

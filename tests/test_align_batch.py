@@ -5,6 +5,7 @@ alphabet sizes from one native call per batch."""
 import numpy as np
 import pytest
 
+from conftest import native_nw_paths
 from edlib_spark import _native, kernel
 from edlib_spark.batch import _symbol_pairs
 from edlib_spark.functions.alignment import _align_batch
@@ -111,8 +112,8 @@ def test_lane_matches_kernel(suite, mode, task, fmt):
 
 @pytest.mark.parametrize("fmt", FORMATS)
 def test_lane_hirschberg_pair(fmt):
-    """A pair past the direct-traceback memory limit keeps the
-    per-pair Hirschberg path and the reference result."""
+    """A pair past the direct-traceback memory limit gets its
+    Hirschberg path from the batch entry: the reference result."""
     assert not kernel._direct_traceback(len(_BIG_Q), len(_BIG_T))
     qs, ts = [_BIG_Q, "kitten"], [_BIG_T, "sitting"]
     got = _rows(_align_batch(qs, ts, -1, "NW", "path", None, None, fmt))
@@ -140,29 +141,36 @@ def test_lane_empty_batch():
 @pytest.mark.parametrize("fmt", FORMATS)
 def test_lane_runs_natively(suite, monkeypatch, fmt):
     """With the native library loaded, every task on the NW lane makes
-    exactly one native call per batch, and no non-empty row reaches the
-    per-pair Python kernel, encode, traceback or CIGAR builder."""
+    exactly one native call per batch, the Hirschberg-sized pair
+    included, and no non-empty row reaches the per-pair Python kernel,
+    encode, traceback or CIGAR builder.  HW / SHW paths make at most
+    two native calls (distances, then the CIGARs of the located
+    substrings); their rows reach the per-pair kernel for locations
+    only, never its traceback or CIGAR builder."""
     qs, ts = suite
+    qs, ts = qs + [_BIG_Q], ts + [_BIG_T]
     eqs = [("a", "b")]
-    want = {task: _rows(_align_batch(qs, ts, -1, "NW", task, eqs, None,
-                                     fmt))
-            for task in kernel.TASKS}
+    runs = [("NW", task) for task in kernel.TASKS] + [("HW", "path"),
+                                                      ("SHW", "path")]
+    want = {run: _rows(_align_batch(qs, ts, -1, *run, eqs, None, fmt))
+            for run in runs}
     real_align, real_encode = kernel.align, kernel.encode_pair
     real_batch = _native.native_batch
     calls = []
 
     def align(q, t, *args, **kwargs):
-        if len(q) and len(t):
+        if len(q) and len(t) and (mode == "NW"
+                                  or kwargs.get("task") == "path"):
             raise AssertionError("per-pair kernel on a non-empty row")
         return real_align(q, t, *args, **kwargs)
 
     def encode(q, t, *args, **kwargs):
-        if len(q) and len(t):
+        if len(q) and len(t) and mode == "NW":
             raise AssertionError("per-pair encode on a non-empty row")
         return real_encode(q, t, *args, **kwargs)
 
     def forbidden(*args, **kwargs):
-        raise AssertionError("per-pair traceback on the NW lane")
+        raise AssertionError("per-pair traceback or CIGAR builder")
 
     def counted(*args, **kwargs):
         calls.append(1)
@@ -173,11 +181,141 @@ def test_lane_runs_natively(suite, monkeypatch, fmt):
     monkeypatch.setattr(kernel, "_obtain_alignment", forbidden)
     monkeypatch.setattr(kernel, "path_to_cigar", forbidden)
     monkeypatch.setattr(_native, "native_batch", counted)
-    for task in kernel.TASKS:
+    for mode, task in runs:
         calls.clear()
-        got = _rows(_align_batch(qs, ts, -1, "NW", task, eqs, None, fmt))
-        assert got == want[task], task
-        assert len(calls) == 1, (task, len(calls))
+        got = _rows(_align_batch(qs, ts, -1, mode, task, eqs, None, fmt))
+        assert got == want[mode, task], (mode, task)
+        assert len(calls) == 1 if mode == "NW" else len(calls) <= 2, \
+            (mode, task, len(calls))
+
+
+def test_one_compiled_entry():
+    """``_CDEF`` declares the one batch entry, and kernel.py — the pure
+    reference the compiled entry is pinned to — imports nothing from
+    ``_native``."""
+    import ast
+    import re
+
+    assert re.findall(r"(\w+)\s*\(", _native._CDEF) == ["batch_align"]
+    if _native.lib is not None:
+        assert [n for n in dir(_native.lib) if not n.startswith("_")] \
+            == ["batch_align"]
+    tree = ast.parse(open(kernel.__file__).read())
+    imported = [a.name for node in ast.walk(tree)
+                if isinstance(node, (ast.Import, ast.ImportFrom))
+                for a in node.names] + [
+        node.module or "" for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)]
+    assert not [m for m in imported if "_native" in m], imported
+
+
+# ---- the direct-traceback / Hirschberg boundary: the C path of every
+# pair equals pure-Python kernel.align ----
+
+def _native_cigars(qs, ts, eqs, fmt):
+    return native_nw_paths(qs, ts, [-1] * len(qs), eqs, fmt == "extended")
+
+
+def _kernel_cigars(qs, ts, eqs, fmt):
+    rs = [kernel.align(q, t, task="path", additionalEqualities=eqs,
+                       max_alphabet=None, cigar_format=fmt)
+          for q, t in zip(qs, ts)]
+    return [r["editDistance"] for r in rs], [r["cigar"] for r in rs]
+
+
+def _boundary_pairs():
+    """Three pairs around kernel._TRACEBACK_MEM_LIMIT (equal lengths
+    cross it near 1,830): 1792 x 1846 is the widest direct-traceback
+    shape at 28 query blocks; one more query row (1793, a 29th block)
+    or one more target column (1847) takes Hirschberg.  Astral symbols
+    included; the direct walk and Hirschberg pick different optimal
+    paths for the 1793-row pair."""
+    rng = np.random.default_rng(1)
+    alpha = ["a", "b", "c", "\U0001F600"]
+    q = [alpha[i] for i in rng.integers(0, len(alpha), 1793)]
+    mq, mt = [], []
+    _mutate(rng, alpha, q, 900, mq, mt)
+    t = (mt[0] + mq[0])[:1847]
+    q = mq[0]
+    return [(q[:1792], t[:1846]), (q, t[:1846]), (q[:1792], t)]
+
+
+@pytest.mark.skipif(_native.lib is None, reason="native kernel unavailable")
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_native_paths_across_traceback_boundary(fmt):
+    """One row and one column either side of the memory bound, with
+    and without an equality pair naming an astral symbol: the C path
+    (direct below, Hirschberg above) equals kernel.align's."""
+    pairs = _boundary_pairs()
+    assert [kernel._direct_traceback(len(q), len(t)) for q, t in pairs] \
+        == [True, False, False]
+    qs, ts = [q for q, _ in pairs], [t for _, t in pairs]
+    for eqs in (None, [("a", "\U0001F600")]):
+        got = _native_cigars(qs, ts, eqs, fmt)
+        assert None not in got[1]
+        assert got == _kernel_cigars(qs, ts, eqs, fmt), eqs
+
+
+@pytest.mark.skipif(_native.lib is None, reason="native kernel unavailable")
+def test_native_boundary_picks_hirschberg():
+    """Pins the boundary itself: for the first pair past it the direct
+    walk and Hirschberg pick different optimal paths, and the C path is
+    Hirschberg's."""
+    q, t = _boundary_pairs()[1]
+    q_codes, t_codes, sigma, eq = kernel.encode_pair(q, t, None, None)
+    qlen, tlen = len(q_codes), len(t_codes)
+    d = kernel.align(q, t)["editDistance"]
+    nblocks = kernel._ceil_div(qlen, kernel.WORD)
+    peq = kernel.build_peq(sigma, q_codes, eq)
+    _, _, data = kernel._scan_nw(peq, nblocks * kernel.WORD - qlen,
+                                 nblocks, qlen, t_codes, d,
+                                 find_alignment=True)
+    direct = kernel._traceback(qlen, tlen, d, data)
+    hirschberg = kernel._hirschberg(q_codes, t_codes, eq, sigma, d)
+    assert direct != hirschberg
+    assert _native_cigars([q], [t], None, "extended")[1] == [
+        kernel.path_to_cigar(hirschberg)]
+
+
+@pytest.mark.skipif(_native.lib is None, reason="native kernel unavailable")
+def test_native_path_single_target_char_past_bound():
+    """tlen == 1 with a query past the memory bound takes the direct
+    traceback in C as in kernel._direct_traceback; an equality pair
+    makes every 'b' a candidate match, so the tie-break is pinned."""
+    qlen = 64 * 52_429   # (2*8+4) * 52,429 + 8 >= 1 MiB
+    assert not kernel._direct_traceback(qlen, 2)
+    rng = np.random.default_rng(3)
+    q = "".join(np.array(list("abc"))[rng.integers(0, 3, qlen)])
+    q = q[:qlen // 2] + "\U0001F600" + q[qlen // 2 + 1:]
+    eqs = [("b", "\U0001F600")]
+    assert _native_cigars([q], ["\U0001F600"], eqs, "extended") == \
+        _kernel_cigars([q], ["\U0001F600"], eqs, "extended")
+
+
+@pytest.mark.skipif(_native.lib is None, reason="native kernel unavailable")
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_native_hirschberg_empty_query_halves(monkeypatch, fmt):
+    """A 60-row query against a target past the bound, matched at the
+    target's end (the split's upper half has an empty query) or at its
+    start (the lower half has): C equals kernel.align, and the Python
+    reference really recurses into an empty-query half."""
+    fill = "a" * 37_400
+    pairs = [("\U0001F600" * 60, fill + "b" * 60, [("\U0001F600", "b")]),
+             ("\U0001F600" * 60, "\U0001F600" * 60 + fill, None)]
+    real = kernel._obtain_alignment
+    for q, t, eqs in pairs:
+        assert not kernel._direct_traceback(len(q), len(t))
+        halves = []
+
+        def record(q_codes, t_codes, *args):
+            halves.append(len(q_codes))
+            return real(q_codes, t_codes, *args)
+
+        monkeypatch.setattr(kernel, "_obtain_alignment", record)
+        want = _kernel_cigars([q], [t], eqs, fmt)
+        monkeypatch.setattr(kernel, "_obtain_alignment", real)
+        assert 0 in halves, (t[:3], halves)
+        assert _native_cigars([q], [t], eqs, fmt) == want
 
 
 @pytest.mark.parametrize("mode", kernel.MODES)

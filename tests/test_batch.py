@@ -6,7 +6,7 @@ import re
 import numpy as np
 import pytest
 
-from conftest import native_lane
+from conftest import native_lane, native_nw_paths
 from edlib_spark.batch import batch_edit_distance
 from edlib_spark.kernel import align
 from edlib_spark.oracle import simple_edit_distance
@@ -260,18 +260,42 @@ def test_batch_tight_k_long_near_identical(mode):
                                             got[0], want)
 
 
+def _python_nw_path(q, t, eqs):
+    """The pure-Python NW path at the exact distance: (d, moves) from
+    _scan_nw + _traceback, or _hirschberg past the direct-traceback
+    memory bound."""
+    from edlib_spark.kernel import (
+        WORD, _ceil_div, _direct_traceback, _hirschberg, _scan_nw,
+        _traceback, build_peq, encode_pair,
+    )
+
+    q_codes, t_codes, sigma, eq = encode_pair(q, t, eqs, None)
+    qlen, tlen = len(q_codes), len(t_codes)
+    nblocks = _ceil_div(qlen, WORD)
+    w = nblocks * WORD - qlen
+    peq = build_peq(sigma, q_codes, eq)
+    d, _, _ = _scan_nw(peq, w, nblocks, qlen, t_codes, max(qlen, tlen))
+    if not _direct_traceback(qlen, tlen):
+        return d, _hirschberg(q_codes, t_codes, eq, sigma, d)
+    _, _, data = _scan_nw(peq, w, nblocks, qlen, t_codes, d,
+                          find_alignment=True)
+    return d, _traceback(qlen, tlen, d, data)
+
+
 def test_native_fill_matches_python_scan():
-    """The native saved-band NW scan must reproduce the pure-Python
-    _scan_nw BIT-FOR-BIT — not just the distance: the saved P/M/score
-    blocks and the per-column band bounds feed the traceback's
-    block-availability checks, and the paths are pinned byte-exact
-    against the compiled reference.  Covers multi-block queries, exact
-    64-multiples (w == 0), additional equalities, band-killing k, the
-    Hirschberg target_stop hook, and a >2048-column case so the strong
-    reduce fires mid-scan."""
+    """The NW distance scan and the path built on its saved band, through
+    the one batch entry: at every k, ``native_batch``'s distance equals
+    the pure-Python _scan_nw's, and the CIGAR it builds at k = d equals
+    the Python scan + _traceback walk (or _hirschberg) in both formats;
+    None past k.  Covers multi-block queries, exact 64-multiples
+    (w == 0), additional equalities, band-killing k, a >2048-column
+    case so the strong reduce fires mid-scan, and two Hirschberg-sized
+    pairs whose split scans stop at target_stop (the second's halves
+    pass 2048 columns)."""
     from edlib_spark import _native
     from edlib_spark.kernel import (
-        WORD, _AlignData, _ceil_div, _scan_nw, build_peq, encode_pair,
+        WORD, _ceil_div, _direct_traceback, _scan_nw, build_peq,
+        encode_pair, path_to_cigar,
     )
 
     if _native.lib is None:
@@ -283,17 +307,28 @@ def test_native_fill_matches_python_scan():
     def rand(n):
         return "".join(letters[i] for i in rng.integers(0, 4, n))
 
+    def near(q, edits):
+        t = list(q)
+        for p in rng.integers(0, len(t), edits):
+            t[p] = letters[int(rng.integers(0, 4))]
+        return "".join(t)
+
     cases = []
     for _ in range(40):
         cases.append((rand(int(rng.integers(1, 200))),
                       rand(int(rng.integers(1, 260))), None))
+    base = rand(2000)
     cases += [
         (rand(64), rand(100), None),          # w == 0
         (rand(128), rand(128), None),         # w == 0, 2 blocks
         ("a" * 70, "a" * 70, None),           # zero distance
         (rand(90), rand(2500), None),         # strong reduce at c=2048
         (rand(40), rand(60), [("a", "b")]),   # equalities
+        (base, near(base[:1700], 60), None),  # Hirschberg
+        (base[:600], near(base, 40) * 3, None),  # Hirschberg, long halves
     ]
+    assert [_direct_traceback(len(q), len(t)) for q, t, _ in cases[-2:]] \
+        == [False, False]
     for q, t, eqs in cases:
         q_codes, t_codes, sigma, eq = encode_pair(q, t, eqs, None)
         qlen, tlen = len(q_codes), len(t_codes)
@@ -301,49 +336,24 @@ def test_native_fill_matches_python_scan():
         w = nblocks * WORD - qlen
         d_true, _ = simple_edit_distance(q, t, "NW")
         peq = build_peq(sigma, q_codes, eq)
+        _, moves = _python_nw_path(q, t, eqs)
         for k in (d_true, d_true + 7, max(qlen, tlen),
                   max(0, d_true - 1)):
-            best_py, _, data = _scan_nw(peq, w, nblocks, qlen, t_codes,
-                                        k, find_alignment=True)
-            res = _native.native_fill_nw(q_codes, t_codes, eq, sigma, k)
-            assert res is not None
-            best_c, ps, ms, scores, fb, lb = res
-            ctx = (q, t, k)
-            assert best_c == best_py, ctx
-            if data is None:
-                continue
-            assert fb.tolist() == data.first_blocks, ctx
-            assert lb.tolist() == data.last_blocks, ctx
-            assert [int(x) for x in ps] == data.ps, ctx
-            assert [int(x) for x in ms] == data.ms, ctx
-            assert scores.tolist() == data.scores, ctx
-        # Hirschberg hook: single-column save at the split point
-        stop = tlen // 2 - 1
-        if stop >= 0:
-            _, _, data = _scan_nw(peq, w, nblocks, qlen, t_codes,
-                                  d_true, target_stop=stop)
-            res = _native.native_fill_nw(q_codes, t_codes, eq, sigma,
-                                         d_true, target_stop=stop)
-            assert res is not None
-            _, ps, ms, scores, fb, lb = res
-            assert fb[0] == data.first_blocks[0]
-            assert lb[0] == data.last_blocks[0]
-            f0, l0 = data.first_blocks[0], data.last_blocks[0]
-            for b in range(f0, l0 + 1):
-                assert int(ps[b]) == data.ps[b], (q, t, b)
-                assert int(ms[b]) == data.ms[b], (q, t, b)
-                assert int(scores[b]) == data.scores[b], (q, t, b)
+            best_py, _, _ = _scan_nw(peq, w, nblocks, qlen, t_codes, k)
+            for extended in (True, False):
+                got = native_nw_paths([q], [t], [k], eqs, extended)
+                assert got == ([best_py], [
+                    path_to_cigar(moves, extended) if best_py >= 0
+                    else None]), (q, t, k, extended)
 
 
 def test_native_path_matches_python_walk():
-    """Full native path (scan + traceback walk in C) must equal the
-    pure-Python _scan_nw(find_alignment) + _traceback move-for-move —
-    the walk's emit ORDER and tie-breaks are what the compiled
-    reference pins byte-exactly."""
+    """The native path (scan + traceback walk in C, one batch call) must
+    equal the pure-Python _scan_nw(find_alignment) + _traceback
+    move-for-move in both CIGAR formats — the walk's emit ORDER and
+    tie-breaks are what the compiled reference pins byte-exactly."""
     from edlib_spark import _native
-    from edlib_spark.kernel import (
-        WORD, _ceil_div, _scan_nw, _traceback, build_peq, encode_pair,
-    )
+    from edlib_spark.kernel import path_to_cigar
 
     if _native.lib is None:
         pytest.skip("native library unavailable")
@@ -359,24 +369,21 @@ def test_native_path_matches_python_walk():
     cases += [(rand(64), rand(64)), (rand(128), rand(50)),
               ("a" * 65, "a" * 65), (rand(1), rand(200)),
               (rand(200), rand(1)), (rand(90), rand(2500))]
-    cases = [(q, t, None) for q, t in cases]
-    cases.append((rand(150), rand(170), [("a", "b")]))   # equalities
-    for q, t, eqs in cases:
-        q_codes, t_codes, sigma, eq = encode_pair(q, t, eqs, None)
-        qlen, tlen = len(q_codes), len(t_codes)
-        nblocks = _ceil_div(qlen, WORD)
-        w = nblocks * WORD - qlen
-        # under the one pair a ~ b, the DP oracle's distance with every
-        # b spelled a
-        d_true, _ = simple_edit_distance(
-            *(s.replace("b", "a") if eqs else s for s in (q, t)), "NW")
-        peq = build_peq(sigma, q_codes, eq)
-        _, _, data = _scan_nw(peq, w, nblocks, qlen, t_codes, d_true,
-                              find_alignment=True)
-        want = _traceback(qlen, tlen, d_true, data)
-        got = _native.native_align_path(q_codes, t_codes, eq, sigma,
-                                        d_true)
-        assert got == want, (q, t, d_true)
+    qs, ts = [q for q, _ in cases], [t for _, t in cases]
+    eq_case = (rand(150), rand(170))
+    for qs, ts, eqs in ((qs, ts, None),
+                        ([eq_case[0]], [eq_case[1]], [("a", "b")])):
+        want = [_python_nw_path(q, t, eqs) for q, t in zip(qs, ts)]
+        # the DP oracle agrees on the distance the paths are at (under
+        # the one pair a ~ b, with every b spelled a)
+        assert [d for d, _ in want] == [simple_edit_distance(
+            *(s.replace("b", "a") if eqs else s for s in (q, t)), "NW")[0]
+            for q, t in zip(qs, ts)]
+        for extended in (True, False):
+            assert native_nw_paths(qs, ts, [-1] * len(qs), eqs,
+                                   extended) == (
+                [d for d, _ in want],
+                [path_to_cigar(moves, extended) for _, moves in want]), eqs
 
 
 # ---- astral-plane text on the native lane, lone surrogates, the C
